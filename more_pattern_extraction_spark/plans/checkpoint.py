@@ -48,7 +48,8 @@ class CheckpointStore:
 
     def completed(self, job: str, tier: str) -> DataFrame:
         try:
-            df = self.spark.read.parquet(self.cp_path)
+            # commit() fixes the schema, so the read needs no inference job
+            df = self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.cp_path)
         except Exception:
             return self.spark.createDataFrame([], CHECKPOINT_SCHEMA)
         return df.filter((F.col("job") == job) & (F.col("tier") == tier))

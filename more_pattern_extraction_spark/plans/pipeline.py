@@ -5,15 +5,13 @@ via ``spark-submit --py-files mpe.zip -m`` or directly:
         --input /root/testdata/sf0.1/events.parquet --output /tmp/mpe_out \
         --cores 32
 
-Stages (each checkpointed per (conv_bucket, ts_day) unit):
-  raw turns → per-turn features (lag latency, tool flag)
-            → 1m rollup (exact partials + p95)
-            → gap-fill (spine + LOCF + linear interp limit=1)
-            → chunk encode (DoD ts + Gorilla features)
-            → cascade 1h, 1d tiers (re-agg of 1m — no raw rescans)
-            → retention filter per tier horizon
-  + lineage rows (rows in/out, content hash) and a metrics row
-  (wall s, turns/s) per run.
+The stages are declared once, in ``plans/stages.py``: ``TIER_STAGES``
+(1m rollup + sketch → KMV partials → gap-fill → chunks → 1h → 1d) and
+``PATTERN_STAGES`` (MP → discords → FLUSS regimes).  ``run_pipeline``
+runs the tier stages over the pending ``(conv_bucket, ts_day)`` units,
+drops partitions past each tier's retention horizon, then records a
+lineage row per committed unit, the checkpoints and a metrics row
+(wall s, turns/s).
 
 Resume: a second invocation with the same input snapshot anti-joins the
 checkpoint table and does nothing; a partially-complete run redoes only
@@ -28,15 +26,12 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from more_pattern_extraction_spark.operators import chunks as CH
-from more_pattern_extraction_spark.operators import distinct as DK
-from more_pattern_extraction_spark.operators import gapfill as G
 from more_pattern_extraction_spark.operators import rollup as R
-from more_pattern_extraction_spark.operators import sketch as SK
-from more_pattern_extraction_spark.plans.checkpoint import CheckpointStore, content_hash
+from more_pattern_extraction_spark.plans import stages as ST
+from more_pattern_extraction_spark.plans.checkpoint import CheckpointStore
 from more_pattern_extraction_spark.sources import catalog as CAT
 
-JOB = "rollup_pipeline"
+JOB = ST.PIPELINE_JOB
 
 
 def run_pipeline(
@@ -56,133 +51,39 @@ def run_pipeline(
     feats = R.turn_features(turns, latency_col=latency_col)
     feats = CAT.with_layout_cols(feats, n_buckets)  # conv_bucket, ts_day
 
-    units = feats.select("conv_bucket", F.col("ts_day").cast("timestamp").alias("ts_bucket")).distinct()
-    n_units_total = units.count()
-    if resume:
-        pending = cp.pending_units(units, JOB, "1m", input_snapshot)
-    else:
-        pending = units
-    n_pending = pending.count()
+    # one collect of the tiny unit list: every unit with its turn count,
+    # then the units still pending under this snapshot once more
+    units = feats.groupBy("conv_bucket", "ts_day").agg(F.count(F.lit(1)).alias("turns"))
+    units = units.withColumn("ts_bucket", F.col("ts_day").cast("timestamp"))
+    pending = cp.pending_units(units, JOB, "1m", input_snapshot) if resume else units
+    rows = units.withColumn("pending", F.lit(False)).unionByName(
+        pending.withColumn("pending", F.lit(True))
+    ).collect()
+    todo = [r for r in rows if r["pending"]]
+    n_units = len(rows) - len(todo)
 
-    if n_pending:
-        todo = feats.join(
-            F.broadcast(
-                pending.select(
-                    "conv_bucket", F.col("ts_bucket").cast("date").alias("ts_day")
-                )
-            ),
-            ["conv_bucket", "ts_day"],
-        )
-        n_turns = todo.count()
-
-        # every persisted tier carries the mergeable latency sketch map +
-        # its derived true-tier p95 alongside the documented
-        # percentile-of-averages latency_p95 (VERDICT r04 #3): coarser
-        # tiers merge the STORED map — raw latencies are scanned exactly
-        # once, at the finest tier
-        r1m = SK.attach_sketch_p95(
-            R.rollup_from_raw(todo, "1m"),
-            SK.sketch_from_raw(todo, "1m"),
-            keep_sketch=True,
-        )
-        r1m = CAT.with_layout_cols(r1m, n_buckets)
-        CAT.write_partitioned(r1m, out_root, "rollup_1m",
-                              sort_cols=("conv_id", "bucket_start"))
-
-        # per-unit PARTIAL KMV distinct sketches (operators/distinct):
-        # each (conv_bucket, minute) keeps its own k-smallest conv
-        # hashes; a conversation hashes to exactly one bucket, so the
-        # partials per minute are disjoint and kmv_cascade over the
-        # stored table (dropping conv_bucket) recovers the GLOBAL
-        # per-bucket sketch at any tier exactly — no raw rescan, and
-        # repair recomputes one unit without touching the others.
-        # Built from the 1m tier JUST WRITTEN, not from raw: the tier
-        # already holds exactly one row per (conv, minute), so the
-        # raw-scan distinct (the expensive half, ~60 % of a rollup
-        # stage) is amortized into the rollup aggregation
-        r1m_stored = CAT.read_table(spark, out_root, "rollup_1m")
-        kmv1m = DK.kmv_from_rollup(
-            r1m_stored.select("conv_bucket", "bucket_start", "conv_id"),
-            part_cols=("conv_bucket",),
-        )
-        kmv1m = kmv1m.withColumn("ts_day", F.col("bucket_start").cast("date"))
-        # scope to pending units (the stored tier also holds units done by
-        # earlier runs — rewriting their partitions would be value-identical
-        # but defeat resume incrementality)
-        kmv1m = kmv1m.join(
-            F.broadcast(
-                pending.select(
-                    "conv_bucket", F.col("ts_bucket").cast("date").alias("ts_day")
-                )
-            ),
-            ["conv_bucket", "ts_day"],
-        )
-        CAT.write_partitioned(kmv1m, out_root, "distinct_1m",
-                              sort_cols=("bucket_start",))
-
-        filled = G.gap_fill_rollup(CAT.read_table(spark, out_root, "rollup_1m"), "1m")
-        filled = CAT.with_layout_cols(filled, n_buckets)
-        CAT.write_partitioned(filled, out_root, "rollup_1m_filled",
-                              sort_cols=("conv_id", "bucket_start"))
-
-        chunks = CH.encode_chunks(
-            CAT.read_table(spark, out_root, "rollup_1m"),
-            ["latency_avg", "latency_sum"],
-            "1m",
-        )
-        chunks = chunks.withColumn(
-            "conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
-        ).withColumn("ts_day", F.col("ts_bucket").cast("date"))
-        CAT.write_partitioned(chunks, out_root, "chunks_1m",
-                              sort_cols=("conv_id", "ts_bucket"))
-
-        base = CAT.read_table(spark, out_root, "rollup_1m")
-        sk_cols = ["conv_id", "bucket_start", "latency_sketch"]
-        r1h = SK.attach_sketch_p95(
-            R.cascade(base, "1h", from_tier="1m"),
-            SK.sketch_cascade(base.select(*sk_cols), "1h"),
-            keep_sketch=True,
-        )
-        CAT.write_partitioned(CAT.with_layout_cols(r1h, n_buckets), out_root, "rollup_1h",
-                              sort_cols=("conv_id", "bucket_start"))
-        base_h = CAT.read_table(spark, out_root, "rollup_1h")
-        r1d = SK.attach_sketch_p95(
-            R.cascade(base_h, "1d", from_tier="1h"),
-            SK.sketch_cascade(base_h.select(*sk_cols), "1d"),
-            keep_sketch=True,
-        )
-        CAT.write_partitioned(CAT.with_layout_cols(r1d, n_buckets), out_root, "rollup_1d",
-                              sort_cols=("conv_id", "bucket_start"))
-
-        if retention:
-            for tier, keep_after in retention.items():
+    scope = ST.Scope(spark, [(r["conv_bucket"], r["ts_day"]) for r in todo], whole_table=True)
+    frames = ST.run_stages(ST.TIER_STAGES, {"feats": feats}, scope, out_root, n_buckets)
+    if todo:
+        dropped = 0
+        for st in ST.TIER_STAGES:
+            if st.tier in (retention or {}):
                 # metadata-only partition drop (ts_day granularity); rows
-                # inside the horizon's partial day are kept — tier horizons
-                # are day-aligned by policy
-                CAT.drop_partitions_before(out_root, f"rollup_{tier}", keep_after)
-                if tier == "1m":
-                    # the persisted KMV partials share the 1m horizon
-                    CAT.drop_partitions_before(out_root, "distinct_1m", keep_after)
+                # inside the horizon's partial day are kept — tier
+                # horizons are day-aligned by policy
+                dropped += CAT.drop_partitions_before(out_root, st.table, retention[st.tier])
+        r1m = scope.read(out_root, "rollup_1m") if dropped else frames["rollup_1m"]
+        ST.certify(cp, scope, r1m, JOB, input_snapshot)
 
-        lineage = content_hash(
-            CAT.read_table(spark, out_root, "rollup_1m").withColumn(
-                "ts_bucket", F.col("ts_day").cast("timestamp")
-            ),
-            ["conv_id", "bucket_start", "turn_cnt", "latency_cnt"],
-        )
-        cp.record_lineage(JOB, "1m", input_snapshot, lineage)
-        cp.commit(pending, JOB, "1m", input_snapshot)
-    else:
-        n_turns = 0
-
+    n_turns = sum(r["turns"] for r in todo)
     wall = time.time() - t0
     m = {
         "wall_s": wall,
         "turns": float(n_turns),
         "turns_per_s": (n_turns / wall) if wall > 0 else 0.0,
-        "units_total": float(n_units_total),
-        "units_done": float(n_pending),
-        "units_skipped": float(n_units_total - n_pending),
+        "units_total": float(n_units),
+        "units_done": float(len(todo)),
+        "units_skipped": float(n_units - len(todo)),
     }
     cp.record_metrics(JOB, **m)
     return m
@@ -203,64 +104,17 @@ def run_pattern_stage(
     tables.  Window-keying bounds every task for hot conversations; the
     MP artifact is persisted once and both downstream extractions re-read
     it (the reference reloads its npz the same way, io.py:39-55)."""
-    from more_pattern_extraction_spark.operators import matrix_profile as MP
-    from more_pattern_extraction_spark.operators import motifs as MO
-    from more_pattern_extraction_spark.operators import segmentation as SG
-
     t0 = time.time()
-    filled = CAT.read_table(spark, out_root, "rollup_1m_filled")
-    grid = filled.select(
-        "conv_id",
-        "bucket_start",
-        F.coalesce("latency_avg_filled", "latency_avg_locf", F.lit(0.0)).alias(
-            "latency_avg_filled"
-        ),
-    )
-    mp = MP.matrix_profile(grid, m, window=window)
-    mp = mp.withColumn(
-        "conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
-    ).withColumn("ts_day", F.col("win").cast("date"))
-    CAT.write_partitioned(mp, out_root, f"mp_{window}")
-
-    # re-read the persisted artifact; window-local extraction uses the
-    # composite (conv, window) key so tasks stay bounded
-    mp_saved = CAT.read_table(spark, out_root, f"mp_{window}")
-    keyed = mp_saved.withColumn(
-        "_ck", F.concat_ws("#", "conv_id", F.col("win").cast("string"))
-    )
-    disc = MO.top_k_discords(
-        keyed.select(F.col("_ck").alias("conv_id"), "pos", "mp"), ez=int(m / 4), k=k
-    ).select(
-        F.split("conv_id", "#")[0].alias("conv_id"),
-        F.split("conv_id", "#")[1].cast("timestamp").alias("win"),
-        "discord_rank", "pos", "distance",
-    )
-    disc = disc.withColumn(
-        "conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
-    ).withColumn("ts_day", F.col("win").cast("date"))
-    CAT.write_partitioned(disc, out_root, "discords")
-
-    regimes = SG.fluss_segments(
-        keyed.select(F.col("_ck").alias("conv_id"), "pos", "pi"),
-        L_values=[m], n_regimes=3, excl_factor=1,
-    ).select(
-        F.split("conv_id", "#")[0].alias("conv_id"),
-        F.split("conv_id", "#")[1].cast("timestamp").alias("win"),
-        "L", "regime_pos", "cac",
-    )
-    regimes = regimes.withColumn(
-        "conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
-    ).withColumn("ts_day", F.col("win").cast("date"))
-    CAT.write_partitioned(regimes, out_root, "regimes")
-
+    frames = ST.run_patterns(ST.Scope(spark), out_root, n_buckets, m, window, k)
+    # counted on the written tables: counting the built frames would rerun
+    # the discord and FLUSS UDFs
     out = {
         "pattern_wall_s": time.time() - t0,
-        "mp_rows": float(mp_saved.count()),
-        "discord_rows": float(disc.count()),
-        "regime_rows": float(regimes.count()),
+        "mp_rows": float(frames[f"mp_{window}"].count()),
+        "discord_rows": float(CAT.read_table(spark, out_root, "discords").count()),
+        "regime_rows": float(CAT.read_table(spark, out_root, "regimes").count()),
     }
-    cp = CheckpointStore(spark, out_root)
-    cp.record_metrics("pattern_stage", **out)
+    CheckpointStore(spark, out_root).record_metrics("pattern_stage", **out)
     return out
 
 
@@ -302,11 +156,9 @@ def main() -> None:
             m=args.mp_m, window=args.mp_window,
         ))
     if args.compact:
-        for t in ("rollup_1m", "rollup_1m_filled", "chunks_1m",
-                  "rollup_1h", "rollup_1d"):
-            st = CAT.compact_table(spark, args.output, t,
-                                   sort_cols=("conv_id",))
-            m[f"compact_{t}_files"] = float(st["files_after"])
+        for st in ST.TIER_STAGES:
+            c = CAT.compact_table(spark, args.output, st.table, sort_cols=st.sort_cols)
+            m[f"compact_{st.table}_files"] = float(c["files_after"])
     print({k: round(v, 2) for k, v in m.items()})
     spark.stop()
 

@@ -54,15 +54,12 @@ import time
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from more_pattern_extraction_spark.operators import chunks as CH
-from more_pattern_extraction_spark.operators import gapfill as G
 from more_pattern_extraction_spark.operators import rollup as R
-from more_pattern_extraction_spark.operators import sketch as SK
-from more_pattern_extraction_spark.plans.checkpoint import CheckpointStore, content_hash
+from more_pattern_extraction_spark.plans import stages as ST
+from more_pattern_extraction_spark.plans.checkpoint import CheckpointStore
 from more_pattern_extraction_spark.sources import catalog as CAT
 
 JOB = "late_repair"
-_PIPELINE_JOB = "rollup_pipeline"
 
 
 def affected_units(
@@ -137,13 +134,6 @@ def scoped_raw(merged_turns: DataFrame, buckets: list[int], n_buckets: int) -> D
     )
 
 
-def _only_units(df: DataFrame, units: DataFrame) -> DataFrame:
-    """Restrict a layout-columned frame to the affected units (broadcast
-    semi-join on the partition key — the write then overwrites exactly
-    those partition dirs)."""
-    return df.join(F.broadcast(units), ["conv_bucket", "ts_day"], "left_semi")
-
-
 def repair_late_turns(
     spark: SparkSession,
     merged_turns: DataFrame,
@@ -183,176 +173,40 @@ def repair_late_turns(
     t0 = time.time()
     cp = CheckpointStore(spark, out_root)
 
-    all_units = affected_units(merged_turns, late_turns, n_buckets).cache()
-    n_all_units = all_units.count()
-    hor_1m = (retention or {}).get("1m")
-    units = all_units
-    if hor_1m:
-        units = all_units.filter(
-            F.col("ts_day") >= F.lit(hor_1m[:10]).cast("date")
-        ).cache()
-    n_units = units.count()
-    if n_units == 0:  # everything outside the retention horizon
-        # still certify the merged snapshot: carry the prior snapshot's
-        # completed units forward under input_snapshot (the same
-        # arithmetic as the normal path with an empty repaired set) —
-        # otherwise a follow-up run_pipeline(resume=True) at the merged
-        # snapshot would recompute every unit from raw instead of
-        # no-opping (ADVICE r06 #3)
-        n_carried = 0
-        if prior_snapshot is not None:
-            carried = (
-                cp.completed(_PIPELINE_JOB, "1m")
-                .filter(F.col("input_snapshot") == prior_snapshot)
-                .select("conv_bucket", "ts_bucket")
-            )
-            n_carried = carried.count()
-            cp.commit(carried, _PIPELINE_JOB, "1m", input_snapshot)
-        m = {
-            "wall_s": time.time() - t0,
-            "late_turns": float(late_turns.count()),
-            "units_repaired": 0.0,
-            "units_carried": float(n_carried),
-            "units_skipped_retention": float(n_all_units),
-            "buckets_touched": 0.0,
-        }
-        cp.record_metrics(JOB, **m)
-        units.unpersist()
-        all_units.unpersist()
-        return m
+    all_units = affected_units(merged_turns, late_turns, n_buckets).collect()
+    scope = ST.Scope(spark, all_units, horizons=retention)
 
-    buckets = [r[0] for r in units.select("conv_bucket").distinct().collect()]
-
-    scoped = scoped_raw(merged_turns, buckets, n_buckets)
-    n_late = late_turns.count()
-
-    feats = R.turn_features(scoped.drop("conv_bucket", "ts_day"), latency_col=latency_col)
+    feats = R.turn_features(
+        scoped_raw(merged_turns, scope.buckets, n_buckets).drop("conv_bucket", "ts_day"),
+        latency_col=latency_col,
+    )
     feats = CAT.with_layout_cols(feats, n_buckets)
-
-    # --- 1m tier (+ sketch), affected partitions only ----------------------
-    r1m = SK.attach_sketch_p95(
-        R.rollup_from_raw(feats, "1m"),
-        SK.sketch_from_raw(feats, "1m"),
-        keep_sketch=True,
-    )
-    r1m = CAT.with_layout_cols(r1m, n_buckets)
-    CAT.write_partitioned(
-        _only_units(r1m, units), out_root, "rollup_1m",
-        sort_cols=("conv_id", "bucket_start"),
-    )
-
-    # read-back: unaffected days of the affected buckets keep their old
-    # (value-identical) rows; downstream stages see one consistent table
-    base = CAT.read_table(spark, out_root, "rollup_1m").filter(
-        F.col("conv_bucket").isin(buckets)
-    )
-
-    # --- KMV distinct partials: unit-local by construction -----------------
-    # each (conv_bucket, minute) partial depends only on its own unit's
-    # rows, so the repair scope is exactly the affected units — no
-    # spillover interval.  Built from the repaired tier read-back (one
-    # row per pair already — same reason as the pipeline's build path)
-    from more_pattern_extraction_spark.operators import distinct as DK
-
-    kmv1m = DK.kmv_from_rollup(
-        base.select("conv_bucket", "bucket_start", "conv_id"),
-        part_cols=("conv_bucket",),
-    )
-    kmv1m = kmv1m.withColumn("ts_day", F.col("bucket_start").cast("date"))
-    CAT.write_partitioned(
-        _only_units(kmv1m, units), out_root, "distinct_1m",
-        sort_cols=("bucket_start",),
-    )
-
-    # --- gap-fill: needs whole conversations; write affected days ----------
-    filled = G.gap_fill_rollup(base, "1m")
-    filled = CAT.with_layout_cols(filled, n_buckets)
-    CAT.write_partitioned(
-        _only_units(filled, units), out_root, "rollup_1m_filled",
-        sort_cols=("conv_id", "bucket_start"),
-    )
-
-    # --- chunks: one struct per conv-day → day-local recompute -------------
-    chunks = CH.encode_chunks(base, ["latency_avg", "latency_sum"], "1m")
-    chunks = chunks.withColumn(
-        "conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
-    ).withColumn("ts_day", F.col("ts_bucket").cast("date"))
-    CAT.write_partitioned(
-        _only_units(chunks, units), out_root, "chunks_1m",
-        sort_cols=("conv_id", "ts_bucket"),
-    )
-
-    # --- cascades: day-aligned tiers → re-aggregate affected days only -----
-    sk_cols = ["conv_id", "bucket_start", "latency_sketch"]
-    base_aff = _only_units(base, units)
-    def _within_horizon(df: DataFrame, tier: str) -> DataFrame:
-        hor = (retention or {}).get(tier)
-        if not hor:
-            return df
-        return df.filter(F.col("ts_day") >= F.lit(hor[:10]).cast("date"))
-
-    r1h = SK.attach_sketch_p95(
-        R.cascade(base_aff, "1h", from_tier="1m"),
-        SK.sketch_cascade(base_aff.select(*sk_cols), "1h"),
-        keep_sketch=True,
-    )
-    CAT.write_partitioned(
-        _within_horizon(CAT.with_layout_cols(r1h, n_buckets), "1h"),
-        out_root, "rollup_1h",
-        sort_cols=("conv_id", "bucket_start"),
-    )
-    base_h_aff = _only_units(
-        CAT.read_table(spark, out_root, "rollup_1h").filter(
-            F.col("conv_bucket").isin(buckets)
-        ),
-        units,
-    )
-    r1d = SK.attach_sketch_p95(
-        R.cascade(base_h_aff, "1d", from_tier="1h"),
-        SK.sketch_cascade(base_h_aff.select(*sk_cols), "1d"),
-        keep_sketch=True,
-    )
-    CAT.write_partitioned(
-        _within_horizon(CAT.with_layout_cols(r1d, n_buckets), "1d"),
-        out_root, "rollup_1d",
-        sort_cols=("conv_id", "bucket_start"),
-    )
+    frames = ST.run_stages(ST.TIER_STAGES, {"feats": feats}, scope, out_root, n_buckets)
 
     # --- checkpoint: certify the merged snapshot without a data scan -------
-    repaired_units = units.select(
-        "conv_bucket", F.col("ts_day").cast("timestamp").alias("ts_bucket")
-    )
-    n_carried = 0
+    # the prior snapshot's completed units are carried forward, so a
+    # follow-up run_pipeline(resume=True) at the merged snapshot no-ops
+    # even when every late unit was outside the retention horizon
+    carried = []
     if prior_snapshot is not None:
         carried = (
-            cp.completed(_PIPELINE_JOB, "1m")
+            cp.completed(ST.PIPELINE_JOB, "1m")
             .filter(F.col("input_snapshot") == prior_snapshot)
-            .select("conv_bucket", "ts_bucket")
-            .join(repaired_units, ["conv_bucket", "ts_bucket"], "left_anti")
+            .select("conv_bucket", F.col("ts_bucket").cast("date").alias("ts_day"))
+            .filter(~scope.where)
+            .collect()
         )
-        n_carried = carried.count()
-        cp.commit(carried, _PIPELINE_JOB, "1m", input_snapshot)
-    cp.commit(repaired_units, _PIPELINE_JOB, "1m", input_snapshot)
-
-    lineage = content_hash(
-        _only_units(
-            CAT.read_table(spark, out_root, "rollup_1m"), units
-        ).withColumn("ts_bucket", F.col("ts_day").cast("timestamp")),
-        ["conv_id", "bucket_start", "turn_cnt", "latency_cnt"],
-    )
-    cp.record_lineage(JOB, "1m", input_snapshot, lineage)
+    ST.certify(cp, scope, frames.get("rollup_1m"), JOB, input_snapshot, carried)
 
     m = {
         "wall_s": time.time() - t0,
-        "late_turns": float(n_late),
-        "units_repaired": float(n_units),
-        "units_carried": float(n_carried),
-        "units_skipped_retention": float(n_all_units - n_units),
-        "buckets_touched": float(len(buckets)),
+        "late_turns": float(late_turns.count()),
+        "units_repaired": float(len(scope.units)),
+        "units_carried": float(len(carried)),
+        "units_skipped_retention": float(len(all_units) - len(scope.units)),
+        "buckets_touched": float(len(scope.buckets)),
     }
     cp.record_metrics(JOB, **m)
-    units.unpersist()
-    all_units.unpersist()
     return m
 
 
@@ -384,88 +238,18 @@ def repair_pattern_stage(
     O(affected windows), and every output row lands in an affected
     partition — dynamic overwrite touches nothing else.
     """
-    from more_pattern_extraction_spark.operators import matrix_profile as MP
-    from more_pattern_extraction_spark.operators import motifs as MO
-    from more_pattern_extraction_spark.operators import segmentation as SG
-
     t0 = time.time()
-    units = affected_units(merged_turns, late_turns, n_buckets).cache()
-    buckets = [r[0] for r in units.select("conv_bucket").distinct().collect()]
-    wins = (
-        units.select(
-            "conv_bucket",
-            F.date_trunc(window, F.col("ts_day").cast("timestamp")).alias("_win"),
-        )
-        .distinct()
-        .cache()
-    )
-    n_wins = wins.count()
-
-    filled = CAT.read_table(spark, out_root, "rollup_1m_filled").filter(
-        F.col("conv_bucket").isin(buckets)
-    )
-    grid = (
-        filled.select(
-            "conv_id",
-            "conv_bucket",
-            "bucket_start",
-            F.coalesce("latency_avg_filled", "latency_avg_locf", F.lit(0.0)).alias(
-                "latency_avg_filled"
-            ),
-        )
-        .withColumn("_win", F.date_trunc(window, "bucket_start"))
-        .join(F.broadcast(wins), ["conv_bucket", "_win"], "left_semi")
-        .select("conv_id", "bucket_start", "latency_avg_filled")
-    )
-    mp = MP.matrix_profile(grid, m, window=window)
-    mp = mp.withColumn(
-        "conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
-    ).withColumn("ts_day", F.col("win").cast("date"))
-    CAT.write_partitioned(mp, out_root, f"mp_{window}")
-
-    # window-local extractions from the re-read artifact, scoped to the
-    # affected (bucket, window) pairs — same composite-key shape as
-    # run_pattern_stage (plans/pipeline.py)
-    mp_saved = (
-        CAT.read_table(spark, out_root, f"mp_{window}")
-        .filter(F.col("conv_bucket").isin(buckets))
-        .withColumn("_win", F.col("win"))
-        .join(F.broadcast(wins), ["conv_bucket", "_win"], "left_semi")
-    )
-    keyed = mp_saved.withColumn(
-        "_ck", F.concat_ws("#", "conv_id", F.col("win").cast("string"))
-    )
-    disc = MO.top_k_discords(
-        keyed.select(F.col("_ck").alias("conv_id"), "pos", "mp"), ez=int(m / 4), k=k
-    ).select(
-        F.split("conv_id", "#")[0].alias("conv_id"),
-        F.split("conv_id", "#")[1].cast("timestamp").alias("win"),
-        "discord_rank", "pos", "distance",
-    )
-    disc = disc.withColumn(
-        "conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
-    ).withColumn("ts_day", F.col("win").cast("date"))
-    CAT.write_partitioned(disc, out_root, "discords")
-
-    regimes = SG.fluss_segments(
-        keyed.select(F.col("_ck").alias("conv_id"), "pos", "pi"),
-        L_values=[m], n_regimes=3, excl_factor=1,
-    ).select(
-        F.split("conv_id", "#")[0].alias("conv_id"),
-        F.split("conv_id", "#")[1].cast("timestamp").alias("win"),
-        "L", "regime_pos", "cac",
-    )
-    regimes = regimes.withColumn(
-        "conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
-    ).withColumn("ts_day", F.col("win").cast("date"))
-    CAT.write_partitioned(regimes, out_root, "regimes")
+    wins = affected_units(merged_turns, late_turns, n_buckets).select(
+        "conv_bucket",
+        F.date_trunc(window, F.col("ts_day").cast("timestamp")).cast("date").alias("ts_day"),
+    ).distinct().collect()
+    scope = ST.Scope(spark, wins)
+    ST.run_patterns(scope, out_root, n_buckets, m, window, k)
 
     out = {
         "pattern_repair_wall_s": time.time() - t0,
-        "windows_repaired": float(n_wins),
-        "buckets_touched": float(len(buckets)),
+        "windows_repaired": float(len(wins)),
+        "buckets_touched": float(len(scope.buckets)),
     }
     CheckpointStore(spark, out_root).record_metrics("late_repair_patterns", **out)
-    units.unpersist()
-    wins.unpersist()
     return out

@@ -1,0 +1,261 @@
+"""The tier DAG, declared once, and the runner every entry point shares.
+
+Each stage is one row of data: the table it writes, the frame it reads,
+its build, the sort order of its files, its scope rule and the column its
+``ts_day`` layout column derives from.  ``run_stages`` builds each stage,
+adds the layout columns, restricts it to a ``Scope`` and writes it; a
+table some later stage reads is read back ONCE, right after its write.
+
+Tier stages (``run_pipeline``, ``repair_late_turns``)::
+
+    feats ─▶ rollup_1m (+ latency sketch) ─┬▶ distinct_1m   (KMV partials)
+                                           ├▶ rollup_1m_filled (gap-fill)
+                                           ├▶ chunks_1m     (DoD/Gorilla)
+                                           └▶ rollup_1h ─▶ rollup_1d
+
+Pattern stages (``run_pattern_stage``, ``repair_pattern_stage``)::
+
+    grid ─▶ mp_{window} ─┬▶ discords
+                         └▶ regimes
+
+Scope rules:
+
+* ``UNIT``: the stage is local to a ``(conv_bucket, ts_day)`` unit (for
+  the pattern stages: a ``(conv_bucket, window)`` pair, keyed on the
+  window's first day), so its input is restricted to the scope's units
+  and it writes exactly those partitions.
+* ``CONV``: the stage needs whole conversations (gap-fill: LOCF carries
+  and interpolation anchors cross days).  It reads its scope's whole
+  conversations and writes the scope's units on a repair, the whole table
+  on ingest (``Scope.whole_table``).
+
+Every persisted tier carries the mergeable latency sketch map and its
+derived p95 next to the percentile-of-averages ``latency_p95``: the
+coarser tiers merge the STORED map, so raw latencies are scanned once, at
+the finest tier.
+"""
+
+from __future__ import annotations
+
+from dataclasses import dataclass
+from datetime import date
+from itertools import groupby
+from operator import itemgetter
+from typing import Callable
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from more_pattern_extraction_spark.operators import chunks as CH
+from more_pattern_extraction_spark.operators import distinct as DK
+from more_pattern_extraction_spark.operators import gapfill as G
+from more_pattern_extraction_spark.operators import rollup as R
+from more_pattern_extraction_spark.operators import sketch as SK
+from more_pattern_extraction_spark.plans.checkpoint import CheckpointStore, content_hash
+from more_pattern_extraction_spark.sources import catalog as CAT
+
+PIPELINE_JOB = "rollup_pipeline"
+UNIT = "unit"
+CONV = "conversation"
+UNIT_SCHEMA = "conv_bucket int, ts_day date"
+LINEAGE_COLS = ["conv_id", "bucket_start", "turn_cnt", "latency_cnt"]
+
+
+@dataclass(frozen=True)
+class Stage:
+    table: str  # may name a build parameter, e.g. "mp_{window}"
+    src: str  # "feats" / "grid", or a table an earlier stage wrote
+    build: Callable[..., DataFrame]  # (src frame, **params) -> rows
+    sort_cols: tuple[str, ...] = ()
+    rule: str = UNIT
+    time_col: str = "bucket_start"  # ts_day = this column's day
+    tier: str | None = None  # retention key whose horizon covers the table
+
+
+def _rollup_1m(feats: DataFrame, **_) -> DataFrame:
+    return SK.attach_sketch_p95(
+        R.rollup_from_raw(feats, "1m"), SK.sketch_from_raw(feats, "1m"), keep_sketch=True
+    )
+
+
+def _kmv_1m(r1m: DataFrame, **_) -> DataFrame:
+    # per-(conv_bucket, minute) PARTIAL KMV sketches: a conversation
+    # hashes to one bucket, so the partials of a minute are disjoint and
+    # kmv_cascade over the stored table recovers the GLOBAL sketch at any
+    # tier exactly.  Built from the 1m tier, which already holds one row
+    # per (conv, minute): the raw-scan distinct (~60 % of a rollup stage)
+    # is amortized into the rollup aggregation
+    return DK.kmv_from_rollup(
+        r1m.select("conv_bucket", "bucket_start", "conv_id"), part_cols=("conv_bucket",)
+    )
+
+
+def _cascade(tier: str, from_tier: str) -> Callable[..., DataFrame]:
+    def build(base: DataFrame, **_) -> DataFrame:
+        return SK.attach_sketch_p95(
+            R.cascade(base, tier, from_tier=from_tier),
+            SK.sketch_cascade(base.select("conv_id", "bucket_start", "latency_sketch"), tier),
+            keep_sketch=True,
+        )
+
+    return build
+
+
+TIER_STAGES = (
+    Stage("rollup_1m", "feats", _rollup_1m, ("conv_id", "bucket_start"), tier="1m"),
+    Stage("distinct_1m", "rollup_1m", _kmv_1m, ("bucket_start",), tier="1m"),
+    Stage("rollup_1m_filled", "rollup_1m", lambda r1m, **_: G.gap_fill_rollup(r1m, "1m"),
+          ("conv_id", "bucket_start"), rule=CONV),
+    Stage("chunks_1m", "rollup_1m",
+          lambda r1m, **_: CH.encode_chunks(r1m, ["latency_avg", "latency_sum"], "1m"),
+          ("conv_id", "ts_bucket"), time_col="ts_bucket"),
+    Stage("rollup_1h", "rollup_1m", _cascade("1h", "1m"), ("conv_id", "bucket_start"), tier="1h"),
+    Stage("rollup_1d", "rollup_1h", _cascade("1d", "1h"), ("conv_id", "bucket_start"), tier="1d"),
+)
+
+
+# The pattern stages run window-local kernels under a composite
+# ``conv_id#win`` key, so every grouped-UDF task is bounded by one window
+# of one conversation even for hot conversations.
+def _window_keyed(mp: DataFrame, value: str) -> DataFrame:
+    return mp.select(
+        F.concat_ws("#", "conv_id", F.col("win").cast("string")).alias("conv_id"), "pos", value
+    )
+
+
+def _window_split(df: DataFrame, *cols: str) -> DataFrame:
+    key = F.split("conv_id", "#")
+    return df.select(key[0].alias("conv_id"), key[1].cast("timestamp").alias("win"), *cols)
+
+
+def _matrix_profile(grid: DataFrame, m: int, window: str, **_) -> DataFrame:
+    from more_pattern_extraction_spark.operators import matrix_profile as MP
+
+    return MP.matrix_profile(
+        grid.select("conv_id", "bucket_start", "latency_avg_filled"), m, window=window
+    )
+
+
+def _discords(mp: DataFrame, m: int, k: int, **_) -> DataFrame:
+    from more_pattern_extraction_spark.operators import motifs as MO
+
+    disc = MO.top_k_discords(_window_keyed(mp, "mp"), ez=int(m / 4), k=k)
+    return _window_split(disc, "discord_rank", "pos", "distance")
+
+
+def _regimes(mp: DataFrame, m: int, **_) -> DataFrame:
+    from more_pattern_extraction_spark.operators import segmentation as SG
+
+    reg = SG.fluss_segments(_window_keyed(mp, "pi"), L_values=[m], n_regimes=3, excl_factor=1)
+    return _window_split(reg, "L", "regime_pos", "cac")
+
+
+PATTERN_STAGES = (
+    Stage("mp_{window}", "grid", _matrix_profile, time_col="win"),
+    Stage("discords", "mp_{window}", _discords, time_col="win"),
+    Stage("regimes", "mp_{window}", _regimes, time_col="win"),
+)
+
+
+class Scope:
+    """The ``(conv_bucket, ts_day)`` units one run writes.
+
+    ``units=None`` means every unit.  Reads cover the whole conversations
+    of the units' buckets; with ``whole_table`` (ingest) they cover the
+    whole table and ``CONV`` stages write all of it.  ``horizons`` (tier →
+    retention horizon) drops the units older than the 1m horizon, and rows
+    older than a stage's tier horizon before the write, so a repair never
+    resurrects partitions retention dropped.
+
+    The unit list is small and local, so the restriction is a predicate
+    on the partition columns, one branch per bucket: a stored table's
+    scan prunes to the units' files, and no frame is shipped to the
+    executors."""
+
+    def __init__(self, spark: SparkSession, units=None, whole_table: bool = False,
+                 horizons: dict[str, str] | None = None):
+        self.spark = spark
+        self.horizons = horizons or {}
+        hor = date.fromisoformat(self.horizons.get("1m", "0001-01-01")[:10])
+        self.units = None if units is None else sorted((b, d) for b, d in units if d >= hor)
+        self.whole_table = whole_table
+        self.buckets = None
+        if units is not None and not whole_table:
+            self.buckets = sorted({b for b, _d in self.units})
+        self.where = None
+        if units is not None:
+            self.where = F.lit(False)
+            for b, unit in groupby(self.units, key=itemgetter(0)):
+                days = [d for _b, d in unit]
+                self.where |= (F.col("conv_bucket") == b) & F.col("ts_day").isin(days)
+
+    def only(self, df: DataFrame) -> DataFrame:
+        """Restrict a layout-columned frame to the scope's units (a write
+        then overwrites exactly those partition dirs)."""
+        return df if self.where is None else df.filter(self.where)
+
+    def read(self, root: str, table: str) -> DataFrame:
+        """The scope's whole conversations of a stored table; conv_bucket is
+        a stored partition column, so the bucket filter prunes the scan."""
+        df = CAT.read_table(self.spark, root, table)
+        return df if self.buckets is None else df.filter(F.col("conv_bucket").isin(self.buckets))
+
+
+def run_stages(stages, frames: dict[str, DataFrame], scope: Scope, root: str,
+               n_buckets: int, **params) -> dict[str, DataFrame]:
+    """Build and write ``stages`` in order under ``scope``.  ``frames``
+    holds the source frames (``feats`` / ``grid``); each table a later
+    stage reads is added to it, read back once.  The read-back holds the
+    scope's whole conversations: days outside the scope keep their old,
+    value-identical rows, so downstream stages see one consistent table.
+    An empty scope writes nothing."""
+    if scope.units == []:
+        return frames
+    consumed = {st.src for st in stages}
+    for st in stages:
+        table = st.table.format(**params)
+        src = frames[st.src.format(**params)]
+        out = st.build(scope.only(src) if st.rule == UNIT else src, **params)
+        out = CAT.with_layout_cols(out, n_buckets, st.time_col)
+        if st.rule == CONV and not scope.whole_table:
+            out = scope.only(out)
+        if st.tier in scope.horizons:
+            out = out.filter(F.col("ts_day") >= F.lit(scope.horizons[st.tier][:10]).cast("date"))
+        CAT.write_partitioned(out, root, table, sort_cols=st.sort_cols)
+        if st.table in consumed:
+            frames[table] = scope.read(root, table)
+    return frames
+
+
+def run_patterns(scope: Scope, root: str, n_buckets: int, m: int, window: str,
+                 k: int) -> dict[str, DataFrame]:
+    """Run ``PATTERN_STAGES`` over the gap-filled latency grid, laid out by
+    window so a window scope restricts it like any unit scope."""
+    grid = scope.read(root, "rollup_1m_filled").select(
+        "conv_id",
+        "bucket_start",
+        F.coalesce("latency_avg_filled", "latency_avg_locf", F.lit(0.0)).alias(
+            "latency_avg_filled"
+        ),
+        F.date_trunc(window, "bucket_start").alias("win"),
+    )
+    grid = CAT.with_layout_cols(grid, n_buckets, "win")
+    return run_stages(PATTERN_STAGES, {"grid": grid}, scope, root, n_buckets,
+                      m=m, window=window, k=k)
+
+
+def certify(cp: CheckpointStore, scope: Scope, r1m: DataFrame, lineage_job: str,
+            input_snapshot: str, carried=()) -> None:
+    """Record lineage for the scope's units of the 1m tier, then commit
+    them, and the ``carried`` units, under ``input_snapshot``."""
+    if scope.units:
+        lineage = content_hash(
+            scope.only(r1m).withColumn("ts_bucket", F.col("ts_day").cast("timestamp")),
+            LINEAGE_COLS,
+        )
+        cp.record_lineage(lineage_job, "1m", input_snapshot, lineage)
+    if scope.units or carried:
+        # one file per commit: the key list is a few rows
+        keys = cp.spark.createDataFrame(scope.units + list(carried), UNIT_SCHEMA).coalesce(1)
+        keys = keys.select("conv_bucket", F.col("ts_day").cast("timestamp").alias("ts_bucket"))
+        cp.commit(keys, PIPELINE_JOB, "1m", input_snapshot)

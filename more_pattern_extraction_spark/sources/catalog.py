@@ -175,9 +175,18 @@ def drop_partitions_before(root: str, name: str, horizon: str) -> int:
     return dropped
 
 
-def with_layout_cols(df: DataFrame, n_buckets: int = 32) -> DataFrame:
-    """Attach the physical layout columns (conv_bucket, ts_day)."""
-    ts_col = "bucket_start" if "bucket_start" in df.columns else "ts"
-    return df.withColumn(
-        "conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
-    ).withColumn("ts_day", F.date_trunc("day", F.col(ts_col)).cast("date"))
+def with_layout_cols(
+    df: DataFrame, n_buckets: int = 32, time_col: str | None = None
+) -> DataFrame:
+    """Attach the physical layout columns (conv_bucket, ts_day).
+
+    ``ts_day`` is the day of ``time_col`` (default ``bucket_start`` when
+    present, else ``ts``); ``conv_bucket`` hashes ``conv_id``.  A frame
+    already keyed by bucket without ``conv_id`` (the KMV partials) keeps
+    its own ``conv_bucket``."""
+    ts_col = time_col or ("bucket_start" if "bucket_start" in df.columns else "ts")
+    if "conv_id" in df.columns:
+        df = df.withColumn(
+            "conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
+        )
+    return df.withColumn("ts_day", F.date_trunc("day", F.col(ts_col)).cast("date"))

@@ -1,0 +1,57 @@
+"""Spark job budgets of the tier entry points.
+
+At small inputs a run costs its Spark jobs, not its data, so every eager
+job a run adds (a count, a probe, a re-read) shows as wall time.
+These bounds are the measured counts on the ``transcripts`` fixture; a
+change that adds a job must either remove another or say why the budget
+moves."""
+
+import pytest
+from pyspark.sql import functions as F
+
+from more_pattern_extraction_spark.plans.pipeline import run_pipeline
+from more_pattern_extraction_spark.plans.repair import repair_late_turns
+
+# measured: 39-40 / 7 / 43 jobs (65 / 10 / 64 before the stage table);
+# adaptive execution runs the stages of the ingest's unit-list collect as
+# one or two jobs, depending on which stage finishes first
+COLD_INGEST_JOBS = 40
+NOOP_RESUME_JOBS = 7
+REPAIR_JOBS = 43
+
+
+def _jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture()
+def split(transcripts):
+    late = (
+        ((F.col("conv_id") == "conv_00003") & (F.col("turn_idx") == 7))
+        | ((F.col("conv_id") == "conv_00005") & (F.col("turn_idx") >= 20))
+    )
+    return transcripts.filter(~late), transcripts.filter(late)
+
+
+def test_ingest_and_repair_job_budgets(spark, transcripts, split, tmp_path):
+    ontime, late = split
+    out = str(tmp_path / "out")
+    m, cold = _jobs(spark, "budget_cold", lambda: run_pipeline(
+        spark, ontime, out, input_snapshot="b_on", n_buckets=8))
+    assert m["units_done"] > 0
+    m, noop = _jobs(spark, "budget_noop", lambda: run_pipeline(
+        spark, ontime, out, input_snapshot="b_on", n_buckets=8))
+    assert m["units_done"] == 0
+    m, repair = _jobs(spark, "budget_repair", lambda: repair_late_turns(
+        spark, transcripts, late, out, input_snapshot="b_m", prior_snapshot="b_on",
+        n_buckets=8))
+    assert m["units_repaired"] > 0
+    assert cold <= COLD_INGEST_JOBS, cold
+    assert noop <= NOOP_RESUME_JOBS, noop
+    assert repair <= REPAIR_JOBS, repair

@@ -8,6 +8,8 @@ from pyspark.sql import functions as F
 from more_pattern_extraction_spark.plans.pipeline import run_pipeline
 from more_pattern_extraction_spark.sources import catalog as CAT
 
+TABLES = ["rollup_1m", "distinct_1m", "rollup_1m_filled", "chunks_1m", "rollup_1h", "rollup_1d"]
+
 
 @pytest.fixture()
 def out(tmp_path):
@@ -89,9 +91,23 @@ def test_interrupted_resume_equals_cold(spark, transcripts, out, tmp_path):
     assert 0 < m_res["units_done"] < m_res["units_total"]
     assert m_res["units_done"] + m_res["units_skipped"] == m_res["units_total"]
 
-    for t in ["rollup_1m", "rollup_1h", "rollup_1d"]:
+    for t in TABLES:
         a, b = _table_digest(spark, out, t), _table_digest(spark, cold_root, t)
         assert a == b, t
+
+
+def test_resume_lineage_one_row_per_unit(spark, transcripts, out):
+    """A resumed run records lineage for the units it commits only: after
+    an interrupted run and its resume under one snapshot, every unit has
+    exactly one lineage row."""
+    run_pipeline(spark, transcripts.filter(F.col("ts") < "2024-01-02"), out,
+                 input_snapshot="snapL", n_buckets=8)
+    m = run_pipeline(spark, transcripts, out, input_snapshot="snapL", n_buckets=8)
+    assert 0 < m["units_done"] < m["units_total"]
+    lineage = spark.read.parquet(f"{out}/lineage").filter(F.col("job") == "rollup_pipeline")
+    per_unit = lineage.groupBy("conv_bucket", "ts_bucket", "input_snapshot").count()
+    assert per_unit.count() == m["units_total"]
+    assert per_unit.filter(F.col("count") != 1).count() == 0
 
 
 def test_new_snapshot_recomputes(spark, transcripts, out):
@@ -120,6 +136,9 @@ def test_pattern_stage_tables(spark, transcripts, out):
     m = run_pattern_stage(spark, out, n_buckets=8, m=16, window="day", k=2)
     assert m["mp_rows"] > 0 and m["discord_rows"] > 0
     mp = CAT.read_table(spark, out, "mp_day")
+    assert m["mp_rows"] == mp.count()
+    assert m["discord_rows"] == CAT.read_table(spark, out, "discords").count()
+    assert m["regime_rows"] == CAT.read_table(spark, out, "regimes").count()
     assert {"conv_id", "pos", "mp", "pi", "win"} <= set(mp.columns)
     disc = CAT.read_table(spark, out, "discords")
     # window-local extraction: discord positions are window-local and every
