@@ -146,8 +146,6 @@ def minhash_lsh_pairs(
         sites opt in explicitly rather than silently losing pairs.
     """
     rows_per_band = n_hashes // bands
-    from pyspark.storagelevel import StorageLevel
-
     s = (
         docs.select(
             F.col(id_col).alias("doc"),
@@ -156,16 +154,6 @@ def minhash_lsh_pairs(
         # empty shingle sets (texts shorter than n tokens) would all share
         # one all-NULL signature and collapse into a single mega-bucket
         .filter(F.size("sh") > 0)
-        # this frame is referenced three times (signature/banding pass +
-        # both sides of the verify join) and Spark plans are trees — each
-        # reference re-tokenized and re-shingled the full corpus.  One
-        # MEMORY_AND_DISK persist makes shingling a single pass; the
-        # stored bytes are the same shingle arrays the verify join already
-        # materializes, spilled to disk when they don't fit (the 100 TB
-        # trade: one spill write + two reads vs two extra full-text
-        # shingling passes).  Blocks are freed by the ContextCleaner when
-        # the frame is collected.
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     banded = s.withColumn("sig", minhash_signature(F.col("sh"), n_hashes)).select(
         "doc",

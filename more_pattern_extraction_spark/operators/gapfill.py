@@ -10,10 +10,19 @@ Semantics matched empirically against pandas (tests/test_gapfill.py):
   * leading NaNs → back-fill (next value) up to ``limit`` positions
     counted from the first valid point backwards.
 
-Everything is Catalyst window functions — zero UDFs.  The spine join is a
-per-conversation ``sequence()`` explode left-joined to the rollup; at
-10^12-turn scale the spine is generated per (conv, ts-day) so no single
-``sequence`` array exceeds one day of buckets (1440 for 1m).
+Everything is Catalyst window functions and ``sequence()`` explodes —
+zero UDFs.  No ``sequence`` array exceeds one day of buckets (1440 for
+1m): grids are generated per (conv, ts-day).
+
+Two forms, one result:
+  * the generic chain ``densify`` → ``interpolate`` (and ``locf``) windows
+    over the dense grid; it serves irregular grids and direct callers,
+    and the tests and oracles compare against it;
+  * ``gap_fill_rollup`` — the tier path — is ``interpolate_runs``.  It is
+    skew-safe by construction, with no probe and no gate: each
+    conversation's window sorts cover only its observed 1m rows, and the
+    fan-out to the dense grid happens after the ``(conv, day)``
+    repartition, so a hot conversation's grid spreads across tasks by day.
 
 Reference chunking (``chunker`` 10^6-row pieces for RAM) is subsumed by
 partitioning itself; unlike the reference, window frames here never cross
@@ -98,7 +107,6 @@ def interpolate(
     partition_cols: tuple[str, ...] = ("conv_id",),
     order_col: str = "bucket_start",
     with_locf: bool = False,
-    segment: str | None = None,
 ) -> DataFrame:
     """pandas-parity linear interpolation over a dense grid (see module
     docstring).  Adds ``<col>_filled`` per input col plus ``gap_filled``.
@@ -107,127 +115,29 @@ def interpolate(
     forward window pass (coalesce(col, prev-non-null) ≡ the standalone
     ``locf``) — fusing it here saves a third full per-partition sort at
     scale (forward, reverse, and the separate locf window each cost one).
-
-    **Skew (``segment``, e.g. ``"day"``)**: the plain form's windows
-    partition on the conversation alone, so one task sorts a hot
-    conversation's ENTIRE grid — twice (forward + reverse).  With a
-    segment the same values come from a distributed segmented scan:
-
-      * all row-level windows partition on ``(conv, date_trunc(segment))``
-        — a hot conversation spreads across its days;
-      * the cross-segment state each segment needs (previous segment's
-        last non-null anchor, next segment's first, and the global row
-        offset) is carried through a per-(conv, segment) summary — one
-        row per conv-day, windowed per conversation over DAYS (tiny) and
-        joined back on (conv, segment), which never hot-keys.
-
-    Anchor values, global positions, and therefore every filled value are
-    EXACTLY the plain form's (equality property-tested in
-    tests/test_gapfill.py; same DuckDB oracles).
     """
-    if segment is None:
-        ord_w = Window.partitionBy(*partition_cols).orderBy(order_col)
-        df = df.withColumn("_pos", F.row_number().over(ord_w))
-        # CRUCIAL at scale: both look-around frames must be *growing*
-        # frames (unboundedPreceding..-1), which Spark evaluates
-        # incrementally in O(n).  A (1, unboundedFollowing) frame is
-        # re-aggregated per row — O(n²) — and hangs on month-long spines;
-        # the "next non-null" leg is therefore a growing frame over the
-        # REVERSED ordering.
-        w_prev = ord_w.rowsBetween(Window.unboundedPreceding, -1)
-        w_next = (
-            Window.partitionBy(*partition_cols)
-            .orderBy(F.desc(order_col))
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-
-        def anchors(c: str):
-            pos_nn = F.when(F.col(c).isNotNull(), F.col("_pos"))
-            return (
-                F.last(F.col(c), ignorenulls=True).over(w_prev),
-                F.last(pos_nn, ignorenulls=True).over(w_prev),
-                F.last(F.col(c), ignorenulls=True).over(w_next),
-                F.last(pos_nn, ignorenulls=True).over(w_next),
-            )
-    else:
-        seg = F.date_trunc(segment, F.col(order_col))
-        df = df.withColumn("_seg", seg)
-        P = list(partition_cols)
-        wd = Window.partitionBy(*P, "_seg").orderBy(order_col)
-        wd_prev = wd.rowsBetween(Window.unboundedPreceding, -1)
-        wd_next = (
-            Window.partitionBy(*P, "_seg")
-            .orderBy(F.desc(order_col))
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        df = df.withColumn("_dpos", F.row_number().over(wd))
-        aggs = [F.count(F.lit(1)).alias("_n")]
-        for c in cols:
-            nn_pos = F.when(F.col(c).isNotNull(), F.col("_dpos"))
-            aggs += [
-                F.max(nn_pos).alias(f"_lp_{c}"),
-                F.max_by(F.col(c), nn_pos).alias(f"_lv_{c}"),
-                F.min(nn_pos).alias(f"_fp_{c}"),
-                F.min_by(F.col(c), nn_pos).alias(f"_fv_{c}"),
-            ]
-        summ = df.groupBy(*P, "_seg").agg(*aggs)
-        ws_fwd = Window.partitionBy(*P).orderBy("_seg")
-        ws_prev = ws_fwd.rowsBetween(Window.unboundedPreceding, -1)
-        ws_next = (
-            Window.partitionBy(*P)
-            .orderBy(F.desc("_seg"))
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        # long, not int: the whole point is conversations too large for
-        # one task — global positions may exceed 2^31 (the plain path's
-        # int row_number cannot, because it caps a partition's rows)
-        summ = summ.withColumn(
-            "_off",
-            F.coalesce(F.sum("_n").over(ws_prev), F.lit(0)).cast("long"),
-        )
-        keep = [*P, "_seg", "_off"]
-        for c in cols:
-            cp = F.when(
-                F.col(f"_lp_{c}").isNotNull(),
-                F.struct(
-                    (F.col("_off") + F.col(f"_lp_{c}")).alias("p"),
-                    F.col(f"_lv_{c}").alias("v"),
-                ),
-            )
-            cn = F.when(
-                F.col(f"_fp_{c}").isNotNull(),
-                F.struct(
-                    (F.col("_off") + F.col(f"_fp_{c}")).alias("p"),
-                    F.col(f"_fv_{c}").alias("v"),
-                ),
-            )
-            summ = summ.withColumn(
-                f"_cp_{c}", F.last(cp, ignorenulls=True).over(ws_prev)
-            ).withColumn(f"_cn_{c}", F.last(cn, ignorenulls=True).over(ws_next))
-            keep += [f"_cp_{c}", f"_cn_{c}"]
-        df = df.join(summ.select(*keep), [*P, "_seg"])
-        df = df.withColumn("_pos", F.col("_off") + F.col("_dpos"))
-
-        def anchors(c: str):
-            nn_pos = F.when(F.col(c).isNotNull(), F.col("_dpos"))
-            vp_d = F.last(F.col(c), ignorenulls=True).over(wd_prev)
-            pp_d = F.last(nn_pos, ignorenulls=True).over(wd_prev)
-            vn_d = F.last(F.col(c), ignorenulls=True).over(wd_next)
-            pn_d = F.last(nn_pos, ignorenulls=True).over(wd_next)
-            return (
-                F.when(pp_d.isNotNull(), vp_d).otherwise(F.col(f"_cp_{c}.v")),
-                F.when(pp_d.isNotNull(), F.col("_off") + pp_d).otherwise(
-                    F.col(f"_cp_{c}.p")
-                ),
-                F.when(pn_d.isNotNull(), vn_d).otherwise(F.col(f"_cn_{c}.v")),
-                F.when(pn_d.isNotNull(), F.col("_off") + pn_d).otherwise(
-                    F.col(f"_cn_{c}.p")
-                ),
-            )
+    ord_w = Window.partitionBy(*partition_cols).orderBy(order_col)
+    df = df.withColumn("_pos", F.row_number().over(ord_w))
+    # CRUCIAL at scale: both look-around frames must be *growing*
+    # frames (unboundedPreceding..-1), which Spark evaluates
+    # incrementally in O(n).  A (1, unboundedFollowing) frame is
+    # re-aggregated per row — O(n²) — and hangs on month-long spines;
+    # the "next non-null" leg is therefore a growing frame over the
+    # REVERSED ordering.
+    w_prev = ord_w.rowsBetween(Window.unboundedPreceding, -1)
+    w_next = (
+        Window.partitionBy(*partition_cols)
+        .orderBy(F.desc(order_col))
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
 
     any_filled = F.lit(False)
     for c in cols:
-        val_prev, pos_prev, val_next, pos_next = anchors(c)
+        pos_nn = F.when(F.col(c).isNotNull(), F.col("_pos"))
+        val_prev = F.last(F.col(c), ignorenulls=True).over(w_prev)
+        pos_prev = F.last(pos_nn, ignorenulls=True).over(w_prev)
+        val_next = F.last(F.col(c), ignorenulls=True).over(w_next)
+        pos_next = F.last(pos_nn, ignorenulls=True).over(w_next)
         d_prev = F.col("_pos") - pos_prev
         d_next = pos_next - F.col("_pos")
         interp = F.when(
@@ -243,145 +153,7 @@ def interpolate(
         if with_locf:
             df = df.withColumn(f"{c}_locf", F.coalesce(F.col(c), val_prev))
         any_filled = any_filled | (F.col(c).isNull() & filled.isNotNull())
-    df = df.withColumn("gap_filled", any_filled).drop("_pos")
-    if segment is not None:
-        drop = ["_seg", "_dpos", "_off"] + [
-            x for c in cols for x in (f"_cp_{c}", f"_cn_{c}")
-        ]
-        df = df.drop(*drop)
-    return df
-
-
-def interpolate_dense(
-    dense: DataFrame,
-    sparse: DataFrame,
-    cols: list[str],
-    limit: int = 1,
-    step_s: int = 60,
-    partition_cols: tuple[str, ...] = ("conv_id",),
-    order_col: str = "bucket_start",
-    with_locf: bool = False,
-) -> DataFrame:
-    """Skew-spread interpolation specialized for a DENSE regular grid
-    (``gap_fill_rollup``'s shape) — same values as ``interpolate``,
-    different physics.
-
-    Two observations make this strictly cheaper than the generic
-    segmented path at any scale:
-
-      * on a ``step_s``-regular dense grid, row positions are linear in
-        time, so the formula's position differences collapse to
-        ``(t − anchor_t) / step`` — no row_number window, no per-segment
-        row-count/offset bookkeeping at all;
-      * anchors (nearest non-null left/right) only occur at rows of the
-        SPARSE pre-densify table, so the cross-day carry summary
-        aggregates ``sparse`` (rollup rows), never the exploded grid —
-        the generic path's summary branch recomputed the whole
-        densify pipeline (measured: gapfill_2d +148 % at sf0.1 because
-        column pruning made the branches' exchanges non-identical, so
-        ReusedExchange never fired).
-
-    Full-grid work: ONE (conv, day) shuffle + two within-day window
-    sorts — the same sort count as the plain per-conversation form, with
-    hot conversations spread across their days.  Everything else runs on
-    conv-day summary rows.  ``sparse`` must be the exact pre-densify
-    frame ``dense`` was built from.
-    """
-    P = list(partition_cols)
-    seg = F.date_trunc("day", F.col(order_col))
-    dense = dense.withColumn("_seg", seg)
-
-    # per-(conv, day) anchor summary from the SPARSE side
-    sp = sparse.withColumn("_seg", seg)
-    aggs = []
-    for c in cols:
-        nn_t = F.when(F.col(c).isNotNull(), F.col(order_col))
-        aggs += [
-            F.max(nn_t).alias(f"_lt_{c}"),
-            F.max_by(F.col(c), nn_t).alias(f"_lv_{c}"),
-            F.min(nn_t).alias(f"_ft_{c}"),
-            F.min_by(F.col(c), nn_t).alias(f"_fv_{c}"),
-        ]
-    summ = sp.groupBy(*P, "_seg").agg(*aggs)
-    # every grid day needs a carry row (a pure-gap day has no sparse
-    # rows): left-join the summary onto the full day range
-    bounds = sparse.groupBy(*P).agg(
-        F.min(order_col).alias("_b0"), F.max(order_col).alias("_b1")
-    )
-    dayspine = bounds.select(
-        *P,
-        F.explode(
-            F.sequence(
-                F.date_trunc("day", F.col("_b0")),
-                F.date_trunc("day", F.col("_b1")),
-                F.expr("interval 1 day"),
-            )
-        ).alias("_seg"),
-    )
-    summ = dayspine.join(summ, [*P, "_seg"], "left")
-    ws_prev = (
-        Window.partitionBy(*P).orderBy("_seg")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ws_next = (
-        Window.partitionBy(*P).orderBy(F.desc("_seg"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    keep = [*P, "_seg"]
-    for c in cols:
-        cp = F.when(
-            F.col(f"_lt_{c}").isNotNull(),
-            F.struct(F.col(f"_lt_{c}").alias("t"), F.col(f"_lv_{c}").alias("v")),
-        )
-        cn = F.when(
-            F.col(f"_ft_{c}").isNotNull(),
-            F.struct(F.col(f"_ft_{c}").alias("t"), F.col(f"_fv_{c}").alias("v")),
-        )
-        summ = summ.withColumn(
-            f"_cp_{c}", F.last(cp, ignorenulls=True).over(ws_prev)
-        ).withColumn(f"_cn_{c}", F.last(cn, ignorenulls=True).over(ws_next))
-        keep += [f"_cp_{c}", f"_cn_{c}"]
-
-    out = dense.join(summ.select(*keep), [*P, "_seg"])
-    wd_prev = (
-        Window.partitionBy(*P, "_seg").orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    wd_next = (
-        Window.partitionBy(*P, "_seg").orderBy(F.desc(order_col))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    t_sec = F.col(order_col).cast("timestamp").cast("double")
-    any_filled = F.lit(False)
-    for c in cols:
-        nn_t = F.when(F.col(c).isNotNull(), F.col(order_col))
-        tp_d = F.last(nn_t, ignorenulls=True).over(wd_prev)
-        vp_d = F.last(F.col(c), ignorenulls=True).over(wd_prev)
-        tn_d = F.last(nn_t, ignorenulls=True).over(wd_next)
-        vn_d = F.last(F.col(c), ignorenulls=True).over(wd_next)
-        val_prev = F.when(tp_d.isNotNull(), vp_d).otherwise(F.col(f"_cp_{c}.v"))
-        t_prev = F.when(tp_d.isNotNull(), tp_d).otherwise(F.col(f"_cp_{c}.t"))
-        val_next = F.when(tn_d.isNotNull(), vn_d).otherwise(F.col(f"_cn_{c}.v"))
-        t_next = F.when(tn_d.isNotNull(), tn_d).otherwise(F.col(f"_cn_{c}.t"))
-        # exact small integers as doubles: bit-identical arithmetic to the
-        # int position differences of the plain path
-        d_prev = (t_sec - t_prev.cast("timestamp").cast("double")) / step_s
-        d_next = (t_next.cast("timestamp").cast("double") - t_sec) / step_s
-        interp = F.when(
-            val_prev.isNotNull() & val_next.isNotNull(),
-            val_prev + (val_next - val_prev) * d_prev / (d_next + d_prev),
-        ).when(val_prev.isNotNull(), val_prev).otherwise(val_next)
-        in_limit = (
-            (t_prev.isNotNull() & (d_prev <= limit))
-            | (t_next.isNotNull() & (d_next <= limit))
-        )
-        filled = F.when(F.col(c).isNotNull(), F.col(c)).when(in_limit, interp)
-        out = out.withColumn(f"{c}_filled", filled)
-        if with_locf:
-            out = out.withColumn(f"{c}_locf", F.coalesce(F.col(c), val_prev))
-        any_filled = any_filled | (F.col(c).isNull() & filled.isNotNull())
-    drop = ["_seg"] + [x for c in cols for x in (f"_cp_{c}", f"_cn_{c}")]
-    return out.withColumn("gap_filled", any_filled).drop(*drop)
+    return df.withColumn("gap_filled", any_filled).drop("_pos")
 
 
 def interpolate_runs(
@@ -393,20 +165,19 @@ def interpolate_runs(
 ) -> DataFrame:
     """Densify + interpolate for a step-regular grid WITHOUT any window
     over the dense grid — bit-identical to ``densify`` → count-coalesce →
-    ``interpolate`` (the r07 plain-path rewrite; equality property-tested
-    in tests/test_gapfill.py).
+    ``interpolate`` (equality property-tested in tests/test_gapfill.py).
 
     Physics: every fill decision (nearest non-null anchors, row-distance
     limits) is a function of the SPARSE rollup rows only — on a regular
     grid the dense row-position differences collapse to
-    ``(t − anchor_t)/step`` (the ``interpolate_dense`` observation).  So
+    ``(t − anchor_t)/step``.  So
     the anchors are computed with two window sorts over the sparse rows
     (one asc, one desc — |rollup| rows, not |grid|), and the dense grid is
     then GENERATED: each sparse row owns the half-open run up to the next
     sparse row and explodes it (day-split so no array exceeds one day of
     buckets, and repartitioned by (conv, day) so a hot conversation's
-    spine spreads across tasks).  The old plain path instead left-joined
-    the spine and ran three window passes (row_number + forward + reverse
+    spine spreads across tasks).  The generic chain instead left-joins
+    the spine and runs three window passes (row_number + forward + reverse
     anchor scans) over the EXPLODED grid — ~370× more window-sorted rows
     at 1m granularity with 0.27 % bucket occupancy (sf0.1 shape).
 
@@ -417,7 +188,7 @@ def interpolate_runs(
     of every row in run(r) is the first non-null strictly after r.  The
     interpolation arithmetic keeps the plain path's exact bit pattern:
     distances are exact small integers as doubles, numerator/denominator
-    association unchanged (same trick as ``interpolate_dense``).
+    association unchanged.
     """
     step = _SECONDS[tier]
     oc = "bucket_start"
@@ -529,79 +300,17 @@ def locf(
     return df
 
 
-#: grid length above which a conversation's per-conv window sort is a
-#: skew hazard — same bound as rollup.LAG_SEG_ROWS (≈69 days of 1m grid)
-GRID_SEG_ROWS = 100_000
-
-
-def gap_fill_rollup(
-    rollup: DataFrame,
-    tier: str = "1m",
-    limit: int = 1,
-    segment_rows: int | str | None = "auto",
-) -> DataFrame:
+def gap_fill_rollup(rollup: DataFrame, tier: str = "1m", limit: int = 1) -> DataFrame:
     """End-to-end: densify → counts default 0 → LOCF + linear interp on
-    latency features (the §7.1 slice).
+    latency features (the §7.1 slice), as one ``interpolate_runs`` plan.
 
-    **Skew (``segment_rows``)**: the plain form's per-conversation
-    windows sort a conversation's WHOLE dense grid on one task — the
-    skew harness measured the hot conversation pinning the gap-fill
-    stage (SKEW_SCALING_r06.json).  The dense-grid day-segmented form
-    (``interpolate_dense``) spreads it across days — but costs a
-    measured **+24 % wall / +39 % CPU on non-skew data** (interleaved
-    A/B, checksums equal: ``scripts/GAPFILL_DENSE_AB_r06.json``), the
-    same insurance-premium shape as the segmented lag
-    (SEG_OVERHEAD_r06.json → its adaptive gate).
-
-    **Auto gate (default)**: the hazard has an exact, cheap witness —
-    the longest conversation grid, ``max over convs of
-    (max−min bucket)/step + 1``, one partial-aggregated two-column pass
-    over the SPARSE rollup (≪ grid rows).  Below ``GRID_SEG_ROWS`` every
-    per-conv sort is bounded and the plain form is chosen; the two forms
-    are bit-equal (pandas-parity + dense≡plain tests, and the A/B
-    asserts checksum equality), so the gate is value-neutral.  Explicit
-    ``int`` forces the dense path (threshold ignored — callers with
-    catalog stats); ``None`` forces plain.  Eager caveat: "auto" runs
-    one Spark job at plan-build time.
+    Skew-safe without a gate: a conversation's window sorts cover only
+    its observed rollup rows (at most one per bucket, so ≤1440 per
+    conversation-day at 1m), never its dense grid, and the fan-out to the
+    grid happens after the ``(conv, day)`` repartition, so a hot
+    conversation's grid spreads across tasks by day.  Lazy: no Spark job
+    runs until the result is consumed, and the plan reads its input once,
+    so nothing is cached.
     """
-    step = _SECONDS[tier]
-    # Materialize the sparse rollup once: the auto-gate probe, the spine
-    # bounds aggregate, the densify join's build side (and, on the dense
-    # path, the anchor summary + day spine) each reference this frame, and
-    # Spark plans are trees — every reference re-ran the whole upstream
-    # subtree (rollup aggregation included).  One MEMORY_AND_DISK persist
-    # turns 3-4 upstream evaluations into 1; the sparse tier is ~1 % of
-    # raw bytes at any scale, so the footprint is the cheap side of the
-    # trade.  Blocks are released by the ContextCleaner when the frame is
-    # garbage-collected.
-    from pyspark.storagelevel import StorageLevel
-
-    rollup = rollup.persist(StorageLevel.MEMORY_AND_DISK)
-    if segment_rows == "auto":
-        # NTZ-safe: cast through timestamp before double (Spark 4 forbids
-        # TIMESTAMP_NTZ→double; session TZ is pinned UTC) — same pattern
-        # as interpolate_dense/sessions (ADVICE r06)
-        mx = (
-            rollup.groupBy("conv_id")
-            .agg(
-                (
-                    (F.max("bucket_start").cast("timestamp").cast("double")
-                     - F.min("bucket_start").cast("timestamp").cast("double"))
-                    / F.lit(step)
-                ).alias("_span")
-            )
-            .agg(F.max("_span"))
-            .first()[0]
-        )
-        segment_rows = GRID_SEG_ROWS if (mx or 0) + 1 >= GRID_SEG_ROWS else None
-    if segment_rows:
-        dense = densify(rollup, tier)
-        dense = dense.withColumn(
-            "turn_cnt", F.coalesce("turn_cnt", F.lit(0))
-        ).withColumn("tool_call_cnt", F.coalesce("tool_call_cnt", F.lit(0)))
-        return interpolate_dense(dense, rollup, ["latency_avg"], limit=limit,
-                                 step_s=step, with_locf=True)
-    # plain path: run-generation form — no window over the dense grid at
-    # all (see interpolate_runs; bit-equal to densify → interpolate)
     return interpolate_runs(rollup, tier, ["latency_avg"], limit=limit,
                             with_locf=True)

@@ -26,10 +26,12 @@ from pyspark.sql import functions as F
 def max_group_rows(df: DataFrame, *keys: str) -> int:
     """Exact hot-key witness: the largest per-key row count.  One
     column-pruned partial-aggregated pass over the key columns — the
-    cheap probe the ``seg_rows="auto"`` gates run before choosing the
-    skew-insured plan (same policy as rollup.turn_features /
-    gapfill.gap_fill_rollup: don't pre-pay the segmented form's premium
-    on uniform data, detect the hazard with an exact witness instead)."""
+    cheap probe the asof/sessionize/funnel ``seg_rows="auto"`` gates run
+    before choosing the skew-insured plan (same policy as
+    rollup.turn_features: don't pre-pay the segmented form's premium on
+    uniform data, detect the hazard with an exact witness instead).
+    Gap-fill needs no such gate: its window sorts cover only the sparse
+    rollup rows (gapfill.gap_fill_rollup)."""
     row = df.groupBy(*[F.col(k) for k in keys]).count().agg(
         F.max("count")
     ).first()

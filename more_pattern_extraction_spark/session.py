@@ -68,6 +68,13 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("MPE_DRIVER_MEM", "8g"))
+        # whole-stage codegen JIT-compiles every generated class; a
+        # C1-only driver (-XX:TieredStopAtLevel=1) shrinks the default
+        # code cache to 48 MB, which one ingest + repair + read session
+        # fills (~53 MB used), and the JVM then fails tasks with "Out of
+        # space in CodeCache for adapters".  240 MB is the tiered default.
+        # A default option, so callers' extraJavaOptions still apply.
+        .config("spark.driver.defaultJavaOptions", "-XX:ReservedCodeCacheSize=240m")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

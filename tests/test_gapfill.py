@@ -142,139 +142,97 @@ def test_bucket_spine_day_split_equals_full_sequence(spark):
     assert list(c2) == [pd.Timestamp("2024-02-10 12:00")]
 
 
-def test_interpolate_segmented_equals_plain(spark):
-    """Day-segmented interpolate (the hot-conversation path used by
-    gap_fill_rollup) must be bit-identical to the plain per-conversation
-    windows on every shape that stresses the carry logic: values days
-    apart, ENTIRE days of nulls (empty-segment carry), leading/trailing
-    nulls, several limits, plus the fused _locf column."""
-    import numpy as np
-    import pandas as pd
-
-    rng = np.random.default_rng(5)
-    frames = []
-    for cid in ("a", "b", "c"):
-        n = int(rng.integers(2000, 5000))  # ~1.4-3.5 days of 1m buckets
-        x = rng.normal(0, 1, n)
-        # sparsify: ~97% null, so anchors are often days apart
-        x[rng.random(n) > 0.03] = np.nan
-        if cid == "b":
-            x[: n // 2] = np.nan   # leading half (incl. whole days) null
-        if cid == "c":
-            x[n // 3:] = np.nan    # trailing days null
-        frames.append(pd.DataFrame({
-            "conv_id": cid,
-            "bucket_start": pd.date_range("2024-03-30 17:00", periods=n,
-                                          freq="1min"),
-            "x": x,
-        }))
-    df = spark.createDataFrame(pd.concat(frames, ignore_index=True))
-    for limit in (1, 7, 100000):
-        plain = (
-            G.interpolate(df, ["x"], limit=limit, with_locf=True)
-            .toPandas().sort_values(["conv_id", "bucket_start"])
-            .reset_index(drop=True)
-        )
-        seg = (
-            G.interpolate(df, ["x"], limit=limit, with_locf=True,
-                          segment="day")
-            .toPandas().sort_values(["conv_id", "bucket_start"])
-            .reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(seg[plain.columns], plain)
-
-
-def test_interpolate_dense_equals_plain(spark, transcripts):
-    """gap_fill_rollup's dense-grid skew path (interpolate_dense: anchor
-    times instead of row positions, sparse-side carry summary) must be
-    bit-identical to the plain per-conversation interpolate on the same
-    densified grid — filled values, _locf, and gap_filled flags."""
-    from pyspark.sql import functions as F
-
-    r1m = R.rollup_from_raw(R.turn_features(transcripts), "1m")
-    dense = G.densify(r1m, "1m")
-    dense = dense.withColumn("turn_cnt", F.coalesce("turn_cnt", F.lit(0))) \
-                 .withColumn("tool_call_cnt", F.coalesce("tool_call_cnt", F.lit(0)))
-    for limit in (1, 10):
-        plain = (
-            G.interpolate(dense, ["latency_avg"], limit=limit, with_locf=True)
-            .toPandas().sort_values(["conv_id", "bucket_start"])
-            .reset_index(drop=True)
-        )
-        got = (
-            G.interpolate_dense(dense, r1m, ["latency_avg"], limit=limit,
-                                step_s=60, with_locf=True)
-            .toPandas().sort_values(["conv_id", "bucket_start"])
-            .reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(got[plain.columns], plain)
-
-
-def test_gap_fill_rollup_adaptive_gate(spark, transcripts):
-    """The dense-vs-plain gate (GAPFILL_DENSE_AB_r06.json: dense costs
-    +24% wall on non-skew data) is value-neutral: both forced branches
-    and the auto default produce identical rows, and auto picks the
-    plain branch when every conversation grid is below GRID_SEG_ROWS."""
-    from pyspark.sql import functions as F
-
-    r1m = R.rollup_from_raw(R.turn_features(transcripts), "1m")
-    mx = (
-        r1m.groupBy("conv_id")
-        .agg(((F.max("bucket_start").cast("double")
-               - F.min("bucket_start").cast("double")) / 60).alias("s"))
-        .agg(F.max("s")).first()[0]
-    )
-    assert mx + 1 < G.GRID_SEG_ROWS  # fixture is below the threshold
-
-    def rows(df):
-        return df.select(
-            "conv_id", "bucket_start", "latency_avg_filled", "latency_avg_locf"
-        ).orderBy("conv_id", "bucket_start").collect()
-
-    auto = rows(G.gap_fill_rollup(r1m, "1m"))
-    plain = rows(G.gap_fill_rollup(r1m, "1m", segment_rows=None))
-    dense = rows(G.gap_fill_rollup(r1m, "1m", segment_rows=1))
-    assert auto == plain == dense
-
-    # plan witness: auto == plain here (no day-carry join in the plain
-    # form — interpolate_dense is the only consumer of the carry summary)
-    auto_plan = G.gap_fill_rollup(r1m, "1m")._jdf.queryExecution().executedPlan().toString()
-    dense_plan = G.gap_fill_rollup(r1m, "1m", segment_rows=1)._jdf.queryExecution().executedPlan().toString()
-    assert auto_plan.count("Window") < dense_plan.count("Window") or len(auto_plan) < len(dense_plan)
-
-
-def test_gap_fill_rollup_gate_picks_dense_on_wide_grid(spark):
-    """Skew direction of the auto gate: one conversation whose grid spans
-    >= GRID_SEG_ROWS minute-buckets (the skew harness's hot-conversation
-    shape) must flip auto onto the day-segmented dense path.  Plan-only:
-    the witness agg runs on the 2-row sparse rollup; the 100k-row grid is
-    never collected."""
+def _sparse_rollup(spark, tier):
+    """Random sparse rollup in ``rollup_from_raw``'s schema, over shapes
+    that stress run generation: values days apart (multi-day runs), whole
+    days of NULL latency, leading and trailing NULLs, single-row
+    conversations, and a ~3 %-occupied grid."""
     import datetime as dt
 
+    from pyspark.sql import types as T
+
+    step = {"1m": 60, "1h": 3600}[tier]
+    rng = np.random.default_rng(11 if tier == "1m" else 12)
+    t0 = dt.datetime(2024, 3, 30, 17, 0) if tier == "1m" else dt.datetime(2024, 3, 30)
+
+    def at(k):
+        return t0 + dt.timedelta(seconds=step * int(k))
+
+    day = 86400 // step
+    convs = {
+        # values on day 0 and day 3 only: runs cross two whole empty days
+        "multi_day": ([0, 5, 6, 3 * day + 2, 3 * day + 9], [1.0, None, 2.0, 4.0, 8.0]),
+        # rows on every day, but one whole day of them has NULL latency
+        "null_day": (
+            list(range(0, 3 * day, 7)),
+            [None if day <= k < 2 * day else float(k % 13) for k in range(0, 3 * day, 7)],
+        ),
+        "leading": ([0, 1, 4, 9, 40], [None, None, None, 3.0, 5.0]),
+        "trailing": ([0, 3, 4, 20, 2 * day + 1], [2.0, 6.0, None, None, None]),
+        "single": ([17], [4.5]),
+        "single_null": ([23], [None]),
+    }
+    for i in range(4):
+        n = int(rng.integers(2 * day, 4 * day))
+        ks = np.flatnonzero(rng.random(n) < 0.03)
+        ks = np.union1d(ks, [0, n - 1])
+        vals = [None if rng.random() < 0.4 else float(rng.normal()) for _ in ks]
+        convs[f"rand{i}"] = (list(ks), vals)
+    rows = []
+    for cid, (ks, vals) in convs.items():
+        for k, v in zip(ks, vals):
+            n = int(rng.integers(1, 5))
+            lat_cnt = 0 if v is None else n
+            rows.append((cid, at(k), n, int(rng.integers(0, n + 1)),
+                         None if v is None else v * n, lat_cnt,
+                         v, v, v, v, tier))
+    schema = T.StructType([
+        T.StructField("conv_id", T.StringType()),
+        T.StructField("bucket_start", T.TimestampType()),
+        T.StructField("turn_cnt", T.LongType(), False),
+        T.StructField("tool_call_cnt", T.LongType()),
+        T.StructField("latency_sum", T.DoubleType()),
+        T.StructField("latency_cnt", T.LongType(), False),
+        T.StructField("latency_min", T.DoubleType()),
+        T.StructField("latency_max", T.DoubleType()),
+        T.StructField("latency_p95", T.DoubleType()),
+        T.StructField("latency_avg", T.DoubleType()),
+        T.StructField("tier", T.StringType(), False),
+    ])
+    return spark.createDataFrame(rows, schema)
+
+
+@pytest.mark.parametrize("tier", ["1m", "1h"])
+def test_gap_fill_rollup_equals_reference_chain(spark, tier):
+    """``gap_fill_rollup`` (run generation) is bit-identical to the
+    reference chain densify → counts coalesced to 0 →
+    ``interpolate(with_locf=True)``: same columns and types, same rows,
+    same values, for small limits and one larger than any grid."""
     from pyspark.sql import functions as F
 
-    t0 = dt.datetime(2024, 1, 1)
-    t1 = t0 + dt.timedelta(seconds=60 * G.GRID_SEG_ROWS)
-    pdf = pd.DataFrame(
-        {
-            "conv_id": ["hot", "hot"],
-            "bucket_start": [t0, t1],
-            "turn_cnt": [3, 4],
-            "tool_call_cnt": [1, 0],
-            "latency_avg": [1.5, 2.5],
-        }
+    r = _sparse_rollup(spark, tier)
+    grid = G.densify(r, tier).groupBy("conv_id").count().agg(F.max("count")).first()[0]
+    ref_dense = (
+        G.densify(r, tier)
+        .withColumn("turn_cnt", F.coalesce("turn_cnt", F.lit(0)))
+        .withColumn("tool_call_cnt", F.coalesce("tool_call_cnt", F.lit(0)))
     )
-    r1m = spark.createDataFrame(pdf)
 
-    def plan(df):
-        return df._jdf.queryExecution().executedPlan().toString()
+    def rows(df):
+        return sorted(df.collect(), key=lambda x: (x.conv_id, x.bucket_start))
 
-    auto_plan = plan(G.gap_fill_rollup(r1m, "1m"))
-    dense_plan = plan(G.gap_fill_rollup(r1m, "1m", segment_rows=1))
-    plain_plan = plan(G.gap_fill_rollup(r1m, "1m", segment_rows=None))
-    # auto matches the dense form here, not the plain one: the dense path's
-    # day-carry join adds plan nodes the plain form lacks
-    assert auto_plan.count("Window") == dense_plan.count("Window")
-    assert dense_plan.count("Window") != plain_plan.count("Window") or len(
-        dense_plan
-    ) > len(plain_plan)
+    for limit in (1, 2, 7, grid + 1):
+        got = G.gap_fill_rollup(r, tier, limit=limit)
+        ref = G.interpolate(ref_dense, ["latency_avg"], limit=limit, with_locf=True)
+        # names, types and order match; so does nullability, except that
+        # run generation derives is_gap from a comparison Spark marks
+        # nullable, where densify's isNull() is not.  Aligning it would
+        # turn the stored rollup_1m_filled column from optional to
+        # required and change every file's bytes, so it is left as is.
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in ref.schema]
+        assert [f.nullable for f in got.schema if f.name != "is_gap"] == [
+            f.nullable for f in ref.schema if f.name != "is_gap"]
+        got_rows, ref_rows = rows(got), rows(ref)
+        assert len(got_rows) == len(ref_rows)
+        assert got_rows == ref_rows, limit

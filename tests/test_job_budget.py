@@ -12,12 +12,13 @@ from pyspark.sql import functions as F
 from more_pattern_extraction_spark.plans.pipeline import run_pipeline
 from more_pattern_extraction_spark.plans.repair import repair_late_turns
 
-# measured: 39-40 / 7 / 43 jobs (65 / 10 / 64 before the stage table);
-# adaptive execution runs the stages of the ingest's unit-list collect as
-# one or two jobs, depending on which stage finishes first
-COLD_INGEST_JOBS = 40
+# measured: 35 / 7 / 38 jobs; the cold-ingest bound keeps one job of
+# slack because adaptive execution runs the stages of the ingest's
+# unit-list collect as one or two jobs, depending on which stage
+# finishes first
+COLD_INGEST_JOBS = 36
 NOOP_RESUME_JOBS = 7
-REPAIR_JOBS = 43
+REPAIR_JOBS = 38
 
 
 def _jobs(spark, group, fn):

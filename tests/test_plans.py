@@ -107,22 +107,18 @@ def test_gapfill_is_pure_catalyst(spark, events):
         F.count("value").alias("latency_cnt"),
         F.avg("value").alias("latency_avg"),
     )
-    # both gate branches are pure Catalyst (dense pinned, then plain)
-    p = plan_str(G.gap_fill_rollup(r1m, "1m", segment_rows=1), mode="simple")
+    p = plan_str(G.gap_fill_rollup(r1m, "1m"), mode="simple")
     assert "EvalPython" not in p and "InPandas" not in p
-    p = plan_str(G.gap_fill_rollup(r1m, "1m", segment_rows=None), mode="simple")
-    assert "EvalPython" not in p and "InPandas" not in p
+    assert "InMemoryTableScan" not in p  # nothing cached
 
 
 def test_gapfill_dense_grid_generated_once(spark, events):
-    """Regression lock for the round-6 gapfill_2d +148 % incident: the
-    day-segmented interpolate's carry summary re-aggregated the exploded
-    grid, and column pruning made the two branches' subtrees differ, so
-    ReusedExchange never fired and the densify pipeline (minute-grid
-    explode + left join) computed TWICE.  ``interpolate_dense`` summarizes
-    the SPARSE pre-densify rollup instead, so the minute-grid Generate
-    must appear exactly once in the plan — the only other Generate is the
-    day-spine (interval 1 day, bounds rows only).  PLANS.md §Gap-fill."""
+    """Run-generation lock: gap-fill generates the minute grid exactly
+    once, after every window.  The windows sort only the sparse rollup
+    rows; a window above the grid Generate would sort the dense grid
+    (one task per conversation, the skew hazard), and a second grid
+    Generate would compute the densify pipeline twice.  PLANS.md
+    §Gap-fill."""
     from more_pattern_extraction_spark.operators import gapfill as G
 
     r1m = events.groupBy(
@@ -135,15 +131,14 @@ def test_gapfill_dense_grid_generated_once(spark, events):
         F.count("value").alias("latency_cnt"),
         F.avg("value").alias("latency_avg"),
     )
-    # pin the dense branch: the adaptive gate (GAPFILL_DENSE_AB_r06)
-    # picks plain on this small input, but the regression lock is about
-    # the DENSE plan's shape
-    p = plan_str(G.gap_fill_rollup(r1m, "1m", segment_rows=1), mode="simple")
-    gen = [ln for ln in p.splitlines() if "Generate explode" in ln]
-    minute_grid = [ln for ln in gen if "'60' SECOND" in ln or "60 seconds" in ln]
-    assert len(minute_grid) == 1, p  # grid explode computes once, ever
-    # remaining Generates are day-spines only (densify + segmented-lag seg spine)
-    assert len(gen) <= 3, p
+    p = plan_str(G.gap_fill_rollup(r1m, "1m"), mode="simple")
+    lines = p.splitlines()
+    grid = [i for i, ln in enumerate(lines)
+            if "Generate explode" in ln and ("'60' SECOND" in ln or "60 seconds" in ln)]
+    assert len(grid) == 1, p  # grid explode computes once, ever
+    # the plan prints top-down: nothing above the grid Generate is a Window
+    assert not any("Window" in ln for ln in lines[:grid[0]]), p
+    assert any("Window" in ln for ln in lines[grid[0]:]), p
 
 
 def test_feature_rollup_shuffles_raw_turns_once(spark, events):

@@ -58,6 +58,15 @@ def test_minhash_lsh_finds_planted(spark, docs):
     assert (0, 100) in pairs and (1, 101) in pairs
 
 
+def test_minhash_lsh_pairs_leaves_no_cache(spark, docs):
+    """Pair search persists nothing: a session that runs it repeatedly
+    keeps the same number of cached RDDs."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = rdds().size()
+    DD.minhash_lsh_pairs(docs, n_hashes=8, bands=4, threshold=0.5).collect()
+    assert rdds().size() == before
+
+
 def test_minhash_lsh_bucket_cap_bounds_viral_bucket(spark, docs):
     """A viral bucket (many identical texts) is capped at max_bucket_width
     lowest doc ids: candidate pairs stay O(cap²) instead of O(w²), and the
