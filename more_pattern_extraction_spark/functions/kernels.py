@@ -3,9 +3,11 @@
 Implements, from the published algorithms (no stumpy/scipy in the image):
 
   * STOMP self-join matrix profile (Zhu et al., "Matrix Profile II", ICDM
-    2016) — z-normalized Euclidean, O(n²) time / O(n) space, row-
-    vectorized; replaces the reference's ``stumpy.stump``
-    (``modules/patterns.py:313-364`` create_mp).
+    2016) — z-normalized Euclidean, as blocked GEMMs over the upper
+    triangle: each window pair's dot product is computed once, about
+    l²·m/2 multiply-adds for l windows, one block of at most 128 rows ×
+    l at a time (see _block_rows); replaces the reference's
+    ``stumpy.stump`` (``modules/patterns.py:313-364`` create_mp).
   * mSTOMP k-dimensional matrix profile (Yeh et al., "Matrix Profile VI",
     ICDM 2017) with ``include`` constraint — replaces ``mstump``.
   * MASS2 FFT distance profile (Mueen et al.) — replaces
@@ -19,7 +21,10 @@ Conventions matching stumpy (the reference's backend):
   * exclusion zone = ceil(m/4) unless given;
   * constant (σ≈0) subsequences: both constant → distance 0, one constant
     → distance sqrt(m) (so no noise injection is needed, unlike the
-    reference's add_noise_to_series, preprocessing.py:106-144).
+    reference's add_noise_to_series, preprocessing.py:106-144);
+  * a subsequence holding a non-finite value (an unfilled gap) gets
+    profile inf and index −1 and is nobody's neighbour; every other
+    subsequence is unaffected.
 
 These run inside grouped pandas UDFs (operators/matrix_profile.py) — one
 conversation (or conversation-chunk pair) per group.
@@ -34,17 +39,30 @@ _EPS = 1e-13
 
 def sliding_mean_std(t: np.ndarray, m: int) -> tuple[np.ndarray, np.ndarray]:
     """Rolling mean/std of every length-m window, numerically stable
-    (two-pass cumsum over de-meaned data)."""
+    (two-pass cumsum over de-meaned data).  A window holding a non-finite
+    value gets mean and std NaN; the other windows are unaffected."""
     t = np.asarray(t, dtype=np.float64)
     n = len(t)
     l = n - m + 1
+    finite = np.isfinite(t)
+    holed = not finite.all()
+    if holed:
+        # stand-in values keep the cumsums finite; their windows are
+        # blanked below
+        t = np.where(finite, t, t[finite].mean() if finite.any() else 0.0)
     c = t - t.mean()  # precondition to tame cumsum cancellation
     cs = np.concatenate([[0.0], np.cumsum(c)])
     cs2 = np.concatenate([[0.0], np.cumsum(c * c)])
     mu_c = (cs[m:] - cs[:l]) / m
     var = (cs2[m:] - cs2[:l]) / m - mu_c * mu_c
     var[var < 0] = 0.0
-    return mu_c + t.mean(), np.sqrt(var)
+    mu, sig = mu_c + t.mean(), np.sqrt(var)
+    if holed:
+        holes = np.concatenate([[0], np.cumsum(~finite)])
+        bad = holes[m:] > holes[:l]
+        mu[bad] = np.nan
+        sig[bad] = np.nan
+    return mu, sig
 
 
 def _sliding_dot(q: np.ndarray, t: np.ndarray) -> np.ndarray:
@@ -79,58 +97,49 @@ def _zdist_from_qt(
 
 
 def mass2(q: np.ndarray, t: np.ndarray) -> np.ndarray:
-    """Distance profile of query q against series t (z-normalized)."""
+    """Distance profile of query q against series t (z-normalized); a
+    window of t holding a non-finite value is at distance inf."""
     q = np.asarray(q, dtype=np.float64)
     t = np.asarray(t, dtype=np.float64)
     m = len(q)
     mu_t, sig_t = sliding_mean_std(t, m)
-    qt = _sliding_dot(q, t)
-    return _zdist_from_qt(qt, m, q.mean(), q.std(), mu_t, sig_t)
-
-
-def _block_rows(l: int) -> int:
-    """QT block height bounding the GEMM output block to ~512 KB — L2-
-    resident, so the post-GEMM argmax pass never round-trips DRAM.
-    Measured: 23 % faster single-thread than a 32 MB budget AND 0.91
-    scaling efficiency at 8 concurrent workers (vs 0.76 — big blocks
-    thrash the shared L3 under concurrency)."""
-    return max(16, min(1024, (1 << 19) // max(l, 1)))
-
-
-def _zdist_block(
-    qt: np.ndarray, m: int,
-    mu_r: np.ndarray, sig_r: np.ndarray,
-    mu_c: np.ndarray, sig_c: np.ndarray,
-) -> np.ndarray:
-    """Blockwise z-norm distances from a (rows × cols) QT matrix, with the
-    stumpy constant-window convention (see _zdist_from_qt)."""
-    r_const = sig_r < _EPS
-    c_const = sig_c < _EPS
-    with np.errstate(divide="ignore", invalid="ignore"):
-        rho = (qt - m * mu_r[:, None] * mu_c[None, :]) / (
-            m * sig_r[:, None] * sig_c[None, :]
-        )
-    d2 = 2.0 * m * (1.0 - rho)
-    np.clip(d2, 0.0, None, out=d2)
-    d = np.sqrt(d2)
-    if r_const.any() or c_const.any():
-        sq = np.sqrt(m)
-        d[r_const[:, None] & ~c_const[None, :]] = sq
-        d[~r_const[:, None] & c_const[None, :]] = sq
-        d[r_const[:, None] & c_const[None, :]] = 0.0
+    bad = np.isnan(sig_t)
+    holed = bad.any()
+    # the FFT would smear one NaN over every dot product
+    qt = _sliding_dot(q, np.where(np.isfinite(t), t, 0.0) if holed else t)
+    d = _zdist_from_qt(qt, m, q.mean(), q.std(), mu_t, sig_t)
+    if holed:
+        d[bad] = np.inf
     return d
 
 
-def _znorm_windows(t: np.ndarray, m: int) -> tuple[np.ndarray, np.ndarray]:
-    """(l × m) matrix of z-normalized windows + constant-window mask.
-    Constant windows become zero rows (their dot with anything is 0)."""
+def _block_rows(l: int) -> int:
+    """Row-block height of the STOMP GEMMs: at most 128 rows, and an
+    output block of at most 2^19 doubles (4 MB).  In the half-GEMM
+    ``stomp`` a block's own square is computed twice (about l·b/2 extra
+    pairs over the l²/2 needed) while every block pays a fixed cost for
+    its few dozen numpy calls, so the best height is a constant, not a
+    share of l.  Measured on a 4-core VM with one BLAS thread, 8 series of
+    1,381 windows (m = 60), stomp → discords → FLUSS paired against the
+    full-GEMM form: 94–189 rows 0.52–0.55×, 128 rows 0.52×, 256 rows
+    0.58×, and the former 2^19/l height (379 rows) 0.72×."""
+    return max(16, min(128, (1 << 19) // max(l, 1)))
+
+
+def _znorm_windows(t: np.ndarray, m: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(l × m) matrix of z-normalized windows, constant-window mask, and
+    the mask of windows holding a non-finite value.  Constant and
+    non-finite windows become zero rows (their dot with anything is 0)."""
     mu, sig = sliding_mean_std(t, m)
     W = np.ascontiguousarray(np.lib.stride_tricks.sliding_window_view(t, m))
     const = sig < _EPS
+    bad = np.isnan(sig)
     safe = np.where(const, 1.0, sig)
     Wz = (W - mu[:, None]) / safe[:, None]
     Wz[const] = 0.0
-    return Wz, const
+    if bad.any():
+        Wz[bad] = 0.0
+    return Wz, const, bad
 
 
 def _apply_const_convention(qt: np.ndarray, r_const: np.ndarray, c_const: np.ndarray, m: int) -> None:
@@ -143,15 +152,37 @@ def _apply_const_convention(qt: np.ndarray, r_const: np.ndarray, c_const: np.nda
         qt[r_const] = np.where(c_const, float(m), m / 2.0)[None, :]
 
 
+def _exclude_windows(qt: np.ndarray, r_bad: np.ndarray, c_bad: np.ndarray) -> None:
+    """qt −inf on every pair with a window holding a non-finite value (the
+    stumpy convention): it gets profile inf and index −1, and is no
+    window's neighbour.  Applied after _apply_const_convention."""
+    qt[r_bad] = -np.inf
+    qt[:, c_bad] = -np.inf
+
+
+def _band(rows: np.ndarray, cols: np.ndarray, ez: int) -> tuple[np.ndarray, np.ndarray]:
+    """Exclusion band of a (rows × cols) block: the (r, c) index pairs
+    with |rows[r] − cols[c]| ≤ ez, for ascending window positions ``cols``
+    (global positions for an AB-join)."""
+    lo = np.searchsorted(cols, rows - ez)
+    hi = np.searchsorted(cols, rows + ez, side="right")
+    cnt = hi - lo
+    r = np.repeat(np.arange(len(rows)), cnt)
+    c = np.arange(cnt.sum()) - np.repeat(np.cumsum(cnt) - cnt - lo, cnt)
+    return r, c
+
+
 def stomp(t: np.ndarray, m: int, ez: int | None = None) -> tuple[np.ndarray, np.ndarray]:
     """Self-join matrix profile: (distances, nearest-neighbor indices).
 
-    Blocked-BLAS formulation: windows are z-normalized ONCE, so each row
-    block is a single compute-bound GEMM (dot of z-normed windows), an
-    exclusion mask, and a row argmax — d = sqrt(2(m − qt)) is computed
-    only for the winners.  This keeps 32 cores busy on FLOPs instead of
-    saturating the memory bus with full distance-matrix passes (the
-    dominant scaling limiter before).
+    Half-GEMM formulation: windows are z-normalized ONCE, and the block
+    of rows [i0, i1) is one GEMM against the columns j ≥ i0 only, so each
+    window pair is computed once, in the block of min(i, j).  Its row
+    maxima fold into rows [i0, i1) and its column maxima into the later
+    columns [i1, l), both on qt (d = sqrt(2(m − qt)) is computed only for
+    the winners).  Folds replace on strict >: a candidate from an earlier
+    block always has the smaller index, so the result keeps np.argmax's
+    first-index tie-break over a whole row.
     """
     t = np.asarray(t, dtype=np.float64)
     n = len(t)
@@ -160,22 +191,35 @@ def stomp(t: np.ndarray, m: int, ez: int | None = None) -> tuple[np.ndarray, np.
         return np.empty(0), np.empty(0, dtype=np.int64)
     if ez is None:
         ez = int(np.ceil(m / 4))
-    Wz, const = _znorm_windows(t, m)
-    WzT = Wz.T
-    mp = np.full(l, np.inf)
+    Wz, const, bad = _znorm_windows(t, m)
+    holed = bad.any()
+    pos = np.arange(l)
+    best = np.full(l, -np.inf)
     pi = np.full(l, -1, dtype=np.int64)
     b = _block_rows(l)
     for i0 in range(0, l, b):
         i1 = min(i0 + b, l)
-        qt = Wz[i0:i1] @ WzT
-        _apply_const_convention(qt, const[i0:i1], const, m)
-        for i in range(i0, i1):
-            qt[i - i0, max(0, i - ez) : min(l, i + ez + 1)] = -np.inf
+        qt = Wz[i0:i1] @ Wz[i0:].T
+        _apply_const_convention(qt, const[i0:i1], const[i0:], m)
+        if holed:
+            _exclude_windows(qt, bad[i0:i1], bad[i0:])
+        qt[_band(pos[i0:i1], pos[i0:], ez)] = -np.inf
+        # rows: candidates j ≥ i0 against the folds of earlier blocks
         j = np.argmax(qt, axis=1)
-        best = qt[np.arange(i1 - i0), j]
-        fin = np.isfinite(best)
-        mp[i0:i1][fin] = np.sqrt(np.clip(2.0 * (m - best[fin]), 0.0, None))
-        pi[i0:i1][fin] = j[fin]
+        v = qt[pos[: i1 - i0], j]
+        up = np.flatnonzero(v > best[i0:i1])
+        best[i0 + up] = v[up]
+        pi[i0 + up] = i0 + j[up]
+        # later columns: candidates i in [i0, i1); only improved columns
+        # need the (strided) column argmax
+        tail = qt[:, i1 - i0 :]
+        cmax = tail.max(axis=0)
+        up = np.flatnonzero(cmax > best[i1:])
+        best[i1 + up] = cmax[up]
+        pi[i1 + up] = i0 + np.argmax(tail[:, up], axis=0)
+    mp = np.full(l, np.inf)
+    fin = np.isfinite(best)
+    mp[fin] = np.sqrt(np.clip(2.0 * (m - best[fin]), 0.0, None))
     return mp, pi
 
 
@@ -186,10 +230,10 @@ def _sort_dims_inplace(dist: np.ndarray) -> np.ndarray:
 
     Inputs must be NaN-free: np.minimum/maximum propagate NaN into BOTH
     lanes, so one NaN dimension would poison every profile level (np.sort
-    pushed NaN last instead).  mstomp maps NaN→+inf before calling — +inf
-    sorts last exactly like np.sort's NaN-last, and any profile level
-    whose cumulative sum touches it is non-finite and excluded, the same
-    outcome as a NaN there."""
+    pushed NaN last instead).  mstomp gives a window holding a non-finite
+    value distance +inf (_exclude_windows), never NaN — +inf sorts last
+    exactly like np.sort's NaN-last, and any profile level whose
+    cumulative sum touches it is non-finite and excluded."""
     d = dist.shape[0]
     for rnd in range(d):
         for k in range(rnd % 2, d - 1, 2):
@@ -218,11 +262,9 @@ def mstomp(
         ez = int(np.ceil(m / 4))
     include = sorted(include) if include else []
     rest = [k for k in range(d) if k not in include]
-    Wz, consts = [], []
-    for k in range(d):
-        wz, c = _znorm_windows(ts[k], m)
-        Wz.append(wz)
-        consts.append(c)
+    Wz, consts, bads = zip(*(_znorm_windows(ts[k], m) for k in range(d)))
+    holed = [bad.any() for bad in bads]
+    pos = np.arange(l)
     mps = np.full((d, l), np.inf)
     idx = np.full((d, l), -1, dtype=np.int64)
     # blocked-GEMM like stomp(): per row-block, one GEMM per dim, then the
@@ -238,20 +280,20 @@ def mstomp(
         dist = np.empty((d, bb, l))
         for k in range(d):
             # GEMM straight into the stack slice, then transform in place:
-            # qt → sqrt(2·(m − qt)) with the constant-window convention
+            # qt → sqrt(2·(m − qt)) with the constant-window convention; a
+            # window holding a non-finite value → +inf in this dimension
+            # (qt −inf), which keeps the sort network NaN-free
             qt = dist[k]
             np.matmul(Wz[k][i0:i1], Wz[k].T, out=qt)
             _apply_const_convention(qt, consts[k][i0:i1], consts[k], m)
+            if holed[k]:
+                _exclude_windows(qt, bads[k][i0:i1], bads[k])
             np.clip(qt, None, float(m), out=qt)
             np.subtract(float(m), qt, out=qt)
             qt *= 2.0
             np.sqrt(qt, out=qt)
-        for i in range(i0, i1):
-            dist[:, i - i0, max(0, i - ez): min(l, i + ez + 1)] = np.inf
-        # NaN (from NaN input values, e.g. a missing dimension) → +inf:
-        # keeps the sort network NaN-safe and the position excluded, see
-        # _sort_dims_inplace
-        np.nan_to_num(dist, copy=False, nan=np.inf, posinf=np.inf)
+        r, c = _band(pos[i0:i1], pos, ez)
+        dist[:, r, c] = np.inf
         if include:
             ordered = (
                 np.concatenate([dist[include], _sort_dims_inplace(dist[rest])])
@@ -300,20 +342,20 @@ def stomp_ab(
     pi = np.full(la, -1, dtype=np.int64)
     if la < 1 or lb < 1:
         return mp, pi
-    Wa, const_a = _znorm_windows(ta, m)
-    Wb, const_b = _znorm_windows(tb, m)
+    Wa, const_a, bad_a = _znorm_windows(ta, m)
+    Wb, const_b, bad_b = _znorm_windows(tb, m)
+    holed = bad_a.any() or bad_b.any()
     WbT = Wb.T
+    ig = offset_a + np.arange(la)
     jg = offset_b + np.arange(lb)
     b = _block_rows(lb)
     for i0 in range(0, la, b):
         i1 = min(i0 + b, la)
         qt = Wa[i0:i1] @ WbT
         _apply_const_convention(qt, const_a[i0:i1], const_b, m)
-        for i in range(i0, i1):
-            ig = offset_a + i
-            lo = np.searchsorted(jg, ig - ez)
-            hi = np.searchsorted(jg, ig + ez, side="right")
-            qt[i - i0, lo:hi] = -np.inf
+        if holed:
+            _exclude_windows(qt, bad_a[i0:i1], bad_b)
+        qt[_band(ig[i0:i1], jg, ez)] = -np.inf
         j = np.argmax(qt, axis=1)
         best = qt[np.arange(i1 - i0), j]
         fin = np.isfinite(best)

@@ -21,10 +21,10 @@ Two physical strategies, one logical result:
     does with m = 1 day on a 60 s grid).
 
 Input contract: a regular, gap-filled grid per conversation (rollup tier +
-gapfill), value column non-null, ordered by ``bucket_start``.  NaNs from
-unfilled gaps must be handled upstream (interpolate/locf) — the z-norm of
-a window containing NaN is NaN and poisons the profile, matching the
-reference's requirement to interpolate before stump.
+gapfill), ordered by ``bucket_start``.  A NULL left by a gap longer than
+the fill limit blanks only the windows that hold it (mp inf, pi -1, never
+a neighbour), as stumpy does for NaN; every other window keeps its
+profile.
 """
 
 from __future__ import annotations

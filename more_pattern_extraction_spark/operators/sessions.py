@@ -129,10 +129,12 @@ def sessionize(
     )
     t = t.join(summ, [conv_col, "_blk"])
     flag = F.coalesce(flag_in, F.col("_first_flag"))
-    return (
-        t.withColumn("is_session_start", flag.cast("boolean"))
-        .withColumn("session_idx", F.col("_cum_before") + F.sum(flag).over(run_b))
-        .drop("_blk", "_first_flag", "_cum_before")
+    # the join moves the keys to the front: project back to the plain
+    # form's column order
+    return t.select(
+        *turns.columns,
+        flag.cast("boolean").alias("is_session_start"),
+        (F.col("_cum_before") + F.sum(flag).over(run_b)).alias("session_idx"),
     )
 
 

@@ -153,3 +153,207 @@ def test_complexity_av_and_apply():
     assert (cmp_[finite] >= mp[finite] - 1e-12).all()
     # flat windows get pushed toward the max → ranked away from motifs
     assert cmp_[10] > mp[10]
+
+
+# ---------------------------------------------------------------------------
+# half-GEMM fold vs the row-block reference
+# ---------------------------------------------------------------------------
+
+
+def _stomp_rows(t: np.ndarray, m: int, ez: int | None = None):
+    """Row-block STOMP: every block of rows against ALL columns, one row
+    argmax per block, so every pair is computed twice.  The reference the
+    half-GEMM fold of ``K.stomp`` must reproduce (pi exactly)."""
+    t = np.asarray(t, dtype=np.float64)
+    l = len(t) - m + 1
+    if l < 1:
+        return np.empty(0), np.empty(0, dtype=np.int64)
+    if ez is None:
+        ez = int(np.ceil(m / 4))
+    Wz, const = K._znorm_windows(t, m)[:2]
+    mp = np.full(l, np.inf)
+    pi = np.full(l, -1, dtype=np.int64)
+    b = 64  # rows are independent here, so any height gives the same result
+    for i0 in range(0, l, b):
+        i1 = min(i0 + b, l)
+        qt = Wz[i0:i1] @ Wz.T
+        K._apply_const_convention(qt, const[i0:i1], const, m)
+        for i in range(i0, i1):
+            qt[i - i0, max(0, i - ez) : min(l, i + ez + 1)] = -np.inf
+        j = np.argmax(qt, axis=1)
+        best = qt[np.arange(i1 - i0), j]
+        fin = np.isfinite(best)
+        mp[i0:i1][fin] = np.sqrt(np.clip(2.0 * (m - best[fin]), 0.0, None))
+        pi[i0:i1][fin] = j[fin]
+    return mp, pi
+
+
+def _l_with(pred, lo=40, hi=3000) -> int:
+    """Smallest window count l in [lo, hi) with pred(l, block height)."""
+    return next(l for l in range(lo, hi) if pred(l, K._block_rows(l)))
+
+
+def _fold_cases():
+    rng = np.random.default_rng(21)
+    m = 20
+    below = _l_with(lambda l, b: l < b)
+    multiple = _l_with(lambda l, b: l % b == 0 and l >= 2 * b)
+    plus_one = _l_with(lambda l, b: l % b == 1 and l > 2 * b)
+
+    def walk(l):
+        return rng.normal(0, 1, l + m - 1).cumsum()
+
+    const = np.concatenate([np.zeros(90), rng.normal(0, 1, 120).cumsum(),
+                            np.full(70, 3.0), np.sin(np.arange(80)), np.zeros(60)])
+    # 0/1 repeats with half the points of every window at 1: z-normalized
+    # windows are exactly ±1, so dot products are exact integers that tie,
+    # and only the first-index rule picks pi
+    cases = {
+        "below_one_block": (walk(below), m, None),
+        "block_multiple": (walk(multiple), m, None),
+        "block_multiple_plus_one": (walk(plus_one), m, None),
+        "all_excluded": (walk(6), m, 5),
+        "all_excluded_default_ez": (walk(int(np.ceil(m / 4)) + 1), m, None),
+        "constant_windows": (const, m, None),
+        "exact_repeats_2phase": (np.tile([0.0, 1.0], 200), 8, None),
+        "exact_repeats_4phase": (np.tile([0.0, 0.0, 1.0, 1.0], 150), 12, None),
+    }
+    return [pytest.param(name, *args, id=name) for name, args in cases.items()]
+
+
+@pytest.mark.parametrize("name,t,m,ez", _fold_cases())
+def test_stomp_fold_equals_row_reference(name, t, m, ez):
+    mp, pi = K.stomp(t, m, ez)
+    rmp, rpi = _stomp_rows(t, m, ez)
+    assert mp.shape == rmp.shape
+    np.testing.assert_array_equal(pi, rpi)
+    np.testing.assert_allclose(mp, rmp, rtol=0, atol=1e-12)
+    if name.startswith("all_excluded"):
+        assert np.isinf(mp).all() and (pi == -1).all()
+
+
+def test_exclusion_band_helper():
+    rows = np.arange(3, 9)
+    cols = np.arange(0, 12)
+    r, c = K._band(rows, cols, 2)
+    want = [(i, j) for i in range(len(rows)) for j in range(len(cols))
+            if abs(rows[i] - cols[j]) <= 2]
+    assert sorted(zip(r.tolist(), c.tolist())) == want
+    # global offsets: rows far from every column give no band
+    r, c = K._band(np.arange(100, 104), np.arange(0, 50), 5)
+    assert len(r) == len(c) == 0
+
+
+# ---------------------------------------------------------------------------
+# non-finite input: a window holding NaN is skipped, the rest unaffected
+# ---------------------------------------------------------------------------
+
+
+def _nan_walk(seed: int, n: int, holes) -> np.ndarray:
+    t = np.random.default_rng(seed).normal(0, 1, n).cumsum()
+    t[list(holes)] = np.nan
+    return t
+
+
+def _window_ok(t: np.ndarray, m: int) -> np.ndarray:
+    return np.isfinite(np.lib.stride_tricks.sliding_window_view(t, m)).all(axis=1)
+
+
+def brute_ab(ta, tb, m, ez, off_a, off_b):
+    """AB-join by explicit distances, skipping windows holding a NaN."""
+    la, lb = len(ta) - m + 1, len(tb) - m + 1
+    ok_a, ok_b = _window_ok(ta, m), _window_ok(tb, m)
+    mp = np.full(la, np.inf)
+    pi = np.full(la, -1, dtype=np.int64)
+    for i in range(la):
+        if not ok_a[i]:
+            continue
+        for j in range(lb):
+            if not ok_b[j] or abs((off_a + i) - (off_b + j)) <= ez:
+                continue
+            d = brute_znorm_dist(ta[i : i + m], tb[j : j + m])
+            if d < mp[i]:
+                mp[i], pi[i] = d, off_b + j
+    return mp, pi
+
+
+def _assert_profile(mp, pi, bmp, bpi, dist_at):
+    assert np.isfinite(mp).any()
+    np.testing.assert_array_equal(np.isinf(mp), np.isinf(bmp))
+    np.testing.assert_array_equal(pi == -1, bpi == -1)
+    np.testing.assert_allclose(mp, bmp, rtol=1e-7, atol=1e-7)
+    for i in np.flatnonzero(pi >= 0):  # ties: the distance at pi must agree
+        np.testing.assert_allclose(dist_at(i, pi[i]), bmp[i], rtol=1e-7, atol=1e-7)
+
+
+@pytest.mark.parametrize("holes", [[150], [0], [299], [40, 41, 220]])
+def test_stomp_skips_nan_windows(holes):
+    m = 20
+    t = _nan_walk(31, 300, holes)
+    ez = int(np.ceil(m / 4))
+    mp, pi = K.stomp(t, m)
+    bmp, bpi = brute_ab(t, t, m, ez, 0, 0)
+    _assert_profile(mp, pi, bmp, bpi,
+                    lambda i, j: brute_znorm_dist(t[i : i + m], t[j : j + m]))
+    ok = _window_ok(t, m)
+    assert np.isinf(mp[~ok]).all() and (pi[~ok] == -1).all()
+    assert ok[pi[pi >= 0]].all()  # a NaN window is nobody's neighbour
+
+
+@pytest.mark.parametrize("off_a,off_b", [(0, 0), (0, 130), (130, 0)])
+def test_stomp_ab_skips_nan_windows(off_a, off_b):
+    m, ez = 20, 5
+    ta = _nan_walk(33, 150, [70])
+    tb = _nan_walk(34, 160, [10, 120])
+    mp, pi = K.stomp_ab(ta, tb, m, ez, off_a, off_b)
+    bmp, bpi = brute_ab(ta, tb, m, ez, off_a, off_b)
+    _assert_profile(mp, pi, bmp, bpi,
+                    lambda i, j: brute_znorm_dist(ta[i : i + m], tb[j - off_b : j - off_b + m]))
+
+
+def brute_mstomp(ts, m, ez):
+    """mSTOMP by explicit per-dimension distances: a window holding a NaN
+    in dimension k is at distance inf in that dimension only."""
+    d, n = ts.shape
+    l = n - m + 1
+    ok = np.array([_window_ok(ts[k], m) for k in range(d)])
+    mps = np.full((d, l), np.inf)
+    idx = np.full((d, l), -1, dtype=np.int64)
+    for i in range(l):
+        D = np.full((d, l), np.inf)
+        for j in range(l):
+            if abs(i - j) <= ez:
+                continue
+            for k in range(d):
+                if ok[k, i] and ok[k, j]:
+                    D[k, j] = brute_znorm_dist(ts[k, i : i + m], ts[k, j : j + m])
+        prof = np.cumsum(np.sort(D, axis=0), axis=0) / np.arange(1, d + 1)[:, None]
+        for k in range(d):
+            j = int(np.argmin(prof[k]))
+            if np.isfinite(prof[k, j]):
+                mps[k, i], idx[k, i] = prof[k, j], j
+    return mps, idx
+
+
+@pytest.mark.parametrize("holes", [[[60]], [[60], [], [10, 130]]])
+def test_mstomp_skips_nan_windows(holes):
+    m = 12
+    ts = np.stack([_nan_walk(35 + k, 150, h) for k, h in enumerate(holes)])
+    ez = int(np.ceil(m / 4))
+    mps, idx = K.mstomp(ts, m)
+    bmps, bidx = brute_mstomp(ts, m, ez)
+    np.testing.assert_array_equal(np.isinf(mps), np.isinf(bmps))
+    np.testing.assert_array_equal(idx == -1, bidx == -1)
+    np.testing.assert_allclose(mps, bmps, rtol=1e-7, atol=1e-7)
+    for k in range(len(ts)):
+        assert np.isfinite(mps[k]).sum() > 100
+
+
+def test_mass2_skips_nan_windows():
+    t = _nan_walk(36, 300, [120])
+    q = t[40:64]
+    prof = K.mass2(q, t)
+    ok = _window_ok(t, 24)
+    assert np.isinf(prof[~ok]).all()
+    brute = np.array([brute_znorm_dist(q, t[i : i + 24]) for i in np.flatnonzero(ok)])
+    np.testing.assert_allclose(prof[ok], brute, rtol=1e-6, atol=1e-6)

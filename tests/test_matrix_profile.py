@@ -334,3 +334,35 @@ def test_windowed_mp_spreads_hot_conv_despite_parent_key_partitioning(spark):
     )
     got = out.toPandas().sort_values(["win", "pos"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(got, ref)
+
+
+def test_matrix_profile_null_value_grouped_equals_distributed(spark, planted):
+    """A NULL past the gap-fill limit blanks only the windows holding it:
+    both strategies give those windows mp inf / pi -1, never use them as a
+    neighbour, and agree on every other position."""
+    from pyspark.sql import functions as F
+
+    _, arrays = planted
+    m, hole = 24, 200
+    t = arrays["c1"].copy()
+    df = _series_df(spark, {"c1": t})
+    df = df.withColumn(
+        "latency_avg_filled",
+        F.when(F.col("bucket_start") == pd.Timestamp("2024-01-01") + pd.Timedelta(minutes=hole),
+               F.lit(None)).otherwise(F.col("latency_avg_filled")),
+    )
+    assert df.filter(F.col("latency_avg_filled").isNull()).count() == 1
+    single = MP.matrix_profile(df, m).orderBy("pos").toPandas()
+    dist = MP.matrix_profile_distributed(df, m, chunk_size=100).orderBy("pos").toPandas()
+    t[hole] = np.nan
+    mp, pi = K.stomp(t, m)
+    holed = (np.arange(len(mp)) > hole - m) & (np.arange(len(mp)) <= hole)
+    assert np.isinf(mp[holed]).all() and (pi[holed] == -1).all()
+    assert np.isfinite(mp[~holed]).all() and not holed[pi[~holed]].any()
+    np.testing.assert_allclose(single["mp"].values, mp, rtol=1e-12)
+    assert (single["pi"].values == pi).all()
+    assert len(dist) == len(single)
+    np.testing.assert_allclose(dist["mp"].values, single["mp"].values, rtol=1e-9)
+    assert ((dist["pi"].values == -1) == holed).all()
+    diff = dist["pi"].values != single["pi"].values
+    assert diff.mean() < 0.02  # ties only

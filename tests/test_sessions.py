@@ -90,3 +90,17 @@ def test_segmented_equals_plain(spark):
         return sorted(map(tuple, out.collect()))
 
     assert run(None) == run(1)
+
+
+def test_segmented_keeps_column_order(spark):
+    """Both forms return the input's columns in input order, then
+    is_session_start and session_idx, whichever column the key is."""
+    rows = [(i, T0 + dt.timedelta(minutes=7 * i + 600 * (i % 3)), c)
+            for c in ("a", "b") for i in range(40)]
+    df = spark.createDataFrame(rows, ["event_id", "ts", "conv_id"])
+    want = ["event_id", "ts", "conv_id", "is_session_start", "session_idx"]
+    outs = {seg: sessionize(df, gap_s=1800, tie_cols=("event_id",), seg_rows=seg)
+            for seg in (None, 1)}
+    assert outs[None].columns == want
+    assert outs[1].columns == want
+    assert sorted(map(tuple, outs[1].collect())) == sorted(map(tuple, outs[None].collect()))
