@@ -18,7 +18,8 @@ Design stance (see SURVEY.md §7.0):
     (``sources.catalog``) — partitioned by ``(conv_bucket, ts_bucket)`` so
     a real Iceberg catalog is a one-switch swap.
   * Scale posture: everything is keyed/partitioned by
-    ``(conv_id, ts_bucket)``; hot conversations are salted
+    ``(conv_id, ts_bucket)``; ordered windows over a hot
+    conversation take a segmented form behind one hot-key gate
     (``plans.partitioning``); rollup tiers cascade 1m→1h→1d by exact
     re-aggregation of carried ``(sum, count, min, max)`` partials so no
     tier ever rescans raw turns.

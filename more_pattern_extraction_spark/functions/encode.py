@@ -213,13 +213,6 @@ def decode_gorilla(buf: bytes, n: int) -> np.ndarray:
     return out.view(np.float64)
 
 
-def encode_gorilla_masked(vals: np.ndarray) -> bytes:
-    """Gorilla with an explicit NaN policy: encodes the raw doubles —
-    provided because pandas NULL→NaN conversion must survive the trip;
-    alias kept for API clarity."""
-    return encode_gorilla(vals)
-
-
 # ---------------------------------------------------------------------------
 # Vectorized batch encoders: encode EVERY chunk of an Arrow batch in one
 # numpy pass (the per-chunk Python encoders above cost ~25-50 µs of fixed

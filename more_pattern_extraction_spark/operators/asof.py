@@ -19,10 +19,10 @@ This implementation is the union-tag + running-LOCF form:
 Cost: one Exchange on the key (plan-shape test), no row amplification
 (|L| + |R| rows total), whole-stage-codegen window — the same shape as
 the engine's lag features (rollup.turn_features), including the same
-hot-key hazard: one conversation's rows sort on one task.  The lag
-family's segmented-scan escape hatch (LAG_SEG_ROWS + carry) applies
-here too if a measured need appears; not pre-paid, per the
-SEG_OVERHEAD_r06 policy.  Right rows sort
+hot-key hazard: one conversation's rows sort on one task.  Like the lag,
+the operator therefore has a segmented (key, day) block-carry form too,
+picked by the shared hot-key gate (plans/partitioning.HOT_KEY_ROWS;
+see ``asof_join``).  Right rows sort
 BEFORE left rows at equal timestamps (side 0 < 1), which is what makes
 the match inclusive.  Determinism: the caller must provide at most one
 right row per (key, ts) — dedupe upstream (e.g. ``groupBy(key,
@@ -45,10 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-#: per-key row count above which the ordered window is a skew hazard —
-#: shared bound with rollup.LAG_SEG_ROWS (one conversation on one task)
-ASOF_SEG_ROWS = 100_000
+from more_pattern_extraction_spark.plans import partitioning as P
 
 
 def asof_join(
@@ -60,8 +57,6 @@ def asof_join(
     payload_cols: list[str] | None = None,
     tolerance_s: int | None = None,
     suffix: str = "_asof",
-    seg_rows: int | str | None = "auto",
-    segment: str = "day",
 ) -> DataFrame:
     """Backward-inclusive as-of left join (module docstring).
 
@@ -70,26 +65,20 @@ def asof_join(
     none within ``tolerance_s``) and ``{right_ts}{suffix}`` (the matched
     right timestamp).
 
-    **Skew (``seg_rows``, default ``"auto"``)**: the plain form sorts a
-    key's ENTIRE union stream on one task (the r06 skew harness measured
-    59.9 s vs 8.4 s uniform on a 91 %-hot input).  Above the threshold
-    the windows are segmented per (key, ``date_trunc(segment)``) — a hot
-    key's sort spreads across its days — and the one cross-segment value
-    each segment needs (the previous segments' last non-null payload,
-    PER COLUMN, matching the running ``last ignorenulls``) is carried
-    via a per-(key, segment) summary: one row per segment, windowed over
-    segments (tiny), joined back on (key, segment), which never
-    hot-keys.  Values are exactly the plain form's — within a key
-    ordered by (ts, side), the last non-null occurrence of a column in
-    the preceding segments IS the value the running window would carry
-    into the segment (bit-equal property test, tests/test_asof.py).
-    ``"auto"`` probes the exact witness (max per-key row count, one
-    pruned aggregate — plans/partitioning.max_group_rows) and only pays
-    the segmented premium when a key actually crosses the threshold; an
-    explicit int forces segmentation, ``None`` forces plain.  Eager
-    caveat: "auto" runs one Spark job at plan-build time.  Limitation:
-    a key with > ``seg_rows`` rows inside a single ``segment`` bucket
-    still serializes that bucket (pick a finer ``segment`` then).
+    **Skew**: the plain form sorts a key's ENTIRE union stream on one
+    task (the r06 skew harness measured 59.9 s vs 8.4 s uniform on a
+    91 %-hot input).  The segmented form windows per (key, day) instead
+    and carries the one cross-day value each day needs — the previous
+    days' last non-null payload, PER COLUMN, matching the running
+    ``last ignorenulls`` — via a per-(key, day) summary joined back on
+    (key, day), which never hot-keys.  Both forms are value-equal
+    (property test, tests/test_asof.py).
+
+    **Gate**: the witness is the largest per-key row count of the union
+    of both sides — exactly what the plain window sorts
+    (plans/partitioning.max_group_rows, one job at plan-build time); the
+    segmented form runs when it reaches ``HOT_KEY_ROWS``.  A key with
+    more rows than that inside one day still serializes that day.
     """
     on = [on] if isinstance(on, str) else list(on)
     if payload_cols is None:
@@ -133,20 +122,17 @@ def asof_join(
     )
     u = r_side.unionByName(l_side)
 
-    if seg_rows == "auto":
-        from more_pattern_extraction_spark.plans.partitioning import max_group_rows
-
-        mx = max(max_group_rows(left, *on), max_group_rows(right, *on))
-        seg_rows = ASOF_SEG_ROWS if mx >= ASOF_SEG_ROWS else None
-
-    if seg_rows:
-        blk = F.date_trunc(segment, F.col("_ts"))
+    if P.max_group_rows(u, *on) >= P.HOT_KEY_ROWS:
+        # one never-NULL (key, day) block key (plans/partitioning): NULL
+        # keys and NULL-ts rows meet their carry, and the block window
+        # reuses the join's exchange
+        blk = F.struct(*on, F.date_trunc("day", "_ts").alias("_b"))
         u = u.withColumn("_blk", blk)
         fill_src = ["_rts", *[f"{c}{suffix}" for c in payload_cols]]
-        # per-(key, segment) last non-null occurrence of each carried
+        # per-(key, day) last non-null occurrence of each carried
         # column, in (ts, side) order — max_by ignores rows whose
         # ordering struct is NULL, i.e. rows where the column is null
-        summ = u.groupBy(*on, "_blk").agg(
+        summ = u.groupBy("_blk").agg(
             *[
                 F.max_by(
                     F.col(c),
@@ -156,12 +142,11 @@ def asof_join(
             ]
         )
         w_blk = (
-            Window.partitionBy(*on)
-            .orderBy("_blk")
+            Window.partitionBy(*[f"_blk.{k}" for k in on])
+            .orderBy("_blk._b")
             .rowsBetween(Window.unboundedPreceding, -1)
         )
         summ = summ.select(
-            *on,
             "_blk",
             *[
                 F.last(f"_bl_{c}", ignorenulls=True)
@@ -170,9 +155,9 @@ def asof_join(
                 for c in fill_src
             ],
         )
-        u = u.join(summ, [*on, "_blk"])
+        u = u.join(summ, "_blk")
         w = (
-            Window.partitionBy(*on, "_blk")
+            Window.partitionBy("_blk")
             .orderBy("_ts", "_side")
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )

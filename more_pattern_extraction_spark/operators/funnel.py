@@ -28,10 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-#: per-conversation row count above which the whole-partition windows are
-#: a skew hazard — shared bound with rollup.LAG_SEG_ROWS
-FUNNEL_SEG_ROWS = 100_000
+from more_pattern_extraction_spark.plans import partitioning as P
 
 
 def funnel_steps(
@@ -40,7 +37,6 @@ def funnel_steps(
     conv_col: str = "conv_id",
     ts_col: str = "ts",
     within_s: int | None = None,
-    seg_rows: int | str | None = "auto",
 ) -> DataFrame:
     """One row per conversation: ``step{i}_ts`` for each step (NULL once
     the funnel stalls) and ``furthest_step`` (0 = none).
@@ -49,53 +45,49 @@ def funnel_steps(
     ``within_s`` bounds the gap between CONSECUTIVE steps (unbounded if
     None).
 
-    **Skew (``seg_rows``, default ``"auto"``)**: the plain form's k
-    chained whole-partition windows buffer a conversation's ENTIRE turn
-    stream on one task, k times (same hot-key family the r06 skew
-    harness measured on asof/sessionize).  Above the threshold the gated
-    form computes each ``step{i}_ts`` as a partial-aggregated
-    ``groupBy(conv).min`` instead — map-side combining spreads a hot
-    conversation's min across its input partitions, and the previous
-    step's per-conv cutoff is attached back with an equi-join that AQE's
-    skew-join handling can split (windows get neither).  The premium on
-    uniform data is k scans of ``turns`` + k joins instead of one
-    shuffle, which is why it is gated, not default.  min-over-identical-
-    predicates makes the two forms value-equal (property test,
-    tests/test_funnel.py).  ``"auto"`` probes the exact witness (max
-    per-conv row count); explicit int forces the aggregate form,
-    ``None`` forces plain.  Eager caveat: "auto" runs one job at
-    plan-build time.
+    **Skew**: the plain form's k chained whole-partition windows buffer
+    a conversation's ENTIRE turn stream on one task, k times (same
+    hot-key family the r06 skew harness measured on asof/sessionize).
+    The segmented form computes each ``step{i}_ts`` as a
+    partial-aggregated ``groupBy(conv).min`` instead — map-side combining
+    spreads a hot conversation's min across its input partitions, and
+    the previous step's per-conv cutoff is attached back with an
+    equi-join that AQE's skew-join handling can split (windows get
+    neither).  Its premium on uniform data is k scans of ``turns`` + k
+    joins instead of one shuffle.  min-over-identical-predicates makes
+    the two forms value-equal (property test, tests/test_funnel.py).
+
+    **Gate**: the segmented form runs when the largest per-conversation
+    row count (plans/partitioning.max_group_rows, one job at plan-build
+    time) reaches ``HOT_KEY_ROWS``.
     """
-    if seg_rows == "auto":
-        from more_pattern_extraction_spark.plans.partitioning import max_group_rows
-
-        mx = max_group_rows(turns, conv_col)
-        seg_rows = FUNNEL_SEG_ROWS if mx >= FUNNEL_SEG_ROWS else None
-
     names = [f"step{i}_ts" for i in range(1, len(steps) + 1)]
-    if seg_rows:
-        base = turns.select(conv_col).distinct()
+    if P.max_group_rows(turns, conv_col) >= P.HOT_KEY_ROWS:
+        # one never-NULL conversation key (plans/partitioning): a NULL
+        # conv_col keeps its funnel row, as the plain window's NULL group does
+        keyed = turns.withColumn("_k", F.struct(conv_col))
+        base = keyed.select("_k").distinct()
         prev_df = None
         for i, pred in enumerate(steps, start=1):
             name = names[i - 1]
             if prev_df is None:
-                ti = turns.filter(pred).groupBy(conv_col).agg(
+                ti = keyed.filter(pred).groupBy("_k").agg(
                     F.min(ts_col).alias(name)
                 )
             else:
-                j = turns.join(prev_df, conv_col)
+                j = keyed.join(prev_df, "_k")
                 t = F.col(ts_col).cast("timestamp").cast("double")
                 p = F.col(f"step{i-1}_ts").cast("timestamp").cast("double")
                 cond = pred & (t > p)
                 if within_s is not None:
                     cond = cond & (t <= p + F.lit(float(within_s)))
-                ti = j.filter(cond).groupBy(conv_col).agg(
+                ti = j.filter(cond).groupBy("_k").agg(
                     F.min(ts_col).alias(name)
                 )
-            base = base.join(ti, conv_col, "left")
+            base = base.join(ti, "_k", "left")
             # next round only needs convs that completed this step
             prev_df = ti
-        out = base
+        out = base.select(F.col("_k")[conv_col].alias(conv_col), *names)
     else:
         w = Window.partitionBy(conv_col)
         df = turns

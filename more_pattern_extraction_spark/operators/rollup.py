@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from more_pattern_extraction_spark.plans import partitioning as P
+
 TIERS = {"1m": "minute", "1h": "hour", "1d": "day"}
 # cascade order; retention horizons are configured per deployment
 TIER_ORDER = ["1m", "1h", "1d"]
@@ -65,17 +67,7 @@ def bucket_expr(c, tier: str):
 FEATURES = ["latency"]  # numeric per-turn features rolled up
 
 
-#: rows per lag-segment block — aligned with the per-task row budget in
-#: plans/partitioning (hot_keys threshold): a conversation larger than
-#: this spreads across ceil(n/SEG) window tasks instead of one
-LAG_SEG_ROWS = 100_000
-
-
-def turn_features(
-    df: DataFrame,
-    latency_col: str | None = None,
-    seg_rows: int | str | None = "auto",
-) -> DataFrame:
+def turn_features(df: DataFrame, latency_col: str | None = None) -> DataFrame:
     """Derive per-turn features from raw transcript rows.
 
     inter-turn latency = ``ts - lag(ts)`` seconds within a conversation in
@@ -84,72 +76,67 @@ def turn_features(
     nullable ``tool`` column.  Raw ``text`` passes through untouched
     (per-turn text-equality invariant).
 
-    **Skew (``seg_rows``)**: a plain ``lag() over (partition by conv_id)``
-    sorts every turn of a conversation on ONE task — the deepest
-    serialization in the engine, measured on the skew harness (a 10 M-turn
-    conversation pinned the rollup stage at 1.3 effective cores on 8,
-    scripts/SKEW_SCALING_r06.json).  The lag is a segmented scan: the
-    window partitions on ``(conv_id, turn_idx div seg_rows)`` so a hot
-    conversation's sort spreads across blocks, and the one cross-block
-    value each block's first row needs — the previous non-empty block's
-    last ``ts`` — is carried via a tiny per-(conv, block) summary (one row
-    per block, lag over blocks).  Values are exactly the unsegmented
-    lag's: within a conversation ordered by ``turn_idx``, the last row of
-    the previous non-empty block IS the immediately preceding row.
-    ``seg_rows=None`` restores the single-window form.
+    **Skew**: a plain ``lag() over (partition by conv_id)`` sorts every
+    turn of a conversation on ONE task (a 10 M-turn conversation pinned
+    the rollup stage at 1.3 effective cores on 8,
+    scripts/SKEW_SCALING_r06.json).  The segmented form partitions the
+    window on ``(conv_id, turn_idx div HOT_KEY_ROWS)`` and carries the
+    one cross-block value each block's first row needs — the previous
+    non-empty block's last ``ts`` — via a per-(conv, block) summary.
+    Within a conversation ordered by ``turn_idx`` that value IS the
+    immediately preceding row's, so both forms are value-equal.
 
-    **Auto gate (default)**: the segmented form pays a real premium on
-    NON-skew data (extra 3-column scan + block-summary join; measured on
-    the 100 M-turn north input, scripts/SEG_OVERHEAD_r06.json) that buys
-    nothing when no conversation spans more than one block.  That
-    condition has an exact, cheap witness: ``turn_idx`` is the per-
-    conversation index, so ``max(turn_idx) < LAG_SEG_ROWS`` ⟹ every row
-    has block 0 ⟹ the segmented plan degenerates to the plain window
-    (bit-identical by the degenerate-block argument above).
-    ``seg_rows="auto"`` runs that one pruned single-column aggregate up
-    front and picks the plain window unless some conversation actually
-    crosses the threshold.  At 100 TB the probe scans one int column
-    (~1 % of table bytes, column-pruned); callers that already know the
-    shape (catalog stats, repeated queries) pass an explicit int/None
-    and skip it.  Eager caveat: "auto" triggers one Spark job at
-    plan-build time — never used on streaming frames (no streaming call
-    site; streaming rollup derives latency upstream).
+    **Gate**: ``turn_idx`` is the per-conversation index, so
+    ``max(turn_idx) < HOT_KEY_ROWS`` means every row sits in block 0 and
+    the segmented form would only pay its premium
+    (plans/partitioning.HOT_KEY_ROWS).  That one pruned single-column
+    aggregate (no shuffle) runs up front and picks the plain window
+    unless some conversation crosses the threshold.  Eager: one Spark
+    job at plan-build time, so never called on streaming frames
+    (streaming rollup derives latency upstream).
     """
     if latency_col and latency_col in df.columns:
         lat = F.col(latency_col)
         return df.withColumn("latency", lat).withColumn(
             "is_tool", F.col("tool").isNotNull().cast("int")
         )
-    if seg_rows == "auto":
-        mx = df.agg(F.max("turn_idx")).first()[0]
-        seg_rows = LAG_SEG_ROWS if (mx or 0) >= LAG_SEG_ROWS else None
+    blk_rows = P.HOT_KEY_ROWS
+    mx = df.agg(F.max("turn_idx")).first()[0]
     # the intermediate cast("timestamp") makes this work for both
     # TIMESTAMP and TIMESTAMP_NTZ sources (Spark 4 forbids NTZ→double
     # directly; session TZ is pinned UTC so NTZ→LTZ is deterministic)
     sec = F.col("ts").cast("timestamp").cast("double")
-    if not seg_rows:
+    if (mx or 0) < blk_rows:
         w = Window.partitionBy("conv_id").orderBy("turn_idx")
         lat = sec - F.lag(sec).over(w)
         return df.withColumn("latency", lat).withColumn(
             "is_tool", F.col("tool").isNotNull().cast("int")
         )
-    blk = F.floor(F.col("turn_idx") / F.lit(seg_rows))
-    wb = Window.partitionBy("conv_id", "_blk").orderBy("turn_idx")
+    b = F.floor(F.col("turn_idx") / F.lit(blk_rows))
+    # one never-NULL block key (plans/partitioning): a NULL conv_id still
+    # meets its carry, and the block window reuses the join's exchange
+    blk = F.struct(F.col("conv_id"), b.alias("_b"))
+    wb = Window.partitionBy("_blk").orderBy("turn_idx")
     # non-empty blocks only, so lag() over blocks skips empty turn_idx
-    # ranges correctly; summary is |rows|/seg_rows rows — scan-pruned to
-    # three columns, shuffle-joined on (conv, block) which never hot-keys
-    summ = (
-        df.groupBy(F.col("conv_id"), blk.alias("_blk"))
-        .agg(F.max_by(sec, F.col("turn_idx")).alias("_blk_last"))
+    # ranges correctly; summary is |rows|/HOT_KEY_ROWS rows — scan-pruned
+    # to three columns, joined on the block which never hot-keys
+    summ = df.groupBy("conv_id", b.alias("_b")).agg(
+        F.max_by(sec, F.col("turn_idx")).alias("_blk_last")
     )
-    w_s = Window.partitionBy("conv_id").orderBy("_blk")
-    summ = summ.withColumn("_carry", F.lag("_blk_last").over(w_s)).drop("_blk_last")
+    w_s = Window.partitionBy("conv_id").orderBy("_b")
+    summ = summ.select(
+        F.struct("conv_id", "_b").alias("_blk"),
+        F.lag("_blk_last").over(w_s).alias("_carry"),
+    )
+    # only a block's FIRST row takes the carry: a later row whose
+    # predecessor has a NULL ts keeps the plain form's NULL lag
+    prev = F.when(F.row_number().over(wb) == 1, F.col("_carry")).otherwise(
+        F.lag(sec).over(wb)
+    )
     out = (
         df.withColumn("_blk", blk)
-        .join(summ, ["conv_id", "_blk"], "left")
-        .withColumn(
-            "latency", sec - F.coalesce(F.lag(sec).over(wb), F.col("_carry"))
-        )
+        .join(summ, "_blk", "left")
+        .withColumn("latency", sec - prev)
         .drop("_blk", "_carry")
     )
     return out.withColumn("is_tool", F.col("tool").isNotNull().cast("int"))

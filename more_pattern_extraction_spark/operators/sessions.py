@@ -7,14 +7,10 @@ flags — two window passes over ONE key shuffle, all whole-stage
 codegen, no Python.
 
 Skew note: like every per-conversation ordered window in this engine,
-the running sum sorts a conversation's turns on one task.  The lag
-features carry an adaptive segmented-scan escape hatch for >100k-turn
-conversations (rollup.turn_features ``seg_rows``, LAG_SEG_ROWS); the
-session index is a PREFIX SUM, which would need a block-carry second
-pass to segment the same way — not implemented until a measured need,
-same policy as the gates (the hazard bound and precedent are
-documented, the plain form is the measured-faster default on real
-shapes: SEG_OVERHEAD_r06.json).
+the running sum sorts a conversation's turns on one task.  A hot
+conversation therefore takes a segmented form instead: a block-carry
+prefix sum over (conv, day) blocks, picked by the shared hot-key gate
+(plans/partitioning.HOT_KEY_ROWS; see ``sessionize``).
 
 Reference analogue: none as an operator (the reference's notebooks
 slice fixed calendar windows); sessionization is the transcript-native
@@ -26,10 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-#: per-conversation row count above which the ordered window is a skew
-#: hazard — shared bound with rollup.LAG_SEG_ROWS
-SESS_SEG_ROWS = 100_000
+from more_pattern_extraction_spark.plans import partitioning as P
 
 
 def sessionize(
@@ -38,38 +31,30 @@ def sessionize(
     conv_col: str = "conv_id",
     ts_col: str = "ts",
     tie_cols: tuple[str, ...] = (),
-    seg_rows: int | str | None = "auto",
-    segment: str = "day",
 ) -> DataFrame:
     """Add ``session_idx`` (1-based per conversation) and ``is_session_start``.
 
     ``tie_cols`` break ordering ties at equal timestamps (determinism —
     pass the row id when timestamps can collide).
 
-    **Skew (``seg_rows``, default ``"auto"``)**: the plain form's lag +
-    running sum sort a conversation's entire stream on one task (r06
-    skew harness: 26.8 s vs 4.9 s uniform on a 91 %-hot input).  Above
-    the threshold the session index becomes a BLOCK-CARRY PREFIX SUM
-    over (conv, ``date_trunc(segment)``) blocks: row-level windows sort
-    within a block only; a per-(conv, block) summary carries (a) the
+    **Skew**: the plain form's lag + running sum sort a conversation's
+    entire stream on one task (r06 skew harness: 26.8 s vs 4.9 s uniform
+    on a 91 %-hot input).  The segmented form makes the session index a
+    BLOCK-CARRY PREFIX SUM over (conv, day) blocks: row-level windows
+    sort within a block only; a per-(conv, block) summary carries (a) the
     previous block's last timestamp — the lag seed for the block's first
     row — and (b) the running count of session starts in all previous
-    blocks, added to the in-block running sum.  The block boundary-flag
-    is decided at the summary level from (first_ts − prev block last_ts),
-    which is exactly the row-level lag the plain form computes, so
-    ``session_idx``/``is_session_start`` are bit-equal (property test,
-    tests/test_sessions.py).  ``"auto"`` probes the exact witness (max
-    per-conv row count); explicit int forces segmentation, ``None``
-    forces plain.  Eager caveat: "auto" runs one job at plan-build time.
+    blocks, added to the in-block running sum.  The first row's flag is
+    decided at the summary level from (first_ts − prev block last_ts),
+    exactly the row-level lag the plain form computes, so both forms are
+    bit-equal (property test, tests/test_sessions.py).
+
+    **Gate**: the segmented form runs when the largest per-conversation
+    row count (plans/partitioning.max_group_rows, one job at plan-build
+    time) reaches ``HOT_KEY_ROWS``.
     """
     sec = F.col(ts_col).cast("timestamp").cast("double")
-    if seg_rows == "auto":
-        from more_pattern_extraction_spark.plans.partitioning import max_group_rows
-
-        mx = max_group_rows(turns, conv_col)
-        seg_rows = SESS_SEG_ROWS if mx >= SESS_SEG_ROWS else None
-
-    if not seg_rows:
+    if P.max_group_rows(turns, conv_col) < P.HOT_KEY_ROWS:
         w = Window.partitionBy(conv_col).orderBy(ts_col, *tie_cols)
         prev_ts = F.lag(ts_col).over(w)
         # NTZ sources: cast through timestamp before double (Spark 4
@@ -84,14 +69,20 @@ def sessionize(
             "is_session_start", new_sess.cast("boolean")
         ).withColumn("session_idx", F.sum(new_sess).over(run))
 
-    blk = F.date_trunc(segment, F.col(ts_col))
+    # one never-NULL (conv, day) block key (plans/partitioning): NULL-conv
+    # and NULL-ts rows meet their summary, and the block window reuses
+    # the join's exchange
+    blk = F.struct(F.col(conv_col).alias("_k"), F.date_trunc("day", ts_col).alias("_b"))
     t = turns.withColumn("_blk", blk)
-    wb = Window.partitionBy(conv_col, "_blk").orderBy(ts_col, *tie_cols)
+    wb = Window.partitionBy("_blk").orderBy(ts_col, *tie_cols)
     run_b = wb.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     prev_in = F.lag(ts_col).over(wb)
     gap_in = sec - prev_in.cast("timestamp").cast("double")
-    # flags decidable inside the block (rows with an in-block predecessor)
-    flag_in = F.when(prev_in.isNotNull(), (gap_in > gap_s).cast("int"))
+    # flags decidable inside the block: every row but the block's first
+    # (a NULL-ts predecessor opens a session, as in the plain form)
+    flag_in = F.when(
+        F.row_number().over(wb) > 1, (prev_in.isNull() | (gap_in > gap_s)).cast("int")
+    )
 
     # per-(conv, block) summary: first/last ts + count of in-block flags
     # (the windowed flag is materialized as a column first — a Window node
@@ -100,14 +91,16 @@ def sessionize(
     # gated-path premium.
     summ = (
         t.withColumn("_fi", flag_in)
-        .groupBy(conv_col, "_blk")
+        .groupBy("_blk")
         .agg(
             F.min(ts_col).alias("_first_ts"),
             F.max(ts_col).alias("_last_ts"),
             F.sum("_fi").alias("_flags_in"),
         )
+        .withColumns({"_k": F.col("_blk._k"), "_b": F.col("_blk._b")})
     )
-    w_blk = Window.partitionBy(conv_col).orderBy("_blk")
+    # plain key columns, so both summary windows share one exchange
+    w_blk = Window.partitionBy("_k").orderBy("_b")
     prev_last = F.lag("_last_ts").over(w_blk)
     first_gap = (
         F.col("_first_ts").cast("timestamp").cast("double")
@@ -122,15 +115,12 @@ def sessionize(
         .over(w_blk.rowsBetween(Window.unboundedPreceding, -1))
     )
     summ = summ.select(
-        conv_col,
         "_blk",
         "_first_flag",
         F.coalesce(cum_before, F.lit(0)).alias("_cum_before"),
     )
-    t = t.join(summ, [conv_col, "_blk"])
+    t = t.join(summ, "_blk")
     flag = F.coalesce(flag_in, F.col("_first_flag"))
-    # the join moves the keys to the front: project back to the plain
-    # form's column order
     return t.select(
         *turns.columns,
         flag.cast("boolean").alias("is_session_start"),

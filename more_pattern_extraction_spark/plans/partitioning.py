@@ -1,20 +1,31 @@
-"""Partitioning & skew handling (north rule: conversations range-
-partitioned by (conv_id, ts-bucket) with salting for hot conversations).
+"""Partitioning & skew handling: the hot-key gate and the explicit
+exchanges that split hot conversations.
 
 Two distinct skew surfaces:
 
-  * **Relational ops** (rollup groupBy, interval joins): the bucket column
-    already splits hot conversations; AQE skew-join handles the rest.
-    Nothing custom.
+  * **Ordered windows over a whole conversation** (``turn_features``'
+    lag, ``asof_join``, ``sessionize``, ``funnel_steps``): a plain
+    ``Window.partitionBy(conv)`` sorts a conversation's every row on one
+    task, and AQE cannot split a window partition.  Each of these
+    operators has a plain form and a segmented block-carry form, and
+    picks one from its input against the ONE threshold below
+    (``HOT_KEY_ROWS``).  The witness is exact and cheap:
+    ``max(turn_idx)`` for the lag (one global aggregate, no shuffle),
+    ``max_group_rows`` for the other three.  The segmented forms key
+    their block windows and per-block summary joins on ONE struct column
+    ``_blk = struct(key..., block)``: it is never NULL and struct
+    equality matches NULL fields, so NULL keys and NULL-timestamp rows
+    stay grouped as in the plain window, and the block window reuses the
+    join's exchange (a null-safe ``<=>`` join hashes on
+    ``coalesce``/``isnull`` of each key and would shuffle the rows twice).
   * **Grouped pandas UDFs** (matrix profile per conv): AQE does NOT split
-    a single group.  A 10^8-turn conversation lands on one task.  The fix
-    is explicit: detect hot keys by count, then either (a) sub-key the
-    group by ts-window (the MP chunk-pair path,
-    operators/matrix_profile.matrix_profile_distributed), or (b) salt the
-    key for ops that are associative over rows (encode, per-bucket stats).
+    a single group either, so the group is sub-keyed by ts-window
+    (operators/matrix_profile.matrix_profile_distributed) and the
+    spreading exchange is pinned with ``spread_groups``.
 
-Salts are deterministic (`pmod(xxhash64(...), S)`) — no rand() — so
-re-runs and checkpoint resumes see identical partitioning.
+Relational ops (rollup groupBy, interval joins) need nothing custom: the
+bucket column already splits hot conversations and AQE's skew-join
+handling does the rest.
 """
 
 from __future__ import annotations
@@ -22,44 +33,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: per-key row count from which an ordered window takes its segmented
+#: form (one conversation on one task is the hazard).  The segmented form
+#: wins 1.6-2.7x on a 94 %-hot input (scripts/SKEW_GATE_r07.json) and
+#: costs 37 % more wall time on uniform data
+#: (scripts/SEG_OVERHEAD_r06.json), hence a gate rather than a default.
+#: ``turn_features`` also uses it as its lag block width.  Read at call
+#: time, so tests and measurement scripts can set it.
+HOT_KEY_ROWS = 100_000
+
 
 def max_group_rows(df: DataFrame, *keys: str) -> int:
     """Exact hot-key witness: the largest per-key row count.  One
     column-pruned partial-aggregated pass over the key columns — the
-    cheap probe the asof/sessionize/funnel ``seg_rows="auto"`` gates run
-    before choosing the skew-insured plan (same policy as
-    rollup.turn_features: don't pre-pay the segmented form's premium on
-    uniform data, detect the hazard with an exact witness instead).
-    Gap-fill needs no such gate: its window sorts cover only the sparse
-    rollup rows (gapfill.gap_fill_rollup)."""
+    probe the asof/sessionize/funnel gates run against ``HOT_KEY_ROWS``
+    before choosing a plan.  Eager: one Spark job at plan-build time."""
     row = df.groupBy(*[F.col(k) for k in keys]).count().agg(
         F.max("count")
     ).first()
     return int(row[0] or 0)
-
-
-def hot_keys(df: DataFrame, key: str = "conv_id", threshold: int = 100_000) -> DataFrame:
-    """Conversations whose row count exceeds the per-task budget."""
-    return df.groupBy(key).count().filter(F.col("count") > threshold).select(key)
-
-
-def with_salt(
-    df: DataFrame,
-    n_salts: int,
-    key: str = "conv_id",
-    threshold: int | None = None,
-    salt_col: str = "salt",
-) -> DataFrame:
-    """Deterministic salt in [0, n_salts): hash of (key, ts) so rows of a
-    hot key spread evenly.  With ``threshold``, only hot keys get salted
-    (cold keys keep salt 0 → no extra merge pass for them)."""
-    salt = F.pmod(F.xxhash64(key, "ts"), F.lit(n_salts)).cast("int")
-    if threshold is not None:
-        hot = hot_keys(df, key, threshold).withColumn("_is_hot", F.lit(True))
-        df = df.join(F.broadcast(hot), key, "left")
-        salt = F.when(F.col("_is_hot"), salt).otherwise(F.lit(0))
-        return df.withColumn(salt_col, salt).drop("_is_hot")
-    return df.withColumn(salt_col, salt)
 
 
 def spread_groups(df: DataFrame, *keys: str) -> DataFrame:
@@ -96,18 +88,3 @@ def spread_groups(df: DataFrame, *keys: str) -> DataFrame:
         # fall back to the cluster's default parallelism (ADVICE r06 #4)
         n = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n, *[F.col(k) for k in keys])
-
-
-def range_partition_by_conv_bucket(
-    df: DataFrame, n_partitions: int, bucket_col: str = "bucket_start"
-) -> DataFrame:
-    """Range-partition on (conv_id, ts-bucket): co-locates each
-    conversation's time range, keeps bucket order within files (good for
-    chunk encode + Iceberg sort order), and bounds partition width for
-    hot conversations because the bucket participates in the range key."""
-    return df.repartitionByRange(n_partitions, "conv_id", bucket_col)
-
-
-def conv_bucket(key: str = "conv_id", n_buckets: int = 1024):
-    """Stable conversation bucket for table layout / checkpoint keys."""
-    return F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")

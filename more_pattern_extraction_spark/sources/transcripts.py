@@ -8,7 +8,7 @@ column expressions, so generation itself distributes across executors
 ``xxhash64``-derived and therefore stable under any partitioning).
 
 Conversation lengths are Zipf-skewed (a few hot conversations get
-``hot_mult``× the base turn count) to exercise the salting path
+``hot_mult``× the base turn count) to exercise the hot-key paths
 (``plans.partitioning``).  Timestamp gaps are irregular (5 s … ~35 min,
 with occasional multi-hour gaps) so 1-minute buckets have genuine holes
 for the gap-fill operator (LOCF + linear interp, ``limit=1`` — cf.

@@ -3,7 +3,8 @@ hot conversation holding the majority of ALL turns runs through the full
 pipeline (features → 1m rollup → gap-fill → chunk encode → week-windowed
 matrix profile) at 2 vs 8 pinned cores, same gates and metering as
 `bench_scaling.py`.  The unit tests cover the skew *mechanics*
-(`plans/partitioning.with_salt`, banded MP); this execution covers the
+(the segmented window forms behind `plans/partitioning.HOT_KEY_ROWS`,
+`spread_groups`, banded MP); this execution covers the
 north-rule *claim*: scaling efficiency stays ≥ 0.8 when the key
 distribution is degenerate, because every grouped stage sub-keys hot
 conversations structurally —

@@ -8,6 +8,7 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from more_pattern_extraction_spark.operators.asof import asof_join
+from more_pattern_extraction_spark.plans import partitioning as P
 
 T0 = dt.datetime(2024, 1, 1)
 
@@ -92,7 +93,7 @@ def test_suffix_collision_raises(spark):
         asof_join(left, right, on="conv_id")
 
 
-def test_segmented_equals_plain(spark):
+def test_segmented_equals_plain(spark, monkeypatch):
     """Property: the (key, day)-segmented block-carry form is bit-equal to
     the single-window plain form — multi-day spread, NULL payload values
     (per-column ignorenulls carry), equal-timestamp right/left rows, and
@@ -121,11 +122,12 @@ def test_segmented_equals_plain(spark):
     left = spark.createDataFrame(left_rows, ["k", "ts", "lid"])
     right = spark.createDataFrame(right_rows, ["k", "ts", "state", "aux"])
 
-    def run(**kw):
+    def run(segmented, **kw):
+        monkeypatch.setattr(P, "HOT_KEY_ROWS", 0 if segmented else 10**12)
         out = asof_join(left, right, on="k", **kw)
         return sorted(map(tuple, out.collect()))
 
     for tol in (None, 3600):
-        plain = run(seg_rows=None, tolerance_s=tol)
-        seg = run(seg_rows=1, tolerance_s=tol)
+        plain = run(False, tolerance_s=tol)
+        seg = run(True, tolerance_s=tol)
         assert plain == seg

@@ -11,6 +11,7 @@ from more_pattern_extraction_spark.operators.funnel import (
     funnel_counts,
     funnel_steps,
 )
+from more_pattern_extraction_spark.plans import partitioning as P
 
 T0 = dt.datetime(2024, 1, 1)
 
@@ -77,7 +78,7 @@ def test_single_exchange_plan(spark):
     assert plan.count("Exchange") == 1  # chained windows reuse the shuffle
 
 
-def test_segmented_equals_plain(spark):
+def test_segmented_equals_plain(spark, monkeypatch):
     """Property: the gated iterative-aggregate form is value-equal to the
     chained whole-partition-window form, with and without the
     consecutive-step gap bound."""
@@ -93,9 +94,10 @@ def test_segmented_equals_plain(spark):
             )
     df = spark.createDataFrame(rows, ["conv_id", "ts", "event_type"])
 
-    def run(seg, within):
-        out = funnel_steps(df, _steps(), within_s=within, seg_rows=seg)
+    def run(segmented, within):
+        monkeypatch.setattr(P, "HOT_KEY_ROWS", 0 if segmented else 10**12)
+        out = funnel_steps(df, _steps(), within_s=within)
         return sorted(map(tuple, out.collect()))
 
     for within in (None, 600):
-        assert run(None, within) == run(1, within)
+        assert run(False, within) == run(True, within)

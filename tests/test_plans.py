@@ -9,6 +9,8 @@ import io
 import pytest
 from pyspark.sql import functions as F
 
+from more_pattern_extraction_spark.plans import partitioning as P
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -141,7 +143,7 @@ def test_gapfill_dense_grid_generated_once(spark, events):
     assert any("Window" in ln for ln in lines[grid[0]:]), p
 
 
-def test_feature_rollup_shuffles_raw_turns_once(spark, events):
+def test_feature_rollup_shuffles_raw_turns_once(spark, events, monkeypatch):
     """The features→rollup invariant, updated for the segmented lag
     (round 6).  The OLD one-exchange plan (lag window on conv_id, agg
     reusing the conv clustering) shuffled raw turns once but serialized a
@@ -165,10 +167,8 @@ def test_feature_rollup_shuffles_raw_turns_once(spark, events):
         F.lit("user").alias("role"), F.lit("x").alias("text"),
         F.lit(None).cast("string").alias("tool"), "ts",
     )
-    p = plan_str(
-        R.rollup_from_raw(R.turn_features(t, seg_rows=R.LAG_SEG_ROWS), "1m"),
-        mode="simple",
-    )
+    monkeypatch.setattr(P, "HOT_KEY_ROWS", 1)  # every input takes the segmented lag
+    p = plan_str(R.rollup_from_raw(R.turn_features(t), "1m"), mode="simple")
     # raw-volume exchanges: the ONE carrying turn rows partitions on
     # (conv_id, _blk); the other hashpartitioning exchanges carry
     # block-summary or partial-aggregated bucket rows only
@@ -179,15 +179,13 @@ def test_feature_rollup_shuffles_raw_turns_once(spark, events):
     assert "partial_count" in p, p              # map-side combine precedes
     assert "EvalPython" not in p
 
-    # the legacy single-window form keeps its one-exchange shape
-    p0 = plan_str(
-        R.rollup_from_raw(R.turn_features(t, seg_rows=None), "1m"),
-        mode="simple",
-    )
+    # the single-window form keeps its one-exchange shape
+    monkeypatch.setattr(P, "HOT_KEY_ROWS", 10**12)
+    p0 = plan_str(R.rollup_from_raw(R.turn_features(t), "1m"), mode="simple")
     assert p0.count("Exchange hashpartitioning") == 1, p0
 
 
-def test_sketch_chain_no_raw_value_shuffle_no_python(spark, events):
+def test_sketch_chain_no_raw_value_shuffle_no_python(spark, events, monkeypatch):
     """The full sketch path (build at 1m → cascade to 1h → quantile)
     must keep bin counts combining map-side — every exchange after the
     segmented-lag feature shuffle carries (conv, bucket, bin, partial
@@ -204,7 +202,8 @@ def test_sketch_chain_no_raw_value_shuffle_no_python(spark, events):
         F.lit("user").alias("role"), F.lit("x").alias("text"),
         F.lit(None).cast("string").alias("tool"), "ts",
     )
-    feats = R.turn_features(t, seg_rows=R.LAG_SEG_ROWS)
+    monkeypatch.setattr(P, "HOT_KEY_ROWS", 1)  # every input takes the segmented lag
+    feats = R.turn_features(t)
     sk = SK.sketch_quantile(SK.sketch_cascade(SK.sketch_from_raw(feats, "1m"), "1h"))
     p = plan_str(sk, mode="simple")
     # one raw-turn exchange (the segmented-lag window), everything else
@@ -213,9 +212,10 @@ def test_sketch_chain_no_raw_value_shuffle_no_python(spark, events):
                 if "Exchange hashpartitioning" in ln and "_blk#" in ln]) == 1, p
     assert "partial_count" in p, p
     assert "EvalPython" not in p
-    # legacy single-window form retains the original one-exchange shape
+    # the single-window form retains the original one-exchange shape
+    monkeypatch.setattr(P, "HOT_KEY_ROWS", 10**12)
     sk0 = SK.sketch_quantile(SK.sketch_cascade(
-        SK.sketch_from_raw(R.turn_features(t, seg_rows=None), "1m"), "1h"))
+        SK.sketch_from_raw(R.turn_features(t), "1m"), "1h"))
     assert plan_str(sk0, mode="simple").count("Exchange hashpartitioning") == 1
 
 

@@ -7,6 +7,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from more_pattern_extraction_spark.operators import rollup as R
+from more_pattern_extraction_spark.plans import partitioning as P
 
 
 def _oracle_rollup(pdf: pd.DataFrame, freq: str) -> pd.DataFrame:
@@ -136,73 +137,63 @@ def test_cascade_validates_tier_multiple(spark, transcripts):
     assert a.schema == b.schema
 
 
-def test_segmented_lag_equals_plain_window(spark, transcripts):
-    """turn_features' block-segmented lag (seg_rows) must be bit-identical
-    to the single-window form for every row, including each block's first
-    row (carry from the previous non-empty block) and each conversation's
-    first row (null).  seg_rows=7 forces many blocks on the 600-turn hot
-    conversation; turn_idx is dense here but the carry logic must also
-    survive sparse indices (empty blocks), covered by the filtered run."""
-    plain = (
-        R.turn_features(transcripts, seg_rows=None)
-        .select("conv_id", "turn_idx", "latency")
+def _latency(feats):
+    return (
+        feats.select("conv_id", "turn_idx", "latency")
         .toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     )
-    seg = (
-        R.turn_features(transcripts, seg_rows=7)
-        .select("conv_id", "turn_idx", "latency")
-        .toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    )
+
+
+def _features(df, monkeypatch, hot_key_rows):
+    """turn_features with the hot-key gate (and so its lag block width)
+    set to ``hot_key_rows``; ``None`` keeps every input on the plain
+    window."""
+    monkeypatch.setattr(P, "HOT_KEY_ROWS", 10**12 if hot_key_rows is None else hot_key_rows)
+    return R.turn_features(df)
+
+
+def test_segmented_lag_equals_plain_window(spark, transcripts, monkeypatch):
+    """turn_features' block-segmented lag must be bit-identical to the
+    single-window form for every row, including each block's first row
+    (carry from the previous non-empty block) and each conversation's
+    first row (null).  HOT_KEY_ROWS=7 forces many blocks of 7 on the
+    600-turn hot conversation; turn_idx is dense here but the carry logic
+    must also survive sparse indices (empty blocks), covered by the
+    filtered run with blocks of 2."""
+    plain = _latency(_features(transcripts, monkeypatch, None))
+    seg = _latency(_features(transcripts, monkeypatch, 7))
     pd.testing.assert_frame_equal(seg, plain)
     # sparse turn_idx (empty blocks): drop idx%3==1 rows; the lag target
     # changes (prev surviving row), but segmented must still equal plain
     sparse = transcripts.filter("pmod(turn_idx, 3) != 1")
-    p2 = (
-        R.turn_features(sparse, seg_rows=None)
-        .select("conv_id", "turn_idx", "latency")
-        .toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    )
-    s2 = (
-        R.turn_features(sparse, seg_rows=2)
-        .select("conv_id", "turn_idx", "latency")
-        .toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    )
+    p2 = _latency(_features(sparse, monkeypatch, None))
+    s2 = _latency(_features(sparse, monkeypatch, 2))
     pd.testing.assert_frame_equal(s2, p2)
 
 
-def test_auto_seg_gate_picks_plan_by_max_turn_idx(spark, transcripts):
-    """seg_rows="auto" (the default) must choose the PLAIN window when no
-    conversation can span more than one lag block (max per-conv turn_idx
-    below LAG_SEG_ROWS — the exact degenerate-block witness) and the
-    SEGMENTED scan when one does; both choices stay value-identical to
-    the explicit forms.  The premium this gate avoids on uniform data is
-    measured in scripts/SEG_OVERHEAD_r06.json."""
-    # small input: every turn_idx < LAG_SEG_ROWS -> plain single-window plan
-    auto_small = R.turn_features(transcripts)
-    plain = R.turn_features(transcripts, seg_rows=None)
-    p_auto = auto_small._jdf.queryExecution().executedPlan().toString()
-    assert "_blk" not in p_auto
-    pd.testing.assert_frame_equal(
-        auto_small.select("conv_id", "turn_idx", "latency").toPandas()
-        .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True),
-        plain.select("conv_id", "turn_idx", "latency").toPandas()
-        .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True),
-    )
+def test_auto_seg_gate_picks_plan_by_max_turn_idx(spark, transcripts, monkeypatch):
+    """The gate must choose the PLAIN window when no conversation can
+    span more than one lag block (max per-conv turn_idx below
+    HOT_KEY_ROWS — the exact degenerate-block witness) and the SEGMENTED
+    scan when one does; both choices stay value-identical to the plain
+    form.  The premium this gate avoids on uniform data is measured in
+    scripts/SEG_OVERHEAD_r06.json."""
     # one conversation crossing the threshold flips the whole input to the
     # segmented scan (per-conv index is the witness, not row count)
     hot = transcripts.withColumn(
         "turn_idx",
         F.when(F.col("conv_id") == "conv_00000",
-               F.col("turn_idx") + F.lit(R.LAG_SEG_ROWS)).otherwise(
+               F.col("turn_idx") + F.lit(P.HOT_KEY_ROWS)).otherwise(
             F.col("turn_idx")),
     )
+    # small input: every turn_idx < HOT_KEY_ROWS -> plain single-window plan
+    auto_small = R.turn_features(transcripts)
     auto_hot = R.turn_features(hot)
+    p_auto = auto_small._jdf.queryExecution().executedPlan().toString()
+    assert "_blk" not in p_auto
     p_hot = auto_hot._jdf.queryExecution().executedPlan().toString()
     assert "_blk" in p_hot
-    seg = R.turn_features(hot, seg_rows=R.LAG_SEG_ROWS)
-    pd.testing.assert_frame_equal(
-        auto_hot.select("conv_id", "turn_idx", "latency").toPandas()
-        .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True),
-        seg.select("conv_id", "turn_idx", "latency").toPandas()
-        .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True),
-    )
+    plain = _features(transcripts, monkeypatch, None)
+    pd.testing.assert_frame_equal(_latency(auto_small), _latency(plain))
+    plain_hot = _features(hot, monkeypatch, None)
+    pd.testing.assert_frame_equal(_latency(auto_hot), _latency(plain_hot))

@@ -8,6 +8,7 @@ from more_pattern_extraction_spark.operators.sessions import (
     session_stats,
     sessionize,
 )
+from more_pattern_extraction_spark.plans import partitioning as P
 
 T0 = dt.datetime(2024, 1, 1)
 
@@ -65,7 +66,7 @@ def test_single_exchange_plan(spark):
     assert plan.count("Exchange") == 1  # both window passes share one shuffle
 
 
-def test_segmented_equals_plain(spark):
+def test_segmented_equals_plain(spark, monkeypatch):
     """Property: the (conv, day) block-carry prefix-sum form is bit-equal
     to the plain running-sum form — session boundaries crossing midnight,
     blocks with a single row, timestamp ties broken by tie_cols, and a
@@ -85,22 +86,25 @@ def test_segmented_equals_plain(spark):
     rows.append(("z", T0 + dt.timedelta(minutes=3), 0))  # single-row conv
     df = spark.createDataFrame(rows, ["conv_id", "ts", "event_id"])
 
-    def run(seg):
-        out = sessionize(df, gap_s=1800, tie_cols=("event_id",), seg_rows=seg)
+    def run(segmented):
+        monkeypatch.setattr(P, "HOT_KEY_ROWS", 0 if segmented else 10**12)
+        out = sessionize(df, gap_s=1800, tie_cols=("event_id",))
         return sorted(map(tuple, out.collect()))
 
-    assert run(None) == run(1)
+    assert run(False) == run(True)
 
 
-def test_segmented_keeps_column_order(spark):
+def test_segmented_keeps_column_order(spark, monkeypatch):
     """Both forms return the input's columns in input order, then
     is_session_start and session_idx, whichever column the key is."""
     rows = [(i, T0 + dt.timedelta(minutes=7 * i + 600 * (i % 3)), c)
             for c in ("a", "b") for i in range(40)]
     df = spark.createDataFrame(rows, ["event_id", "ts", "conv_id"])
     want = ["event_id", "ts", "conv_id", "is_session_start", "session_idx"]
-    outs = {seg: sessionize(df, gap_s=1800, tie_cols=("event_id",), seg_rows=seg)
-            for seg in (None, 1)}
-    assert outs[None].columns == want
-    assert outs[1].columns == want
-    assert sorted(map(tuple, outs[1].collect())) == sorted(map(tuple, outs[None].collect()))
+    outs = {}
+    for segmented in (False, True):
+        monkeypatch.setattr(P, "HOT_KEY_ROWS", 0 if segmented else 10**12)
+        outs[segmented] = sessionize(df, gap_s=1800, tie_cols=("event_id",))
+    assert outs[False].columns == want
+    assert outs[True].columns == want
+    assert sorted(map(tuple, outs[True].collect())) == sorted(map(tuple, outs[False].collect()))
