@@ -114,7 +114,10 @@ class CheckpointStore:
         df.write.mode("append").parquet(self.metrics_path)
 
     def metrics(self) -> DataFrame:
-        return self.spark.read.parquet(self.metrics_path)
+        # jobs append rows of different columns to one directory: merge
+        # every file's schema (still one job), or inference keeps one
+        # file's columns and drops the rest
+        return self.spark.read.option("mergeSchema", "true").parquet(self.metrics_path)
 
 
 def content_hash(df: DataFrame, cols: list[str]) -> DataFrame:

@@ -7,14 +7,28 @@ same two columns and relies on Catalyst partition pruning, so queries and
 the checkpoint/retention logic are identical across backends.  Writes use
 dynamic partition overwrite = the Parquet stand-in for Iceberg's atomic
 partition-level commit.
+
+Each table carries its read schema in ``<table>/_schema.json``, the
+stand-in for the schema in Iceberg's snapshot metadata: ``read_table``
+plans through it with no schema-inference job.  ``write_partitioned`` is
+its one writer (it removes the file before a write and saves it after a
+successful one); Spark's file index skips ``_``-prefixed names, so the
+file is not part of the table's contents.  A table without the file (an
+older writer, a write that bypassed ``write_partitioned``, an aborted
+write) is read by inference.
 """
 
 from __future__ import annotations
 
+import contextlib
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+SCHEMA_FILE = "_schema.json"
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -55,6 +69,10 @@ def write_partitioned(
     buckets adjacent, which is what the DoD/Gorilla-style columnar
     encodings and range scans want."""
     spark = df.sparkSession
+    path = table_path(root, name)
+    schema_path = os.path.join(path, SCHEMA_FILE)
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(schema_path)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     parts = [F.col(c) for c in partition_cols]
     if files_per_partition > 1:
@@ -76,8 +94,33 @@ def write_partitioned(
         .option("compression", compression)  # zstd: ~30-50% smaller than
         # snappy at comparable scan speed — at 100 TB the default choice
         .partitionBy(*partition_cols)
-        .parquet(table_path(root, name))
+        .parquet(path)
     )
+    _save_schema(df.schema, partition_cols, schema_path)
+
+
+def _nullable(dt: DataType) -> DataType:
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _save_schema(schema: StructType, partition_cols: tuple[str, ...], schema_path: str) -> None:
+    """The schema Spark's file source reports for the written table: the
+    data columns in frame order, then the partition columns, all nullable.
+    Written under a temp name and renamed, so a reader never sees half."""
+    fields = [f for f in schema.fields if f.name not in partition_cols]
+    fields += [schema[c] for c in partition_cols]
+    tmp = schema_path + ".tmp"
+    with open(tmp, "w") as fh:
+        fh.write(_nullable(StructType(fields)).json())
+    os.replace(tmp, schema_path)
 
 
 def compact_table(
@@ -116,7 +159,15 @@ def _count_data_files(base: str) -> int:
 
 
 def read_table(spark: SparkSession, root: str, name: str) -> DataFrame:
-    return spark.read.parquet(table_path(root, name))
+    """The table, planned through its stored schema; by inference (one
+    Spark job) when the table has none."""
+    path = table_path(root, name)
+    try:
+        with open(os.path.join(path, SCHEMA_FILE)) as fh:
+            schema = StructType.fromJson(json.load(fh))
+    except FileNotFoundError:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 def snapshot_id(path: str) -> str:

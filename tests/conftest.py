@@ -17,3 +17,20 @@ def transcripts(spark):
     df = generate_transcripts(spark, n_convs=12, base_turns=30, hot_convs=1, hot_mult=20)
     df.cache().count()
     return df
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``spark_jobs(group, fn)`` runs ``fn`` under a Spark job group and
+    returns its result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -19,15 +19,34 @@ Contract items:
   C5  resume: pending_units anti-joins committed work per input
       snapshot; a new snapshot re-exposes all units; a resumed
       run equals a cold run (pipeline-level, kill-and-resume).
+  C6  every table carries its read schema (``_schema.json``, the stand-in
+      for Iceberg's snapshot schema): read_table plans through it with no
+      Spark job and reports what inference would, a rewrite replaces it,
+      and a table without it (an aborted write) is read by inference.
 """
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
+from more_pattern_extraction_spark.plans import stages as ST
 from more_pattern_extraction_spark.plans.checkpoint import CheckpointStore
+from more_pattern_extraction_spark.plans.pipeline import run_pattern_stage, run_pipeline
 from more_pattern_extraction_spark.sources import catalog as CAT
+
+# every table the tier DAG and the pattern stage (window="day") write
+DAG_TABLES = [st.table.format(window="day") for st in ST.TIER_STAGES + ST.PATTERN_STAGES]
+
+
+def _digest(df):
+    cols = sorted(df.columns)
+    return df.select(
+        F.sum(F.pmod(F.xxhash64(*[F.col(c).cast("string") for c in cols]),
+                     F.lit(1_000_000_007))).alias("h"),
+        F.count(F.lit(1)).alias("n"),
+    ).collect()[0]
 
 
 @pytest.fixture()
@@ -202,19 +221,11 @@ def test_compact_table_merges_small_files_preserving_content(spark, tiered, tmp_
     )
     assert frag_files > n_parts  # genuinely fragmented
 
-    def digest(df):
-        cols = sorted(df.columns)
-        return df.select(
-            F.sum(F.pmod(F.xxhash64(*[F.col(c).cast("string") for c in cols]),
-                         F.lit(1_000_000_007))).alias("h"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()[0]
-
-    before = digest(CAT.read_table(spark, root, "t"))
+    before = _digest(CAT.read_table(spark, root, "t"))
     stats = CAT.compact_table(spark, root, "t")
     assert stats["files_before"] == frag_files
     assert stats["files_after"] == n_parts
-    assert digest(CAT.read_table(spark, root, "t")) == before
+    assert _digest(CAT.read_table(spark, root, "t")) == before
 
 
 def test_sort_cols_survive_partitioned_write(spark, tiered, tmp_path):
@@ -242,3 +253,90 @@ def test_sort_cols_survive_partitioned_write(spark, tiered, tmp_path):
                             t.column("ts").to_pylist()))
             assert keys == sorted(keys), f"unsorted rows in {r}/{f}"
     assert n_files > 0
+
+
+@pytest.fixture(scope="module")
+def staged(spark, transcripts, tmp_path_factory):
+    """One ingest and one pattern stage into one output root."""
+    out = str(tmp_path_factory.mktemp("staged"))
+    run_pipeline(spark, transcripts, out, input_snapshot="c6", n_buckets=8)
+    run_pattern_stage(spark, out, n_buckets=8, m=16, window="day", k=2)
+    return out
+
+
+def test_c6_stored_schema_equals_inferred(spark, staged):
+    for t in DAG_TABLES:
+        assert os.path.isfile(os.path.join(staged, t, CAT.SCHEMA_FILE)), t
+        stored = CAT.read_table(spark, staged, t)
+        inferred = spark.read.parquet(CAT.table_path(staged, t))
+        assert stored.schema == inferred.schema, t
+        assert _digest(stored) == _digest(inferred), t
+
+
+def test_c6_read_table_runs_no_job_and_falls_back(spark, spark_jobs, staged, tmp_path):
+    _, jobs = spark_jobs("c6_stored", lambda: [
+        CAT.read_table(spark, staged, t).schema for t in DAG_TABLES])
+    assert jobs == 0
+    # the same table without its schema file: read by inference
+    root = str(tmp_path)
+    shutil.copytree(CAT.table_path(staged, "rollup_1h"), CAT.table_path(root, "rollup_1h"))
+    os.remove(os.path.join(root, "rollup_1h", CAT.SCHEMA_FILE))
+    df, jobs = spark_jobs("c6_inferred", lambda: CAT.read_table(spark, root, "rollup_1h"))
+    assert jobs >= 1
+    assert df.schema == CAT.read_table(spark, staged, "rollup_1h").schema
+    assert _digest(df) == _digest(CAT.read_table(spark, staged, "rollup_1h"))
+
+
+def test_c6_metrics_keep_every_jobs_columns(spark, staged):
+    """The ingest and the pattern stage append metrics rows with different
+    columns to one directory; both rows keep all of theirs."""
+    rows = {r.job: r.asDict() for r in CheckpointStore(spark, staged).metrics().collect()}
+    ingest, pattern = rows["rollup_pipeline"], rows["pattern_stage"]
+    for k in ("wall_s", "turns", "units_total", "units_done", "units_skipped"):
+        assert ingest.get(k) is not None, k
+    assert ingest["turns"] > 0 and ingest["units_done"] > 0
+    for k in ("pattern_wall_s", "mp_rows", "discord_rows", "regime_rows"):
+        assert pattern.get(k) is not None, k
+    assert pattern["mp_rows"] > 0
+
+
+def test_c6_rewrite_with_changed_schema_reads_new_schema(spark, tiered):
+    """A rewrite that drops a column and adds one replaces the stored
+    schema, even where it rewrites only some partitions and files of the
+    old schema remain."""
+    df, root = tiered
+    b = df.select("conv_bucket").first().conv_bucket
+    changed = df.drop("role").withColumn("n_chars", F.length("conv_id"))
+    CAT.write_partitioned(changed.filter(F.col("conv_bucket") == b), root, "turns")
+    back = CAT.read_table(spark, root, "turns")
+    assert back.columns == ["conv_id", "turn_idx", "ts", "n_chars", "conv_bucket", "ts_day"]
+    assert back.count() == df.count()
+    rewritten = back.filter(F.col("conv_bucket") == b)
+    assert _digest(rewritten) == _digest(changed.filter(F.col("conv_bucket") == b))
+    assert back.filter(F.col("conv_bucket") != b).filter(F.col("n_chars").isNotNull()).count() == 0
+
+
+def test_c6_aborted_write_leaves_no_schema(spark, tiered):
+    df, root = tiered
+    path = CAT.table_path(root, "turns")
+    assert os.path.isfile(os.path.join(path, CAT.SCHEMA_FILE))
+    tgt = df.select("conv_id", "turn_idx").first()
+    boom = (F.col("conv_id") == tgt.conv_id) & (F.col("turn_idx") == tgt.turn_idx)
+    bad = df.withColumn("role", F.when(boom, F.raise_error(F.lit("boom"))).otherwise(F.col("role")))
+    with pytest.raises(Exception, match="boom"):
+        CAT.write_partitioned(bad, root, "turns")
+    assert not os.path.exists(os.path.join(path, CAT.SCHEMA_FILE))
+    back, inferred = CAT.read_table(spark, root, "turns"), spark.read.parquet(path)
+    assert back.schema == inferred.schema
+    assert _digest(back) == _digest(inferred) == _digest(df)
+
+
+def test_c6_retention_of_every_partition_reads_empty(spark, tiered):
+    """Retention that drops every partition leaves an empty table with the
+    stored schema (inference has no file to read it from)."""
+    _df, root = tiered
+    schema = CAT.read_table(spark, root, "turns").schema
+    assert CAT.drop_partitions_before(root, "turns", "2999-01-01") > 0
+    back = CAT.read_table(spark, root, "turns")
+    assert back.schema == schema
+    assert back.count() == 0

@@ -12,23 +12,13 @@ from pyspark.sql import functions as F
 from more_pattern_extraction_spark.plans.pipeline import run_pipeline
 from more_pattern_extraction_spark.plans.repair import repair_late_turns
 
-# measured: 35 / 7 / 38 jobs; the cold-ingest bound keeps one job of
+# measured: 33 / 7 / 36 jobs; the cold-ingest bound keeps one job of
 # slack because adaptive execution runs the stages of the ingest's
 # unit-list collect as one or two jobs, depending on which stage
 # finishes first
-COLD_INGEST_JOBS = 36
+COLD_INGEST_JOBS = 34
 NOOP_RESUME_JOBS = 7
-REPAIR_JOBS = 38
-
-
-def _jobs(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+REPAIR_JOBS = 36
 
 
 @pytest.fixture()
@@ -40,16 +30,16 @@ def split(transcripts):
     return transcripts.filter(~late), transcripts.filter(late)
 
 
-def test_ingest_and_repair_job_budgets(spark, transcripts, split, tmp_path):
+def test_ingest_and_repair_job_budgets(spark, spark_jobs, transcripts, split, tmp_path):
     ontime, late = split
     out = str(tmp_path / "out")
-    m, cold = _jobs(spark, "budget_cold", lambda: run_pipeline(
+    m, cold = spark_jobs("budget_cold", lambda: run_pipeline(
         spark, ontime, out, input_snapshot="b_on", n_buckets=8))
     assert m["units_done"] > 0
-    m, noop = _jobs(spark, "budget_noop", lambda: run_pipeline(
+    m, noop = spark_jobs("budget_noop", lambda: run_pipeline(
         spark, ontime, out, input_snapshot="b_on", n_buckets=8))
     assert m["units_done"] == 0
-    m, repair = _jobs(spark, "budget_repair", lambda: repair_late_turns(
+    m, repair = spark_jobs("budget_repair", lambda: repair_late_turns(
         spark, transcripts, late, out, input_snapshot="b_m", prior_snapshot="b_on",
         n_buckets=8))
     assert m["units_repaired"] > 0
