@@ -13,9 +13,10 @@ drops partitions past each tier's retention horizon, then records a
 lineage row per committed unit, the checkpoints and a metrics row
 (wall s, turns/s).
 
-Resume: a second invocation with the same input snapshot anti-joins the
-checkpoint table and does nothing; a partially-complete run redoes only
-missing units (tests/test_pipeline.py proves resume == cold run).
+Resume: a second invocation with the same input snapshot finds every
+unit in the checkpoint table and does nothing; a partially-complete run
+redoes only missing units (tests/test_pipeline.py proves resume == cold
+run).
 """
 
 from __future__ import annotations
@@ -51,16 +52,11 @@ def run_pipeline(
     feats = R.turn_features(turns, latency_col=latency_col)
     feats = CAT.with_layout_cols(feats, n_buckets)  # conv_bucket, ts_day
 
-    # one collect of the tiny unit list: every unit with its turn count,
-    # then the units still pending under this snapshot once more
-    units = feats.groupBy("conv_bucket", "ts_day").agg(F.count(F.lit(1)).alias("turns"))
-    units = units.withColumn("ts_bucket", F.col("ts_day").cast("timestamp"))
-    pending = cp.pending_units(units, JOB, "1m", input_snapshot) if resume else units
-    rows = units.withColumn("pending", F.lit(False)).unionByName(
-        pending.withColumn("pending", F.lit(True))
-    ).collect()
-    todo = [r for r in rows if r["pending"]]
-    n_units = len(rows) - len(todo)
+    # one collect of the tiny unit list, each unit with its turn count;
+    # the checkpoints are subtracted on the driver
+    rows = feats.groupBy("conv_bucket", "ts_day").agg(F.count(F.lit(1)).alias("turns")).collect()
+    todo = cp.pending_units(rows, JOB, "1m", input_snapshot) if resume else rows
+    n_units = len(rows)
 
     scope = ST.Scope(spark, [(r["conv_bucket"], r["ts_day"]) for r in todo], whole_table=True)
     frames = ST.run_stages(ST.TIER_STAGES, {"feats": feats}, scope, out_root, n_buckets)

@@ -187,15 +187,9 @@ def repair_late_turns(
     # the prior snapshot's completed units are carried forward, so a
     # follow-up run_pipeline(resume=True) at the merged snapshot no-ops
     # even when every late unit was outside the retention horizon
-    carried = []
+    carried = set()
     if prior_snapshot is not None:
-        carried = (
-            cp.completed(ST.PIPELINE_JOB, "1m")
-            .filter(F.col("input_snapshot") == prior_snapshot)
-            .select("conv_bucket", F.col("ts_bucket").cast("date").alias("ts_day"))
-            .filter(~scope.where)
-            .collect()
-        )
+        carried = cp.completed(ST.PIPELINE_JOB, "1m", prior_snapshot) - set(scope.units)
     ST.certify(cp, scope, frames.get("rollup_1m"), JOB, input_snapshot, carried)
 
     m = {

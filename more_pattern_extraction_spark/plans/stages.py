@@ -57,7 +57,6 @@ from more_pattern_extraction_spark.sources import catalog as CAT
 PIPELINE_JOB = "rollup_pipeline"
 UNIT = "unit"
 CONV = "conversation"
-UNIT_SCHEMA = "conv_bucket int, ts_day date"
 LINEAGE_COLS = ["conv_id", "bucket_start", "turn_cnt", "latency_cnt"]
 
 
@@ -249,13 +248,7 @@ def certify(cp: CheckpointStore, scope: Scope, r1m: DataFrame, lineage_job: str,
     """Record lineage for the scope's units of the 1m tier, then commit
     them, and the ``carried`` units, under ``input_snapshot``."""
     if scope.units:
-        lineage = content_hash(
-            scope.only(r1m).withColumn("ts_bucket", F.col("ts_day").cast("timestamp")),
-            LINEAGE_COLS,
-        )
-        cp.record_lineage(lineage_job, "1m", input_snapshot, lineage)
+        cp.record_lineage(lineage_job, "1m", input_snapshot,
+                          content_hash(scope.only(r1m), LINEAGE_COLS))
     if scope.units or carried:
-        # one file per commit: the key list is a few rows
-        keys = cp.spark.createDataFrame(scope.units + list(carried), UNIT_SCHEMA).coalesce(1)
-        keys = keys.select("conv_bucket", F.col("ts_day").cast("timestamp").alias("ts_bucket"))
-        cp.commit(keys, PIPELINE_JOB, "1m", input_snapshot)
+        cp.commit(scope.units + sorted(carried), PIPELINE_JOB, "1m", input_snapshot)

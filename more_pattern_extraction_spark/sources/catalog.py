@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 SCHEMA_FILE = "_schema.json"
+PARTITION_COLS = ("conv_bucket", "ts_day")
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -47,9 +48,6 @@ def write_partitioned(
     df: DataFrame,
     root: str,
     name: str,
-    partition_cols: tuple[str, ...] = ("conv_bucket", "ts_day"),
-    mode: str = "overwrite",
-    files_per_partition: int = 1,
     sort_cols: tuple[str, ...] = (),
     compression: str = "zstd",
 ) -> None:
@@ -62,24 +60,17 @@ def write_partitioned(
     the namenode/manifest in entries).  This is Iceberg's
     ``write.distribution-mode=hash`` recreated for the Parquet seam:
     hash-distribute on the partition columns so each partition dir is
-    written by exactly one task → one file (``files_per_partition > 1``
-    adds a deterministic conv_id salt for partitions too big for one
-    file).  ``sort_cols`` additionally sorts within each task before
-    writing — (conv_id, bucket_start) order keeps a conversation's
-    buckets adjacent, which is what the DoD/Gorilla-style columnar
-    encodings and range scans want."""
+    written by exactly one task → one file.  ``sort_cols`` additionally
+    sorts within each task before writing — (conv_id, bucket_start) order
+    keeps a conversation's buckets adjacent, which is what the
+    DoD/Gorilla-style columnar encodings and range scans want."""
     spark = df.sparkSession
     path = table_path(root, name)
     schema_path = os.path.join(path, SCHEMA_FILE)
     with contextlib.suppress(FileNotFoundError):
         os.remove(schema_path)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    parts = [F.col(c) for c in partition_cols]
-    if files_per_partition > 1:
-        parts.append(
-            F.pmod(F.xxhash64("conv_id"), F.lit(files_per_partition)).cast("int")
-        )
-    out = df.repartition(*parts)
+    out = df.repartition(*PARTITION_COLS)
     if sort_cols:
         # the partition columns MUST lead the sort: FileFormatWriter
         # requires task rows ordered by the partitionBy columns and
@@ -88,15 +79,15 @@ def write_partitioned(
         # scripts/measure_write_trade.py: without the prefix, sorted and
         # unsorted configs produced byte-identical (insertion-ordered)
         # files
-        out = out.sortWithinPartitions(*partition_cols, *sort_cols)
+        out = out.sortWithinPartitions(*PARTITION_COLS, *sort_cols)
     (
-        out.write.mode(mode)
+        out.write.mode("overwrite")
         .option("compression", compression)  # zstd: ~30-50% smaller than
         # snappy at comparable scan speed — at 100 TB the default choice
-        .partitionBy(*partition_cols)
+        .partitionBy(*PARTITION_COLS)
         .parquet(path)
     )
-    _save_schema(df.schema, partition_cols, schema_path)
+    _save_schema(df.schema, schema_path)
 
 
 def _nullable(dt: DataType) -> DataType:
@@ -111,12 +102,12 @@ def _nullable(dt: DataType) -> DataType:
     return dt
 
 
-def _save_schema(schema: StructType, partition_cols: tuple[str, ...], schema_path: str) -> None:
+def _save_schema(schema: StructType, schema_path: str) -> None:
     """The schema Spark's file source reports for the written table: the
     data columns in frame order, then the partition columns, all nullable.
     Written under a temp name and renamed, so a reader never sees half."""
-    fields = [f for f in schema.fields if f.name not in partition_cols]
-    fields += [schema[c] for c in partition_cols]
+    fields = [f for f in schema.fields if f.name not in PARTITION_COLS]
+    fields += [schema[c] for c in PARTITION_COLS]
     tmp = schema_path + ".tmp"
     with open(tmp, "w") as fh:
         fh.write(_nullable(StructType(fields)).json())
@@ -127,8 +118,6 @@ def compact_table(
     spark: SparkSession,
     root: str,
     name: str,
-    partition_cols: tuple[str, ...] = ("conv_bucket", "ts_day"),
-    files_per_partition: int = 1,
     sort_cols: tuple[str, ...] = (),
 ) -> dict:
     """Small-file compaction for an already-fragmented table (the
@@ -140,10 +129,7 @@ def compact_table(
     before = _count_data_files(base)
     df = read_table(spark, root, name)
     rows = df.count()
-    write_partitioned(
-        df, root, name, partition_cols=partition_cols,
-        files_per_partition=files_per_partition, sort_cols=sort_cols,
-    )
+    write_partitioned(df, root, name, sort_cols=sort_cols)
     return {
         "files_before": before,
         "files_after": _count_data_files(base),

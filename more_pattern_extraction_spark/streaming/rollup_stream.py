@@ -282,7 +282,6 @@ def compact_stream_tier(
     spark: SparkSession,
     out_root: str,
     name: str = "rollup_1m_stream",
-    files_per_partition: int = 1,
 ) -> dict:
     """Merge committed epoch dirs into one compaction generation — the
     stream tier's small-file maintenance job (a per-minute trigger makes
@@ -336,18 +335,13 @@ def compact_stream_tier(
         .filter(_F.col("epoch").isin(live))
         .drop("epoch")
     )
-    parts = [_F.col("conv_bucket"), _F.col("ts_day")]
-    if files_per_partition > 1:
-        parts.append(
-            _F.pmod(_F.xxhash64("conv_id"), _F.lit(files_per_partition)).cast("int")
-        )
     tmp = os.path.join(table, f"_tmp_compact_{gen}")
     shutil.rmtree(tmp, ignore_errors=True)
     (
-        df.repartition(*parts)
-        .sortWithinPartitions("conv_bucket", "ts_day", "conv_id", "bucket_start")
+        df.repartition(*CAT.PARTITION_COLS)
+        .sortWithinPartitions(*CAT.PARTITION_COLS, "conv_id", "bucket_start")
         .write.mode("overwrite")
-        .partitionBy("conv_bucket", "ts_day")
+        .partitionBy(*CAT.PARTITION_COLS)
         .parquet(tmp)
     )
     with open(os.path.join(tmp, "_absorbs.json"), "w") as f:

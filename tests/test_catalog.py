@@ -16,7 +16,7 @@ Contract items:
       any file changes, and distinguishes different paths.
   C4  drop_partitions_before removes exactly the ts_day partitions
       before the horizon (metadata-only retention).
-  C5  resume: pending_units anti-joins committed work per input
+  C5  resume: pending_units subtracts committed work per input
       snapshot; a new snapshot re-exposes all units; a resumed
       run equals a cold run (pipeline-level, kill-and-resume).
   C6  every table carries its read schema (``_schema.json``, the stand-in
@@ -27,6 +27,7 @@ Contract items:
 
 import os
 import shutil
+from datetime import date
 
 import pytest
 from pyspark.sql import functions as F
@@ -146,26 +147,39 @@ def test_c4_retention_drops_only_old_partitions(spark, tiered):
 def test_c5_checkpoint_resume_per_snapshot(spark, tiered, tmp_path):
     df, root = tiered
     cp = CheckpointStore(spark, str(tmp_path / "cp"))
-    units = df.select(
-        "conv_bucket", F.col("ts_day").cast("timestamp").alias("ts_bucket")
-    ).distinct()
+    units = sorted(tuple(r) for r in df.select("conv_bucket", "ts_day").distinct().collect())
     snap = CAT.snapshot_id(CAT.table_path(root, "turns"))
-    n = units.count()
-    assert cp.pending_units(units, "job", "1m", snap).count() == n
+    n = len(units)
+    assert len(cp.pending_units(units, "job", "1m", snap)) == n
     # commit half the units → only the other half is pending
-    half = units.limit(n // 2)
+    half = units[: n // 2]
     cp.commit(half, "job", "1m", snap)
-    assert cp.pending_units(units, "job", "1m", snap).count() == n - n // 2
+    assert len(cp.pending_units(units, "job", "1m", snap)) == n - n // 2
     # commit the rest → nothing pending (a resumed run does zero work)
-    rest = units.join(half, ["conv_bucket", "ts_bucket"], "left_anti")
+    rest = [u for u in units if u not in half]
     cp.commit(rest, "job", "1m", snap)
-    assert cp.pending_units(units, "job", "1m", snap).count() == 0
+    assert len(cp.pending_units(units, "job", "1m", snap)) == 0
     # a NEW input snapshot re-exposes every unit: old checkpoints must
     # never mask new data (checkpoint.py pending_units contract)
-    assert cp.pending_units(units, "job", "1m", snap + "_v2").count() == n
+    assert len(cp.pending_units(units, "job", "1m", snap + "_v2")) == n
     # and other (job, tier) scopes are independent
-    assert cp.pending_units(units, "job", "1h", snap).count() == n
-    assert cp.pending_units(units, "other_job", "1m", snap).count() == n
+    assert len(cp.pending_units(units, "job", "1h", snap)) == n
+    assert len(cp.pending_units(units, "other_job", "1m", snap)) == n
+
+
+def test_c5_missing_ledger_runs_no_job(spark, spark_jobs, tmp_path, monkeypatch):
+    """On a fresh root the ledger directory does not exist yet: nothing
+    is completed, everything is pending, and finding that out starts no
+    Spark job and no Spark read (a read of the missing path logs a Java
+    FileNotFoundException stack trace on every cold ingest)."""
+    monkeypatch.setattr(type(spark), "read", property(lambda _s: pytest.fail("Spark read")))
+    cp = CheckpointStore(spark, str(tmp_path / "fresh"))
+    units = [(0, date(2024, 1, 1)), (3, date(2024, 1, 2))]
+    (done, pending), jobs = spark_jobs("c5_fresh", lambda: (
+        cp.completed("job", "1m", "s"), cp.pending_units(units, "job", "1m", "s")))
+    assert done == set() and pending == units
+    assert jobs == 0
+    assert not os.path.exists(cp.cp_path)
 
 
 @pytest.mark.skipif(

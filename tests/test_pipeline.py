@@ -1,11 +1,21 @@
 """End-to-end pipeline: cold run, no-op resume, and interrupted-resume ==
 cold-run equivalence (north rule: per-partition checkpoint/lineage/metrics)."""
 
+import calendar
+import os
+import shutil
+import time
+from datetime import date
+
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from more_pattern_extraction_spark.plans import stages as ST
+from more_pattern_extraction_spark.plans.checkpoint import CheckpointStore, content_hash
 from more_pattern_extraction_spark.plans.pipeline import run_pipeline
+from more_pattern_extraction_spark.plans.repair import affected_units, repair_late_turns
 from more_pattern_extraction_spark.sources import catalog as CAT
 
 TABLES = ["rollup_1m", "distinct_1m", "rollup_1m_filled", "chunks_1m", "rollup_1h", "rollup_1d"]
@@ -186,3 +196,118 @@ def test_tier_sketch_p95_merge_identity_end_to_end(spark, transcripts, out):
         | F.col("s.latency_sketch").isNull() | F.col("d.latency_sketch").isNull()
     ).count()
     assert bad == 0
+
+
+LEDGER = ("checkpoints", "lineage", "metrics")
+RUN_METRICS = ("wall_s", "turns", "turns_per_s", "units_total", "units_done", "units_skipped")
+
+
+def _spark_ledger(spark, root, units, snap):
+    """The ledger of a finished ingest of ``units`` as Spark's writer lays
+    it out (INT96 timestamps, ``_SUCCESS`` and ``.crc`` files), the layout
+    of every ledger written before the driver wrote it."""
+    def stamped(df, ts_col):
+        return (df.withColumn("job", F.lit(ST.PIPELINE_JOB)).withColumn("tier", F.lit("1m"))
+                .withColumn("input_snapshot", F.lit(snap)).withColumn(ts_col, F.current_timestamp()))
+
+    keys = spark.createDataFrame(units, "conv_bucket int, ts_day date").coalesce(1)
+    keys = keys.select("conv_bucket", F.col("ts_day").cast("timestamp").alias("ts_bucket"))
+    stamped(keys, "completed_at").select(
+        "job", "tier", "conv_bucket", "ts_bucket", "input_snapshot", "completed_at"
+    ).write.mode("append").parquet(f"{root}/checkpoints")
+    lineage = content_hash(CAT.read_table(spark, root, "rollup_1m"), ST.LINEAGE_COLS).select(
+        "conv_bucket", F.col("ts_day").cast("timestamp").alias("ts_bucket"), "rows_out",
+        "content_hash")
+    stamped(lineage, "recorded_at").write.mode("append").parquet(f"{root}/lineage")
+    spark.createDataFrame(
+        [(ST.PIPELINE_JOB, "spark-written", time.time(), 1.0, 2.0, 2.0, 3.0, 3.0, 0.0)],
+        "job string, run_id string, ts double, " + ", ".join(f"{k} double" for k in RUN_METRICS),
+    ).write.mode("append").parquet(f"{root}/metrics")
+
+
+def test_resume_and_repair_over_spark_written_ledger(spark, transcripts, out, tmp_path):
+    """A ledger Spark wrote still resumes and repairs, and the files the
+    driver adds to it read back in Spark with the schema of Spark's."""
+    late_p = (F.col("conv_id") == "conv_00005") & (F.col("turn_idx") >= 20)
+    ontime, late = transcripts.filter(~late_p), transcripts.filter(late_p)
+    run_pipeline(spark, ontime, out, input_snapshot="s_on", n_buckets=8)
+    units = sorted(tuple(r) for r in CAT.with_layout_cols(ontime, 8)
+                   .select("conv_bucket", "ts_day").distinct().collect())
+    driver, written = tmp_path / "driver", tmp_path / "spark"
+    driver.mkdir()
+    for t in LEDGER:
+        shutil.move(f"{out}/{t}", driver / t)
+    _spark_ledger(spark, out, units, "s_on")
+    for t in LEDGER:
+        shutil.copytree(f"{out}/{t}", written / t)
+    names = os.listdir(f"{out}/checkpoints")
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    part = next(n for n in names if n.endswith(".parquet"))
+    assert pq.ParquetFile(f"{out}/checkpoints/{part}").schema.column(3).physical_type == "INT96"
+
+    m = run_pipeline(spark, ontime, out, input_snapshot="s_on", n_buckets=8)
+    assert m["units_done"] == 0 and m["units_total"] == len(units)
+    hit = {tuple(r) for r in affected_units(transcripts, late, 8).collect()}
+    r = repair_late_turns(spark, transcripts, late, out, input_snapshot="s_m",
+                          prior_snapshot="s_on", n_buckets=8)
+    assert r["units_carried"] == len(set(units) - hit) > 0
+    assert run_pipeline(spark, transcripts, out, input_snapshot="s_m", n_buckets=8)["units_done"] == 0
+
+    # the mixed directories read with every column
+    rows = CheckpointStore(spark, out).metrics().collect()
+    assert len(rows) == 4
+    for row in rows:
+        keys = RUN_METRICS if row.job == ST.PIPELINE_JOB else ("units_repaired", "units_carried")
+        assert all(row[k] is not None for k in ("run_id", "ts") + keys), row
+    lineage = spark.read.parquet(f"{out}/lineage")
+    assert lineage.schema == spark.read.parquet(str(written / "lineage")).schema
+    assert lineage.filter(F.col("job") == "late_repair").count() == r["units_repaired"]
+    assert lineage.count() == len(units) + r["units_repaired"]
+    assert lineage.dropna().count() == lineage.count()
+    # a table the driver wrote reads as the one Spark wrote
+    for t in LEDGER:
+        assert (spark.read.parquet(str(driver / t)).schema
+                == spark.read.parquet(str(written / t)).schema), t
+
+
+@pytest.fixture()
+def los_angeles_tz(monkeypatch):
+    monkeypatch.setenv("TZ", "America/Los_Angeles")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def _midnight_utc(d):
+    return calendar.timegm(d.timetuple())
+
+
+def test_ledger_keys_ignore_process_time_zone(spark, transcripts, out, tmp_path, los_angeles_tz):
+    """The Python process's local time zone (8 hours west of UTC here)
+    moves no unit to another day: each ``ts_bucket`` is its unit's day
+    at 00:00 UTC, and a commit leaves nothing pending."""
+    assert time.localtime(0).tm_hour == 16
+    cp = CheckpointStore(spark, str(tmp_path / "ledger"))
+    units = [(1, date(2024, 1, 1)), (5, date(2024, 1, 2))]
+    cp.commit(units, "job", "1m", "s")
+    assert cp.completed("job", "1m", "s") == set(units)
+    assert cp.pending_units(units, "job", "1m", "s") == []
+    cp.record_lineage("job", "1m", "s", spark.createDataFrame(
+        [(b, d, 1, 2) for b, d in units],
+        "conv_bucket int, ts_day date, rows_out long, content_hash long"))
+    want = {(b, _midnight_utc(d)) for b, d in units}
+    for t in ("checkpoints", "lineage"):
+        got = spark.read.parquet(f"{cp.root}/{t}").select(
+            "conv_bucket", F.col("ts_bucket").cast("long")).collect()
+        assert {tuple(r) for r in got} == want, t
+
+    small = transcripts.filter(F.col("conv_id") <= "conv_00003")
+    m = run_pipeline(spark, small, out, input_snapshot="s_tz", n_buckets=8)
+    days = {tuple(r) for r in CAT.with_layout_cols(small, 8)
+            .select("conv_bucket", "ts_day").distinct().collect()}
+    got = spark.read.parquet(f"{out}/checkpoints").select(
+        "conv_bucket", F.col("ts_bucket").cast("long")).collect()
+    assert {tuple(r) for r in got} == {(b, _midnight_utc(d)) for b, d in days}
+    assert m["units_done"] == len(days)
+    assert run_pipeline(spark, small, out, input_snapshot="s_tz", n_buckets=8)["units_done"] == 0
