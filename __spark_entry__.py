@@ -20,23 +20,20 @@ from more_pattern_extraction_spark.plans import entry as _entry  # noqa: E402
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: events→transcript adapter,
-    1-minute tier rollup, dense-spine gap-fill (LOCF + linear interp)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.ansi.enabled", "false")  # x/0 → NULL (DuckDB parity)
+    the engine's 1-minute tier rollup, dense-spine gap-fill (LOCF + linear
+    interp)."""
     from pyspark.sql import functions as F
 
     from more_pattern_extraction_spark.operators import gapfill as G
 
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    r1m = ev.groupBy(
-        F.col("user_id").cast("string").alias("conv_id"),
-        F.date_trunc("minute", "ts").alias("bucket_start"),
-    ).agg(
-        F.count(F.lit(1)).alias("turn_cnt"),
-        F.count(F.when(F.col("event_type") == "click", 1)).alias("tool_call_cnt"),
-        F.sum("value").alias("latency_sum"),
-        F.count("value").alias("latency_cnt"),
-        F.avg("value").alias("latency_avg"),
+    r1m = _entry._tier_rows(spark, "/root/testdata/sf0.001").select(
+        F.col("conv_id").cast("string").alias("conv_id"),
+        "bucket_start",
+        "turn_cnt",
+        "tool_call_cnt",
+        "latency_sum",
+        "latency_cnt",
+        "latency_avg",
     )
     return G.gap_fill_rollup(r1m, "1m")
 

@@ -78,16 +78,45 @@ _ROLLUP_AGGS_SQL = """
 """
 
 
-def _rollup_aggs():
-    return [
-        F.count(F.lit(1)).alias("turn_cnt"),
-        F.count(F.when(F.col("event_type") == "click", 1)).alias("tool_call_cnt"),
-        F.round(F.sum("value"), 6).alias("latency_sum"),
-        F.count("value").alias("latency_cnt"),
-        F.round(F.min("value"), 6).alias("latency_min"),
-        F.round(F.max("value"), 6).alias("latency_max"),
-        F.round(F.sum("value") / F.count("value"), 6).alias("latency_avg"),
-    ]
+def _tier_rows(spark, sf_dir, tier: str = "1m", ts_before: str | None = None) -> DataFrame:
+    """The engine's tier rows over ``events`` read as turns (``user_id`` →
+    ``conv_id``, a ``click`` → a tool call, ``value`` → latency; a NULL
+    ``event_type`` is no tool call, as in the oracle's ``FILTER``): the 1m
+    tier from ``operators/rollup.rollup_from_raw``, coarser tiers cascaded
+    from it by ``rollup.cascade``.  ``ts_before`` bounds the turns' ``ts``."""
+    from more_pattern_extraction_spark.operators import rollup as R
+
+    ev = _events(spark, sf_dir)
+    if ts_before is not None:
+        ev = ev.filter(F.col("ts") < ts_before)
+    turns = ev.select(
+        F.col("user_id").alias("conv_id"),
+        "ts",
+        F.when(F.col("event_type") == "click", 1).otherwise(0).alias("is_tool"),
+        F.col("value").alias("latency"),
+    )
+    r1m = R.rollup_from_raw(turns, "1m")
+    return r1m if tier == "1m" else R.cascade(r1m, tier, from_tier="1m")
+
+
+def _cascade_tier(spark, sf_dir, tier: str) -> DataFrame:
+    """A tier of the engine's cascade (``_tier_rows``) in the contract's
+    columns, floats rounded.  The oracle computes every tier directly from
+    raw rows, so a coarser tier doubles as the cascade-identity check
+    (FIXTURES.md §3) under the driver's value hash.
+
+    ``tier`` is any ``operators/rollup.bucket_expr`` tier string: named
+    calendar tiers (``1h``/``1d`` → date_trunc) or arbitrary epoch-aligned
+    widths (``5m`` → floor(epoch/300)*300, time_bucket semantics)."""
+    return _tier_rows(spark, sf_dir, tier).select(
+        F.col("conv_id").alias("conv_key"),
+        "bucket_start",
+        "turn_cnt",
+        "tool_call_cnt",
+        F.round("latency_sum", 6).alias("latency_sum"),
+        "latency_cnt",
+        *[F.round(c, 6).alias(c) for c in ("latency_min", "latency_max", "latency_avg")],
+    )
 
 
 @register(
@@ -99,55 +128,7 @@ def _rollup_aggs():
     """,
 )
 def rollup_1m(spark, sf_dir):
-    return (
-        _events(spark, sf_dir)
-        .groupBy(
-            F.col("user_id").alias("conv_key"),
-            F.date_trunc("minute", "ts").alias("bucket_start"),
-        )
-        .agg(*_rollup_aggs())
-    )
-
-
-def _cascade_tier(spark, sf_dir, tier: str) -> DataFrame:
-    """1m tier re-aggregated to a coarser tier — the oracle computes the
-    coarse tier directly from raw rows, so this doubles as the cascade-
-    identity check (FIXTURES.md §3) under the driver's value hash.
-
-    ``tier`` is any ``operators/rollup.bucket_expr`` tier string: named
-    calendar tiers (``1h``/``1d`` → date_trunc) or arbitrary epoch-aligned
-    widths (``5m`` → floor(epoch/300)*300, time_bucket semantics)."""
-    from more_pattern_extraction_spark.operators.rollup import bucket_expr
-
-    fine = (
-        _events(spark, sf_dir)
-        .groupBy(
-            F.col("user_id").alias("conv_key"),
-            F.date_trunc("minute", "ts").alias("bucket_start"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("turn_cnt"),
-            F.count(F.when(F.col("event_type") == "click", 1)).alias("tool_call_cnt"),
-            F.sum("value").alias("latency_sum"),
-            F.count("value").alias("latency_cnt"),
-            F.min("value").alias("latency_min"),
-            F.max("value").alias("latency_max"),
-        )
-    )
-    return (
-        fine.groupBy(
-            "conv_key", bucket_expr(F.col("bucket_start"), tier).alias("bucket_start")
-        )
-        .agg(
-            F.sum("turn_cnt").alias("turn_cnt"),
-            F.sum("tool_call_cnt").alias("tool_call_cnt"),
-            F.round(F.sum("latency_sum"), 6).alias("latency_sum"),
-            F.sum("latency_cnt").alias("latency_cnt"),
-            F.round(F.min("latency_min"), 6).alias("latency_min"),
-            F.round(F.max("latency_max"), 6).alias("latency_max"),
-            F.round(F.sum("latency_sum") / F.sum("latency_cnt"), 6).alias("latency_avg"),
-        )
-    )
+    return _cascade_tier(spark, sf_dir, "1m")
 
 
 @register(
@@ -762,25 +743,19 @@ def score_metrics(spark, sf_dir):
     """A4 score (statistics.py:43-64): R²/MAE/ME/MAPE/MPE as pure column
     aggregates; 'pred' is a trailing rolling mean standing in for the
     reference's regression prediction.  mape/mpe follow the reference's
-    mape1/mpe1 definitions (÷ mean(y), statistics.py:7-40)."""
+    mape1/mpe1 definitions (÷ mean(y), statistics.py:7-40), as computed by
+    ``operators/stats.regression_scores``."""
+    from more_pattern_extraction_spark.operators import stats as ST
+
     w = _W_TS().rowsBetween(-5, -1)
     p = _events(spark, sf_dir).select(
         "event_type",
         F.col("value").alias("y"),
         F.avg("value").over(w).alias("pred"),
     ).filter(F.col("pred").isNotNull())
-    y, pr = F.col("y"), F.col("pred")
-    return p.groupBy("event_type").agg(
-        F.round(
-            1
-            - F.sum((y - pr) * (y - pr))
-            / (F.sum(y * y) - F.count(F.lit(1)) * F.avg(y) * F.avg(y)),
-            6,
-        ).alias("r2"),
-        F.round(F.avg(F.abs(y - pr)), 6).alias("mae"),
-        F.round(F.avg(y - pr), 6).alias("me"),
-        F.round(F.avg(F.abs(y - pr)) / F.avg(y), 6).alias("mape"),
-        F.round(F.avg(y - pr) / F.avg(y), 6).alias("mpe"),
+    s = ST.regression_scores(p, "y", "pred", ("event_type",))
+    return s.select(
+        "event_type", *[F.round(c, 6).alias(c) for c in ("r2", "mae", "me", "mape", "mpe")]
     )
 
 
@@ -1006,11 +981,9 @@ def gapfill_locf_1m(spark, sf_dir):
     chunk_interpolate LOCF leg, preprocessing.py:185-208)."""
     from more_pattern_extraction_spark.operators import gapfill as G
 
-    ev = _events(spark, sf_dir).filter(F.col("ts") < "2024-01-02")
-    r = ev.groupBy(
-        F.col("user_id").alias("conv_id"),
-        F.date_trunc("minute", "ts").alias("bucket_start"),
-    ).agg(F.round(F.avg("value"), 6).alias("latency_avg"))
+    r = _tier_rows(spark, sf_dir, ts_before="2024-01-02").select(
+        "conv_id", "bucket_start", F.round("latency_avg", 6).alias("latency_avg")
+    )
     dense = G.bucket_spine(r, "1m").join(r, ["conv_id", "bucket_start"], "left")
     dense = dense.withColumn("is_gap", F.col("latency_avg").isNull())
     out = G.locf(dense, ["latency_avg"])
@@ -1796,11 +1769,11 @@ def chunk_roundtrip(spark, sf_dir):
     DoD trip perturbs fails the value hash (functions/encode.py)."""
     from more_pattern_extraction_spark.operators import chunks as C
 
-    ev = _events(spark, sf_dir).filter(F.col("ts") < "2024-01-08")
-    r1m = ev.groupBy(
-        F.col("user_id").cast("string").alias("conv_id"),
-        F.date_trunc("minute", "ts").alias("bucket_start"),
-    ).agg(F.round(F.avg("value"), 6).alias("latency_avg"))
+    r1m = _tier_rows(spark, sf_dir, ts_before="2024-01-08").select(
+        F.col("conv_id").cast("string").alias("conv_id"),
+        "bucket_start",
+        F.round("latency_avg", 6).alias("latency_avg"),
+    )
     enc = C.encode_chunks(r1m, ["latency_avg"], "1m")
     dec = C.decode_chunks(enc)
     return dec.select(
@@ -2434,11 +2407,9 @@ def gapfill_interp_1m(spark, sf_dir):
     chunk_interpolate, preprocessing.py:185-208)."""
     from more_pattern_extraction_spark.operators import gapfill as G
 
-    ev = _events(spark, sf_dir).filter(F.col("ts") < "2024-01-02")
-    r = ev.groupBy(
-        F.col("user_id").alias("conv_id"),
-        F.date_trunc("minute", "ts").alias("bucket_start"),
-    ).agg(F.round(F.avg("value"), 6).alias("latency_avg"))
+    r = _tier_rows(spark, sf_dir, ts_before="2024-01-02").select(
+        "conv_id", "bucket_start", F.round("latency_avg", 6).alias("latency_avg")
+    )
     dense = G.bucket_spine(r, "1m").join(r, ["conv_id", "bucket_start"], "left")
     dense = dense.withColumn("is_gap", F.col("latency_avg").isNull())
     out = G.interpolate(dense, ["latency_avg"], limit=2)

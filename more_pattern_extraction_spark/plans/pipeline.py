@@ -49,18 +49,25 @@ def run_pipeline(
     t0 = time.time()
     cp = CheckpointStore(spark, out_root)
 
-    feats = R.turn_features(turns, latency_col=latency_col)
-    feats = CAT.with_layout_cols(feats, n_buckets)  # conv_bucket, ts_day
-
-    # one collect of the tiny unit list, each unit with its turn count;
-    # the checkpoints are subtracted on the driver
-    rows = feats.groupBy("conv_bucket", "ts_day").agg(F.count(F.lit(1)).alias("turns")).collect()
+    # one collect of the tiny unit list, each unit with its turn count,
+    # from the raw turns (turn_features neither adds nor drops a row, and
+    # its gate probe is a job a no-op resume need not run); the
+    # checkpoints are subtracted on the driver
+    rows = (
+        CAT.with_layout_cols(turns, n_buckets)  # conv_bucket, ts_day
+        .groupBy("conv_bucket", "ts_day")
+        .agg(F.count(F.lit(1)).alias("turns"))
+        .collect()
+    )
     todo = cp.pending_units(rows, JOB, "1m", input_snapshot) if resume else rows
     n_units = len(rows)
 
-    scope = ST.Scope(spark, [(r["conv_bucket"], r["ts_day"]) for r in todo], whole_table=True)
-    frames = ST.run_stages(ST.TIER_STAGES, {"feats": feats}, scope, out_root, n_buckets)
     if todo:
+        feats = R.turn_features(turns, latency_col=latency_col)
+        feats = CAT.with_layout_cols(feats, n_buckets)
+        scope = ST.Scope(spark, [(r["conv_bucket"], r["ts_day"]) for r in todo],
+                         whole_table=True)
+        frames = ST.run_stages(ST.TIER_STAGES, {"feats": feats}, scope, out_root, n_buckets)
         dropped = 0
         for st in ST.TIER_STAGES:
             if st.tier in (retention or {}):
@@ -126,9 +133,6 @@ def main() -> None:
     ap.add_argument("--n-buckets", type=int, default=32)
     ap.add_argument("--patterns", action="store_true",
                     help="also run the MP/discord/regime pattern stage")
-    ap.add_argument("--compact", action="store_true",
-                    help="small-file compaction of the tier tables after the run "
-                         "(catalog.compact_table; Iceberg's rewrite_data_files)")
     ap.add_argument("--mp-window", default="week")
     ap.add_argument("--mp-m", type=int, default=120)
     args = ap.parse_args()
@@ -151,10 +155,6 @@ def main() -> None:
             spark, args.output, n_buckets=args.n_buckets,
             m=args.mp_m, window=args.mp_window,
         ))
-    if args.compact:
-        for st in ST.TIER_STAGES:
-            c = CAT.compact_table(spark, args.output, st.table, sort_cols=st.sort_cols)
-            m[f"compact_{st.table}_files"] = float(c["files_after"])
     print({k: round(v, 2) for k, v in m.items()})
     spark.stop()
 

@@ -114,17 +114,18 @@ TIER_STAGES = (
 
 
 # The pattern stages run window-local kernels under a composite
-# ``conv_id#win`` key, so every grouped-UDF task is bounded by one window
-# of one conversation even for hot conversations.
+# ``win#conv_id`` key, so every grouped-UDF task is bounded by one window
+# of one conversation even for hot conversations.  The window leads: its
+# string has no "#", so the first "#" ends it whatever a conv_id holds.
 def _window_keyed(mp: DataFrame, value: str) -> DataFrame:
     return mp.select(
-        F.concat_ws("#", "conv_id", F.col("win").cast("string")).alias("conv_id"), "pos", value
+        F.concat_ws("#", F.col("win").cast("string"), "conv_id").alias("conv_id"), "pos", value
     )
 
 
 def _window_split(df: DataFrame, *cols: str) -> DataFrame:
-    key = F.split("conv_id", "#")
-    return df.select(key[0].alias("conv_id"), key[1].cast("timestamp").alias("win"), *cols)
+    key = F.split("conv_id", "#", 2)
+    return df.select(key[1].alias("conv_id"), key[0].cast("timestamp").alias("win"), *cols)
 
 
 def _matrix_profile(grid: DataFrame, m: int, window: str, **_) -> DataFrame:

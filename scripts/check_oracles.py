@@ -18,13 +18,15 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 
-sys.path.insert(0, "/root/repo")
+ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -120,6 +122,11 @@ def main():
     # data-dependent lazy oracles (IVF centroids) must train on THIS
     # sf_dir, not a hardcoded default (ADVICE r05)
     plans_entry.set_oracle_sf_dir(sf_dir)
+    # the Python workers import the package too (chunk codec and pattern
+    # UDFs), whatever directory the script runs from
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
 
     spark = get_spark("check_oracles", cores=8, shuffle_partitions=8)
     con = duckdb.connect()
@@ -179,7 +186,7 @@ def main():
 
         head = subprocess.run(
             ["git", "rev-parse", "HEAD"], capture_output=True, text=True,
-            cwd="/root/repo",
+            cwd=ROOT,
         ).stdout.strip()
         with open(json_out, "w") as f:
             json.dump({"git_head": head, "sf_dir": sf_dir,

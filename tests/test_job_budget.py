@@ -12,12 +12,12 @@ from pyspark.sql import functions as F
 from more_pattern_extraction_spark.plans.pipeline import run_pipeline
 from more_pattern_extraction_spark.plans.repair import repair_late_turns
 
-# measured: 29 / 4 / 33 jobs; the cold-ingest bound keeps one job of
-# slack because adaptive execution runs the stages of the ingest's
-# unit-list collect as one or two jobs, depending on which stage
-# finishes first
+# measured: 29 / 2 / 33 jobs (a no-op resume runs only the unit-list
+# collect); the cold-ingest bound keeps one job of slack because
+# adaptive execution runs the stages of the ingest's unit-list collect
+# as one or two jobs, depending on which stage finishes first
 COLD_INGEST_JOBS = 30
-NOOP_RESUME_JOBS = 4
+NOOP_RESUME_JOBS = 2
 REPAIR_JOBS = 33
 
 

@@ -159,6 +159,29 @@ def test_pattern_stage_tables(spark, transcripts, out):
     assert reg.count() >= 0 and {"conv_id", "win", "L", "regime_pos", "cac"} <= set(reg.columns)
 
 
+def test_pattern_tables_keep_conv_ids_with_hash(spark, transcripts, out):
+    """A ``#`` inside a conversation id survives the pattern stage's
+    ``(conv_id, win)`` group key: every discord and regime row names a
+    window that ``mp_day`` holds, and none loses its window."""
+    from more_pattern_extraction_spark.plans.pipeline import run_pattern_stage
+
+    turns = transcripts.withColumn("conv_id", F.concat(F.lit("team#"), "conv_id"))
+    run_pipeline(spark, turns, out, input_snapshot="hash", n_buckets=8)
+    run_pattern_stage(spark, out, n_buckets=8, m=16, window="day", k=2)
+
+    def keys(table):
+        rows = CAT.read_table(spark, out, table).select("conv_id", "win").distinct().collect()
+        return {(r["conv_id"], r["win"]) for r in rows}
+
+    mp = keys("mp_day")
+    assert mp and all(c.startswith("team#conv_") and w is not None for c, w in mp)
+    for table in ("discords", "regimes"):
+        got = keys(table)
+        assert got, table
+        assert all(w is not None for _, w in got), table
+        assert got <= mp, (table, sorted(got - mp, key=str)[:3])
+
+
 def test_tier_sketch_p95_merge_identity_end_to_end(spark, transcripts, out):
     """Persisted tiers carry the mergeable latency sketch (VERDICT r04 #3):
     the 1h tier's sketch — merged from the STORED 1m maps through

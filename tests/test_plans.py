@@ -1,10 +1,13 @@
 """Physical-plan assertions (SURVEY §4): the 100 TB contract is enforced
 at the plan level — predicate pushdown reaching the parquet scan, column
 pruning, broadcast joins for small sides, the chunk-encode partitioning,
-and NO Python eval nodes in the relational hot paths."""
+and NO Python eval nodes in the relational hot paths.  The registry's
+queries over the engine's tier operators also meet their DuckDB oracles."""
 
 import contextlib
 import io
+import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -235,3 +238,34 @@ def test_repair_scoped_scan_partition_prunes(spark, transcripts, tmp_path):
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m, plan
     assert "conv_bucket" in m.group(1), m.group(1)
+
+
+# registry queries whose rows come from operators/rollup (rollup_from_raw,
+# cascade) and operators/stats.regression_scores
+ENGINE_QUERIES = [
+    "rollup_1m", "rollup_1h_cascade", "rollup_1d_cascade", "rollup_5m_cascade",
+    "rollup_retention", "gapfill_locf_1m", "gapfill_interp_1m", "chunk_roundtrip",
+    "score_metrics",
+]
+
+
+@pytest.mark.parametrize("name", ENGINE_QUERIES)
+def test_engine_backed_query_equals_oracle(spark, name):
+    """The query returns its oracle's rows (``scripts/check_oracles.py``'s
+    arrow-level comparator: bit-equal floats, NULL masks, dtype families),
+    and the unused tier p95 (an exact ``percentile``) is pruned from its
+    plan."""
+    import duckdb
+
+    scripts = str(Path(__file__).resolve().parents[1] / "scripts")
+    if scripts not in sys.path:
+        sys.path.insert(0, scripts)
+    from check_oracles import compare
+
+    from more_pattern_extraction_spark.plans import entry as PE
+
+    df = PE.QUERIES[name](spark, SF)
+    assert "percentile" not in plan_str(df, mode="simple")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{SF}/events.parquet')")
+    assert compare(name, df.toArrow(), con.execute(PE.ORACLES[name]).arrow()) == []
