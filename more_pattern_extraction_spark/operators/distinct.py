@@ -115,7 +115,10 @@ def kmv_from_raw(
     ts_col: str = "ts",
     part_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Per-bucket KMV sketch at the finest tier, from raw turns.
+    """Per-bucket KMV sketch at the finest tier, from raw turns: the
+    raw-turn reference of the KMV algebra and stream == batch tests.  The
+    pipeline and the driver contract build from the tier row instead
+    (``kmv_from_rollup``).
 
     The leading ``.distinct()`` is deliberate and load-bearing: rank
     limits bound *rows*, not *values*, so a hot conversation repeated

@@ -1,28 +1,26 @@
-"""Gap-fill: bucket-spine densification + LOCF + linear interpolation with
-pandas ``interpolate(method='linear', limit=k, limit_direction='both')``
-semantics (reference ``chunk_interpolate``, ``modules/preprocessing.py:
-185-208``, applied by ``change_granularity`` :23-44).
+"""Gap-fill: expand a tier to its full step grid, then LOCF and linear
+interpolation with pandas ``interpolate(method='linear', limit=k,
+limit_direction='both')`` semantics (reference ``chunk_interpolate``,
+``modules/preprocessing.py:185-208``, applied by ``change_granularity``
+:23-44).
 
-Semantics matched empirically against pandas (tests/test_gapfill.py):
+Semantics matched against pandas (tests/test_gapfill.py):
   * interior NaN run between anchors a..b → linear interpolation, but only
     positions within ``limit`` of either end of the run are filled;
   * trailing NaNs → flat-fill (last value) up to ``limit`` positions;
   * leading NaNs → back-fill (next value) up to ``limit`` positions
-    counted from the first valid point backwards.
+    counted from the first valid point backwards;
+  * LOCF is pandas ``ffill``.
 
-Everything is Catalyst window functions and ``sequence()`` explodes —
-zero UDFs.  No ``sequence`` array exceeds one day of buckets (1440 for
-1m): grids are generated per (conv, ts-day).
-
-Two forms, one result:
-  * the generic chain ``densify`` → ``interpolate`` (and ``locf``) windows
-    over the dense grid; it serves irregular grids and direct callers,
-    and the tests and oracles compare against it;
-  * ``gap_fill_rollup`` — the tier path — is ``interpolate_runs``.  It is
-    skew-safe by construction, with no probe and no gate: each
-    conversation's window sorts cover only its observed 1m rows, and the
-    fan-out to the dense grid happens after the ``(conv, day)``
-    repartition, so a hot conversation's grid spreads across tasks by day.
+One form, ``gap_fill_rollup`` = ``interpolate_runs``, serves the tier
+table (``rollup_1m_filled``) and the driver contract's
+``gapfill_locf_1m``/``gapfill_interp_1m``.  Everything is Catalyst window
+functions and ``sequence()`` explodes — zero UDFs.  It is skew-safe by
+construction, with no probe and no gate: each conversation's window
+sorts cover only its observed rows, and the fan-out to the dense grid
+happens after the ``(conv, day)`` repartition, so a hot conversation's
+grid spreads across tasks by day.  No ``sequence`` array exceeds one day
+of buckets, which is why the step must divide a day.
 
 Reference chunking (``chunker`` 10^6-row pieces for RAM) is subsumed by
 partitioning itself; unlike the reference, window frames here never cross
@@ -35,125 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_SECONDS = {"1m": 60, "1h": 3600, "1d": 86400}
-
-
-def bucket_spine(rollup: DataFrame, tier: str = "1m") -> DataFrame:
-    """Dense per-conversation bucket grid from min to max observed bucket.
-
-    Split per (conv, day): the bounds row is first crossed with a one-day
-    spine, then each (conv, day) row generates a day-bounded ``sequence``
-    (≤1440 elements at 1m) — a multi-year conversation never materializes
-    its whole range in a single array row.  The union of the per-day
-    sequences equals the single full-range sequence exactly because every
-    supported step divides a day and ``bucket_start`` is step-aligned, so
-    each midnight lies on the bucket grid.  The (conv, day) repartition
-    doubles as hot-conversation salting: one viral conversation's spine
-    spreads across tasks by day.
-    """
-    step = _SECONDS[tier]
-    bounds = rollup.groupBy("conv_id").agg(
-        F.min("bucket_start").alias("b0"), F.max("bucket_start").alias("b1")
-    )
-    if tier == "1d":
-        # one bucket per day — the whole-range sequence IS the day spine
-        return bounds.repartition("conv_id").select(
-            "conv_id",
-            F.explode(
-                F.sequence(F.col("b0"), F.col("b1"), F.expr(f"interval {step} seconds"))
-            ).alias("bucket_start"),
-        )
-    days = bounds.select(
-        "conv_id",
-        "b0",
-        "b1",
-        F.explode(
-            F.sequence(
-                F.date_trunc("day", F.col("b0")),
-                F.date_trunc("day", F.col("b1")),
-                F.expr("interval 1 day"),
-            )
-        ).alias("day"),
-    )
-    # the day table is still small (rows = conv-days, pre-explode) but the
-    # sequence below fans each row out ×1440 (1m) — spread (conv, day)
-    # across tasks FIRST so a hot conversation doesn't pin one task
-    days = days.repartition("conv_id", "day")
-    day_end = F.col("day") + F.expr("interval 1 day") - F.expr(f"interval {step} seconds")
-    return days.select(
-        "conv_id",
-        F.explode(
-            F.sequence(
-                F.greatest(F.col("b0"), F.col("day")),
-                F.least(F.col("b1"), day_end),
-                F.expr(f"interval {step} seconds"),
-            )
-        ).alias("bucket_start"),
-    )
-
-
-def densify(rollup: DataFrame, tier: str = "1m") -> DataFrame:
-    """Left-join the rollup onto its dense spine; missing buckets appear as
-    all-null feature rows with ``gap_filled`` candidate flag."""
-    spine = bucket_spine(rollup, tier)
-    joined = spine.join(rollup, ["conv_id", "bucket_start"], "left")
-    return joined.withColumn("is_gap", F.col("turn_cnt").isNull())
-
-
-def interpolate(
-    df: DataFrame,
-    cols: list[str],
-    limit: int = 1,
-    partition_cols: tuple[str, ...] = ("conv_id",),
-    order_col: str = "bucket_start",
-    with_locf: bool = False,
-) -> DataFrame:
-    """pandas-parity linear interpolation over a dense grid (see module
-    docstring).  Adds ``<col>_filled`` per input col plus ``gap_filled``.
-
-    ``with_locf=True`` additionally emits ``<col>_locf`` from the SAME
-    forward window pass (coalesce(col, prev-non-null) ≡ the standalone
-    ``locf``) — fusing it here saves a third full per-partition sort at
-    scale (forward, reverse, and the separate locf window each cost one).
-    """
-    ord_w = Window.partitionBy(*partition_cols).orderBy(order_col)
-    df = df.withColumn("_pos", F.row_number().over(ord_w))
-    # CRUCIAL at scale: both look-around frames must be *growing*
-    # frames (unboundedPreceding..-1), which Spark evaluates
-    # incrementally in O(n).  A (1, unboundedFollowing) frame is
-    # re-aggregated per row — O(n²) — and hangs on month-long spines;
-    # the "next non-null" leg is therefore a growing frame over the
-    # REVERSED ordering.
-    w_prev = ord_w.rowsBetween(Window.unboundedPreceding, -1)
-    w_next = (
-        Window.partitionBy(*partition_cols)
-        .orderBy(F.desc(order_col))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-
-    any_filled = F.lit(False)
-    for c in cols:
-        pos_nn = F.when(F.col(c).isNotNull(), F.col("_pos"))
-        val_prev = F.last(F.col(c), ignorenulls=True).over(w_prev)
-        pos_prev = F.last(pos_nn, ignorenulls=True).over(w_prev)
-        val_next = F.last(F.col(c), ignorenulls=True).over(w_next)
-        pos_next = F.last(pos_nn, ignorenulls=True).over(w_next)
-        d_prev = F.col("_pos") - pos_prev
-        d_next = pos_next - F.col("_pos")
-        interp = F.when(
-            val_prev.isNotNull() & val_next.isNotNull(),
-            val_prev + (val_next - val_prev) * d_prev / (d_next + d_prev),
-        ).when(val_prev.isNotNull(), val_prev).otherwise(val_next)
-        in_limit = (
-            (pos_prev.isNotNull() & (d_prev <= limit))
-            | (pos_next.isNotNull() & (d_next <= limit))
-        )
-        filled = F.when(F.col(c).isNotNull(), F.col(c)).when(in_limit, interp)
-        df = df.withColumn(f"{c}_filled", filled)
-        if with_locf:
-            df = df.withColumn(f"{c}_locf", F.coalesce(F.col(c), val_prev))
-        any_filled = any_filled | (F.col(c).isNull() & filled.isNotNull())
-    return df.withColumn("gap_filled", any_filled).drop("_pos")
+from more_pattern_extraction_spark.operators.rollup import tier_seconds
 
 
 def interpolate_runs(
@@ -161,41 +41,49 @@ def interpolate_runs(
     tier: str = "1m",
     cols: list[str] | tuple[str, ...] = ("latency_avg",),
     limit: int = 1,
-    with_locf: bool = True,
 ) -> DataFrame:
-    """Densify + interpolate for a step-regular grid WITHOUT any window
-    over the dense grid — bit-identical to ``densify`` → count-coalesce →
-    ``interpolate`` (equality property-tested in tests/test_gapfill.py).
+    """Expand a step-regular tier to its dense grid and fill ``cols``
+    (``<c>_filled`` by interpolation, ``<c>_locf`` by LOCF, plus
+    ``is_gap`` and ``gap_filled``) WITHOUT any window over the dense
+    grid.  Counts (``turn_cnt``, ``tool_call_cnt``) of generated rows are
+    0; the other columns are NULL there.
 
     Physics: every fill decision (nearest non-null anchors, row-distance
     limits) is a function of the SPARSE rollup rows only — on a regular
     grid the dense row-position differences collapse to
-    ``(t − anchor_t)/step``.  So
-    the anchors are computed with two window sorts over the sparse rows
-    (one asc, one desc — |rollup| rows, not |grid|), and the dense grid is
-    then GENERATED: each sparse row owns the half-open run up to the next
-    sparse row and explodes it (day-split so no array exceeds one day of
-    buckets, and repartitioned by (conv, day) so a hot conversation's
-    spine spreads across tasks).  The generic chain instead left-joins
-    the spine and runs three window passes (row_number + forward + reverse
-    anchor scans) over the EXPLODED grid — ~370× more window-sorted rows
-    at 1m granularity with 0.27 % bucket occupancy (sf0.1 shape).
+    ``(t − anchor_t)/step``.  So the anchors are computed with two window
+    sorts over the sparse rows (one asc, one desc — |rollup| rows, not
+    |grid|), and the dense grid is then GENERATED: each sparse row owns
+    the half-open run up to the next sparse row and explodes it
+    (day-split so no array exceeds one day of buckets, and repartitioned
+    by (conv, day) so a hot conversation's grid spreads across tasks).
+    Window passes over the exploded grid would sort ~370× more rows at
+    1m granularity with 0.27 % bucket occupancy (sf0.1 shape).
 
     Anchor equivalence: dense-grid "last non-null strictly before p" hits
     non-null values only at sparse positions, so for an observed row it is
     the sparse-exclusive carry and for a generated gap row it is the
     owning sparse row's inclusive carry; symmetrically the "next" anchor
-    of every row in run(r) is the first non-null strictly after r.  The
-    interpolation arithmetic keeps the plain path's exact bit pattern:
-    distances are exact small integers as doubles, numerator/denominator
-    association unchanged.
+    of every row in run(r) is the first non-null strictly after r.
+    Distances are exact small integers as doubles.  A row with a NULL
+    ``bucket_start`` has no place on the grid: it generates no row and
+    anchors nothing.
     """
-    step = _SECONDS[tier]
+    step = tier_seconds(tier)
+    if 86400 % step:
+        raise ValueError(
+            f"gap-fill tier {tier!r}: {step}s does not divide a day, so the "
+            "per-day runs would not meet on one bucket grid"
+        )
     oc = "bucket_start"
     cols = list(cols)
     w_fwd = Window.partitionBy("conv_id").orderBy(oc)
     w_prev_excl = w_fwd.rowsBetween(Window.unboundedPreceding, -1)
     w_prev_incl = w_fwd.rowsBetween(Window.unboundedPreceding, 0)
+    # every look-around frame is a GROWING frame, which Spark evaluates
+    # incrementally in O(n); a (1, unboundedFollowing) frame is
+    # re-aggregated per row, O(n²), so the "next non-null" leg grows
+    # over the REVERSED order
     w_next_excl = (
         Window.partitionBy("conv_id")
         .orderBy(F.desc(oc))
@@ -205,7 +93,7 @@ def interpolate_runs(
     sp = rollup
     for c in cols:
         nn = F.when(
-            F.col(c).isNotNull(),
+            F.col(c).isNotNull() & F.col(oc).isNotNull(),
             F.struct(F.col(oc).alias("t"), F.col(c).alias("v")),
         )
         sp = (
@@ -228,8 +116,7 @@ def interpolate_runs(
         ),
     )
     # a hot conversation's long runs spread across (conv, day) tasks
-    # BEFORE the ×(day/step) position fan-out — same rationale as
-    # bucket_spine
+    # BEFORE the ×(day/step) position fan-out
     days = days.repartition("conv_id", "_day")
     day_end = (
         F.col("_day") + F.expr("interval 1 day") - F.expr(f"interval {step} seconds")
@@ -275,33 +162,13 @@ def interpolate_runs(
         val = F.when(is_first, F.col(c))
         filled = F.when(val.isNotNull(), val).when(in_limit, interp)
         fill_cols.append(filled.alias(f"{c}_filled"))
-        if with_locf:
-            fill_cols.append(F.coalesce(val, vp).alias(f"{c}_locf"))
+        fill_cols.append(F.coalesce(val, vp).alias(f"{c}_locf"))
         any_filled = any_filled | (val.isNull() & filled.isNotNull())
     return g.select(*out_cols, *fill_cols, any_filled.alias("gap_filled"))
 
 
-def locf(
-    df: DataFrame,
-    cols: list[str],
-    partition_cols: tuple[str, ...] = ("conv_id",),
-    order_col: str = "bucket_start",
-) -> DataFrame:
-    """Last-observation-carried-forward: ``last(col, ignorenulls) over
-    (unboundedPreceding, 0)`` (reference fillna/LOCF masks,
-    ``modules/learning.py:450``)."""
-    w = (
-        Window.partitionBy(*partition_cols)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    for c in cols:
-        df = df.withColumn(f"{c}_locf", F.last(F.col(c), ignorenulls=True).over(w))
-    return df
-
-
 def gap_fill_rollup(rollup: DataFrame, tier: str = "1m", limit: int = 1) -> DataFrame:
-    """End-to-end: densify → counts default 0 → LOCF + linear interp on
+    """End-to-end: dense grid → counts default 0 → LOCF + linear interp on
     latency features (the §7.1 slice), as one ``interpolate_runs`` plan.
 
     Skew-safe without a gate: a conversation's window sorts cover only
@@ -312,5 +179,4 @@ def gap_fill_rollup(rollup: DataFrame, tier: str = "1m", limit: int = 1) -> Data
     runs until the result is consumed, and the plan reads its input once,
     so nothing is cached.
     """
-    return interpolate_runs(rollup, tier, ["latency_avg"], limit=limit,
-                            with_locf=True)
+    return interpolate_runs(rollup, tier, ["latency_avg"], limit=limit)

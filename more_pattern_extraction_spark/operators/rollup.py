@@ -43,8 +43,8 @@ _UNIT_SECONDS = {"s": 1, "m": 60, "h": 3600, "d": 86400}
 def tier_seconds(tier: str) -> int:
     """Width of a tier string in seconds — ``"5m"`` → 300, ``"1h"`` → 3600."""
     n, unit = tier[:-1], tier[-1:]
-    if not n.isdigit() or unit not in _UNIT_SECONDS:
-        raise ValueError(f"bad tier {tier!r}: expected <N><s|m|h|d>")
+    if not n.isdigit() or int(n) == 0 or unit not in _UNIT_SECONDS:
+        raise ValueError(f"bad tier {tier!r}: expected <N><s|m|h|d>, N > 0")
     return int(n) * _UNIT_SECONDS[unit]
 
 

@@ -277,20 +277,22 @@ def rollup_p95_cascade(spark, sf_dir):
 
 
 def _kmv_frame(spark, sf_dir, tiers: list[str], k: int):
-    """Finest-tier KMV sketches from raw events, cascaded up ``tiers``."""
+    """1m KMV sketches built from the engine's 1m tier rows
+    (``kmv_from_rollup``, the builder of the ``distinct_1m`` stage),
+    cascaded up ``tiers``."""
     from more_pattern_extraction_spark.operators import distinct as DK
 
-    kmv = DK.kmv_from_raw(_events(spark, sf_dir), tiers[0], k, conv_col="user_id")
+    kmv = DK.kmv_from_rollup(_tier_rows(spark, sf_dir, "1m"), k)
     for frm, to in zip(tiers, tiers[1:]):
         kmv = DK.kmv_cascade(kmv, to, k, from_tier=frm)
     return kmv
 
 
 def _kmv_query(spark, sf_dir, tiers: list[str], k: int):
-    """Shared body for the KMV distinct queries: finest-tier sketches from
-    raw events, cascaded up ``tiers``, estimate attached.  The oracle
-    builds the sketch DIRECTLY at the final tier, so the driver's value
-    hash verifies the KMV merge identity on real data."""
+    """Shared body for the KMV distinct queries: ``_kmv_frame`` sketches,
+    estimate attached.  The oracle builds the sketch DIRECTLY at the final
+    tier, so the driver's value hash verifies the KMV merge identity on
+    real data."""
     from more_pattern_extraction_spark.operators import distinct as DK
 
     kmv = _kmv_frame(spark, sf_dir, tiers, k)
@@ -308,8 +310,8 @@ def _kmv_query(spark, sf_dir, tiers: list[str], k: int):
 @register("distinct_convs_kmv_1h")  # oracle: plans/oracles.kmv_distinct_sql (below)
 def distinct_convs_kmv_1h(spark, sf_dir):
     """Mergeable distinct-conversation sketch (KMV, operators/distinct.py):
-    1m sketches from raw, MERGED to 1h (no raw rescan — the continuous-
-    aggregate path), unbiased (k-1)/u_k estimate.  k=16 < the sf0.01
+    1m sketches from the 1m tier, MERGED to 1h (no raw rescan — the
+    continuous-aggregate path), unbiased (k-1)/u_k estimate.  k=16 < the sf0.01
     per-hour cardinality ceiling (28), so the estimator branch is
     exercised, not just the exact-below-k one.  Reference analogue: none
     (single-node pandas nunique); sibling contract to rollup_p95_cascade."""
@@ -368,10 +370,7 @@ def distinct_convs_kmv_24h(spark, sf_dir):
     from more_pattern_extraction_spark.operators import distinct as DK
 
     k = 16
-    kmv1h = DK.kmv_cascade(
-        DK.kmv_from_raw(_events(spark, sf_dir), "1m", k, conv_col="user_id"),
-        "1h", k, from_tier="1m",
-    )
+    kmv1h = _kmv_frame(spark, sf_dir, ["1m", "1h"], k)
     out = DK.kmv_estimate(DK.kmv_sliding(kmv1h, 24, 3600, k), k)
     return out.select(
         "bucket_start",
@@ -945,7 +944,7 @@ def summary_stats(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Gap-fill (LOCF) with a dense spine — SQL-oracled end-to-end
+# Gap-fill (LOCF) on the dense grid — SQL-oracled end-to-end
 # ---------------------------------------------------------------------------
 
 
@@ -976,22 +975,30 @@ def summary_stats(spark, sf_dir):
     """,
 )
 def gapfill_locf_1m(spark, sf_dir):
-    """End-to-end spine-densify + LOCF on one day of 1m rollups, using the
-    engine's gapfill operators — oracled in full SQL (reference
-    chunk_interpolate LOCF leg, preprocessing.py:185-208)."""
+    """End-to-end dense grid + LOCF on one day of 1m rollups through the
+    engine's tier gap-fill (``gapfill.gap_fill_rollup``) — oracled in full
+    SQL (reference chunk_interpolate LOCF leg, preprocessing.py:185-208)."""
+    return _gap_filled(spark, sf_dir, limit=1).select(
+        "conv_key", "bucket_start", "is_gap",
+        F.col("latency_avg_locf").alias("latency_locf"),
+    )
+
+
+def _gap_filled(spark, sf_dir, limit: int) -> DataFrame:
+    """``gap_fill_rollup`` over day 1 of the 1m tier rows, latency rounded
+    first as in the oracle; ``is_gap`` is the oracle's ``latency_avg IS
+    NULL``, which also holds on observed rows without a latency."""
     from more_pattern_extraction_spark.operators import gapfill as G
 
     r = _tier_rows(spark, sf_dir, ts_before="2024-01-02").select(
         "conv_id", "bucket_start", F.round("latency_avg", 6).alias("latency_avg")
     )
-    dense = G.bucket_spine(r, "1m").join(r, ["conv_id", "bucket_start"], "left")
-    dense = dense.withColumn("is_gap", F.col("latency_avg").isNull())
-    out = G.locf(dense, ["latency_avg"])
-    return out.select(
+    return G.gap_fill_rollup(r, "1m", limit=limit).select(
         F.col("conv_id").alias("conv_key"),
         "bucket_start",
-        "is_gap",
-        F.col("latency_avg_locf").alias("latency_locf"),
+        F.col("latency_avg").isNull().alias("is_gap"),
+        "latency_avg_locf",
+        "latency_avg_filled",
     )
 
 
@@ -2401,22 +2408,12 @@ def quantile_event_scores_q(spark, sf_dir):
     """,
 )
 def gapfill_interp_1m(spark, sf_dir):
-    """Spine-densify + pandas-parity LINEAR interpolation (limit 2) on one
-    day of 1m rollups — the second gap-fill leg of the north rule (LOCF is
-    gapfill_locf_1m), oracled end-to-end in SQL (reference
-    chunk_interpolate, preprocessing.py:185-208)."""
-    from more_pattern_extraction_spark.operators import gapfill as G
-
-    r = _tier_rows(spark, sf_dir, ts_before="2024-01-02").select(
-        "conv_id", "bucket_start", F.round("latency_avg", 6).alias("latency_avg")
-    )
-    dense = G.bucket_spine(r, "1m").join(r, ["conv_id", "bucket_start"], "left")
-    dense = dense.withColumn("is_gap", F.col("latency_avg").isNull())
-    out = G.interpolate(dense, ["latency_avg"], limit=2)
-    return out.select(
-        F.col("conv_id").alias("conv_key"),
-        "bucket_start",
-        "is_gap",
+    """Dense grid + pandas-parity LINEAR interpolation (limit 2) on one day
+    of 1m rollups through ``gap_fill_rollup`` — the second gap-fill leg of
+    the north rule (LOCF is gapfill_locf_1m), oracled end-to-end in SQL
+    (reference chunk_interpolate, preprocessing.py:185-208)."""
+    return _gap_filled(spark, sf_dir, limit=2).select(
+        "conv_key", "bucket_start", "is_gap",
         F.round("latency_avg_filled", 6).alias("latency_interp"),
     )
 

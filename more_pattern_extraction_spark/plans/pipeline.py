@@ -52,9 +52,11 @@ def run_pipeline(
     # one collect of the tiny unit list, each unit with its turn count,
     # from the raw turns (turn_features neither adds nor drops a row, and
     # its gate probe is a job a no-op resume need not run); the
-    # checkpoints are subtracted on the driver
+    # checkpoints are subtracted on the driver.  A turn with a NULL ts
+    # has no ts_day, so it belongs to no unit and no stage writes it
     rows = (
         CAT.with_layout_cols(turns, n_buckets)  # conv_bucket, ts_day
+        .filter(F.col("ts_day").isNotNull())
         .groupBy("conv_bucket", "ts_day")
         .agg(F.count(F.lit(1)).alias("turns"))
         .collect()

@@ -1,77 +1,81 @@
 """Gap-fill parity vs pandas interpolate(method='linear', limit=k,
-limit_direction='both') — the reference's chunk_interpolate semantics
-(modules/preprocessing.py:185-208)."""
+limit_direction='both') and ffill — the reference's chunk_interpolate
+semantics (modules/preprocessing.py:185-208) — on ``gap_fill_rollup``,
+the engine's one gap-fill path."""
+
+import datetime as dt
 
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from more_pattern_extraction_spark.operators import gapfill as G
 from more_pattern_extraction_spark.operators import rollup as R
+
+_SPARSE = T.StructType([
+    T.StructField("conv_id", T.StringType()),
+    T.StructField("bucket_start", T.TimestampType()),
+    T.StructField("latency_avg", T.DoubleType()),
+])
+
+
+def _minutes(spark, rows):
+    """A sparse ``(conv_id, bucket_start, latency_avg)`` rollup from
+    ``(conv_id, minute offset from 2024-01-01, value)`` rows."""
+    t0 = dt.datetime(2024, 1, 1)
+    return spark.createDataFrame(
+        [(c, None if k is None else t0 + dt.timedelta(minutes=k), v) for c, k, v in rows],
+        _SPARSE,
+    )
+
+
+def _filled(df, col, limit=1):
+    """``col`` of ``gap_fill_rollup``, per conversation in grid order."""
+    got = G.gap_fill_rollup(df, "1m", limit=limit).orderBy("conv_id", "bucket_start").toPandas()
+    return {c: g[col].values.astype(float) for c, g in got.groupby("conv_id")}
+
+
+def _pandas_interp(vals, limit):
+    return (
+        pd.Series(vals, dtype="float64")
+        .interpolate(method="linear", limit=limit, limit_direction="both")
+        .values
+    )
 
 
 @pytest.mark.parametrize("limit", [1, 2])
 def test_interpolate_matches_pandas(spark, limit):
     vals = [1.0, None, None, None, 5.0, None, 7.0, None, None,
             None, None, 3.0, None, 5.0, 2.0, None]
-    pdf = pd.DataFrame(
-        {
-            "conv_id": ["c1"] * len(vals),
-            "bucket_start": pd.date_range("2024-01-01", periods=len(vals), freq="1min"),
-            "x": vals,
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    got = (
-        G.interpolate(df, ["x"], limit=limit)
-        .orderBy("bucket_start")
-        .toPandas()["x_filled"]
-        .values
-    )
-    exp = (
-        pd.Series(vals, dtype="float64")
-        .interpolate(method="linear", limit=limit, limit_direction="both")
-        .values
-    )
-    np.testing.assert_allclose(got.astype(float), exp, equal_nan=True)
+    # NULL-latency rows at even offsets and at the grid's last bucket,
+    # missing buckets at the other odd ones: both fill alike
+    rows = [("c1", k, v) for k, v in enumerate(vals)
+            if v is not None or k % 2 == 0 or k == len(vals) - 1]
+    got = _filled(_minutes(spark, rows), "latency_avg_filled", limit)["c1"]
+    np.testing.assert_allclose(got, _pandas_interp(vals, limit), equal_nan=True)
 
 
 def test_interpolate_multi_conv_leading_trailing(spark):
-    pdf = pd.DataFrame(
-        {
-            "conv_id": ["a"] * 5 + ["b"] * 4,
-            "bucket_start": list(pd.date_range("2024-01-01", periods=5, freq="1min"))
-            + list(pd.date_range("2024-01-01", periods=4, freq="1min")),
-            "x": [None, None, 3.0, None, None, 1.0, None, None, 4.0],
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    got = (
-        G.interpolate(df, ["x"], limit=1)
-        .orderBy("conv_id", "bucket_start")
-        .toPandas()
-    )
-    for cid in ["a", "b"]:
-        sub = got[got.conv_id == cid]["x_filled"].values.astype(float)
-        exp = (
-            pdf[pdf.conv_id == cid]["x"]
-            .astype("float64")
-            .interpolate(method="linear", limit=1, limit_direction="both")
-            .values
-        )
-        np.testing.assert_allclose(sub, exp, equal_nan=True)
+    series = {"a": [None, None, 3.0, None, None], "b": [1.0, None, None, 4.0]}
+    rows = [
+        (c, k, v) for c, vals in series.items() for k, v in enumerate(vals)
+        if v is not None or k in (0, len(vals) - 1)
+    ]
+    got = _filled(_minutes(spark, rows), "latency_avg_filled")
+    for cid, vals in series.items():
+        np.testing.assert_allclose(got[cid], _pandas_interp(vals, 1), equal_nan=True)
 
 
 def test_densify_creates_missing_buckets(spark, transcripts):
     r1m = R.rollup_from_raw(R.turn_features(transcripts), "1m")
-    dense = G.densify(r1m, "1m")
+    dense = G.gap_fill_rollup(r1m, "1m")
     n_rollup = r1m.count()
     n_dense = dense.count()
     assert n_dense > n_rollup  # generator guarantees missing buckets
     assert dense.filter("is_gap").count() == n_dense - n_rollup
-    # spine is truly dense: per conv, count == (max-min)/60 + 1
-    import pyspark.sql.functions as F
-
+    # the grid is truly dense: per conv, count == (max-min)/60 + 1
     chk = dense.groupBy("conv_id").agg(
         F.count("*").alias("n"),
         ((F.max("bucket_start").cast("long") - F.min("bucket_start").cast("long")) / 60 + 1).alias("expected"),
@@ -80,20 +84,24 @@ def test_densify_creates_missing_buckets(spark, transcripts):
 
 
 def test_locf(spark):
-    pdf = pd.DataFrame(
-        {
-            "conv_id": ["c"] * 5,
-            "bucket_start": pd.date_range("2024-01-01", periods=5, freq="1min"),
-            "x": [None, 2.0, None, None, 5.0],
-        }
-    )
-    got = (
-        G.locf(spark.createDataFrame(pdf), ["x"])
-        .orderBy("bucket_start")
-        .toPandas()["x_locf"]
-        .values.astype(float)
-    )
+    # a NULL-latency row, two missing buckets, then a value
+    df = _minutes(spark, [("c", 0, None), ("c", 1, 2.0), ("c", 4, 5.0)])
+    got = _filled(df, "latency_avg_locf")["c"]
     np.testing.assert_allclose(got, [np.nan, 2.0, 2.0, 2.0, 5.0], equal_nan=True)
+
+
+def test_null_bucket_start_is_no_anchor(spark):
+    """A row with a NULL ``bucket_start`` sorts first in its conversation;
+    it must not become the LOCF or interpolation anchor of the buckets
+    after it (pandas drops it: it has no place on the grid)."""
+    df = _minutes(spark, [("c", None, 9.0), ("c", 0, None), ("c", 3, 4.0)])
+    got = G.gap_fill_rollup(df, "1m", limit=1).orderBy("bucket_start").toPandas()
+    exp = pd.Series([np.nan, np.nan, np.nan, 4.0])
+    assert list(got.bucket_start) == list(pd.date_range("2024-01-01", periods=4, freq="1min"))
+    np.testing.assert_allclose(got.latency_avg_locf.values.astype(float), exp.ffill().values,
+                               equal_nan=True)
+    np.testing.assert_allclose(got.latency_avg_filled.values.astype(float),
+                               _pandas_interp(exp.tolist(), 1), equal_nan=True)
 
 
 def test_gap_fill_monotone(spark, transcripts):
@@ -105,36 +113,30 @@ def test_gap_fill_monotone(spark, transcripts):
     once = G.gap_fill_rollup(r1m, "1m").select(
         "conv_id", "bucket_start", "latency_avg_filled"
     )
-    again = G.interpolate(
-        once.withColumnRenamed("latency_avg_filled", "latency_avg"), ["latency_avg"], 1
+    again = G.gap_fill_rollup(
+        once.withColumnRenamed("latency_avg_filled", "latency_avg"), "1m"
     ).select("conv_id", "bucket_start", "latency_avg_filled")
     a = once.orderBy("conv_id", "bucket_start").toPandas()["latency_avg_filled"].values.astype(float)
     b = again.orderBy("conv_id", "bucket_start").toPandas()["latency_avg_filled"].values.astype(float)
+    assert len(a) == len(b)  # the grid is already dense
     mask = ~np.isnan(a)
     np.testing.assert_allclose(a[mask], b[mask])
     assert (~np.isnan(b)).sum() >= mask.sum()
 
 
-def test_bucket_spine_day_split_equals_full_sequence(spark):
-    """The per-(conv, day) bounded sequences must union to EXACTLY the
+def test_gap_fill_day_split_equals_full_sequence(spark):
+    """The per-(run, day) bounded sequences must union to EXACTLY the
     single full-range minute grid — including partial first/last days and
     a conversation contained in one day."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from more_pattern_extraction_spark.operators import gapfill as G
-
     rows = [
         # c1: 3-day span, starts/ends off-midnight
-        {"conv_id": "c1", "bucket_start": pd.Timestamp("2024-01-01 07:33"), "v": 1.0},
-        {"conv_id": "c1", "bucket_start": pd.Timestamp("2024-01-03 18:05"), "v": 2.0},
+        ("c1", dt.datetime(2024, 1, 1, 7, 33), 1.0),
+        ("c1", dt.datetime(2024, 1, 3, 18, 5), 2.0),
         # c2: single-day, single-bucket
-        {"conv_id": "c2", "bucket_start": pd.Timestamp("2024-02-10 12:00"), "v": 3.0},
+        ("c2", dt.datetime(2024, 2, 10, 12, 0), 3.0),
     ]
-    r = spark.createDataFrame(pd.DataFrame(rows))
-    got = G.bucket_spine(r, "1m").toPandas().sort_values(
-        ["conv_id", "bucket_start"]
-    ).reset_index(drop=True)
+    got = G.gap_fill_rollup(spark.createDataFrame(rows, _SPARSE), "1m").toPandas()
+    got = got.sort_values(["conv_id", "bucket_start"])
     c1 = got[got.conv_id == "c1"].bucket_start
     exp = pd.date_range("2024-01-01 07:33", "2024-01-03 18:05", freq="1min")
     assert list(c1) == list(exp)
@@ -142,15 +144,20 @@ def test_bucket_spine_day_split_equals_full_sequence(spark):
     assert list(c2) == [pd.Timestamp("2024-02-10 12:00")]
 
 
+def test_gap_fill_rejects_width_off_the_day_grid(spark):
+    """The day-split explode needs midnight on the bucket grid: a width
+    that does not divide a day raises rather than shifting the grid."""
+    df = _minutes(spark, [("c", 0, 1.0)])
+    with pytest.raises(ValueError, match="divide a day"):
+        G.gap_fill_rollup(df, "7m")
+    assert G.gap_fill_rollup(df, "5m").count() == 1
+
+
 def _sparse_rollup(spark, tier):
     """Random sparse rollup in ``rollup_from_raw``'s schema, over shapes
     that stress run generation: values days apart (multi-day runs), whole
     days of NULL latency, leading and trailing NULLs, single-row
     conversations, and a ~3 %-occupied grid."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
     step = {"1m": 60, "1h": 3600}[tier]
     rng = np.random.default_rng(11 if tier == "1m" else 12)
     t0 = dt.datetime(2024, 3, 30, 17, 0) if tier == "1m" else dt.datetime(2024, 3, 30)
@@ -202,37 +209,79 @@ def _sparse_rollup(spark, tier):
     return spark.createDataFrame(rows, schema)
 
 
+def _pandas_gap_fill(pdf, step, limit):
+    """The reference chain, per conversation: reindex to the full step
+    grid, then pandas ``interpolate(limit=limit, limit_direction="both")``
+    and ``ffill``."""
+    out = []
+    for cid, g in pdf.groupby("conv_id", sort=True):
+        g = g.set_index("bucket_start").sort_index()
+        d = g.reindex(pd.date_range(g.index[0], g.index[-1], freq=f"{step}s"))
+        d = d.rename_axis("bucket_start").reset_index()
+        d["conv_id"] = cid
+        d["is_gap"] = ~d.bucket_start.isin(g.index)
+        d[["turn_cnt", "tool_call_cnt"]] = d[["turn_cnt", "tool_call_cnt"]].fillna(0)
+        lat = d["latency_avg"].astype("float64")
+        d["latency_avg_filled"] = lat.interpolate(limit=limit, limit_direction="both")
+        d["latency_avg_locf"] = lat.ffill()
+        d["gap_filled"] = lat.isna() & d["latency_avg_filled"].notna()
+        out.append(d)
+    return pd.concat(out, ignore_index=True)
+
+
+# gap_fill_rollup's output schema over a rollup_from_raw-shaped input.
+# is_gap comes from a comparison, which Spark marks nullable; the stored
+# rollup_1m_filled column keeps that nullability.
+_FILLED_SCHEMA = [
+    ("conv_id", "string", True),
+    ("bucket_start", "timestamp", False),
+    ("turn_cnt", "bigint", False),
+    ("tool_call_cnt", "bigint", False),
+    ("latency_sum", "double", True),
+    ("latency_cnt", "bigint", True),
+    ("latency_min", "double", True),
+    ("latency_max", "double", True),
+    ("latency_p95", "double", True),
+    ("latency_avg", "double", True),
+    ("tier", "string", True),
+    ("is_gap", "boolean", True),
+    ("latency_avg_filled", "double", True),
+    ("latency_avg_locf", "double", True),
+    ("gap_filled", "boolean", False),
+]
+
+
 @pytest.mark.parametrize("tier", ["1m", "1h"])
 def test_gap_fill_rollup_equals_reference_chain(spark, tier):
-    """``gap_fill_rollup`` (run generation) is bit-identical to the
-    reference chain densify → counts coalesced to 0 →
-    ``interpolate(with_locf=True)``: same columns and types, same rows,
-    same values, for small limits and one larger than any grid."""
-    from pyspark.sql import functions as F
-
+    """``gap_fill_rollup`` equals the pandas reference chain
+    (``_pandas_gap_fill``) for small limits and one larger than any grid:
+    exact rows, counts, ``is_gap``/``gap_filled`` and NaN masks; fills
+    within ``rtol=1e-12``, plus 1e-12 of the largest value near a zero
+    crossing (pandas interpolates through ``np.interp``)."""
     r = _sparse_rollup(spark, tier)
-    grid = G.densify(r, tier).groupBy("conv_id").count().agg(F.max("count")).first()[0]
-    ref_dense = (
-        G.densify(r, tier)
-        .withColumn("turn_cnt", F.coalesce("turn_cnt", F.lit(0)))
-        .withColumn("tool_call_cnt", F.coalesce("tool_call_cnt", F.lit(0)))
-    )
-
-    def rows(df):
-        return sorted(df.collect(), key=lambda x: (x.conv_id, x.bucket_start))
-
+    step = R.tier_seconds(tier)
+    src = r.toPandas()
+    grid = int(_pandas_gap_fill(src, step, 1).groupby("conv_id").size().max())
+    # an interpolant's rounding scales with its anchors, not with itself:
+    # near a zero crossing a 1e-15 difference is a large relative one
+    atol = 1e-12 * np.nanmax(np.abs(src.latency_avg.astype(float)))
     for limit in (1, 2, 7, grid + 1):
-        got = G.gap_fill_rollup(r, tier, limit=limit)
-        ref = G.interpolate(ref_dense, ["latency_avg"], limit=limit, with_locf=True)
-        # names, types and order match; so does nullability, except that
-        # run generation derives is_gap from a comparison Spark marks
-        # nullable, where densify's isNull() is not.  Aligning it would
-        # turn the stored rollup_1m_filled column from optional to
-        # required and change every file's bytes, so it is left as is.
-        assert [(f.name, f.dataType) for f in got.schema] == [
-            (f.name, f.dataType) for f in ref.schema]
-        assert [f.nullable for f in got.schema if f.name != "is_gap"] == [
-            f.nullable for f in ref.schema if f.name != "is_gap"]
-        got_rows, ref_rows = rows(got), rows(ref)
-        assert len(got_rows) == len(ref_rows)
-        assert got_rows == ref_rows, limit
+        got_df = G.gap_fill_rollup(r, tier, limit=limit)
+        assert [(f.name, f.dataType.simpleString(), f.nullable)
+                for f in got_df.schema] == _FILLED_SCHEMA
+        got = got_df.toPandas().sort_values(["conv_id", "bucket_start"]).reset_index(drop=True)
+        exp = _pandas_gap_fill(src, step, limit)
+        assert len(got) == len(exp), limit
+        assert list(got.conv_id) == list(exp.conv_id)
+        assert list(got.bucket_start) == list(exp.bucket_start)
+        for c in ("is_gap", "gap_filled"):
+            assert list(got[c]) == list(exp[c]), (limit, c)
+        assert list(got.tier.fillna("")) == list(exp.tier.fillna(""))
+        for c in ("turn_cnt", "tool_call_cnt", "latency_sum", "latency_cnt",
+                  "latency_min", "latency_max", "latency_p95", "latency_avg"):
+            np.testing.assert_array_equal(got[c].astype(float), exp[c].astype(float), err_msg=c)
+        for c in ("latency_avg_filled", "latency_avg_locf"):
+            a, b = got[c].values.astype(float), exp[c].values.astype(float)
+            assert (np.isnan(a) == np.isnan(b)).all(), (limit, c)
+            np.testing.assert_allclose(a, b, rtol=1e-12, atol=atol, equal_nan=True,
+                                       err_msg=f"{limit} {c}")

@@ -136,6 +136,29 @@ def test_retention(spark, transcripts, out):
     assert r1m.count() > 0
 
 
+def test_null_ts_turn_belongs_to_no_unit(spark, transcripts, out, tmp_path):
+    """A turn with a NULL ``ts`` has no ``ts_day``, so it belongs to no
+    unit: ingest and a no-op resume run, and every tier table equals a run
+    over the features with that turn filtered out after ``turn_features``
+    (the next turn keeps its NULL latency)."""
+    from more_pattern_extraction_spark.operators import rollup as R
+
+    hole = (F.col("conv_id") == "conv_00003") & (F.col("turn_idx") == 5)
+    turns = transcripts.withColumn(
+        "ts", F.when(hole, F.lit(None).cast("timestamp")).otherwise(F.col("ts"))
+    )
+    assert turns.filter(F.col("ts").isNull()).count() == 1
+    m1 = run_pipeline(spark, turns, out, input_snapshot="snapN", n_buckets=8)
+    m2 = run_pipeline(spark, turns, out, input_snapshot="snapN", n_buckets=8)
+    assert m1["units_done"] > 0 and m2["units_done"] == 0
+
+    ref = str(tmp_path / "ref")
+    feats = R.turn_features(turns).filter(F.col("ts").isNotNull())
+    run_pipeline(spark, feats, ref, input_snapshot="snapN", n_buckets=8, latency_col="latency")
+    for t in TABLES:
+        assert _table_digest(spark, out, t) == _table_digest(spark, ref, t), t
+
+
 def test_pattern_stage_tables(spark, transcripts, out):
     """The optional pattern stage persists MP / discord / regime tables
     derived from the gap-filled grid (north star: pattern extraction as

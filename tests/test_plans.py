@@ -122,8 +122,7 @@ def test_gapfill_dense_grid_generated_once(spark, events):
     once, after every window.  The windows sort only the sparse rollup
     rows; a window above the grid Generate would sort the dense grid
     (one task per conversation, the skew hazard), and a second grid
-    Generate would compute the densify pipeline twice.  PLANS.md
-    §Gap-fill."""
+    Generate would build the grid twice.  PLANS.md §Gap-fill."""
     from more_pattern_extraction_spark.operators import gapfill as G
 
     r1m = events.groupBy(
@@ -245,7 +244,8 @@ def test_repair_scoped_scan_partition_prunes(spark, transcripts, tmp_path):
 ENGINE_QUERIES = [
     "rollup_1m", "rollup_1h_cascade", "rollup_1d_cascade", "rollup_5m_cascade",
     "rollup_retention", "gapfill_locf_1m", "gapfill_interp_1m", "chunk_roundtrip",
-    "score_metrics",
+    "score_metrics", "distinct_convs_kmv_1h", "distinct_convs_kmv_1d",
+    "distinct_convs_kmv_24h", "distinct_convs_kmv_churn",
 ]
 
 

@@ -197,3 +197,18 @@ def test_auto_seg_gate_picks_plan_by_max_turn_idx(spark, transcripts, monkeypatc
     pd.testing.assert_frame_equal(_latency(auto_small), _latency(plain))
     plain_hot = _features(hot, monkeypatch, None)
     pd.testing.assert_frame_equal(_latency(auto_hot), _latency(plain_hot))
+
+
+def test_zero_width_tier_raises(spark, transcripts):
+    """``0m`` has no bucket grid: it raises instead of dividing by zero
+    (under non-ANSI division every row would land in one NULL bucket)."""
+    import pytest
+
+    feats = R.turn_features(transcripts)
+    with pytest.raises(ValueError, match="bad tier"):
+        R.rollup_from_raw(feats, "0m")
+    r1m = R.rollup_from_raw(feats, "1m")
+    with pytest.raises(ValueError, match="bad tier"):
+        R.cascade(r1m, "0m")
+    with pytest.raises(ValueError, match="bad tier"):
+        R.cascade(r1m, "0m", from_tier="1m")
