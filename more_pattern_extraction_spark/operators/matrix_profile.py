@@ -20,6 +20,10 @@ Two physical strategies, one logical result:
     time windows (compute MP per day/week of rollup grid, as the reference
     does with m = 1 day on a 60 s grid).
 
+``window_patterns`` is that bounded form, and the pattern stage's one
+pass: profile, discords and FLUSS regimes per (conversation, window).
+Motifs crossing window borders need the distributed path.
+
 Input contract: a regular, gap-filled grid per conversation (rollup tier +
 gapfill), ordered by ``bucket_start``.  A NULL left by a gap longer than
 the fill limit blanks only the windows that hold it (mp inf, pi -1, never
@@ -34,10 +38,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from more_pattern_extraction_spark.functions.kernels import mstomp, stomp, stomp_ab
+from more_pattern_extraction_spark.functions.kernels import (
+    fluss, mstomp, stomp, stomp_ab, top_k_discords_kernel,
+)
 
 MP_SCHEMA = "conv_id string, pos int, mp double, pi bigint"
 MDMP_SCHEMA = "conv_id string, k int, pos int, mp double, pi bigint"
+PATTERN_SCHEMA = ("conv_id string, win timestamp, pos int, mp double, pi bigint, "
+                  "discord_rank int, distance double, cac double")
 
 
 #: columns that break ties when ``order_col`` has duplicates (duplicate
@@ -81,52 +89,49 @@ def matrix_profile(
     value_col: str = "latency_avg_filled",
     ez: int | None = None,
     order_col: str = "bucket_start",
-    window: str | None = None,
 ) -> DataFrame:
-    """Per-conversation self-join MP: (conv_id, pos, mp, pi).
-
-    ``window`` (e.g. ``"week"``/``"day"``): compute the profile per
-    (conv_id, date_trunc(window, order_col)) instead of per whole
-    conversation — the production shape for unbounded/hot conversations
-    (the reference's m=1-day profile over bounded series slices), and the
-    skew guard: a 10^8-turn conversation becomes many bounded tasks
-    instead of one O(n²) monster.  Motifs crossing window borders need the
-    exact distributed path (matrix_profile_distributed)."""
+    """Per-conversation self-join MP: (conv_id, pos, mp, pi)."""
 
     def f(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = sort_series(pdf, order_col)
-        out_cols = {
-            "conv_id": pd.Series(dtype="str"), "pos": pd.Series(dtype="int32"),
-            "mp": pd.Series(dtype="float64"), "pi": pd.Series(dtype="int64"),
-        }
-        if window:
-            out_cols["win"] = pd.Series(dtype="datetime64[ns]")
-        t = pdf[value_col].to_numpy(dtype="float64", na_value=np.nan)
-        if len(t) < m:
-            return pd.DataFrame(out_cols)
-        mp, pi = stomp(t, m, ez)
-        out = {
-            "conv_id": pdf["conv_id"].iloc[0],
-            "pos": np.arange(len(mp), dtype="int32"),
-            "mp": mp,
-            "pi": pi,
-        }
-        if window:
-            out["win"] = pdf["_win"].iloc[0]
-        return pd.DataFrame(out)
+        mp, pi = stomp(pdf[value_col].to_numpy(dtype="float64", na_value=np.nan), m, ez)
+        return pd.DataFrame({"conv_id": pdf["conv_id"].iloc[0],
+                             "pos": np.arange(len(mp), dtype="int32"), "mp": mp, "pi": pi})
 
-    if window:
-        from more_pattern_extraction_spark.plans.partitioning import spread_groups
-
-        keyed = grid.withColumn("_win", F.date_trunc(window, F.col(order_col)))
-        # the skew guard only works if the (conv, win) exchange physically
-        # happens — see partitioning.spread_groups for why it can be
-        # silently skipped (upstream conv_id partitioning satisfies the
-        # grouped UDF's required distribution)
-        return spread_groups(keyed, "conv_id", "_win").groupBy(
-            "conv_id", "_win"
-        ).applyInPandas(f, MP_SCHEMA + ", win timestamp")
     return grid.groupBy("conv_id").applyInPandas(f, MP_SCHEMA)
+
+
+def window_patterns(grid: DataFrame, m: int, k: int) -> DataFrame:
+    """The pattern stage's one pass over a (conv_id, win, bucket_start,
+    latency_avg_filled) grid: per ``(conv_id, win)`` group, the profile,
+    its top-``k`` discords and its FLUSS regime changes (L = ``m``, 3
+    regimes, exclusion factor 1), one row per profile position.
+    ``discord_rank`` and ``distance`` are set only at discords, ``cac``
+    only at regime changes.  A window shorter than ``m`` emits nothing; a
+    NULL ``win`` groups a whole conversation.  A hot conversation becomes
+    many bounded tasks only if the ``(conv_id, win)`` exchange happens,
+    hence ``spread_groups``."""
+    from more_pattern_extraction_spark.plans.partitioning import spread_groups
+
+    def f(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = sort_series(pdf, "bucket_start")
+        mp, pi = stomp(pdf["latency_avg_filled"].to_numpy(dtype="float64", na_value=np.nan), m)
+        rank = pd.array([None] * len(mp), dtype="Int32")
+        dist, cac = np.full(len(mp), np.nan), np.full(len(mp), np.nan)
+        for r, (j, d) in enumerate(top_k_discords_kernel(mp, m // 4, k), 1):
+            rank[j], dist[j] = r, d
+        if len(mp):
+            curve, regimes = fluss(pi, m, 3, 1)
+            cac[regimes] = curve[regimes]
+        return pd.DataFrame({
+            "conv_id": pdf["conv_id"].iloc[0], "win": pdf["win"].iloc[0],
+            "pos": np.arange(len(mp), dtype="int32"), "mp": mp, "pi": pi,
+            "discord_rank": rank, "distance": dist, "cac": cac,
+        })
+
+    return spread_groups(grid, "conv_id", "win").groupBy("conv_id", "win").applyInPandas(
+        f, PATTERN_SCHEMA
+    )
 
 
 def corrected_matrix_profile(

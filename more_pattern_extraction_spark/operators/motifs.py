@@ -3,9 +3,10 @@
 ``modules/patterns.py:135-310`` calc_cost/calculate_motif_stats).
 
 Pattern extraction runs per conversation in grouped pandas UDFs over the
-gridded series + persisted MP; the *statistics* (label-region counts,
-cost, majority) are relational — explode neighbor arrays, interval-join
-against the label mask, pivot counts — pure Catalyst.
+gridded series (top-k discords are part of the pattern stage's one pass,
+``matrix_profile.window_patterns``); the *statistics* (label-region
+counts, cost, majority) are relational — explode neighbor arrays,
+interval-join against the label mask, pivot counts — pure Catalyst.
 """
 
 from __future__ import annotations
@@ -19,7 +20,6 @@ from more_pattern_extraction_spark.operators.matrix_profile import sort_series
 from more_pattern_extraction_spark.functions.kernels import (
     find_neighbors_kernel,
     stomp,
-    top_k_discords_kernel,
     top_k_motifs_kernel,
 )
 
@@ -27,7 +27,6 @@ MOTIF_SCHEMA = (
     "conv_id string, motif_rank int, motif_pos int, pair_pos int, "
     "distance double, neighbors array<int>"
 )
-DISCORD_SCHEMA = "conv_id string, discord_rank int, pos int, distance double"
 NEIGHBOR_SCHEMA = "conv_id string, neighbor_pos int, distance double"
 
 
@@ -83,29 +82,6 @@ def top_k_motifs(
         )
 
     return grid.groupBy("conv_id").applyInPandas(f, MOTIF_SCHEMA)
-
-
-def top_k_discords(
-    mp_table: DataFrame, ez: int, k: int = 3
-) -> DataFrame:
-    """Top-k discords from a persisted MP chunk/table — re-ranking the
-    *artifact*, not recomputing the profile (the continuous-aggregate
-    pay-off: reference reloads npz, io.py:39-55)."""
-
-    def f(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("pos")
-        mp = pdf["mp"].to_numpy(dtype="float64")
-        found = top_k_discords_kernel(mp, ez, k)
-        return pd.DataFrame(
-            {
-                "conv_id": pdf["conv_id"].iloc[0],
-                "discord_rank": np.arange(1, len(found) + 1, dtype="int32"),
-                "pos": np.array([p for p, _ in found], dtype="int32"),
-                "distance": [d for _, d in found],
-            }
-        )
-
-    return mp_table.groupBy("conv_id").applyInPandas(f, DISCORD_SCHEMA)
 
 
 def find_neighbors(

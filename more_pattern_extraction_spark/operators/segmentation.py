@@ -6,7 +6,8 @@ detect_changepoints + ``modules/learning.py:180-228`` changepoint_scores).
 FLUSS consumes the persisted MP-index table and runs per (conversation, L)
 — the L sweep is exploded into the group key, so the reference's serial
 22-value loop (1745 s, notebook cell 18) becomes one shuffle-parallel
-job over 22 groups.
+job over 22 groups.  The pattern stage's single-L regimes come from its
+one pass, ``matrix_profile.window_patterns``.
 
 The regression path is 100 % Catalyst: rolling closed-form slope (W5) →
 strict local extrema (W8) → global quantile threshold (A11) → segment

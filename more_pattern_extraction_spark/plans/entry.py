@@ -1090,20 +1090,23 @@ def matrix_profile_distributed(spark, sf_dir):
     )
 
 
+def _conv_patterns(spark, sf_dir):
+    """The pattern stage's one pass (``window_patterns``: profile, top-2
+    discords, FLUSS regimes at L = m) over whole conversations: one NULL
+    window each."""
+    from more_pattern_extraction_spark.operators import matrix_profile as MP
+
+    series = _event_series(spark, sf_dir).withColumn("win", F.lit(None).cast("timestamp"))
+    return MP.window_patterns(series, _MP_M, k=2)
+
+
 @register("fluss_regimes")  # oracle: plans/oracles.fluss_sql (assigned below)
 def fluss_regimes(spark, sf_dir):
-    """W2 FLUSS segmentation (segment_ts, patterns.py:368-402) over the MP
-    index, L-sweep exploded into the group key."""
-    from more_pattern_extraction_spark.operators import matrix_profile as MP
-    from more_pattern_extraction_spark.operators import segmentation as SG
-
-    series = _event_series(spark, sf_dir)
-    mp = MP.matrix_profile(series, _MP_M)
-    return SG.fluss_segments(
-        mp.select("conv_id", "pos", "pi"), L_values=[_MP_M], n_regimes=3, excl_factor=1
-    ).select(
-        F.col("conv_id").cast("bigint").alias("conv_key"), "L", "regime_pos",
-        F.round("cac", 6).alias("cac"),
+    """W2 FLUSS segmentation (segment_ts, patterns.py:368-402): the regime
+    changes the pattern stage writes to ``regimes``."""
+    return _conv_patterns(spark, sf_dir).filter(F.col("cac").isNotNull()).select(
+        F.col("conv_id").cast("bigint").alias("conv_key"), F.lit(_MP_M).alias("L"),
+        F.col("pos").alias("regime_pos"), F.round("cac", 6).alias("cac"),
     )
 
 
@@ -1126,13 +1129,8 @@ def motif_discovery(spark, sf_dir):
 
 @register("discord_discovery")  # oracle: plans/oracles.discord_sql (assigned below)
 def discord_discovery(spark, sf_dir):
-    """Top-k discords re-ranked from the persisted MP artifact."""
-    from more_pattern_extraction_spark.operators import matrix_profile as MP
-    from more_pattern_extraction_spark.operators import motifs as MO
-
-    series = _event_series(spark, sf_dir)
-    mp = MP.matrix_profile(series, _MP_M)
-    return MO.top_k_discords(mp, ez=_MP_EZ, k=2).select(
+    """Top-k discords: the rows the pattern stage writes to ``discords``."""
+    return _conv_patterns(spark, sf_dir).filter(F.col("discord_rank").isNotNull()).select(
         F.col("conv_id").cast("bigint").alias("conv_key"),
         "discord_rank", "pos", F.round("distance", 4).alias("distance"),
     )

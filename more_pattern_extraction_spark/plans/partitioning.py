@@ -20,8 +20,9 @@ Two distinct skew surfaces:
     ``coalesce``/``isnull`` of each key and would shuffle the rows twice).
   * **Grouped pandas UDFs** (matrix profile per conv): AQE does NOT split
     a single group either, so the group is sub-keyed by ts-window
-    (operators/matrix_profile.matrix_profile_distributed) and the
-    spreading exchange is pinned with ``spread_groups``.
+    (operators/matrix_profile.window_patterns, the pattern stage's pass)
+    or by chunk pair (``matrix_profile_distributed``), and the spreading
+    exchange is pinned with ``spread_groups``.
 
 Relational ops (rollup groupBy, interval joins) need nothing custom: the
 bucket column already splits hot conversations and AQE's skew-join

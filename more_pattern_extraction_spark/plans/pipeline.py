@@ -7,7 +7,7 @@ via ``spark-submit --py-files mpe.zip -m`` or directly:
 
 The stages are declared once, in ``plans/stages.py``: ``TIER_STAGES``
 (1m rollup + sketch → KMV partials → gap-fill → chunks → 1h → 1d) and
-``PATTERN_STAGES`` (MP → discords → FLUSS regimes).  ``run_pipeline``
+``run_patterns`` (one MP → discords → FLUSS regimes pass).  ``run_pipeline``
 runs the tier stages over the pending ``(conv_bucket, ts_day)`` units,
 drops partitions past each tier's retention horizon, then records a
 lineage row per committed unit, the checkpoints and a metrics row
@@ -104,21 +104,14 @@ def run_pattern_stage(
 ) -> dict:
     """Pattern-extraction stage over the persisted gap-filled grid (north
     star: the reference's motif/discord + segmentation pipeline as
-    continuous aggregates): per-(conversation, week) matrix profile →
-    top-k discords + FLUSS regimes, all written as queryable partitioned
-    tables.  Window-keying bounds every task for hot conversations; the
-    MP artifact is persisted once and both downstream extractions re-read
-    it (the reference reloads its npz the same way, io.py:39-55)."""
+    continuous aggregates): per-(conversation, week) matrix profile,
+    top-k discords and FLUSS regimes, all written as queryable partitioned
+    tables.  Window-keying bounds every task for hot conversations; one
+    grouped pass computes all three, and the tables are projections of
+    its persisted output, so nothing is re-read or recounted."""
     t0 = time.time()
-    frames = ST.run_patterns(ST.Scope(spark), out_root, n_buckets, m, window, k)
-    # counted on the written tables: counting the built frames would rerun
-    # the discord and FLUSS UDFs
-    out = {
-        "pattern_wall_s": time.time() - t0,
-        "mp_rows": float(frames[f"mp_{window}"].count()),
-        "discord_rows": float(CAT.read_table(spark, out_root, "discords").count()),
-        "regime_rows": float(CAT.read_table(spark, out_root, "regimes").count()),
-    }
+    counts = ST.run_patterns(ST.Scope(spark), out_root, n_buckets, m, window, k)
+    out = {"pattern_wall_s": time.time() - t0, **counts}
     CheckpointStore(spark, out_root).record_metrics("pattern_stage", **out)
     return out
 

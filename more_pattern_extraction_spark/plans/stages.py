@@ -1,4 +1,5 @@
-"""The tier DAG, declared once, and the runner every entry point shares.
+"""The tier DAG, declared once, the runner every entry point shares, and
+the pattern pass.
 
 Each stage is one row of data: the table it writes, the frame it reads,
 its build, the sort order of its files, its scope rule and the column its
@@ -13,17 +14,23 @@ Tier stages (``run_pipeline``, ``repair_late_turns``)::
                                            ├▶ chunks_1m     (DoD/Gorilla)
                                            └▶ rollup_1h ─▶ rollup_1d
 
-Pattern stages (``run_pattern_stage``, ``repair_pattern_stage``)::
+Pattern pass (``run_patterns``: ``run_pattern_stage``,
+``repair_pattern_stage``)::
 
-    grid ─▶ mp_{window} ─┬▶ discords
-                         └▶ regimes
+    rollup_1m_filled ─▶ window_patterns (persisted) ─┬▶ mp_{window}
+                                                     ├▶ discords
+                                                     └▶ regimes
+
+One grouped UDF per ``(conv_id, window)`` computes the profile, the
+discords and the regime changes; the three tables are projections of its
+one frame, laid out by ``(conv_bucket, window)`` keyed on the window's
+first day, so a scope of those units restricts the grid before the UDF.
 
 Scope rules:
 
-* ``UNIT``: the stage is local to a ``(conv_bucket, ts_day)`` unit (for
-  the pattern stages: a ``(conv_bucket, window)`` pair, keyed on the
-  window's first day), so its input is restricted to the scope's units
-  and it writes exactly those partitions.
+* ``UNIT``: the stage is local to a ``(conv_bucket, ts_day)`` unit, so
+  its input is restricted to the scope's units and it writes exactly
+  those partitions.
 * ``CONV``: the stage needs whole conversations (gap-fill: LOCF carries
   and interpolation anchors cross days).  It reads its scope's whole
   conversations and writes the scope's units on a repair, the whole table
@@ -43,12 +50,13 @@ from itertools import groupby
 from operator import itemgetter
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from more_pattern_extraction_spark.operators import chunks as CH
 from more_pattern_extraction_spark.operators import distinct as DK
 from more_pattern_extraction_spark.operators import gapfill as G
+from more_pattern_extraction_spark.operators import matrix_profile as MP
 from more_pattern_extraction_spark.operators import rollup as R
 from more_pattern_extraction_spark.operators import sketch as SK
 from more_pattern_extraction_spark.plans.checkpoint import CheckpointStore, content_hash
@@ -62,22 +70,22 @@ LINEAGE_COLS = ["conv_id", "bucket_start", "turn_cnt", "latency_cnt"]
 
 @dataclass(frozen=True)
 class Stage:
-    table: str  # may name a build parameter, e.g. "mp_{window}"
-    src: str  # "feats" / "grid", or a table an earlier stage wrote
-    build: Callable[..., DataFrame]  # (src frame, **params) -> rows
+    table: str
+    src: str  # "feats", or a table an earlier stage wrote
+    build: Callable[[DataFrame], DataFrame]  # src frame -> rows
     sort_cols: tuple[str, ...] = ()
     rule: str = UNIT
     time_col: str = "bucket_start"  # ts_day = this column's day
     tier: str | None = None  # retention key whose horizon covers the table
 
 
-def _rollup_1m(feats: DataFrame, **_) -> DataFrame:
+def _rollup_1m(feats: DataFrame) -> DataFrame:
     return SK.attach_sketch_p95(
         R.rollup_from_raw(feats, "1m"), SK.sketch_from_raw(feats, "1m"), keep_sketch=True
     )
 
 
-def _kmv_1m(r1m: DataFrame, **_) -> DataFrame:
+def _kmv_1m(r1m: DataFrame) -> DataFrame:
     # per-(conv_bucket, minute) PARTIAL KMV sketches: a conversation
     # hashes to one bucket, so the partials of a minute are disjoint and
     # kmv_cascade over the stored table recovers the GLOBAL sketch at any
@@ -90,7 +98,7 @@ def _kmv_1m(r1m: DataFrame, **_) -> DataFrame:
 
 
 def _cascade(tier: str, from_tier: str) -> Callable[..., DataFrame]:
-    def build(base: DataFrame, **_) -> DataFrame:
+    def build(base: DataFrame) -> DataFrame:
         return SK.attach_sketch_p95(
             R.cascade(base, tier, from_tier=from_tier),
             SK.sketch_cascade(base.select("conv_id", "bucket_start", "latency_sketch"), tier),
@@ -103,57 +111,13 @@ def _cascade(tier: str, from_tier: str) -> Callable[..., DataFrame]:
 TIER_STAGES = (
     Stage("rollup_1m", "feats", _rollup_1m, ("conv_id", "bucket_start"), tier="1m"),
     Stage("distinct_1m", "rollup_1m", _kmv_1m, ("bucket_start",), tier="1m"),
-    Stage("rollup_1m_filled", "rollup_1m", lambda r1m, **_: G.gap_fill_rollup(r1m, "1m"),
+    Stage("rollup_1m_filled", "rollup_1m", lambda r1m: G.gap_fill_rollup(r1m, "1m"),
           ("conv_id", "bucket_start"), rule=CONV),
     Stage("chunks_1m", "rollup_1m",
-          lambda r1m, **_: CH.encode_chunks(r1m, ["latency_avg", "latency_sum"], "1m"),
+          lambda r1m: CH.encode_chunks(r1m, ["latency_avg", "latency_sum"], "1m"),
           ("conv_id", "ts_bucket"), time_col="ts_bucket"),
     Stage("rollup_1h", "rollup_1m", _cascade("1h", "1m"), ("conv_id", "bucket_start"), tier="1h"),
     Stage("rollup_1d", "rollup_1h", _cascade("1d", "1h"), ("conv_id", "bucket_start"), tier="1d"),
-)
-
-
-# The pattern stages run window-local kernels under a composite
-# ``win#conv_id`` key, so every grouped-UDF task is bounded by one window
-# of one conversation even for hot conversations.  The window leads: its
-# string has no "#", so the first "#" ends it whatever a conv_id holds.
-def _window_keyed(mp: DataFrame, value: str) -> DataFrame:
-    return mp.select(
-        F.concat_ws("#", F.col("win").cast("string"), "conv_id").alias("conv_id"), "pos", value
-    )
-
-
-def _window_split(df: DataFrame, *cols: str) -> DataFrame:
-    key = F.split("conv_id", "#", 2)
-    return df.select(key[1].alias("conv_id"), key[0].cast("timestamp").alias("win"), *cols)
-
-
-def _matrix_profile(grid: DataFrame, m: int, window: str, **_) -> DataFrame:
-    from more_pattern_extraction_spark.operators import matrix_profile as MP
-
-    return MP.matrix_profile(
-        grid.select("conv_id", "bucket_start", "latency_avg_filled"), m, window=window
-    )
-
-
-def _discords(mp: DataFrame, m: int, k: int, **_) -> DataFrame:
-    from more_pattern_extraction_spark.operators import motifs as MO
-
-    disc = MO.top_k_discords(_window_keyed(mp, "mp"), ez=int(m / 4), k=k)
-    return _window_split(disc, "discord_rank", "pos", "distance")
-
-
-def _regimes(mp: DataFrame, m: int, **_) -> DataFrame:
-    from more_pattern_extraction_spark.operators import segmentation as SG
-
-    reg = SG.fluss_segments(_window_keyed(mp, "pi"), L_values=[m], n_regimes=3, excl_factor=1)
-    return _window_split(reg, "L", "regime_pos", "cac")
-
-
-PATTERN_STAGES = (
-    Stage("mp_{window}", "grid", _matrix_profile, time_col="win"),
-    Stage("discords", "mp_{window}", _discords, time_col="win"),
-    Stage("regimes", "mp_{window}", _regimes, time_col="win"),
 )
 
 
@@ -202,9 +166,9 @@ class Scope:
 
 
 def run_stages(stages, frames: dict[str, DataFrame], scope: Scope, root: str,
-               n_buckets: int, **params) -> dict[str, DataFrame]:
+               n_buckets: int) -> dict[str, DataFrame]:
     """Build and write ``stages`` in order under ``scope``.  ``frames``
-    holds the source frames (``feats`` / ``grid``); each table a later
+    holds the source frame (``feats``); each table a later
     stage reads is added to it, read back once.  The read-back holds the
     scope's whole conversations: days outside the scope keep their old,
     value-identical rows, so downstream stages see one consistent table.
@@ -213,24 +177,30 @@ def run_stages(stages, frames: dict[str, DataFrame], scope: Scope, root: str,
         return frames
     consumed = {st.src for st in stages}
     for st in stages:
-        table = st.table.format(**params)
-        src = frames[st.src.format(**params)]
-        out = st.build(scope.only(src) if st.rule == UNIT else src, **params)
+        src = frames[st.src]
+        out = st.build(scope.only(src) if st.rule == UNIT else src)
         out = CAT.with_layout_cols(out, n_buckets, st.time_col)
         if st.rule == CONV and not scope.whole_table:
             out = scope.only(out)
         if st.tier in scope.horizons:
             out = out.filter(F.col("ts_day") >= F.lit(scope.horizons[st.tier][:10]).cast("date"))
-        CAT.write_partitioned(out, root, table, sort_cols=st.sort_cols)
+        CAT.write_partitioned(out, root, st.table, sort_cols=st.sort_cols)
         if st.table in consumed:
-            frames[table] = scope.read(root, table)
+            frames[st.table] = scope.read(root, st.table)
     return frames
 
 
 def run_patterns(scope: Scope, root: str, n_buckets: int, m: int, window: str,
-                 k: int) -> dict[str, DataFrame]:
-    """Run ``PATTERN_STAGES`` over the gap-filled latency grid, laid out by
-    window so a window scope restricts it like any unit scope."""
+                 k: int) -> dict[str, float]:
+    """Write the pattern tables of the scope's ``(conv_bucket, window)``
+    units from one ``window_patterns`` pass over the gap-filled latency
+    grid, laid out by window so a window scope restricts it like any unit
+    scope.  The pass is persisted once; ``mp_{window}``, ``discords``
+    and ``regimes`` are its projections, and the first write observes the
+    three row counts, which are returned.  An empty scope writes
+    nothing."""
+    if scope.units == []:
+        return {"mp_rows": 0.0, "discord_rows": 0.0, "regime_rows": 0.0}
     grid = scope.read(root, "rollup_1m_filled").select(
         "conv_id",
         "bucket_start",
@@ -239,9 +209,29 @@ def run_patterns(scope: Scope, root: str, n_buckets: int, m: int, window: str,
         ),
         F.date_trunc(window, "bucket_start").alias("win"),
     )
-    grid = CAT.with_layout_cols(grid, n_buckets, "win")
-    return run_stages(PATTERN_STAGES, {"grid": grid}, scope, root, n_buckets,
-                      m=m, window=window, k=k)
+    grid = scope.only(CAT.with_layout_cols(grid, n_buckets, "win"))
+    pat = MP.window_patterns(grid.drop(*CAT.PARTITION_COLS), m, k)
+    pat = CAT.with_layout_cols(pat, n_buckets, "win").persist()
+    obs, layout = Observation(), CAT.PARTITION_COLS
+    try:
+        CAT.write_partitioned(
+            pat.observe(obs, F.count(F.lit(1)).alias("mp_rows"),
+                        F.count("discord_rank").alias("discord_rows"),
+                        F.count("cac").alias("regime_rows"))
+            .select("conv_id", "pos", "mp", "pi", "win", *layout),
+            root, f"mp_{window}")
+        CAT.write_partitioned(
+            pat.filter(F.col("discord_rank").isNotNull())
+            .select("conv_id", "win", "discord_rank", "pos", "distance", *layout),
+            root, "discords")
+        CAT.write_partitioned(
+            pat.filter(F.col("cac").isNotNull())
+            .select("conv_id", "win", F.lit(m).alias("L"), F.col("pos").alias("regime_pos"),
+                    "cac", *layout),
+            root, "regimes")
+    finally:
+        pat.unpersist()
+    return {name: float(n) for name, n in obs.get.items()}
 
 
 def certify(cp: CheckpointStore, scope: Scope, r1m: DataFrame, lineage_job: str,

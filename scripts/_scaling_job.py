@@ -1,5 +1,5 @@
 """One scaling-run invocation: the rollup-engine compute path (features →
-1m rollup → gap-fill → chunk encode → weekly-windowed matrix profile) on a
+1m rollup → gap-fill → chunk encode → weekly-windowed pattern pass) on a
 fixed parquet input at a given core count.  Fresh JVM per invocation
 (bench_scaling.py runs via subprocess) so the two cluster sizes share no
 state.
@@ -269,12 +269,13 @@ def main() -> None:
                 F.coalesce(
                     "latency_avg_filled", "latency_avg_locf", F.lit(0.0)
                 ).alias("latency_avg_filled"),
+                F.date_trunc("week", "bucket_start").alias("win"),
             )
-            # windowed MP (per conv per week, m = 2h on the 1m grid):
-            # bounded tasks even for Zipf-hot conversations — the
-            # skew-safe production shape (same workload shape as the
-            # reference's m=1-day profile)
-            n_mp = drain_checksum(MP.matrix_profile(grid, mp_m, window="week")).rows
+            # windowed pattern pass (per conv per week, m = 2h on the 1m
+            # grid: profile, top-2 discords, FLUSS): bounded tasks even
+            # for Zipf-hot conversations — the skew-safe production shape
+            # (same workload shape as the reference's m=1-day profile)
+            n_mp = drain_checksum(MP.window_patterns(grid, mp_m, 2)).rows
             stages["matrix_profile"] = round(time.time() - t1, 2)
             stage_cpu["matrix_profile"] = round(meter.read() - c1, 1)
             r1m.unpersist()

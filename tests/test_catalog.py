@@ -38,7 +38,7 @@ from more_pattern_extraction_spark.plans.pipeline import run_pattern_stage, run_
 from more_pattern_extraction_spark.sources import catalog as CAT
 
 # every table the tier DAG and the pattern stage (window="day") write
-DAG_TABLES = [st.table.format(window="day") for st in ST.TIER_STAGES + ST.PATTERN_STAGES]
+DAG_TABLES = [st.table for st in ST.TIER_STAGES] + ["mp_day", "discords", "regimes"]
 
 
 def _digest(df):

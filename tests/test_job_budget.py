@@ -1,4 +1,4 @@
-"""Spark job budgets of the tier entry points.
+"""Spark job budgets of the tier and pattern entry points.
 
 At small inputs a run costs its Spark jobs, not its data, so every eager
 job a run adds (a count, a probe, a re-read) shows as wall time.
@@ -9,8 +9,8 @@ moves."""
 import pytest
 from pyspark.sql import functions as F
 
-from more_pattern_extraction_spark.plans.pipeline import run_pipeline
-from more_pattern_extraction_spark.plans.repair import repair_late_turns
+from more_pattern_extraction_spark.plans.pipeline import run_pattern_stage, run_pipeline
+from more_pattern_extraction_spark.plans.repair import repair_late_turns, repair_pattern_stage
 
 # measured: 29 / 2 / 33 jobs (a no-op resume runs only the unit-list
 # collect); the cold-ingest bound keeps one job of slack because
@@ -19,6 +19,10 @@ from more_pattern_extraction_spark.plans.repair import repair_late_turns
 COLD_INGEST_JOBS = 30
 NOOP_RESUME_JOBS = 2
 REPAIR_JOBS = 33
+# measured: 8 / 12 jobs for a pattern stage and for its repair after a
+# late-turn repair
+PATTERN_STAGE_JOBS = 8
+REPAIR_PATTERN_JOBS = 12
 
 
 @pytest.fixture()
@@ -46,3 +50,19 @@ def test_ingest_and_repair_job_budgets(spark, spark_jobs, transcripts, split, tm
     assert cold <= COLD_INGEST_JOBS, cold
     assert noop <= NOOP_RESUME_JOBS, noop
     assert repair <= REPAIR_JOBS, repair
+
+
+def test_pattern_stage_job_budgets(spark, spark_jobs, transcripts, split, tmp_path):
+    ontime, late = split
+    out = str(tmp_path / "out")
+    patterns = dict(n_buckets=8, m=16, window="day", k=2)
+    run_pipeline(spark, ontime, out, input_snapshot="p_on", n_buckets=8)
+    m, cold = spark_jobs("budget_pattern", lambda: run_pattern_stage(spark, out, **patterns))
+    assert m["mp_rows"] > 0 and m["discord_rows"] > 0 and m["regime_rows"] > 0
+    repair_late_turns(spark, transcripts, late, out, input_snapshot="p_m",
+                      prior_snapshot="p_on", n_buckets=8)
+    m, repair = spark_jobs("budget_pattern_repair", lambda: repair_pattern_stage(
+        spark, transcripts, late, out, **patterns))
+    assert m["windows_repaired"] > 0
+    assert cold <= PATTERN_STAGE_JOBS, cold
+    assert repair <= REPAIR_PATTERN_JOBS, repair

@@ -5,6 +5,7 @@ The distributed chunk-pair MP must equal the single-group MP exactly."""
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from more_pattern_extraction_spark.functions import kernels as K
 from more_pattern_extraction_spark.operators import matrix_profile as MP
@@ -238,9 +239,9 @@ def test_top_k_motifs_and_discords_spark(spark):
 
     t2 = np.sin(np.arange(400) * 0.5)
     t2[200:215] += np.linspace(0, 6, 15)
-    df2 = _series_df(spark, {"c1": t2})
-    mp_tbl = MP.matrix_profile(df2, 15)
-    ds = MO.top_k_discords(mp_tbl, ez=15, k=1).collect()
+    df2 = _series_df(spark, {"c1": t2}).withColumn("win", F.lit(None).cast("timestamp"))
+    ds = MP.window_patterns(df2, 15, 1).filter(F.col("discord_rank").isNotNull()).collect()
+    assert len(ds) == 1 and ds[0].discord_rank == 1
     assert abs(ds[0].pos - 200) <= 15
 
 
@@ -308,8 +309,6 @@ def test_windowed_mp_spreads_hot_conv_despite_parent_key_partitioning(spark):
     partition, 1.1 effective cores on 8).  spread_groups must make the
     full-key exchange physical: output partitions > 1 for a single
     conversation spanning many weeks."""
-    from pyspark.sql import functions as F
-
     n = 60 * 24 * 7 * 8  # 8 weeks of 1m buckets, one conversation
     pdf = pd.DataFrame(
         {
@@ -318,9 +317,10 @@ def test_windowed_mp_spreads_hot_conv_despite_parent_key_partitioning(spark):
             "latency_avg_filled": np.sin(np.arange(n) / 7.0),
         }
     )
+    week = F.date_trunc("week", "bucket_start").alias("win")
     # force the hazardous upstream shape: partitioned by conv_id alone
-    grid = spark.createDataFrame(pdf).repartition("conv_id")
-    out = MP.matrix_profile(grid, 16, window="week")
+    grid = spark.createDataFrame(pdf).repartition("conv_id").select("*", week)
+    out = MP.window_patterns(grid, 16, 2)
     pids = (
         out.withColumn("p", F.spark_partition_id())
         .select("p").distinct().count()
@@ -329,19 +329,71 @@ def test_windowed_mp_spreads_hot_conv_despite_parent_key_partitioning(spark):
     # value sanity: the forced-upstream-partitioning run must be
     # bit-identical to the same computation on the raw input
     ref = (
-        MP.matrix_profile(spark.createDataFrame(pdf), 16, window="week")
+        MP.window_patterns(spark.createDataFrame(pdf).select("*", week), 16, 2)
         .toPandas().sort_values(["win", "pos"]).reset_index(drop=True)
     )
     got = out.toPandas().sort_values(["win", "pos"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(got, ref)
 
 
+def test_window_patterns_equal_local_kernels(spark):
+    """Each ``(conv_id, win)`` group of ``window_patterns`` is ``stomp``,
+    ``top_k_discords_kernel`` and ``fluss`` run locally on that window's
+    series: two windows of one conversation, a window shorter than m (no
+    rows) and a window holed by a NULL, whose inf / -1 positions are
+    never discords."""
+    rng = np.random.default_rng(21)
+    m, k, hole = 16, 2, 120
+    day = pd.Timestamp("2024-01-01")
+    series = {
+        ("c1", day): rng.normal(0, 1, 300).cumsum(),
+        ("c1", day + pd.Timedelta(days=1)): np.sin(np.arange(200) * 0.3),
+        ("c2", day): rng.normal(0, 1, m - 6),
+        ("c3", day): rng.normal(0, 1, 250).cumsum(),
+    }
+    series[("c1", day)][150:155] += 25.0  # a planted discord
+    series[("c3", day)][hole] = np.nan
+    pdf = pd.concat([
+        pd.DataFrame({"conv_id": c, "latency_avg_filled": t,
+                      "bucket_start": pd.date_range(w, periods=len(t), freq="1min")})
+        for (c, w), t in series.items()
+    ], ignore_index=True)
+    v = F.col("latency_avg_filled")
+    grid = spark.createDataFrame(pdf.sample(frac=1.0, random_state=3)).select(
+        "conv_id", "bucket_start", F.when(~F.isnan(v), v).alias("latency_avg_filled"),
+        F.date_trunc("day", "bucket_start").alias("win"),
+    )
+    assert grid.filter(v.isNull()).count() == 1
+    got = MP.window_patterns(grid, m, k).toPandas()
+    assert len(got) == sum(max(len(t) - m + 1, 0) for t in series.values())
+    for (c, w), t in series.items():
+        sub = got[(got.conv_id == c) & (got.win == w)].sort_values("pos")
+        mp, pi = K.stomp(t, m)
+        if len(t) < m:
+            assert sub.empty
+            continue
+        assert (sub["pos"].values == np.arange(len(mp))).all()
+        np.testing.assert_allclose(sub["mp"].values, mp, rtol=1e-12)
+        assert (sub["pi"].values == pi).all()
+        discords = K.top_k_discords_kernel(mp, m // 4, k)
+        found = sub[sub.discord_rank.notna()].sort_values("discord_rank")
+        assert list(found["discord_rank"]) == list(range(1, len(discords) + 1))
+        assert list(zip(found["pos"], found["distance"])) == discords
+        assert np.isfinite(found["mp"]).all() and (found["pi"] >= 0).all()
+        cac, regimes = K.fluss(pi, m, 3, 1)
+        changes = sub[sub.cac.notna()]
+        assert list(changes["pos"]) == list(regimes)
+        np.testing.assert_allclose(changes["cac"].values, cac[regimes], rtol=1e-12)
+    holed = got[(got.conv_id == "c3") & (got.pos > hole - m) & (got.pos <= hole)]
+    assert len(holed) == m and np.isinf(holed["mp"]).all() and (holed["pi"] == -1).all()
+    assert holed["discord_rank"].isna().all()
+    assert got[(got.conv_id == "c1") & (got.win == day)].discord_rank.notna().sum() == k
+
+
 def test_matrix_profile_null_value_grouped_equals_distributed(spark, planted):
     """A NULL past the gap-fill limit blanks only the windows holding it:
     both strategies give those windows mp inf / pi -1, never use them as a
     neighbour, and agree on every other position."""
-    from pyspark.sql import functions as F
-
     _, arrays = planted
     m, hole = 24, 200
     t = arrays["c1"].copy()

@@ -239,13 +239,16 @@ def test_repair_scoped_scan_partition_prunes(spark, transcripts, tmp_path):
     assert "conv_bucket" in m.group(1), m.group(1)
 
 
-# registry queries whose rows come from operators/rollup (rollup_from_raw,
-# cascade) and operators/stats.regression_scores
+# registry queries whose rows come from the engine's tier and pattern
+# operators: operators/rollup (rollup_from_raw, cascade),
+# gapfill.gap_fill_rollup, distinct.kmv_from_rollup,
+# stats.regression_scores and matrix_profile.window_patterns
 ENGINE_QUERIES = [
     "rollup_1m", "rollup_1h_cascade", "rollup_1d_cascade", "rollup_5m_cascade",
     "rollup_retention", "gapfill_locf_1m", "gapfill_interp_1m", "chunk_roundtrip",
     "score_metrics", "distinct_convs_kmv_1h", "distinct_convs_kmv_1d",
-    "distinct_convs_kmv_24h", "distinct_convs_kmv_churn",
+    "distinct_convs_kmv_24h", "distinct_convs_kmv_churn", "discord_discovery",
+    "fluss_regimes",
 ]
 
 
