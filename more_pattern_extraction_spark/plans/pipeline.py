@@ -8,15 +8,19 @@ via ``spark-submit --py-files mpe.zip -m`` or directly:
 The stages are declared once, in ``plans/stages.py``: ``TIER_STAGES``
 (1m rollup + sketch → KMV partials → gap-fill → chunks → 1h → 1d) and
 ``run_patterns`` (one MP → discords → FLUSS regimes pass).  ``run_pipeline``
-runs the tier stages over the pending ``(conv_bucket, ts_day)`` units,
-drops partitions past each tier's retention horizon, then records a
-lineage row per committed unit, the checkpoints and a metrics row
-(wall s, turns/s).
+writes the tier stages under one ``Scope`` of ``(conv_bucket, ts_day)``
+units: every unit when every unit of the input is pending (a cold
+ingest, a new snapshot, ``resume=False``), else the
+``repair.affected_units`` closure of the pending units' turns.  It then
+drops partitions past each tier's retention horizon and records a
+lineage row and a checkpoint per pending unit and a metrics row (wall s,
+turns/s).
 
 Resume: a second invocation with the same input snapshot finds every
 unit in the checkpoint table and does nothing; a partially-complete run
-redoes only missing units (tests/test_pipeline.py proves resume == cold
-run).
+computes the missing units and rewrites only the committed partitions
+their turns can reach (tests/test_pipeline.py proves resume == cold run
+and that every other partition keeps its file).
 """
 
 from __future__ import annotations
@@ -27,7 +31,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from more_pattern_extraction_spark.operators import rollup as R
+from more_pattern_extraction_spark.plans import repair as RP
 from more_pattern_extraction_spark.plans import stages as ST
 from more_pattern_extraction_spark.plans.checkpoint import CheckpointStore
 from more_pattern_extraction_spark.sources import catalog as CAT
@@ -53,7 +57,7 @@ def run_pipeline(
     # from the raw turns (turn_features neither adds nor drops a row, and
     # its gate probe is a job a no-op resume need not run); the
     # checkpoints are subtracted on the driver.  A turn with a NULL ts
-    # has no ts_day, so it belongs to no unit and no stage writes it
+    # has no ts_day, so it belongs to no unit
     rows = (
         CAT.with_layout_cols(turns, n_buckets)  # conv_bucket, ts_day
         .filter(F.col("ts_day").isNotNull())
@@ -65,11 +69,14 @@ def run_pipeline(
     n_units = len(rows)
 
     if todo:
-        feats = R.turn_features(turns, latency_col=latency_col)
-        feats = CAT.with_layout_cols(feats, n_buckets)
-        scope = ST.Scope(spark, [(r["conv_bucket"], r["ts_day"]) for r in todo],
-                         whole_table=True)
-        frames = ST.run_stages(ST.TIER_STAGES, {"feats": feats}, scope, out_root, n_buckets)
+        pending = ST.Scope(spark, [(r["conv_bucket"], r["ts_day"]) for r in todo])
+        scope = ST.Scope(spark)
+        if len(todo) < n_units:
+            # a resume rewrites what its pending turns can reach, as a
+            # repair rewrites what its late turns can
+            pending_turns = pending.only(CAT.with_layout_cols(turns, n_buckets))
+            scope = ST.Scope(spark, RP.affected_units(turns, pending_turns, n_buckets).collect())
+        frames = RP.write_tiers(turns, scope, out_root, n_buckets, latency_col)
         dropped = 0
         for st in ST.TIER_STAGES:
             if st.tier in (retention or {}):
@@ -78,7 +85,7 @@ def run_pipeline(
                 # horizons are day-aligned by policy
                 dropped += CAT.drop_partitions_before(out_root, st.table, retention[st.tier])
         r1m = scope.read(out_root, "rollup_1m") if dropped else frames["rollup_1m"]
-        ST.certify(cp, scope, r1m, JOB, input_snapshot)
+        ST.certify(cp, pending, r1m, JOB, input_snapshot)
 
     n_turns = sum(r["turns"] for r in todo)
     wall = time.time() - t0
@@ -101,6 +108,7 @@ def run_pattern_stage(
     m: int = 120,
     window: str = "week",
     k: int = 2,
+    units=None,
 ) -> dict:
     """Pattern-extraction stage over the persisted gap-filled grid (north
     star: the reference's motif/discord + segmentation pipeline as
@@ -108,10 +116,31 @@ def run_pattern_stage(
     top-k discords and FLUSS regimes, all written as queryable partitioned
     tables.  Window-keying bounds every task for hot conversations; one
     grouped pass computes all three, and the tables are projections of
-    its persisted output, so nothing is re-read or recounted."""
+    its persisted output, so nothing is re-read or recounted.
+
+    ``units``: the ``(conv_bucket, ts_day)`` tier units a run rewrote
+    (``repair_late_turns(...)["units"]``), or ``None`` for every window.
+    They map on the driver to the ``(conv_bucket, window start)`` pattern
+    partitions holding them (``stages.window_start``), and only those are
+    recomputed.  Why that set is exact: the window-keyed matrix profile
+    is WINDOW-LOCAL — each (conv, window) group is computed from that
+    window's grid rows only (that is what bounds tasks for hot
+    conversations) — and a repair changes filled-grid rows only inside
+    its units (``plans/repair.py`` module docstring).  So the pattern
+    partitions that can change are exactly the windows covering those
+    units; discords and regimes are per-(conv, window) reductions of the
+    MP and inherit the same set.  The grid is RESTRICTED to those windows
+    before the MP kernel runs (not filtered after), so the recompute cost
+    is O(affected windows), and every output row lands in an affected
+    partition — dynamic overwrite touches nothing else."""
     t0 = time.time()
-    counts = ST.run_patterns(ST.Scope(spark), out_root, n_buckets, m, window, k)
+    scope = ST.Scope(spark)
+    if units is not None:
+        scope = ST.Scope(spark, {(b, ST.window_start(d, window)) for b, d in units})
+    counts = ST.run_patterns(scope, out_root, n_buckets, m, window, k)
     out = {"pattern_wall_s": time.time() - t0, **counts}
+    if units is not None:
+        out["windows_repaired"] = float(len(scope.units))
     CheckpointStore(spark, out_root).record_metrics("pattern_stage", **out)
     return out
 

@@ -45,13 +45,19 @@ arithmetic), affected units are committed fresh, and a follow-up
 ``run_pipeline(resume=True)`` at the merged snapshot is a no-op
 (tests/test_repair.py).  Lineage rows for the rewritten units are
 recorded under job ``late_repair``.
+
+One scope per run: the repair returns its scope's units under
+``"units"``, and ``run_pattern_stage(units=...)`` rewrites the pattern
+windows holding them.  A resumed ingest (``run_pipeline``) takes the same
+closure, with the turns of its pending units as the late turns, and both
+build their tiers through ``write_tiers``.
 """
 
 from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from more_pattern_extraction_spark.operators import rollup as R
@@ -134,6 +140,19 @@ def scoped_raw(merged_turns: DataFrame, buckets: list[int], n_buckets: int) -> D
     )
 
 
+def write_tiers(turns: DataFrame, scope: ST.Scope, out_root: str, n_buckets: int,
+                latency_col: str | None) -> dict[str, DataFrame]:
+    """Write the tier stages of ``scope`` from the raw turns: the whole
+    conversations of its buckets (all of ``turns`` for the every-unit
+    scope) → ``turn_features`` → layout columns → ``run_stages``.  A turn
+    with a NULL ``ts`` has no ``ts_day``, so it belongs to no unit and no
+    stage writes it (its successor still takes a NULL lag latency)."""
+    raw = turns if scope.buckets is None else scoped_raw(turns, scope.buckets, n_buckets)
+    feats = CAT.with_layout_cols(R.turn_features(raw, latency_col=latency_col), n_buckets)
+    return ST.run_stages(ST.TIER_STAGES, {"feats": feats.filter(F.col("ts_day").isNotNull())},
+                         scope, out_root, n_buckets)
+
+
 def repair_late_turns(
     spark: SparkSession,
     merged_turns: DataFrame,
@@ -173,15 +192,13 @@ def repair_late_turns(
     t0 = time.time()
     cp = CheckpointStore(spark, out_root)
 
-    all_units = affected_units(merged_turns, late_turns, n_buckets).collect()
+    # the late turns are counted by the collect that bounds them
+    late = Observation()
+    all_units = affected_units(
+        merged_turns, late_turns.observe(late, F.count(F.lit(1)).alias("n")), n_buckets
+    ).collect()
     scope = ST.Scope(spark, all_units, horizons=retention)
-
-    feats = R.turn_features(
-        scoped_raw(merged_turns, scope.buckets, n_buckets).drop("conv_bucket", "ts_day"),
-        latency_col=latency_col,
-    )
-    feats = CAT.with_layout_cols(feats, n_buckets)
-    frames = ST.run_stages(ST.TIER_STAGES, {"feats": feats}, scope, out_root, n_buckets)
+    frames = write_tiers(merged_turns, scope, out_root, n_buckets, latency_col)
 
     # --- checkpoint: certify the merged snapshot without a data scan -------
     # the prior snapshot's completed units are carried forward, so a
@@ -194,56 +211,11 @@ def repair_late_turns(
 
     m = {
         "wall_s": time.time() - t0,
-        "late_turns": float(late_turns.count()),
+        "late_turns": float(late.get["n"]),
         "units_repaired": float(len(scope.units)),
         "units_carried": float(len(carried)),
         "units_skipped_retention": float(len(all_units) - len(scope.units)),
         "buckets_touched": float(len(scope.buckets)),
     }
     cp.record_metrics(JOB, **m)
-    return m
-
-
-def repair_pattern_stage(
-    spark: SparkSession,
-    merged_turns: DataFrame,
-    late_turns: DataFrame,
-    out_root: str,
-    n_buckets: int = 32,
-    m: int = 120,
-    window: str = "week",
-    k: int = 2,
-) -> dict:
-    """Extend a late-data repair to the pattern tables (``mp_{window}``,
-    ``discords``, ``regimes`` — ``run_pattern_stage``'s outputs).  Call
-    AFTER ``repair_late_turns`` on the same late set, so the filled tier
-    this reads is already reconciled.
-
-    Why the affected set is exact: the window-keyed matrix profile is
-    WINDOW-LOCAL — each (conv, window) group is computed from that
-    window's grid rows only (that is what bounds tasks for hot
-    conversations) — and a late turn changes filled-grid rows only
-    inside the affected day interval (module docstring).  So the pattern
-    partitions that can change are exactly the (conv_bucket, window)
-    pairs covering the affected (conv_bucket, ts_day) units; discords
-    and regimes are per-(conv, window) reductions of the MP and inherit
-    the same set.  The grid is RESTRICTED to those windows before the MP
-    kernel runs (not filtered after), so the recompute cost is
-    O(affected windows), and every output row lands in an affected
-    partition — dynamic overwrite touches nothing else.
-    """
-    t0 = time.time()
-    wins = affected_units(merged_turns, late_turns, n_buckets).select(
-        "conv_bucket",
-        F.date_trunc(window, F.col("ts_day").cast("timestamp")).cast("date").alias("ts_day"),
-    ).distinct().collect()
-    scope = ST.Scope(spark, wins)
-    ST.run_patterns(scope, out_root, n_buckets, m, window, k)
-
-    out = {
-        "pattern_repair_wall_s": time.time() - t0,
-        "windows_repaired": float(len(wins)),
-        "buckets_touched": float(len(scope.buckets)),
-    }
-    CheckpointStore(spark, out_root).record_metrics("late_repair_patterns", **out)
-    return out
+    return {**m, "units": scope.units}

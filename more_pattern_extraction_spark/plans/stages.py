@@ -14,8 +14,7 @@ Tier stages (``run_pipeline``, ``repair_late_turns``)::
                                            ├▶ chunks_1m     (DoD/Gorilla)
                                            └▶ rollup_1h ─▶ rollup_1d
 
-Pattern pass (``run_patterns``: ``run_pattern_stage``,
-``repair_pattern_stage``)::
+Pattern pass (``run_patterns``, run by ``run_pattern_stage``)::
 
     rollup_1m_filled ─▶ window_patterns (persisted) ─┬▶ mp_{window}
                                                      ├▶ discords
@@ -26,6 +25,11 @@ discords and the regime changes; the three tables are projections of its
 one frame, laid out by ``(conv_bucket, window)`` keyed on the window's
 first day, so a scope of those units restricts the grid before the UDF.
 
+One ``Scope`` decides what a run rewrites: every unit on a cold ingest,
+else the ``repair.affected_units`` closure of the run's pending or late
+turns, and for the pattern pass the windows holding that closure's
+units (``window_start``).
+
 Scope rules:
 
 * ``UNIT``: the stage is local to a ``(conv_bucket, ts_day)`` unit, so
@@ -33,8 +37,7 @@ Scope rules:
   those partitions.
 * ``CONV``: the stage needs whole conversations (gap-fill: LOCF carries
   and interpolation anchors cross days).  It reads its scope's whole
-  conversations and writes the scope's units on a repair, the whole table
-  on ingest (``Scope.whole_table``).
+  conversations and writes the scope's units, on every entry point.
 
 Every persisted tier carries the mergeable latency sketch map and its
 derived p95 next to the percentile-of-averages ``latency_p95``: the
@@ -45,7 +48,7 @@ the finest tier.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from datetime import date
+from datetime import date, timedelta
 from itertools import groupby
 from operator import itemgetter
 from typing import Callable
@@ -124,9 +127,10 @@ TIER_STAGES = (
 class Scope:
     """The ``(conv_bucket, ts_day)`` units one run writes.
 
-    ``units=None`` means every unit.  Reads cover the whole conversations
-    of the units' buckets; with ``whole_table`` (ingest) they cover the
-    whole table and ``CONV`` stages write all of it.  ``horizons`` (tier →
+    ``units=None`` means every unit.  Otherwise reads cover the whole
+    conversations of the units' buckets, and every stage writes just the
+    units: ingest and repair seed them from ``repair.affected_units``,
+    the pattern pass maps them to windows.  ``horizons`` (tier →
     retention horizon) drops the units older than the 1m horizon, and rows
     older than a stage's tier horizon before the write, so a repair never
     resurrects partitions retention dropped.
@@ -136,18 +140,15 @@ class Scope:
     scan prunes to the units' files, and no frame is shipped to the
     executors."""
 
-    def __init__(self, spark: SparkSession, units=None, whole_table: bool = False,
+    def __init__(self, spark: SparkSession, units=None,
                  horizons: dict[str, str] | None = None):
         self.spark = spark
         self.horizons = horizons or {}
         hor = date.fromisoformat(self.horizons.get("1m", "0001-01-01")[:10])
-        self.units = None if units is None else sorted((b, d) for b, d in units if d >= hor)
-        self.whole_table = whole_table
-        self.buckets = None
-        if units is not None and not whole_table:
-            self.buckets = sorted({b for b, _d in self.units})
-        self.where = None
+        self.units = self.buckets = self.where = None
         if units is not None:
+            self.units = sorted((b, d) for b, d in units if d >= hor)
+            self.buckets = sorted({b for b, _d in self.units})
             self.where = F.lit(False)
             for b, unit in groupby(self.units, key=itemgetter(0)):
                 days = [d for _b, d in unit]
@@ -180,7 +181,7 @@ def run_stages(stages, frames: dict[str, DataFrame], scope: Scope, root: str,
         src = frames[st.src]
         out = st.build(scope.only(src) if st.rule == UNIT else src)
         out = CAT.with_layout_cols(out, n_buckets, st.time_col)
-        if st.rule == CONV and not scope.whole_table:
+        if st.rule == CONV:
             out = scope.only(out)
         if st.tier in scope.horizons:
             out = out.filter(F.col("ts_day") >= F.lit(scope.horizons[st.tier][:10]).cast("date"))
@@ -188,6 +189,24 @@ def run_stages(stages, frames: dict[str, DataFrame], scope: Scope, root: str,
         if st.table in consumed:
             frames[st.table] = scope.read(root, st.table)
     return frames
+
+
+def window_start(day: date, window: str) -> date:
+    """The layout day of the ``window`` holding ``day``: the date of
+    ``F.date_trunc(window, day)``, computed on the driver.  A day or
+    sub-day window starts on the day itself."""
+    w = window.lower()
+    if w == "year":
+        return day.replace(month=1, day=1)
+    if w == "quarter":
+        return day.replace(month=day.month - (day.month - 1) % 3, day=1)
+    if w == "month":
+        return day.replace(day=1)
+    if w == "week":
+        return day - timedelta(days=day.weekday())
+    if w in ("day", "hour", "minute", "second"):
+        return day
+    raise ValueError(f"no driver-side start for window {window!r}")
 
 
 def run_patterns(scope: Scope, root: str, n_buckets: int, m: int, window: str,

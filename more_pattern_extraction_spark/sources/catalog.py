@@ -1,10 +1,10 @@
-"""Storage-format seam (SURVEY §7.0): Iceberg when its runtime jar is on
-the classpath, Parquet-with-Iceberg-layout otherwise (this sandbox).
+"""Storage-format seam (SURVEY §7.0): Parquet with Iceberg's layout, the
+stand-in for an Iceberg table.
 
 Tables are partitioned by (conv_bucket, ts_day) — the Iceberg spec would
-be ``bucket(N, conv_id), days(ts)``; the Parquet fallback materializes the
+be ``bucket(N, conv_id), days(ts)``; the Parquet layout materializes the
 same two columns and relies on Catalyst partition pruning, so queries and
-the checkpoint/retention logic are identical across backends.  Writes use
+the checkpoint/retention logic read as they would on Iceberg.  Writes use
 dynamic partition overwrite = the Parquet stand-in for Iceberg's atomic
 partition-level commit.
 
@@ -30,14 +30,6 @@ from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructT
 
 SCHEMA_FILE = "_schema.json"
 PARTITION_COLS = ("conv_bucket", "ts_day")
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.org.apache.iceberg.Table  # noqa: B018
-        return True
-    except Exception:
-        return False
 
 
 def table_path(root: str, name: str) -> str:
@@ -112,36 +104,6 @@ def _save_schema(schema: StructType, schema_path: str) -> None:
     with open(tmp, "w") as fh:
         fh.write(_nullable(StructType(fields)).json())
     os.replace(tmp, schema_path)
-
-
-def compact_table(
-    spark: SparkSession,
-    root: str,
-    name: str,
-    sort_cols: tuple[str, ...] = (),
-) -> dict:
-    """Small-file compaction for an already-fragmented table (the
-    maintenance job Iceberg calls ``rewrite_data_files``): read every
-    partition, rewrite with the hash write distribution, dynamic
-    partition overwrite keeps the swap atomic per partition.  Returns
-    {files_before, files_after, rows}."""
-    base = table_path(root, name)
-    before = _count_data_files(base)
-    df = read_table(spark, root, name)
-    rows = df.count()
-    write_partitioned(df, root, name, sort_cols=sort_cols)
-    return {
-        "files_before": before,
-        "files_after": _count_data_files(base),
-        "rows": rows,
-    }
-
-
-def _count_data_files(base: str) -> int:
-    n = 0
-    for root_, _, files in os.walk(base):
-        n += sum(1 for f in files if f.endswith(".parquet"))
-    return n
 
 
 def read_table(spark: SparkSession, root: str, name: str) -> DataFrame:

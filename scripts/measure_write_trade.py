@@ -70,6 +70,10 @@ def du_bytes(path: str) -> int:
     return int(out.stdout.split()[0])
 
 
+def data_files(path: str) -> int:
+    return sum(f.endswith(".parquet") for _r, _d, files in os.walk(path) for f in files)
+
+
 def main() -> None:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 3
     out_path = sys.argv[2] if len(sys.argv) > 2 else "scripts/WRITE_TRADE_r06.json"
@@ -121,7 +125,7 @@ def main() -> None:
                                   sort_cols=sort_cols)
             results[name]["write_s"].append(round(time.time() - t0, 3))
             results[name]["bytes"] = du_bytes(CAT.table_path(ROOT, tbl))
-            results[name]["files"] = CAT._count_data_files(CAT.table_path(ROOT, tbl))
+            results[name]["files"] = data_files(CAT.table_path(ROOT, tbl))
             back = CAT.read_table(spark, ROOT, tbl)
             t0 = time.time()
             d = drain_checksum(drainable(back))

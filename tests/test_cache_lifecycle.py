@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from more_pattern_extraction_spark.plans.pipeline import run_pattern_stage, run_pipeline
-from more_pattern_extraction_spark.plans.repair import repair_late_turns, repair_pattern_stage
+from more_pattern_extraction_spark.plans.repair import repair_late_turns
 from more_pattern_extraction_spark.sources import catalog as CAT
 
 
@@ -44,9 +44,9 @@ def test_pattern_stage_and_repair_leave_no_cache(spark, transcripts, tmp_path, m
     before = persistent_rdds(spark)
     run_pattern_stage(spark, out, **patterns)
     assert persistent_rdds(spark) == before
-    repair_late_turns(spark, transcripts, transcripts.filter(late), out,
-                      input_snapshot="p_m", prior_snapshot="p_on", n_buckets=8)
-    repair_pattern_stage(spark, transcripts, transcripts.filter(late), out, **patterns)
+    r = repair_late_turns(spark, transcripts, transcripts.filter(late), out,
+                          input_snapshot="p_m", prior_snapshot="p_on", n_buckets=8)
+    run_pattern_stage(spark, out, units=r["units"], **patterns)
     assert persistent_rdds(spark) == before
 
     write, written = CAT.write_partitioned, []

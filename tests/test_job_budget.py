@@ -10,19 +10,22 @@ import pytest
 from pyspark.sql import functions as F
 
 from more_pattern_extraction_spark.plans.pipeline import run_pattern_stage, run_pipeline
-from more_pattern_extraction_spark.plans.repair import repair_late_turns, repair_pattern_stage
+from more_pattern_extraction_spark.plans.repair import repair_late_turns
 
-# measured: 29 / 2 / 33 jobs (a no-op resume runs only the unit-list
-# collect); the cold-ingest bound keeps one job of slack because
-# adaptive execution runs the stages of the ingest's unit-list collect
-# as one or two jobs, depending on which stage finishes first
+# measured: 29 / 2 / 31 / 33 jobs (a no-op resume runs only the
+# unit-list collect; 4 of a partial resume's jobs are the collect of the
+# units its pending turns reach); the cold-ingest and partial-resume
+# bounds keep one job of slack because adaptive execution runs the
+# stages of the ingest's unit-list collect as one or two jobs, depending
+# on which stage finishes first
 COLD_INGEST_JOBS = 30
 NOOP_RESUME_JOBS = 2
-REPAIR_JOBS = 33
-# measured: 8 / 12 jobs for a pattern stage and for its repair after a
-# late-turn repair
+REPAIR_JOBS = 31
+PARTIAL_RESUME_JOBS = 34
+# measured: 8 / 8 jobs for a pattern stage and for its rerun over the
+# units a late-turn repair rewrote
 PATTERN_STAGE_JOBS = 8
-REPAIR_PATTERN_JOBS = 12
+REPAIR_PATTERN_JOBS = 8
 
 
 @pytest.fixture()
@@ -52,6 +55,16 @@ def test_ingest_and_repair_job_budgets(spark, spark_jobs, transcripts, split, tm
     assert repair <= REPAIR_JOBS, repair
 
 
+def test_partial_resume_job_budget(spark, spark_jobs, transcripts, tmp_path):
+    out = str(tmp_path / "out")
+    run_pipeline(spark, transcripts.filter(F.col("ts") < "2024-01-02"), out,
+                 input_snapshot="r_p", n_buckets=8)
+    m, resume = spark_jobs("budget_partial_resume", lambda: run_pipeline(
+        spark, transcripts, out, input_snapshot="r_p", n_buckets=8))
+    assert 0 < m["units_done"] < m["units_total"]
+    assert resume <= PARTIAL_RESUME_JOBS, resume
+
+
 def test_pattern_stage_job_budgets(spark, spark_jobs, transcripts, split, tmp_path):
     ontime, late = split
     out = str(tmp_path / "out")
@@ -59,10 +72,10 @@ def test_pattern_stage_job_budgets(spark, spark_jobs, transcripts, split, tmp_pa
     run_pipeline(spark, ontime, out, input_snapshot="p_on", n_buckets=8)
     m, cold = spark_jobs("budget_pattern", lambda: run_pattern_stage(spark, out, **patterns))
     assert m["mp_rows"] > 0 and m["discord_rows"] > 0 and m["regime_rows"] > 0
-    repair_late_turns(spark, transcripts, late, out, input_snapshot="p_m",
-                      prior_snapshot="p_on", n_buckets=8)
-    m, repair = spark_jobs("budget_pattern_repair", lambda: repair_pattern_stage(
-        spark, transcripts, late, out, **patterns))
+    r = repair_late_turns(spark, transcripts, late, out, input_snapshot="p_m",
+                          prior_snapshot="p_on", n_buckets=8)
+    m, repair = spark_jobs("budget_pattern_repair", lambda: run_pattern_stage(
+        spark, out, units=r["units"], **patterns))
     assert m["windows_repaired"] > 0
     assert cold <= PATTERN_STAGE_JOBS, cold
     assert repair <= REPAIR_PATTERN_JOBS, repair

@@ -5,7 +5,7 @@ import calendar
 import os
 import shutil
 import time
-from datetime import date
+from datetime import date, timedelta
 
 import numpy as np
 import pyarrow.parquet as pq
@@ -104,6 +104,66 @@ def test_interrupted_resume_equals_cold(spark, transcripts, out, tmp_path):
     for t in TABLES:
         a, b = _table_digest(spark, out, t), _table_digest(spark, cold_root, t)
         assert a == b, t
+
+
+def _partition_files(root, name):
+    """{partition-dir relpath: {(file, size, mtime_ns)}} of a table."""
+    base = os.path.join(root, name)
+    out = {}
+    for dirpath, _dirs, files in os.walk(base):
+        data = {(f, os.stat(os.path.join(dirpath, f)).st_size,
+                 os.stat(os.path.join(dirpath, f)).st_mtime_ns)
+                for f in files if f.endswith(".parquet")}
+        if data:
+            out[os.path.relpath(dirpath, base)] = data
+    return out
+
+
+def test_partial_resume_rewrites_only_what_pending_turns_reach(spark, transcripts, out, tmp_path):
+    """A resume of an interrupted ingest under its snapshot rewrites the
+    ``affected_units`` closure of its pending units' turns, as a repair
+    rewrites the closure of its late turns: every tier equals a cold
+    run's, and each ``rollup_1m_filled`` partition outside the closure
+    keeps its file."""
+    cold_root = str(tmp_path / "cold")
+    run_pipeline(spark, transcripts, cold_root, input_snapshot="snapP", n_buckets=8)
+    run_pipeline(spark, transcripts.filter(F.col("ts") < "2024-01-02"), out,
+                 input_snapshot="snapP", n_buckets=8)
+    done = spark.createDataFrame(
+        sorted(CheckpointStore(spark, out).completed(ST.PIPELINE_JOB, "1m", "snapP")),
+        "conv_bucket int, ts_day date")
+    pending = CAT.with_layout_cols(transcripts, 8).join(done, ["conv_bucket", "ts_day"],
+                                                         "left_anti")
+    reach = {f"conv_bucket={r['conv_bucket']}/ts_day={r['ts_day']}"
+             for r in affected_units(transcripts, pending, 8).collect()}
+    before = _partition_files(out, "rollup_1m_filled")
+    outside = sorted(set(before) - reach)
+    assert outside
+
+    m = run_pipeline(spark, transcripts, out, input_snapshot="snapP", n_buckets=8)
+    assert 0 < m["units_done"] < m["units_total"]
+    for t in TABLES:
+        assert _table_digest(spark, out, t) == _table_digest(spark, cold_root, t), t
+    after = _partition_files(out, "rollup_1m_filled")
+    rewritten = [p for p in outside if after.get(p) != before[p]]
+    assert not rewritten, f"{len(rewritten)} of {len(outside)} rewritten: {rewritten[:3]}"
+
+
+def test_window_start_equals_date_trunc(spark):
+    """The driver-side window of a unit day is the day Spark's
+    ``date_trunc`` gives the pattern tables' layout."""
+    days = [date(2023, 12, 1) + timedelta(days=i) for i in range(430)]
+    windows = ("day", "week", "month", "year", "hour", "quarter", "minute")
+    rows = (
+        spark.createDataFrame([(d,) for d in days], "d date")
+        .select("d", *[F.date_trunc(w, F.col("d").cast("timestamp")).cast("date").alias(w)
+                       for w in windows])
+        .orderBy("d")
+        .collect()
+    )
+    assert [r["d"] for r in rows] == days
+    for w in windows:
+        assert [ST.window_start(d, w) for d in days] == [r[w] for r in rows], w
 
 
 def test_resume_lineage_one_row_per_unit(spark, transcripts, out):

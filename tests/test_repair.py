@@ -174,11 +174,10 @@ def test_repair_respects_retention(spark, transcripts, tmp_path):
 
 
 def test_repair_pattern_stage_equals_cold(spark, transcripts, split, tmp_path):
-    """repair_late_turns + repair_pattern_stage reconcile the pattern
-    tables (mp/discords/regimes) bit-identically to a cold full run,
+    """repair_late_turns + run_pattern_stage over the repaired units
+    reconcile the pattern tables (mp/discords/regimes) bit-identically to a cold full run,
     touching only the affected (conv_bucket, window) partitions."""
     from more_pattern_extraction_spark.plans.pipeline import run_pattern_stage
-    from more_pattern_extraction_spark.plans.repair import repair_pattern_stage
 
     ontime, late = split
     cold, out = str(tmp_path / "cold"), str(tmp_path / "out")
@@ -194,10 +193,10 @@ def test_repair_pattern_stage_equals_cold(spark, transcripts, split, tmp_path):
     ptables = ["mp_day", "discords", "regimes"]
     before = {t: _partition_files(out, t) for t in ptables}
 
-    repair_late_turns(spark, transcripts, late, out, input_snapshot="pm",
-                      prior_snapshot="po", n_buckets=8)
-    pm = repair_pattern_stage(spark, transcripts, late, out, n_buckets=8,
-                              m=16, window="day", k=2)
+    r = repair_late_turns(spark, transcripts, late, out, input_snapshot="pm",
+                          prior_snapshot="po", n_buckets=8)
+    pm = run_pattern_stage(spark, out, n_buckets=8, m=16, window="day", k=2,
+                           units=r["units"])
     assert pm["windows_repaired"] >= 1
 
     for t in ptables:
