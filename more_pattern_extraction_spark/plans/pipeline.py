@@ -11,10 +11,10 @@ The stages are declared once, in ``plans/stages.py``: ``TIER_STAGES``
 writes the tier stages under one ``Scope`` of ``(conv_bucket, ts_day)``
 units: every unit when every unit of the input is pending (a cold
 ingest, a new snapshot, ``resume=False``), else the
-``repair.affected_units`` closure of the pending units' turns.  It then
-drops partitions past each tier's retention horizon and records a
-lineage row and a checkpoint per pending unit and a metrics row (wall s,
-turns/s).
+``repair.affected_units`` closure of the pending units' turns.  Every
+run, a no-op resume included, then drops the partitions past each tier's
+retention horizon (``stages.retire``), records a lineage row and a
+checkpoint per pending unit and a metrics row (wall s, turns/s).
 
 Resume: a second invocation with the same input snapshot finds every
 unit in the checkpoint table and does nothing; a partially-complete run
@@ -68,24 +68,17 @@ def run_pipeline(
     todo = cp.pending_units(rows, JOB, "1m", input_snapshot) if resume else rows
     n_units = len(rows)
 
+    pending = ST.Scope(spark, [(r["conv_bucket"], r["ts_day"]) for r in todo])
     if todo:
-        pending = ST.Scope(spark, [(r["conv_bucket"], r["ts_day"]) for r in todo])
         scope = ST.Scope(spark)
         if len(todo) < n_units:
             # a resume rewrites what its pending turns can reach, as a
             # repair rewrites what its late turns can
             pending_turns = pending.only(CAT.with_layout_cols(turns, n_buckets))
             scope = ST.Scope(spark, RP.affected_units(turns, pending_turns, n_buckets).collect())
-        frames = RP.write_tiers(turns, scope, out_root, n_buckets, latency_col)
-        dropped = 0
-        for st in ST.TIER_STAGES:
-            if st.tier in (retention or {}):
-                # metadata-only partition drop (ts_day granularity); rows
-                # inside the horizon's partial day are kept — tier
-                # horizons are day-aligned by policy
-                dropped += CAT.drop_partitions_before(out_root, st.table, retention[st.tier])
-        r1m = scope.read(out_root, "rollup_1m") if dropped else frames["rollup_1m"]
-        ST.certify(cp, pending, r1m, JOB, input_snapshot)
+        RP.write_tiers(turns, scope, out_root, n_buckets, latency_col)
+    ST.retire(out_root, retention)
+    ST.certify(cp, pending, out_root, JOB, input_snapshot)
 
     n_turns = sum(r["turns"] for r in todo)
     wall = time.time() - t0

@@ -141,7 +141,7 @@ def scoped_raw(merged_turns: DataFrame, buckets: list[int], n_buckets: int) -> D
 
 
 def write_tiers(turns: DataFrame, scope: ST.Scope, out_root: str, n_buckets: int,
-                latency_col: str | None) -> dict[str, DataFrame]:
+                latency_col: str | None) -> None:
     """Write the tier stages of ``scope`` from the raw turns: the whole
     conversations of its buckets (all of ``turns`` for the every-unit
     scope) → ``turn_features`` → layout columns → ``run_stages``.  A turn
@@ -149,8 +149,8 @@ def write_tiers(turns: DataFrame, scope: ST.Scope, out_root: str, n_buckets: int
     stage writes it (its successor still takes a NULL lag latency)."""
     raw = turns if scope.buckets is None else scoped_raw(turns, scope.buckets, n_buckets)
     feats = CAT.with_layout_cols(R.turn_features(raw, latency_col=latency_col), n_buckets)
-    return ST.run_stages(ST.TIER_STAGES, {"feats": feats.filter(F.col("ts_day").isNotNull())},
-                         scope, out_root, n_buckets)
+    ST.run_stages(ST.TIER_STAGES, {"feats": feats.filter(F.col("ts_day").isNotNull())},
+                  scope, out_root, n_buckets)
 
 
 def repair_late_turns(
@@ -174,31 +174,25 @@ def repair_late_turns(
     ``merged_turns`` (tests/test_repair.py proves it per table) and the
     checkpoint table certifies ``input_snapshot`` completely.
 
-    ``retention`` (same shape as ``run_pipeline``'s, tier → horizon):
-    units older than the 1m horizon are NOT written back — without the
-    filter a repair would resurrect partitions retention already dropped
-    (the recompute reads raw, which still has the turns).  They are
-    counted in ``units_skipped_retention``.  Two honest consequences of
-    cascading retention, by design: (a) a coarse-tier row whose finer
-    source days were dropped is left untouched (stale-by-policy — it
-    cannot be recomputed tier-consistently without the finer rows, and
-    dynamic overwrite only replaces partitions the cascade actually
-    emits); (b) gap-fill values just inside the horizon whose
-    interpolation anchors fell outside it are recomputed from the
-    RETAINED 1m tier, i.e. they match a cold run on the retained data,
-    not a cold run on all-time data — the same thing any engine must
-    choose once source rows are deleted by policy.
+    ``retention`` (same shape as ``run_pipeline``'s, tier → horizon): every
+    affected unit is recomputed whatever its age, as a cold run does, and
+    ``stages.retire`` then drops what is past a horizon.  By design, a
+    rewritten unit's gap-fill values whose LOCF or interpolation anchor
+    lies in a day dropped earlier, outside the scope, are recomputed from
+    the RETAINED 1m tier: they match a cold run on the retained data, not
+    on all-time data — the same thing any engine must choose once source
+    rows are deleted by policy.
     """
     t0 = time.time()
     cp = CheckpointStore(spark, out_root)
 
     # the late turns are counted by the collect that bounds them
     late = Observation()
-    all_units = affected_units(
+    scope = ST.Scope(spark, affected_units(
         merged_turns, late_turns.observe(late, F.count(F.lit(1)).alias("n")), n_buckets
-    ).collect()
-    scope = ST.Scope(spark, all_units, horizons=retention)
-    frames = write_tiers(merged_turns, scope, out_root, n_buckets, latency_col)
+    ).collect())
+    write_tiers(merged_turns, scope, out_root, n_buckets, latency_col)
+    ST.retire(out_root, retention)
 
     # --- checkpoint: certify the merged snapshot without a data scan -------
     # the prior snapshot's completed units are carried forward, so a
@@ -207,14 +201,13 @@ def repair_late_turns(
     carried = set()
     if prior_snapshot is not None:
         carried = cp.completed(ST.PIPELINE_JOB, "1m", prior_snapshot) - set(scope.units)
-    ST.certify(cp, scope, frames.get("rollup_1m"), JOB, input_snapshot, carried)
+    ST.certify(cp, scope, out_root, JOB, input_snapshot, carried)
 
     m = {
         "wall_s": time.time() - t0,
         "late_turns": float(late.get["n"]),
         "units_repaired": float(len(scope.units)),
         "units_carried": float(len(carried)),
-        "units_skipped_retention": float(len(all_units) - len(scope.units)),
         "buckets_touched": float(len(scope.buckets)),
     }
     cp.record_metrics(JOB, **m)

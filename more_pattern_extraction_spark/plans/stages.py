@@ -2,10 +2,11 @@
 the pattern pass.
 
 Each stage is one row of data: the table it writes, the frame it reads,
-its build, the sort order of its files, its scope rule and the column its
-``ts_day`` layout column derives from.  ``run_stages`` builds each stage,
-adds the layout columns, restricts it to a ``Scope`` and writes it; a
-table some later stage reads is read back ONCE, right after its write.
+its build, its retention tier, the sort order of its files, its scope
+rule and the column its ``ts_day`` layout column derives from.
+``run_stages`` builds each stage, adds the layout columns, restricts it
+to a ``Scope`` and writes it; a table some later stage reads is read back
+ONCE, right after its write.
 
 Tier stages (``run_pipeline``, ``repair_late_turns``)::
 
@@ -29,6 +30,10 @@ One ``Scope`` decides what a run rewrites: every unit on a cold ingest,
 else the ``repair.affected_units`` closure of the run's pending or late
 turns, and for the pattern pass the windows holding that closure's
 units (``window_start``).
+
+``retire`` is the one retention step: ingest and repair call it after
+their writes, and it drops each tier table's partitions past its stage's
+tier horizon, whatever wrote them.
 
 Scope rules:
 
@@ -76,10 +81,10 @@ class Stage:
     table: str
     src: str  # "feats", or a table an earlier stage wrote
     build: Callable[[DataFrame], DataFrame]  # src frame -> rows
+    tier: str  # retention key: ``retire`` drops partitions past its horizon
     sort_cols: tuple[str, ...] = ()
     rule: str = UNIT
     time_col: str = "bucket_start"  # ts_day = this column's day
-    tier: str | None = None  # retention key whose horizon covers the table
 
 
 def _rollup_1m(feats: DataFrame) -> DataFrame:
@@ -112,15 +117,15 @@ def _cascade(tier: str, from_tier: str) -> Callable[..., DataFrame]:
 
 
 TIER_STAGES = (
-    Stage("rollup_1m", "feats", _rollup_1m, ("conv_id", "bucket_start"), tier="1m"),
-    Stage("distinct_1m", "rollup_1m", _kmv_1m, ("bucket_start",), tier="1m"),
-    Stage("rollup_1m_filled", "rollup_1m", lambda r1m: G.gap_fill_rollup(r1m, "1m"),
+    Stage("rollup_1m", "feats", _rollup_1m, "1m", ("conv_id", "bucket_start")),
+    Stage("distinct_1m", "rollup_1m", _kmv_1m, "1m", ("bucket_start",)),
+    Stage("rollup_1m_filled", "rollup_1m", lambda r1m: G.gap_fill_rollup(r1m, "1m"), "1m",
           ("conv_id", "bucket_start"), rule=CONV),
     Stage("chunks_1m", "rollup_1m",
-          lambda r1m: CH.encode_chunks(r1m, ["latency_avg", "latency_sum"], "1m"),
+          lambda r1m: CH.encode_chunks(r1m, ["latency_avg", "latency_sum"], "1m"), "1m",
           ("conv_id", "ts_bucket"), time_col="ts_bucket"),
-    Stage("rollup_1h", "rollup_1m", _cascade("1h", "1m"), ("conv_id", "bucket_start"), tier="1h"),
-    Stage("rollup_1d", "rollup_1h", _cascade("1d", "1h"), ("conv_id", "bucket_start"), tier="1d"),
+    Stage("rollup_1h", "rollup_1m", _cascade("1h", "1m"), "1h", ("conv_id", "bucket_start")),
+    Stage("rollup_1d", "rollup_1h", _cascade("1d", "1h"), "1d", ("conv_id", "bucket_start")),
 )
 
 
@@ -130,24 +135,20 @@ class Scope:
     ``units=None`` means every unit.  Otherwise reads cover the whole
     conversations of the units' buckets, and every stage writes just the
     units: ingest and repair seed them from ``repair.affected_units``,
-    the pattern pass maps them to windows.  ``horizons`` (tier →
-    retention horizon) drops the units older than the 1m horizon, and rows
-    older than a stage's tier horizon before the write, so a repair never
-    resurrects partitions retention dropped.
+    the pattern pass maps them to windows.  A scope knows no retention:
+    its units are written whatever their age, and ``retire`` drops them
+    afterwards when they are past a horizon.
 
     The unit list is small and local, so the restriction is a predicate
     on the partition columns, one branch per bucket: a stored table's
     scan prunes to the units' files, and no frame is shipped to the
     executors."""
 
-    def __init__(self, spark: SparkSession, units=None,
-                 horizons: dict[str, str] | None = None):
+    def __init__(self, spark: SparkSession, units=None):
         self.spark = spark
-        self.horizons = horizons or {}
-        hor = date.fromisoformat(self.horizons.get("1m", "0001-01-01")[:10])
         self.units = self.buckets = self.where = None
         if units is not None:
-            self.units = sorted((b, d) for b, d in units if d >= hor)
+            self.units = sorted((b, d) for b, d in units)
             self.buckets = sorted({b for b, _d in self.units})
             self.where = F.lit(False)
             for b, unit in groupby(self.units, key=itemgetter(0)):
@@ -167,7 +168,7 @@ class Scope:
 
 
 def run_stages(stages, frames: dict[str, DataFrame], scope: Scope, root: str,
-               n_buckets: int) -> dict[str, DataFrame]:
+               n_buckets: int) -> None:
     """Build and write ``stages`` in order under ``scope``.  ``frames``
     holds the source frame (``feats``); each table a later
     stage reads is added to it, read back once.  The read-back holds the
@@ -175,7 +176,7 @@ def run_stages(stages, frames: dict[str, DataFrame], scope: Scope, root: str,
     value-identical rows, so downstream stages see one consistent table.
     An empty scope writes nothing."""
     if scope.units == []:
-        return frames
+        return
     consumed = {st.src for st in stages}
     for st in stages:
         src = frames[st.src]
@@ -183,12 +184,18 @@ def run_stages(stages, frames: dict[str, DataFrame], scope: Scope, root: str,
         out = CAT.with_layout_cols(out, n_buckets, st.time_col)
         if st.rule == CONV:
             out = scope.only(out)
-        if st.tier in scope.horizons:
-            out = out.filter(F.col("ts_day") >= F.lit(scope.horizons[st.tier][:10]).cast("date"))
         CAT.write_partitioned(out, root, st.table, sort_cols=st.sort_cols)
         if st.table in consumed:
             frames[st.table] = scope.read(root, st.table)
-    return frames
+
+
+def retire(root: str, retention: dict[str, str] | None) -> None:
+    """Drop each tier table's ``ts_day`` partitions older than its
+    stage's tier horizon in ``retention`` (tier → horizon); a filesystem
+    drop, so tier horizons are day-aligned by policy."""
+    for st in TIER_STAGES:
+        if st.tier in (retention or {}):
+            CAT.drop_partitions_before(root, st.table, retention[st.tier])
 
 
 def window_start(day: date, window: str) -> date:
@@ -253,12 +260,12 @@ def run_patterns(scope: Scope, root: str, n_buckets: int, m: int, window: str,
     return {name: float(n) for name, n in obs.get.items()}
 
 
-def certify(cp: CheckpointStore, scope: Scope, r1m: DataFrame, lineage_job: str,
+def certify(cp: CheckpointStore, scope: Scope, root: str, lineage_job: str,
             input_snapshot: str, carried=()) -> None:
-    """Record lineage for the scope's units of the 1m tier, then commit
-    them, and the ``carried`` units, under ``input_snapshot``."""
+    """Record lineage for the scope's units of the stored 1m tier, then
+    commit them, and the ``carried`` units, under ``input_snapshot``."""
     if scope.units:
-        cp.record_lineage(lineage_job, "1m", input_snapshot,
-                          content_hash(scope.only(r1m), LINEAGE_COLS))
+        r1m = scope.only(scope.read(root, "rollup_1m"))
+        cp.record_lineage(lineage_job, "1m", input_snapshot, content_hash(r1m, LINEAGE_COLS))
     if scope.units or carried:
         cp.commit(scope.units + sorted(carried), PIPELINE_JOB, "1m", input_snapshot)

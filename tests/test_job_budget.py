@@ -50,9 +50,16 @@ def test_ingest_and_repair_job_budgets(spark, spark_jobs, transcripts, split, tm
         spark, transcripts, late, out, input_snapshot="b_m", prior_snapshot="b_on",
         n_buckets=8))
     assert m["units_repaired"] > 0
+    # retention is a filesystem drop: a no-op resume that retires
+    # partitions runs no more jobs than one that does not
+    m, noop_retire = spark_jobs("budget_noop_retire", lambda: run_pipeline(
+        spark, transcripts, out, input_snapshot="b_m", n_buckets=8,
+        retention={"1m": "2024-01-03 00:00:00"}))
+    assert m["units_done"] == 0
     assert cold <= COLD_INGEST_JOBS, cold
     assert noop <= NOOP_RESUME_JOBS, noop
     assert repair <= REPAIR_JOBS, repair
+    assert noop_retire <= NOOP_RESUME_JOBS, noop_retire
 
 
 def test_partial_resume_job_budget(spark, spark_jobs, transcripts, tmp_path):

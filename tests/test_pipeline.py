@@ -19,6 +19,7 @@ from more_pattern_extraction_spark.plans.repair import affected_units, repair_la
 from more_pattern_extraction_spark.sources import catalog as CAT
 
 TABLES = ["rollup_1m", "distinct_1m", "rollup_1m_filled", "chunks_1m", "rollup_1h", "rollup_1d"]
+TABLES_1M = ["rollup_1m", "distinct_1m", "rollup_1m_filled", "chunks_1m"]
 
 
 @pytest.fixture()
@@ -41,6 +42,12 @@ def _table_digest(spark, root, name):
         )
         .collect()[0]
     )
+
+
+def _rows_before(spark, root, day):
+    """{table: rows before ``day``} of the 1m-resolution tables."""
+    return {t: CAT.read_table(spark, root, t).filter(f"ts_day < date '{day}'").count()
+            for t in TABLES_1M}
 
 
 def test_cold_run_and_noop_resume(spark, transcripts, out):
@@ -194,6 +201,18 @@ def test_retention(spark, transcripts, out):
     r1m = CAT.read_table(spark, out, "rollup_1m")
     assert r1m.filter("bucket_start < timestamp '2024-01-02'").count() == 0
     assert r1m.count() > 0
+    assert _rows_before(spark, out, "2024-01-02") == dict.fromkeys(TABLES_1M, 0)
+
+
+def test_noop_resume_applies_retention(spark, transcripts, out):
+    """Retention runs on every run: a resume that has nothing to write
+    still drops the partitions past the horizon it is given."""
+    run_pipeline(spark, transcripts, out, input_snapshot="s4", n_buckets=8)
+    assert _rows_before(spark, out, "2024-01-03")["rollup_1m"] > 0
+    m = run_pipeline(spark, transcripts, out, input_snapshot="s4", n_buckets=8,
+                     retention={"1m": "2024-01-03 00:00:00"})
+    assert m["units_done"] == 0
+    assert _rows_before(spark, out, "2024-01-03") == dict.fromkeys(TABLES_1M, 0)
 
 
 def test_null_ts_turn_belongs_to_no_unit(spark, transcripts, out, tmp_path):

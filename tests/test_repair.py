@@ -12,6 +12,7 @@ from more_pattern_extraction_spark.plans.repair import affected_units, repair_la
 from more_pattern_extraction_spark.sources import catalog as CAT
 
 TABLES = ["rollup_1m", "distinct_1m", "rollup_1m_filled", "chunks_1m", "rollup_1h", "rollup_1d"]
+TABLES_1M = ["rollup_1m", "distinct_1m", "rollup_1m_filled", "chunks_1m"]
 
 
 def _table_digest(spark, root, name):
@@ -130,13 +131,21 @@ def test_affected_units_bounds(spark, transcripts, split):
     assert late_units <= {(r["conv_bucket"], r["ts_day"]) for r in rows}
 
 
+def _rows_before(spark, root, horizon):
+    """{table: rows before the horizon's day} of the 1m-resolution tables."""
+    return {t: CAT.read_table(spark, root, t).filter(f"ts_day < date '{horizon[:10]}'").count()
+            for t in TABLES_1M}
+
+
 def test_repair_respects_retention(spark, transcripts, tmp_path):
     """A repair must not resurrect partitions retention already dropped
-    (the recompute reads raw, which still holds the old turns); units
-    older than the 1m horizon are skipped and counted."""
+    (the recompute reads raw, which still holds the old turns), and every
+    tier must equal a cold retained run: units older than the 1m horizon
+    are recomputed, so the coarser tiers take the late turn, and then
+    retired."""
     horizon = "2024-01-03 00:00:00"
     ret = {"1m": horizon}
-    # one late turn before the horizon (skipped), one after (repaired)
+    # one late turn before the horizon, one after
     old_pred = (F.col("conv_id") == "conv_00003") & (F.col("turn_idx") == 2)
     new_src = transcripts.filter(
         (F.col("conv_id") == "conv_00000") & (F.col("ts") >= horizon)
@@ -160,17 +169,19 @@ def test_repair_respects_retention(spark, transcripts, tmp_path):
         spark, transcripts, late, out, input_snapshot="sm",
         prior_snapshot="so", n_buckets=8, retention=ret,
     )
-    assert m["units_skipped_retention"] >= 1
     assert m["units_repaired"] >= 1
 
     # no resurrection: nothing before the horizon came back
     r1m = CAT.read_table(spark, out, "rollup_1m")
     assert r1m.filter(f"ts_day < date '{horizon[:10]}'").count() == 0
+    assert _rows_before(spark, out, horizon) == dict.fromkeys(TABLES_1M, 0)
 
     # the raw-derived tier matches a cold retained run exactly
     assert _table_digest(spark, out, "rollup_1m") == _table_digest(
         spark, cold, "rollup_1m"
     )
+    for t in TABLES:
+        assert _table_digest(spark, out, t) == _table_digest(spark, cold, t), t
 
 
 def test_repair_pattern_stage_equals_cold(spark, transcripts, split, tmp_path):
@@ -251,11 +262,12 @@ def test_locf_carry_past_next_day_is_repaired(spark, tmp_path):
 
 def test_repair_all_outside_retention_still_certifies(spark, transcripts, tmp_path):
     """ADVICE r06 #3 regression: when every late unit is outside the
-    retention horizon the early return must still carry the prior
-    snapshot's completed units forward under the merged snapshot, so a
-    follow-up resume is a no-op instead of a full recompute."""
+    retention horizon the repair must still carry the prior snapshot's
+    completed units forward under the merged snapshot, so a follow-up
+    resume is a no-op instead of a full recompute, and must leave no row
+    from before the horizon."""
     # mid-range horizon: the short conv_00003 (span ~a day from the fixture
-    # start) falls entirely before it — every late unit is skipped — while
+    # start) falls entirely before it — every late unit is retired — while
     # the hot conversation keeps post-horizon units so the tier tables stay
     # non-empty
     horizon = "2024-01-05 00:00:00"
@@ -267,7 +279,7 @@ def test_repair_all_outside_retention_still_certifies(spark, transcripts, tmp_pa
                  retention=ret)
     m = repair_late_turns(spark, transcripts, late, out, input_snapshot="sm",
                           prior_snapshot="so", n_buckets=8, retention=ret)
-    assert m["units_repaired"] == 0
+    assert _rows_before(spark, out, horizon) == dict.fromkeys(TABLES_1M, 0)
     assert m["units_carried"] > 0
     m2 = run_pipeline(spark, transcripts, out, input_snapshot="sm",
                       n_buckets=8, retention=ret)
