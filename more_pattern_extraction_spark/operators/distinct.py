@@ -25,8 +25,8 @@ KMV is *deterministic and relational*:
     [0, 1), ``E[distinct] = (k-1)/u_k`` (unbiased); when the sketch
     holds fewer than k hashes it IS the exact distinct set, so the
     estimate is exact below k.  Relative stderr ≈ 1/sqrt(k-2).
-  * **Oracle-checkable.**  md5 + string sort + integer Horner over hex
-    digits are ANSI-SQL; DuckDB re-derives the whole pipeline VALUE-
+  * **Oracle-checkable.**  md5 + string sort + an integer read of hex
+    digits are plain SQL; DuckDB re-derives the whole pipeline VALUE-
     LEVEL (an HLL register array cannot be reproduced in SQL — same
     reason sketch.py is a histogram and not a t-digest).
 
@@ -45,10 +45,23 @@ trailing windows (``kmv_sliding`` — rolling-DAU) and set overlap
 (``union_expr`` + inclusion-exclusion — day-over-day returning
 conversations).
 
-Hash-to-[0,1) mapping is Horner over the first 8 hex digits
-(``ascii`` arithmetic, integers < 2^32, exact in double; one final
-divide by 2^32) so Spark and DuckDB agree bit-for-bit — no libm, no
+Hash-to-[0,1) mapping reads the first 8 hex digits as an integer,
+``CAST(conv(substring(h, 1, 8), 16, 10) AS BIGINT)``, and divides once
+by 2^32.  The integer is below 2^32, so the BIGINT, its double and the
+power-of-two divide are all exact: the value equals a Horner sum over
+the digits bit for bit, which is how the DuckDB oracle derives it
+(``plans/oracles._kmv_u``), independently.  No libm, no
 platform-dependent parsing.
+
+Every output column of ``_pack_topk`` and ``kmv_estimate`` is one SQL
+expression (``F.expr``): a Column tree costs py4j commands per node.
+Measured in py4j commands sent to build, memory commands not counted:
+``kmv_estimate`` 817 as a Column tree, 8 now (the 8-digit Horner tree
+over ``ascii`` this mapping replaced took 733 on its own); and on the
+``transcripts`` test fixture ``kmv_estimate(kmv_cascade(...))`` (1m → 1d)
+over a stored ``distinct_1m`` 969, 88 now, 80 of them the cascade
+(``tests/test_job_budget.py``).  ``u_expr`` and ``estimate_expr`` also
+take a Column, for which they build a Column tree (``u_expr``: 50).
 
 Reference analogue: none (the reference is single-node and counts
 distincts in RAM, e.g. pandas ``nunique`` in
@@ -58,7 +71,7 @@ the same statistic at 10^12 turns, mirroring sketch.py's contract.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from more_pattern_extraction_spark.operators.rollup import bucket_expr, tier_seconds
@@ -75,18 +88,18 @@ def conv_hash(col) -> F.Column:
     return F.md5(c.cast("string").cast("binary"))
 
 
+def _u_sql(h: str) -> str:
+    return f"CAST(conv(substring({h}, 1, 8), 16, 10) AS BIGINT) / 4294967296.0D"
+
+
 def u_expr(h) -> F.Column:
-    """Map a lowercase md5 hex string to [0, 1): Horner over the first 8
-    hex digits via ``ascii`` arithmetic (exact integers < 2^32), one
-    final divide by 2^32.  Bit-identical in any engine with ascii/substr."""
-    acc = None
-    for i in range(1, 9):
-        code = F.ascii(F.substring(h, i, 1))
-        # long arithmetic: the Horner product reaches 16^8 > int32, and
-        # non-ANSI Spark would wrap int overflow silently
-        digit = (code - F.when(code >= 97, F.lit(87)).otherwise(F.lit(48))).cast("long")
-        acc = digit if acc is None else acc * F.lit(16) + digit
-    return acc.cast("double") / F.lit(4294967296.0)
+    """Map a lowercase md5 hex string to [0, 1): the first 8 hex digits
+    read as an integer (``conv`` to base 10, below 2^32, so exact in a
+    BIGINT and in a double), one final divide by 2^32.  ``h`` is a column
+    name or SQL text, which builds one SQL expression, or a Column."""
+    if isinstance(h, str):
+        return F.expr(_u_sql(h))
+    return F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") / F.lit(4294967296.0)
 
 
 def _pack_topk(pairs: DataFrame, k: int, part_cols: tuple[str, ...] = ()) -> DataFrame:
@@ -97,13 +110,13 @@ def _pack_topk(pairs: DataFrame, k: int, part_cols: tuple[str, ...] = ()) -> Dat
     (e.g. ``conv_bucket``) for persisted PARTIAL sketches — the global
     sketch is recovered exactly by merging partials (module docstring)."""
     keys = [*part_cols, "bucket_start"]
-    w = Window.partitionBy(*keys).orderBy("h")
+    rank = f"row_number() OVER (PARTITION BY {', '.join(keys)} ORDER BY h)"
     return (
-        pairs.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
+        pairs.withColumn("_rn", F.expr(rank))
+        .filter(f"_rn <= {k}")
         .drop("_rn")
         .groupBy(*keys)
-        .agg(F.array_sort(F.collect_list("h")).alias("conv_kmv"))
+        .agg(F.expr("array_sort(collect_list(h)) AS conv_kmv"))
     )
 
 
@@ -230,8 +243,14 @@ def kmv_sliding(
 def estimate_expr(arr, k: int) -> F.Column:
     """Column-level KMV estimate for a sketch array: exact ``size`` below
     k (the sketch IS the distinct set there), else the unbiased
-    ``(k-1)/u_k``.  Rounded to 6 per the oracle-parity convention."""
-    arr = F.col(arr) if isinstance(arr, str) else arr
+    ``(k-1)/u_k``.  Rounded to 6 per the oracle-parity convention.
+    ``arr`` is a column name or SQL text, which builds one SQL
+    expression, or a Column (``union_expr``)."""
+    if isinstance(arr, str):
+        return F.expr(
+            f"round(CASE WHEN size({arr}) < {k} THEN CAST(size({arr}) AS DOUBLE) "
+            f"ELSE {k - 1}.0D / ({_u_sql(f'element_at({arr}, {k})')}) END, 6)"
+        )
     size = F.size(arr)
     return F.round(
         F.when(size < k, size.cast("double")).otherwise(
@@ -263,6 +282,6 @@ def kmv_estimate(
 ) -> DataFrame:
     """Distinct-count estimate per bucket (``estimate_expr``).  Adds
     ``n_kmv`` (bigint) and ``out_col`` (double)."""
-    return kmv.withColumn("n_kmv", F.size("conv_kmv").cast("bigint")).withColumn(
+    return kmv.withColumn("n_kmv", F.expr("CAST(size(conv_kmv) AS BIGINT)")).withColumn(
         out_col, estimate_expr("conv_kmv", k)
     )

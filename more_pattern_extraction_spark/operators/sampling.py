@@ -14,8 +14,8 @@ those) and oracle-checkable (md5 is shared with DuckDB):
   per map task, not 10^9.  ``salt`` gives independent redraws.
 
 * ``hash_split`` — deterministic train/val/test assignment: map
-  ``md5(id || salt)`` to u ∈ [0, 1) (the same exact Horner arithmetic
-  as the KMV estimator, distinct.u_expr) and cut by cumulative
+  ``md5(id || salt)`` to u ∈ [0, 1) (the same exact integer read of
+  8 hex digits as the KMV estimator, distinct.u_expr) and cut by cumulative
   fractions.  A document's split NEVER changes as the corpus grows —
   the property that keeps eval sets uncontaminated across dataset
   versions — and membership is recomputable from the id alone.

@@ -36,6 +36,17 @@ Why a histogram and not a t-digest/KLL:
   so DuckDB can verify it VALUE-LEVEL (a t-digest's internals cannot be
   reproduced in SQL).
 
+Each output column of ``sketch_cascade`` and ``sketch_quantile`` is one
+SQL expression (``selectExpr``/``F.expr``, SQL lambdas for the
+``aggregate`` and ``map_zip_with`` folds): a Column tree costs py4j
+commands per node, and at dashboard sizes building and planning a query
+costs more CPU than running it.  Measured on the ``transcripts`` test
+fixture, py4j commands sent to build ``sketch_quantile(sketch_cascade(
+...))`` (1h → 1d) over a stored ``rollup_1h``: 704 as Column lambdas,
+38 now (``tests/test_job_budget.py``).  Literals are written as doubles
+(``0.95D``): a bare ``0.95`` is a DECIMAL in Spark SQL and would change
+the ``ceil(q·n)`` the oracle matches.
+
 Reference analogue: quantile thresholding A11
 (``/root/reference/modules/underperformance_estimator.py:41``,
 ``np.quantile`` over an in-RAM array — exact because single-node; the
@@ -85,15 +96,6 @@ def bin_expr(col) -> F.Column:
     )
 
 
-def rep_expr(bin_col) -> F.Column:
-    """Representative value of a bin: geometric midpoint of its edges
-    (bin 0 → LO).  Monotone in bin id."""
-    b = F.col(bin_col) if isinstance(bin_col, str) else bin_col
-    return F.when(b <= 0, F.lit(LO)).otherwise(
-        F.lit(LO) * F.pow(F.lit(2.0), (b.cast("double") - 0.5) / F.lit(float(BPO)))
-    )
-
-
 def sketch_from_raw(
     turns: DataFrame, tier: str = "1m", value_col: str = "latency"
 ) -> DataFrame:
@@ -122,6 +124,15 @@ def sketch_from_raw(
     )
 
 
+#: ``sketch_cascade``'s fold: the per-bin sum of a coarse bucket's child
+#: maps, entries sorted by bin
+_MERGE_SQL = (
+    "map_from_entries(array_sort(map_entries(aggregate(_maps, "
+    "CAST(map() AS MAP<INT, BIGINT>), "
+    "(acc, m) -> map_zip_with(acc, m, (_k, v1, v2) -> coalesce(v1, 0) + coalesce(v2, 0))))))"
+)
+
+
 def sketch_cascade(sk: DataFrame, to_tier: str) -> DataFrame:
     """Merge finer-tier sketches into a coarser tier — EXACTLY equal to
     building the sketch from raw at the coarse tier (per-value binning;
@@ -135,35 +146,38 @@ def sketch_cascade(sk: DataFrame, to_tier: str) -> DataFrame:
     per cascade hop because HashPartitioning(conv, bucket, bin) cannot
     serve the (conv, bucket) re-pack.  Entry order is canonicalized by
     sorting, and per-bin sums are order-independent, so the packed map is
-    bit-identical to the old form's."""
+    bit-identical to the old form's.
+
+    Each column is one SQL expression (module docstring: py4j cost)."""
     unit = TIERS[to_tier]
     # NULL/empty child sketches (a tier row whose bucket had no non-null
     # latencies gets a NULL map from attach_sketch_p95's left join) must
     # not produce a coarse row — the old explode form dropped them
     # implicitly (explode of NULL/empty emits no rows), the grouped form
     # needs the explicit filter (size(NULL) is -1, so > 0 covers both)
-    grouped = (
-        sk.filter(F.size("latency_sketch") > 0)
-        .groupBy(
-            "conv_id", F.date_trunc(unit, F.col("bucket_start")).alias("bucket_start")
-        )
-        .agg(F.collect_list("latency_sketch").alias("_maps"))
+    return (
+        sk.filter("size(latency_sketch) > 0")
+        .groupBy("conv_id", F.expr(f"date_trunc('{unit}', bucket_start) AS bucket_start"))
+        .agg(F.expr("collect_list(latency_sketch) AS _maps"))
+        .selectExpr("conv_id", "bucket_start", f"{_MERGE_SQL} AS latency_sketch")
     )
-    merged = F.aggregate(
-        F.col("_maps"),
-        F.create_map().cast("map<int,bigint>"),
-        lambda acc, m: F.map_zip_with(
-            acc, m,
-            lambda _k, v1, v2: F.coalesce(v1, F.lit(0)) + F.coalesce(v2, F.lit(0)),
-        ),
-    )
-    return grouped.select(
-        "conv_id",
-        "bucket_start",
-        F.map_from_entries(F.array_sort(F.map_entries(merged))).alias(
-            "latency_sketch"
-        ),
-    )
+
+
+def _dbl(x: float) -> str:
+    """A SQL double literal: a bare ``0.95`` is a DECIMAL in Spark SQL."""
+    return f"{float(x)!r}D"
+
+
+#: the sorted entries of a sketch map
+_ENTRIES_SQL = "array_sort(map_entries(latency_sketch))"
+
+
+def _rep_sql(b: str) -> str:
+    """SQL of a bin's representative value: the geometric midpoint of its
+    edges (bin 0 → LO).  Monotone in bin id."""
+    lo = _dbl(LO)
+    return (f"CASE WHEN {b} <= 0 THEN {lo} "
+            f"ELSE {lo} * pow(2.0D, (CAST({b} AS DOUBLE) - 0.5D) / {_dbl(BPO)}) END")
 
 
 def sketch_quantile(sk: DataFrame, q: float = 0.95, out_col: str = "latency_p95_sketch") -> DataFrame:
@@ -172,33 +186,24 @@ def sketch_quantile(sk: DataFrame, q: float = 0.95, out_col: str = "latency_p95_
 
     Picks the bin holding the k-th smallest value, ``k = max(1,
     ceil(q·n))`` (both engines evaluate ``ceil`` on the same IEEE
-    product, so the oracle agrees bit-for-bit), and reports its
-    representative value.  Error bound: module docstring.
+    product, so the oracle agrees bit-for-bit; ``q`` enters as a double
+    literal, never a DECIMAL), and reports its representative value.
+    Error bound: module docstring.
     Adds ``latency_cnt_sketch`` (total count) and ``out_col``.
     """
-    entries = F.array_sort(F.map_entries("latency_sketch"))
-    total = F.aggregate(
-        entries, F.lit(0).cast("bigint"), lambda acc, e: acc + e["value"]
-    )
-    sk = sk.withColumn("latency_cnt_sketch", total)
-    k = F.greatest(F.lit(1).cast("bigint"),
-                   F.ceil(F.lit(float(q)) * F.col("latency_cnt_sketch")))
-    # fold: carry (cum, chosen_bin); first bin whose cumulative count
+    total = f"aggregate({_ENTRIES_SQL}, 0L, (acc, e) -> acc + e.value)"
+    k = f"greatest(1L, ceil({_dbl(q)} * latency_cnt_sketch))"
+    # fold: carry (cum, chosen bin); the first bin whose cumulative count
     # reaches k wins (bin = -1 → not chosen yet)
-    picked = F.aggregate(
-        entries,
-        F.struct(
-            F.lit(0).cast("bigint").alias("cum"), F.lit(-1).alias("bin")
-        ),
-        lambda acc, e: F.struct(
-            (acc["cum"] + e["value"]).alias("cum"),
-            F.when(acc["bin"] >= 0, acc["bin"])
-            .when(acc["cum"] + e["value"] >= k, e["key"])
-            .otherwise(F.lit(-1))
-            .alias("bin"),
-        ),
-    )["bin"]
-    return sk.withColumn(out_col, rep_expr(picked))
+    picked = (
+        f"aggregate({_ENTRIES_SQL}, named_struct('cum', 0L, 'bin', -1), "
+        "(acc, e) -> named_struct('cum', acc.cum + e.value, 'bin', "
+        f"CASE WHEN acc.bin >= 0 THEN acc.bin WHEN acc.cum + e.value >= {k} THEN e.key "
+        "ELSE -1 END)).bin"
+    )
+    return sk.withColumn("latency_cnt_sketch", F.expr(total)).withColumn(
+        out_col, F.expr(_rep_sql(picked))
+    )
 
 
 def attach_sketch_p95(

@@ -1219,7 +1219,9 @@ def ivf_topk_sql(centroids, k: int = 3, n_probe: int = 3,
 def _kmv_u(h: str) -> str:
     """Horner over the first 8 hex digits of md5 expression ``h`` → [0, 1).
     BIGINT accumulator (the product reaches 16^8 > int32 — DuckDB raises on
-    int32 overflow), one exact divide by 2^32; mirrors operators/distinct.u_expr."""
+    int32 overflow), one exact divide by 2^32.  The engine reads the same
+    digits with ``conv`` (operators/distinct.u_expr); this Horner sum is an
+    independent derivation of the same exact value."""
     def digit(i: int) -> str:
         a = f"ascii(substr({h}, {i}, 1))"
         return f"CAST({a} - CASE WHEN {a} >= 97 THEN 87 ELSE 48 END AS BIGINT)"

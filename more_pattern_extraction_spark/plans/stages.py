@@ -33,7 +33,8 @@ units (``window_start``).
 
 ``retire`` is the one retention step: ingest and repair call it after
 their writes, and it drops each tier table's partitions past its stage's
-tier horizon, whatever wrote them.
+tier horizon, whatever wrote them, and the pattern partitions whose whole
+window lies before the 1m horizon.
 
 Scope rules:
 
@@ -52,6 +53,7 @@ the finest tier.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 from datetime import date, timedelta
 from itertools import groupby
@@ -192,10 +194,28 @@ def run_stages(stages, frames: dict[str, DataFrame], scope: Scope, root: str,
 def retire(root: str, retention: dict[str, str] | None) -> None:
     """Drop each tier table's ``ts_day`` partitions older than its
     stage's tier horizon in ``retention`` (tier → horizon); a filesystem
-    drop, so tier horizons are day-aligned by policy."""
+    drop, so tier horizons are day-aligned by policy.
+
+    The pattern tables follow the 1m horizon, which bounds the grid they
+    are computed from: an ``mp_{window}`` partition is keyed on its
+    window's first day, so it goes when its whole window lies before the
+    horizon, ``ts_day < window_start(horizon, window)``.  ``discords`` and
+    ``regimes`` hold the windows of every ``mp_`` table and take the
+    earliest of their cuts."""
+    retention = retention or {}
     for st in TIER_STAGES:
-        if st.tier in (retention or {}):
+        if st.tier in retention:
             CAT.drop_partitions_before(root, st.table, retention[st.tier])
+    if "1m" not in retention or not os.path.isdir(root):
+        return
+    horizon = date.fromisoformat(retention["1m"][:10])
+    cuts = {t: window_start(horizon, t[len("mp_"):])
+            for t in os.listdir(root) if t.startswith("mp_")}
+    for t, cut in cuts.items():
+        CAT.drop_partitions_before(root, t, cut.isoformat())
+    if cuts:
+        for t in ("discords", "regimes"):
+            CAT.drop_partitions_before(root, t, min(cuts.values()).isoformat())
 
 
 def window_start(day: date, window: str) -> date:

@@ -76,14 +76,34 @@ def test_estimator_exact_below_k_and_bounded_above(spark):
 
 
 def test_u_expr_matches_python_hex_parse(spark):
-    """Horner ascii-arithmetic == int(hex[:8], 16) / 2^32 exactly."""
-    df = spark.createDataFrame(
-        [("0000000100000000",), ("ffffffff00000000",), ("89abcdef12345678",)],
-        ["h"],
-    )
-    got = [r.u for r in df.select(DK.u_expr(F.col("h")).alias("u")).collect()]
-    want = [int(h, 16) / 2**32 for h in ("00000001", "ffffffff", "89abcdef")]
+    """The first 8 hex digits read by ``conv`` == int(hex[:8], 16) / 2^32
+    exactly, from a column name and from a Column, at both ends of the
+    range."""
+    hs = ["0000000100000000", "ffffffff00000000", "89abcdef12345678",
+          "00000000ffffffff", "0000000000000000", "ffffffffffffffff"]
+    df = spark.createDataFrame([(h,) for h in hs], ["h"])
+    want = [int(h[:8], 16) / 2**32 for h in hs]
+    for h in (F.col("h"), "h"):
+        got = [r.u for r in df.select(DK.u_expr(h).alias("u")).collect()]
+        assert got == want
+
+
+@pytest.mark.parametrize("k", [2, 5, 16])
+def test_estimate_at_sizes_around_k(spark, k):
+    """``kmv_estimate`` at sketch sizes k-1, k and k+1 against the Python
+    estimator: exact size below k, ``(k-1)/u_k`` from the k-th hash at
+    and above it."""
+    import hashlib
+
+    hashes = sorted(hashlib.md5(f"conv_{i}".encode()).hexdigest() for i in range(k + 1))
+    arrays = [hashes[:n] for n in (k - 1, k, k + 1)]
+    df = spark.createDataFrame([(a,) for a in arrays], "conv_kmv array<string>")
+    got = [(r.n_kmv, r.distinct_convs_est) for r in DK.kmv_estimate(df, k).collect()]
+    want = [(len(a), float(len(a)) if len(a) < k
+             else round((k - 1) / (int(a[k - 1][:8], 16) / 2**32), 6)) for a in arrays]
     assert got == want
+    by_col = [r.e for r in df.select(DK.estimate_expr(F.col("conv_kmv"), k).alias("e")).collect()]
+    assert by_col == [e for _n, e in want]
 
 
 def test_cascade_validates_tier_multiple(spark):

@@ -9,8 +9,12 @@ moves."""
 import pytest
 from pyspark.sql import functions as F
 
+from more_pattern_extraction_spark.operators import chunks as CH
+from more_pattern_extraction_spark.operators import distinct as DK
+from more_pattern_extraction_spark.operators import sketch as SK
 from more_pattern_extraction_spark.plans.pipeline import run_pattern_stage, run_pipeline
 from more_pattern_extraction_spark.plans.repair import repair_late_turns
+from more_pattern_extraction_spark.sources import catalog as CAT
 
 # measured: 29 / 2 / 31 / 33 jobs (a no-op resume runs only the
 # unit-list collect; 4 of a partial resume's jobs are the collect of the
@@ -26,6 +30,14 @@ PARTIAL_RESUME_JOBS = 34
 # units a late-turn repair rewrote
 PATTERN_STAGE_JOBS = 8
 REPAIR_PATTERN_JOBS = 8
+# measured: the four dashboard read shapes of perfbench's tier_read, one
+# conversation-day each (the KMV count reads one day of every bucket)
+READ_JOBS = {"range_1m": 2, "sketch_p95_1h": 2, "chunk_decode": 1, "distinct_1d": 3}
+# measured: py4j commands the driver sends to build (not run) the sketch
+# p95 and the KMV count over a stored tier frame: 38 and 88, against 704
+# and 969 when the folds and the hash mapping were Column lambdas
+SKETCH_READ_COMMANDS = 45
+KMV_READ_COMMANDS = 100
 
 
 @pytest.fixture()
@@ -86,3 +98,70 @@ def test_pattern_stage_job_budgets(spark, spark_jobs, transcripts, split, tmp_pa
     assert m["windows_repaired"] > 0
     assert cold <= PATTERN_STAGE_JOBS, cold
     assert repair <= REPAIR_PATTERN_JOBS, repair
+
+
+@pytest.fixture()
+def py4j_commands(monkeypatch):
+    """``py4j_commands(fn)`` runs ``fn`` and returns its result and the
+    number of py4j commands the driver sent meanwhile.  Memory commands
+    are not counted: they release JVM objects that Python dropped earlier,
+    and arrive in bursts of a few hundred whenever py4j flushes them."""
+    from py4j.clientserver import ClientServerConnection
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    sent = [0]
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        sent[0] += not command.startswith(MEMORY_COMMAND_NAME)
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+
+    def run(fn):
+        n0 = sent[0]
+        out = fn()
+        return out, sent[0] - n0
+
+    return run
+
+
+def test_dashboard_read_budgets(spark, spark_jobs, py4j_commands, transcripts, tmp_path):
+    out = str(tmp_path / "out")
+    run_pipeline(spark, transcripts, out, input_snapshot="r_on", n_buckets=8)
+    r = (CAT.read_table(spark, out, "rollup_1h")
+         .select("conv_id", "conv_bucket", "ts_day").orderBy("conv_id", "ts_day").first())
+
+    def one_day(table):
+        return CAT.read_table(spark, out, table).filter(
+            (F.col("conv_bucket") == r.conv_bucket) & (F.col("ts_day") == r.ts_day)
+            & (F.col("conv_id") == r.conv_id))
+
+    def sketch_p95():
+        hours = one_day("rollup_1h").select("conv_id", "bucket_start", "latency_sketch")
+        return SK.sketch_quantile(SK.sketch_cascade(hours, "1d"))
+
+    def kmv_count():
+        kmv = CAT.read_table(spark, out, "distinct_1m").filter(F.col("ts_day") == r.ts_day)
+        return DK.kmv_estimate(DK.kmv_cascade(kmv, "1d", from_tier="1m"))
+
+    reads = {
+        "range_1m": lambda: one_day("rollup_1m").filter(F.hour("bucket_start") < 12)
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("turn_cnt").alias("t")),
+        "sketch_p95_1h": sketch_p95,
+        "chunk_decode": lambda: CH.decode_chunks(one_day("chunks_1m")),
+        "distinct_1d": kmv_count,
+    }
+    jobs = {}
+    for name, build in reads.items():
+        rows, jobs[name] = spark_jobs(f"budget_read_{name}", lambda: build().collect())
+        assert rows, name
+    assert jobs == READ_JOBS, jobs
+
+    hours = one_day("rollup_1h").select("conv_id", "bucket_start", "latency_sketch")
+    kmv = CAT.read_table(spark, out, "distinct_1m")
+    _df, sketch_cmds = py4j_commands(lambda: SK.sketch_quantile(SK.sketch_cascade(hours, "1d")))
+    _df, kmv_cmds = py4j_commands(
+        lambda: DK.kmv_estimate(DK.kmv_cascade(kmv, "1d", from_tier="1m")))
+    assert sketch_cmds <= SKETCH_READ_COMMANDS, sketch_cmds
+    assert kmv_cmds <= KMV_READ_COMMANDS, kmv_cmds

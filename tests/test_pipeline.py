@@ -215,6 +215,51 @@ def test_noop_resume_applies_retention(spark, transcripts, out):
     assert _rows_before(spark, out, "2024-01-03") == dict.fromkeys(TABLES_1M, 0)
 
 
+def test_noop_resume_retires_pattern_tables(spark, transcripts, out):
+    """Retention reaches the pattern tables: a resume given a 1m horizon
+    drops every pattern partition whose whole window lies before it and
+    leaves the files of later partitions as they were."""
+    from more_pattern_extraction_spark.plans.pipeline import run_pattern_stage
+
+    pattern_tables = ["mp_day", "discords", "regimes"]
+    horizon = date(2024, 1, 3)
+
+    def rows_before():
+        return {t: CAT.read_table(spark, out, t).filter(f"ts_day < date '{horizon}'").count()
+                for t in pattern_tables}
+
+    def later_files():
+        return {t: {p: f for p, f in _partition_files(out, t).items()
+                    if date.fromisoformat(p.split("ts_day=")[1]) >= horizon}
+                for t in pattern_tables}
+
+    run_pipeline(spark, transcripts, out, input_snapshot="s5", n_buckets=8)
+    run_pattern_stage(spark, out, n_buckets=8, m=16, window="day", k=2)
+    assert all(rows_before().values()), rows_before()
+    kept = later_files()
+    assert all(kept.values())
+    m = run_pipeline(spark, transcripts, out, input_snapshot="s5", n_buckets=8,
+                     retention={"1m": f"{horizon} 00:00:00"})
+    assert m["units_done"] == 0
+    assert rows_before() == dict.fromkeys(pattern_tables, 0)
+    assert later_files() == kept
+
+
+def test_retire_keeps_pattern_windows_that_reach_the_horizon(tmp_path):
+    """A week-window pattern partition is keyed on its Monday: it goes
+    only when its whole week lies before the 1m horizon, and the shared
+    ``discords`` and ``regimes`` tables follow the same cut."""
+    root = str(tmp_path)
+    mondays = ["2023-12-25", "2024-01-01", "2024-01-08"]
+    for t in ("mp_week", "discords", "regimes"):
+        for d in mondays:
+            os.makedirs(os.path.join(root, t, "conv_bucket=0", f"ts_day={d}"))
+    ST.retire(root, {"1m": "2024-01-03 00:00:00"})
+    for t in ("mp_week", "discords", "regimes"):
+        assert sorted(os.listdir(os.path.join(root, t, "conv_bucket=0"))) == [
+            "ts_day=2024-01-01", "ts_day=2024-01-08"], t
+
+
 def test_null_ts_turn_belongs_to_no_unit(spark, transcripts, out, tmp_path):
     """A turn with a NULL ``ts`` has no ``ts_day``, so it belongs to no
     unit: ingest and a no-op resume run, and every tier table equals a run
