@@ -129,7 +129,7 @@ def kmv_from_raw(
     part_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Per-bucket KMV sketch at the finest tier, from raw turns: the
-    raw-turn reference of the KMV algebra and stream == batch tests.  The
+    raw-turn reference of the KMV algebra in the merge-identity tests.  The
     pipeline and the driver contract build from the tier row instead
     (``kmv_from_rollup``).
 

@@ -92,8 +92,8 @@ def turn_features(df: DataFrame, latency_col: str | None = None) -> DataFrame:
     (plans/partitioning.HOT_KEY_ROWS).  That one pruned single-column
     aggregate (no shuffle) runs up front and picks the plain window
     unless some conversation crosses the threshold.  Eager: one Spark
-    job at plan-build time, so never called on streaming frames
-    (streaming rollup derives latency upstream).
+    job at plan-build time, so never called on streaming frames (a
+    stream's epochs reach it through the repair, streaming/rollup_stream.py).
     """
     if latency_col and latency_col in df.columns:
         lat = F.col(latency_col)

@@ -227,22 +227,3 @@ def attach_sketch_p95(
         "latency_cnt_sketch", "latency_p95_sketch",
     )
     return rollup_df.join(cols, ["conv_id", "bucket_start"], "left")
-
-
-def pack_entries(entries: DataFrame) -> DataFrame:
-    """(conv_id, bucket_start, bin, cnt) entry rows → the packed sketch
-    map column.  Batch-side counterpart of the streaming builder
-    (streaming/rollup_stream.streaming_sketch_entries_1m): entry rows
-    from any number of micro-batches/partials first re-sum by bin (the
-    exact merge), then pack — identical to sketch_from_raw on the same
-    underlying turns."""
-    return (
-        entries.groupBy("conv_id", "bucket_start", "bin")
-        .agg(F.sum("cnt").alias("cnt"))
-        .groupBy("conv_id", "bucket_start")
-        .agg(
-            F.map_from_entries(
-                F.array_sort(F.collect_list(F.struct("bin", "cnt")))
-            ).alias("latency_sketch")
-        )
-    )

@@ -1,8 +1,8 @@
-"""Incremental late-data repair (the "lambda repair" the streaming tier
-defers to, streaming/rollup_stream.py module docstring): turns that
-arrive after the stream watermark dropped them are reconciled into the
-BATCH tier tables by recomputing only the partitions their values can
-reach — not the table.
+"""Incremental late-data repair: turns added to the raw table after its
+tiers were written (late turns, or a stream epoch's turns, which
+streaming/rollup_stream.py feeds here) are reconciled into the tier
+tables by recomputing only the partitions their values can reach — not
+the table.
 
 Why a bounded unit set is provable
 ----------------------------------

@@ -6,6 +6,8 @@ These bounds are the measured counts on the ``transcripts`` fixture; a
 change that adds a job must either remove another or say why the budget
 moves."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,6 +17,7 @@ from more_pattern_extraction_spark.operators import sketch as SK
 from more_pattern_extraction_spark.plans.pipeline import run_pattern_stage, run_pipeline
 from more_pattern_extraction_spark.plans.repair import repair_late_turns
 from more_pattern_extraction_spark.sources import catalog as CAT
+from more_pattern_extraction_spark.streaming.rollup_stream import stream_rollup_to_table
 
 # measured: 29 / 2 / 31 / 33 jobs (a no-op resume runs only the
 # unit-list collect; 4 of a partial resume's jobs are the collect of the
@@ -38,6 +41,13 @@ READ_JOBS = {"range_1m": 2, "sketch_p95_1h": 2, "chunk_decode": 1, "distinct_1d"
 # and 969 when the folds and the hash mapping were Column lambdas
 SKETCH_READ_COMMANDS = 45
 KMV_READ_COMMANDS = 100
+# measured: 39 jobs for one stream epoch (the fixture's turns as one
+# file, into an empty root: 2 for the epoch's append, 37 for the repair
+# over its units) and 0 for that epoch replayed by a fresh stream
+# checkpoint (its dir and its ledger rows exist, so the sink reads
+# nothing)
+STREAM_EPOCH_JOBS = 39
+REPLAYED_EPOCH_JOBS = 0
 
 
 @pytest.fixture()
@@ -98,6 +108,24 @@ def test_pattern_stage_job_budgets(spark, spark_jobs, transcripts, split, tmp_pa
     assert m["windows_repaired"] > 0
     assert cold <= PATTERN_STAGE_JOBS, cold
     assert repair <= REPAIR_PATTERN_JOBS, repair
+
+
+def test_stream_epoch_job_budgets(spark, transcripts, tmp_path):
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    transcripts.coalesce(1).write.parquet(src)
+    schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+
+    def epoch_jobs(ckpt):
+        # a streaming query runs its batches under a job group named by its run id
+        q = stream_rollup_to_table(spark, src, schema, out, n_buckets=8,
+                                   checkpoint_dir=str(tmp_path / ckpt))
+        return len(spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId)))
+
+    epoch = epoch_jobs("ckpt")
+    assert os.listdir(f"{out}/transcripts") == ["epoch=0"]
+    replay = epoch_jobs("ckpt_replay")
+    assert epoch <= STREAM_EPOCH_JOBS, epoch
+    assert replay <= REPLAYED_EPOCH_JOBS, replay
 
 
 @pytest.fixture()

@@ -1,5 +1,11 @@
 """stats operators (A4/A5/A9), readers (S6/S7), subspace (W12), and the
-Structured-Streaming rollup (stream result == batch rollup)."""
+Structured-Streaming feed of the tier DAG (the stream's tier tables equal
+a cold run on the same turns; exactly-once across a crash, a replay and
+a compaction)."""
+
+import glob
+import os
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -90,34 +96,6 @@ def test_ragged_csv_reader(spark, tmp_path):
     assert [r.curve_len for r in rows] == [3, 4, 1]
     assert rows[1].curve[1] is None  # sentinel → NULL
     assert rows[0].curve == [1.5, 2.5, 3.5]
-
-
-def test_streaming_rollup_matches_batch(spark, transcripts, tmp_path):
-    from more_pattern_extraction_spark.streaming.rollup_stream import (
-        run_stream_to_memory,
-    )
-
-    src = str(tmp_path / "stream_src")
-    transcripts.write.mode("overwrite").parquet(src)
-    schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    run_stream_to_memory(spark, src, schema, query_name="t_stream")
-    got = (
-        spark.sql("select conv_id, bucket_start, turn_cnt, tool_call_cnt from t_stream")
-        .orderBy("conv_id", "bucket_start")
-        .toPandas()
-    )
-    exp = (
-        transcripts.groupBy(
-            "conv_id", F.date_trunc("minute", "ts").alias("bucket_start")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("turn_cnt"),
-            F.sum(F.col("tool").isNotNull().cast("int")).alias("tool_call_cnt"),
-        )
-        .orderBy("conv_id", "bucket_start")
-        .toPandas()
-    )
-    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
 
 
 def test_fit_polynomial_models_matches_numpy(spark):
@@ -239,74 +217,6 @@ def test_nn_stats_counts_and_majority(spark):
     assert row.majority == "None" and row.matching_maj is False
 
 
-def test_streaming_locf_state_survives_microbatches(spark, tmp_path):
-    """The LOCF carry value crosses micro-batch boundaries: batch 2 opens
-    with NULLs that must inherit batch 1's last observation."""
-    import os
-    import time as _time
-
-    from more_pattern_extraction_spark.streaming.stateful_gapfill import streaming_locf
-
-    src = tmp_path / "locf_src"
-    src.mkdir()
-    b1 = pd.DataFrame(
-        {
-            "conv_id": ["c1"] * 3 + ["c2"] * 2,
-            "ts": pd.to_datetime(
-                ["2024-01-01 00:00", "2024-01-01 00:01", "2024-01-01 00:02",
-                 "2024-01-01 00:00", "2024-01-01 00:01"]
-            ),
-            "value": [1.0, None, 3.0, 7.0, None],
-        }
-    )
-    b2 = pd.DataFrame(
-        {
-            "conv_id": ["c1"] * 2 + ["c2"],
-            "ts": pd.to_datetime(
-                ["2024-01-01 00:03", "2024-01-01 00:04", "2024-01-01 00:02"]
-            ),
-            "value": [None, 5.0, None],
-        }
-    )
-    spark.createDataFrame(b1).coalesce(1).write.parquet(str(src / "f1"))
-    _time.sleep(1.1)  # distinct mtimes → deterministic file order
-    spark.createDataFrame(b2).coalesce(1).write.parquet(str(src / "f2"))
-    files = sorted(str(p) for p in src.glob("*/**/*.parquet"))
-    flat = tmp_path / "flat"
-    flat.mkdir()
-    for i, f in enumerate(sorted(src.glob("f*/*.parquet"))):
-        os.system(f"cp {f} {flat}/{i:02d}.parquet")
-        os.utime(f"{flat}/{i:02d}.parquet", (1700000000 + i * 10, 1700000000 + i * 10))
-    stream = (
-        spark.readStream.schema("conv_id string, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(flat))
-    )
-    q = (
-        streaming_locf(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("locf_stream")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = (
-        spark.sql("select * from locf_stream")
-        .toPandas()
-        .sort_values(["conv_id", "ts"])
-        .reset_index(drop=True)
-    )
-    assert len(got) == 8
-    c1 = got[got.conv_id == "c1"].value_locf.tolist()
-    c2 = got[got.conv_id == "c2"].value_locf.tolist()
-    # c1: [1, locf 1, 3 | batch2: locf 3 (carried!), 5]
-    assert c1 == [1.0, 1.0, 3.0, 3.0, 5.0]
-    # c2: [7, locf 7 | batch2: locf 7 (carried!)]
-    assert c2 == [7.0, 7.0, 7.0]
-
-
 def test_results_csv_roundtrip(spark, tmp_path):
     """S8 result sink: scored frames written as CSV round-trip through the
     S7 loader (values + timestamps preserved)."""
@@ -341,297 +251,186 @@ def test_results_csv_roundtrip(spark, tmp_path):
     ).all()
 
 
-def test_streaming_locf_multichunk_batch_sorted_once(spark, tmp_path):
-    """A group whose micro-batch rows span MULTIPLE Arrow chunks must be
-    filled in event-time order, not chunk-arrival order: rows are written
-    ts-DESCENDING and maxRecordsPerBatch=4 forces 3 chunks of the single
-    12-row group, so per-chunk filling would emit NULLs/late carries.
-    (Regression test for the round-2 advisory.)"""
-    from more_pattern_extraction_spark.streaming.stateful_gapfill import streaming_locf
-
-    ts = pd.date_range("2024-01-01", periods=12, freq="1min")
-    vals = [10.0] + [None] * 5 + [20.0] + [None] * 5
-    pdf = pd.DataFrame({"conv_id": "c1", "ts": ts, "value": vals})
-    pdf = pdf.iloc[::-1].reset_index(drop=True)  # descending arrival order
-    src = tmp_path / "mc_src"
-    src.mkdir()
-    spark.createDataFrame(pdf).coalesce(1).write.parquet(str(src / "f1"))
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
-    try:
-        stream = (
-            spark.readStream.schema("conv_id string, ts timestamp, value double")
-            .parquet(str(src / "f1"))
-        )
-        q = (
-            streaming_locf(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("locf_mc")
-            .option("checkpointLocation", str(tmp_path / "mc_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    got = (
-        spark.sql("select * from locf_mc")
-        .toPandas()
-        .sort_values("ts")
-        .reset_index(drop=True)
-    )
-    assert got.value_locf.tolist() == [10.0] * 6 + [20.0] * 6
+STREAM_SCHEMA = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+TIER_TABLES = ["rollup_1m", "distinct_1m", "rollup_1m_filled", "chunks_1m", "rollup_1h",
+               "rollup_1d"]
 
 
-def test_streaming_sketch_entries_match_batch(spark, transcripts, tmp_path):
-    """Streaming sketch (one watermarked stateful agg producing sparse
-    (conv, bucket, bin, cnt) entries) packed batch-side must equal
-    sketch_from_raw on the same turns — the mergeable-sketch contract
-    carried into Structured Streaming."""
-    from more_pattern_extraction_spark.operators import rollup as R
-    from more_pattern_extraction_spark.operators import sketch as SK
-    from more_pattern_extraction_spark.streaming.rollup_stream import (
-        streaming_sketch_entries_1m,
-    )
-
-    feats = R.turn_features(transcripts)
-    src = str(tmp_path / "sk_stream_src")
-    feats.select(
-        "conv_id", "turn_idx", "role", "text", "tool", "ts", "latency"
-    ).write.mode("overwrite").parquet(src)
-    schema = ("conv_id string, turn_idx int, role string, text string, "
-              "tool string, ts timestamp, latency double")
-    stream = spark.readStream.schema(schema).parquet(src)
-    entries = streaming_sketch_entries_1m(stream)
-    q = (
-        entries.writeStream.outputMode("complete")
-        .format("memory").queryName("sk_stream").trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = SK.pack_entries(spark.sql("select * from sk_stream"))
-    exp = SK.sketch_from_raw(feats, "1m")
-    j = got.alias("g").join(exp.alias("e"), ["conv_id", "bucket_start"], "full")
-    ents = lambda side: F.array_sort(
-        F.map_entries(F.col(f"{side}.latency_sketch")))
-    n = j.count()
-    assert n == exp.count() == got.count() and n > 0
-    assert j.filter(
-        (ents("g") != ents("e"))
-        | F.col("g.latency_sketch").isNull() | F.col("e.latency_sketch").isNull()
-    ).count() == 0
+def _digest(df):
+    cols = sorted(df.columns)
+    return df.select(
+        F.sum(F.pmod(F.xxhash64(*[F.col(c).cast("string") for c in cols]),
+                     F.lit(1_000_000_007))).alias("h"),
+        F.count(F.lit(1)).alias("n")).collect()[0]
 
 
-def test_stream_tier_epoch_commit_late_drop_and_replay(spark, tmp_path):
-    """stream_rollup_to_table: epoch-dir commit protocol — finalized
-    groups land exactly once, the later-than-watermark row is dropped
-    (repair's job, plans/repair.py), and a full replay (fresh stream
-    checkpoint over committed epoch dirs) changes nothing."""
-    import glob
-    import os
-    import shutil
+def _tier_digests(spark, root):
+    from more_pattern_extraction_spark.sources import catalog as CAT
 
-    from more_pattern_extraction_spark.streaming.rollup_stream import (
-        read_stream_tier,
-        stream_rollup_to_table,
-    )
+    return {t: _digest(CAT.read_table(spark, root, t)) for t in TIER_TABLES}
 
-    schema = ("conv_id string, turn_idx int, role string, text string, "
-              "tool string, ts timestamp")
-    rows0 = [  # batch 0: day-1 traffic; max ts 10:01:10
-        ("a", 0, "user", "t", None, "2024-01-01 10:00:05"),
-        ("a", 1, "assistant", "t", "search", "2024-01-01 10:00:30"),
-        ("a", 2, "user", "t", None, "2024-01-01 10:01:10"),
-        ("b", 0, "user", "t", None, "2024-01-01 10:00:20"),
-    ]
-    rows1 = [  # batch 1: day-2 traffic; finalizes + evicts day-1 state
-        ("a", 4, "user", "t", None, "2024-01-02 09:30:10"),
-        ("b", 1, "assistant", "t", "code", "2024-01-02 09:30:40"),
-    ]
-    late = ("a", 3, "user", "late", None, "2024-01-01 10:00:50")
-    sentinel = [  # batch 2: flush row + a late day-1 turn whose window
-        # state was evicted in batch 1 → guaranteed watermark drop (a
-        # same-batch late row would still find live state and merge)
-        ("zz", 0, "user", "flush", None, "2024-01-05 00:00:00"),
-        late,
-    ]
 
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    raw_schema = schema.replace("ts timestamp", "ts string")
-    for i, rows in enumerate([rows0, rows1, sentinel]):
-        df = spark.createDataFrame(rows, raw_schema).withColumn(
-            "ts", F.col("ts").cast("timestamp"))
-        stage = str(tmp_path / f"stage{i}")
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(f"{stage}/part-*.parquet")[0]
-        shutil.move(part, os.path.join(src, f"f{i}.parquet"))  # mtime order = i
+def _raw_digest(spark, root):
+    from more_pattern_extraction_spark.streaming.rollup_stream import read_stream_turns
 
-    out = str(tmp_path / "tier")
-    stream_rollup_to_table(
-        spark, src, schema, out, watermark="0 seconds", n_buckets=4,
-        checkpoint_dir=str(tmp_path / "cp1"), max_files_per_trigger=1,
-    )
+    turns = read_stream_turns(spark, root, STREAM_SCHEMA)
+    return _digest(turns.drop("epoch", "conv_bucket", "ts_day"))
 
-    got = read_stream_tier(spark, out, "rollup_1m_stream")
-    assert "epoch" not in got.columns
-    with_epoch = spark.read.parquet(f"{out}/rollup_1m_stream")
-    n_epochs = with_epoch.select("epoch").distinct().count()
-    assert n_epochs >= 2  # finalized groups emitted across multiple epochs
 
-    # expected: everything except the dropped late row and the
-    # never-finalized sentinel window
-    exp_rows = rows0 + rows1
-    exp = (
-        spark.createDataFrame(exp_rows, raw_schema)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .groupBy("conv_id", F.date_trunc("minute", "ts").alias("bucket_start"))
-        .agg(F.count(F.lit(1)).alias("turn_cnt"),
-             F.sum(F.col("tool").isNotNull().cast("int")).alias("tool_call_cnt"))
-    )
-    got_n = got.select("conv_id", "bucket_start", "turn_cnt", "tool_call_cnt")
-    assert got_n.exceptAll(exp).count() == 0 and exp.exceptAll(got_n).count() == 0
-    # the late row was DROPPED, not merged: its minute keeps count 2
-    assert got.filter(
-        (F.col("conv_id") == "a")
-        & (F.col("bucket_start") == "2024-01-01 10:00:00")
-    ).head()["turn_cnt"] == 2
-    # each group exactly once across epochs (append-mode disjointness)
-    assert got.groupBy("conv_id", "bucket_start").count().filter("count > 1").count() == 0
-
-    # replay: fresh stream checkpoint reprocesses every file; every epoch
-    # dir already exists → all skipped, tier bit-unchanged
-    files_before = {
-        (p, os.stat(p).st_mtime_ns)
-        for p in glob.glob(f"{out}/rollup_1m_stream/**/*.parquet", recursive=True)
+def _files(root):
+    """{path: (size, mtime_ns)} of every file under ``root``."""
+    return {
+        os.path.join(d, f): (os.stat(os.path.join(d, f)).st_size,
+                             os.stat(os.path.join(d, f)).st_mtime_ns)
+        for d, _dirs, fs in os.walk(root) for f in fs
     }
-    stream_rollup_to_table(
-        spark, src, schema, out, watermark="0 seconds", n_buckets=4,
-        checkpoint_dir=str(tmp_path / "cp2"), max_files_per_trigger=1,
-    )
-    files_after = {
-        (p, os.stat(p).st_mtime_ns)
-        for p in glob.glob(f"{out}/rollup_1m_stream/**/*.parquet", recursive=True)
-    }
-    assert files_before == files_after
 
 
-def test_stream_tier_compaction_crash_safe(spark, transcripts, tmp_path):
-    """compact_stream_tier: epochs merge into one generation with the
-    tier unchanged; the crash window (generation committed, source dirs
-    not yet deleted) neither double-counts on read nor re-admits a
-    replayed absorbed epoch; a rerun finishes the deletes."""
-    import glob
-    import os
-    import shutil
+def _epochs(table):
+    return sorted(e for e in os.listdir(table) if e.startswith("epoch="))
 
-    from more_pattern_extraction_spark.streaming.rollup_stream import (
-        compact_stream_tier,
-        read_stream_tier,
-        stream_rollup_to_table,
-    )
 
-    # three files in chronological order, so the watermark advances per
-    # batch and finalized groups spread across several epochs
-    src = str(tmp_path / "src")
-    os.makedirs(src)
+@pytest.fixture(scope="module")
+def stream_files(spark, transcripts, tmp_path_factory):
+    """The fixture's turns as three Parquet files split at the ``ts``
+    tertiles, with one turn of the first tertile moved into the last file
+    (a late turn: older than everything the stream has seen); and the
+    root of a cold ``run_pipeline`` on all of them."""
+    from more_pattern_extraction_spark.plans.pipeline import run_pipeline
+
+    base = tmp_path_factory.mktemp("stream")
     tq = transcripts.withColumn("_tsd", F.col("ts").cast("double"))
-    q1, q2 = tq.approxQuantile("_tsd", [0.33, 0.66], 0.0)
-    slices = [tq.filter(F.col("_tsd") <= q1).drop("_tsd"),
-              tq.filter((F.col("_tsd") > q1) & (F.col("_tsd") <= q2)).drop("_tsd"),
-              tq.filter(F.col("_tsd") > q2).drop("_tsd")]
+    q1, q2 = tq.approxQuantile("_tsd", [1 / 3, 2 / 3], 0.0)
+    t = F.col("_tsd")
+    late = (F.col("conv_id") == "conv_00003") & (F.col("turn_idx") == 7)
+    assert tq.filter(late & (t <= q1)).count() == 1
+    slices = [tq.filter((t <= q1) & ~late), tq.filter((t > q1) & (t <= q2)),
+              tq.filter((t > q2) | late)]
+    files = []
     for i, sl in enumerate(slices):
-        stage = str(tmp_path / f"cstage{i}")
-        sl.coalesce(1).write.mode("overwrite").parquet(stage)
-        shutil.move(glob.glob(f"{stage}/part-*.parquet")[0],
-                    os.path.join(src, f"f{i}.parquet"))
-    schema = ("conv_id string, turn_idx int, role string, text string, "
-              "tool string, ts timestamp")
-    out = str(tmp_path / "tier")
-    stream_rollup_to_table(
-        spark, src, schema, out, watermark="0 seconds", n_buckets=4,
-        checkpoint_dir=str(tmp_path / "cp1"), max_files_per_trigger=1,
-    )
-    table = f"{out}/rollup_1m_stream"
-    epochs_before = sorted(e for e in os.listdir(table) if e.startswith("epoch="))
-    assert len(epochs_before) >= 2
+        stage = str(base / f"stage{i}")
+        sl.drop("_tsd").coalesce(1).write.parquet(stage)
+        files.append(glob.glob(f"{stage}/part-*.parquet")[0])
+    cold = str(base / "cold")
+    run_pipeline(spark, transcripts, cold, input_snapshot="cold", n_buckets=8)
+    return files, cold
 
-    def digest(df):
-        cols = sorted(df.columns)
-        return df.select(
-            F.sum(F.pmod(F.xxhash64(*[F.col(c).cast("string") for c in cols]),
-                         F.lit(1_000_000_007))).alias("h"),
-            F.count(F.lit(1)).alias("n")).collect()[0]
 
-    d0 = digest(read_stream_tier(spark, out, "rollup_1m_stream"))
+def _stream(spark, files, src, out, ckpt, idx=(0, 1, 2)):
+    """Add the ``idx`` files to the source dir ``src`` (mtimes in index
+    order) and stream every file not yet seen under ``ckpt``, one an
+    epoch, into ``out`` with 8 buckets."""
+    from more_pattern_extraction_spark.streaming.rollup_stream import stream_rollup_to_table
+
+    os.makedirs(src, exist_ok=True)
+    for i in idx:
+        dst = os.path.join(src, f"f{i}.parquet")
+        shutil.copy(files[i], dst)
+        os.utime(dst, (1_700_000_000 + 10 * i,) * 2)
+    return stream_rollup_to_table(spark, str(src), STREAM_SCHEMA, out, n_buckets=8,
+                                  checkpoint_dir=str(ckpt), max_files_per_trigger=1)
+
+
+def test_streaming_rollup_matches_batch(spark, transcripts, stream_files, tmp_path):
+    """Three epochs, the last carrying a late turn: every tier table the
+    stream writes equals a cold run on the same turns, and the last
+    epoch's snapshot certifies them all (a resume there runs 0 units)."""
+    from more_pattern_extraction_spark.plans.pipeline import run_pipeline
+
+    files, cold = stream_files
+    out = str(tmp_path / "out")
+    _stream(spark, files, tmp_path / "src", out, tmp_path / "ckpt")
+    assert _epochs(f"{out}/transcripts") == ["epoch=0", "epoch=1", "epoch=2"]
+    assert _tier_digests(spark, out) == _tier_digests(spark, cold)
+    m = run_pipeline(spark, transcripts, out, input_snapshot="epoch=2", n_buckets=8)
+    assert m["units_done"] == 0
+
+
+def test_stream_epoch_crash_before_certify_and_replay(spark, stream_files, tmp_path, monkeypatch):
+    """A crash inside epoch 1, after its tier writes and before the ledger
+    commit: a restart on the same stream checkpoint re-runs the epoch's
+    repair from its committed dir, so the tiers equal the cold run, each
+    epoch's lineage has one row per repaired unit and no tmp dir is left.
+    A replay with a fresh stream checkpoint then changes no file."""
+    import pyarrow.parquet as pq
+
+    from more_pattern_extraction_spark.plans import checkpoint as CP
+    from more_pattern_extraction_spark.plans import stages
+    from more_pattern_extraction_spark.streaming.rollup_stream import compact_stream_tier
+
+    files, cold = stream_files
+    out = str(tmp_path / "out")
+    certify, crashed = stages.certify, []
+
+    def crash_in_epoch_1(cp, scope, root, job, snapshot, carried=()):
+        if snapshot == "epoch=1" and not crashed:
+            crashed.append(snapshot)
+            raise RuntimeError("crash before certify")
+        return certify(cp, scope, root, job, snapshot, carried)
+
+    monkeypatch.setattr(stages, "certify", crash_in_epoch_1)
+    with pytest.raises(Exception, match="crash before certify"):
+        _stream(spark, files, tmp_path / "src", out, tmp_path / "ckpt")
+    assert crashed and _epochs(f"{out}/transcripts") == ["epoch=0", "epoch=1"]
+    # compaction leaves an uncertified epoch's dir: the restart repairs from it
+    assert compact_stream_tier(spark, out) == {"compacted": 0, "generation": None}
+    _stream(spark, files, tmp_path / "src", out, tmp_path / "ckpt", idx=())
+    assert _epochs(f"{out}/transcripts") == ["epoch=0", "epoch=1", "epoch=2"]
+    assert not glob.glob(f"{out}/transcripts/_tmp_epoch_*")
+    assert _tier_digests(spark, out) == _tier_digests(spark, cold)
+
+    # the crashed run recorded no metrics row, so the three rows are the
+    # three certified repairs, in epoch order
+    runs = (CP.CheckpointStore(spark, out).metrics().filter(F.col("job") == "late_repair")
+            .orderBy("ts").select("units_repaired").collect())
+    lineage = pq.read_table(f"{out}/lineage", schema=CP.LINEAGE).to_pandas()
+    per_epoch = lineage.groupby("input_snapshot")
+    assert {s: len(g) for s, g in per_epoch} == {
+        f"epoch={e}": int(r.units_repaired) for e, r in enumerate(runs)}
+    assert all(not g.duplicated(["conv_bucket", "ts_bucket"]).any() for _s, g in per_epoch)
+
+    before = _files(out)
+    _stream(spark, files, tmp_path / "src", out, tmp_path / "ckpt_replay", idx=())
+    assert _files(out) == before
+
+
+def test_stream_tier_compaction_crash_safe(spark, transcripts, stream_files, tmp_path):
+    """compact_stream_tier merges the raw table's epochs into one
+    generation with the turns unchanged, and a later epoch still repairs
+    the tiers to the cold run.  The crash window (generation committed, a
+    source dir not yet deleted) neither double-counts on read nor
+    re-admits a replayed absorbed epoch; a rerun finishes the deletes."""
+    from more_pattern_extraction_spark.streaming.rollup_stream import compact_stream_tier
+
+    files, cold = stream_files
+    out = str(tmp_path / "out")
+    table = f"{out}/transcripts"
+    src, ckpt = tmp_path / "src", tmp_path / "ckpt"
+    _stream(spark, files, src, out, ckpt, idx=(0, 1))
+    raw = _raw_digest(spark, out)
     files0 = len(glob.glob(f"{table}/**/*.parquet", recursive=True))
+    shutil.copytree(f"{table}/epoch=0", str(tmp_path / "victim_copy"))
 
-    # keep a copy of one source epoch to simulate the crash window later
-    victim = epochs_before[0]
-    shutil.copytree(f"{table}/{victim}", str(tmp_path / "victim_copy"))
+    assert compact_stream_tier(spark, out) == {"compacted": 2, "generation": -1}
+    assert _epochs(table) == ["epoch=-1"]
+    assert _raw_digest(spark, out) == raw
+    assert len(glob.glob(f"{table}/**/*.parquet", recursive=True)) < files0
 
-    st = compact_stream_tier(spark, out, "rollup_1m_stream")
-    assert st["compacted"] == len(epochs_before) and st["generation"] == -1
-    left = sorted(e for e in os.listdir(table) if e.startswith("epoch="))
-    assert left == ["epoch=-1"]
-    assert digest(read_stream_tier(spark, out, "rollup_1m_stream")) == d0
-    files1 = len(glob.glob(f"{table}/**/*.parquet", recursive=True))
-    assert files1 < files0  # the point of the exercise
+    # crash window: an absorbed epoch dir re-appears next to the committed
+    # generation; the manifest keeps it out of reads and of the next repair
+    shutil.copytree(str(tmp_path / "victim_copy"), f"{table}/epoch=0")
+    assert _raw_digest(spark, out) == raw
+    _stream(spark, files, src, out, ckpt, idx=(2,))
+    assert _tier_digests(spark, out) == _tier_digests(spark, cold)
 
-    # crash window: an absorbed epoch dir re-appears alongside the
-    # committed generation — the manifest keeps it invisible
-    shutil.copytree(str(tmp_path / "victim_copy"), f"{table}/{victim}")
-    assert digest(read_stream_tier(spark, out, "rollup_1m_stream")) == d0
+    # a fresh stream checkpoint replays every file: absorbed and committed
+    # epochs are skipped, and nothing is written
+    before = _files(out)
+    _stream(spark, files, src, out, tmp_path / "ckpt_replay", idx=())
+    assert _files(out) == before
 
-    # a replay of that absorbed epoch id is treated as committed:
-    # fresh stream checkpoint over the same source writes nothing new
-    gen_files = {
-        (p, os.stat(p).st_mtime_ns)
-        for p in glob.glob(f"{table}/epoch=-1/**/*.parquet", recursive=True)
-    }
-    stream_rollup_to_table(
-        spark, src, schema, out, watermark="0 seconds", n_buckets=4,
-        checkpoint_dir=str(tmp_path / "cp2"), max_files_per_trigger=1,
-    )
-    assert {
-        (p, os.stat(p).st_mtime_ns)
-        for p in glob.glob(f"{table}/epoch=-1/**/*.parquet", recursive=True)
-    } == gen_files
-    assert digest(read_stream_tier(spark, out, "rollup_1m_stream")) == d0
-
-    # rerunning the compaction finishes the crashed delete (stale dir
-    # removed, nothing new to compact)
-    st2 = compact_stream_tier(spark, out, "rollup_1m_stream")
-    assert st2["compacted"] == 0
-    assert not os.path.exists(f"{table}/{victim}")
-    assert digest(read_stream_tier(spark, out, "rollup_1m_stream")) == d0
-
-
-def test_streaming_kmv_entries_match_batch(spark, transcripts, tmp_path):
-    """Streaming KMV entries (one watermarked distinct-pair agg) packed
-    batch-side must equal kmv_from_raw on the same turns — the KMV merge
-    identity carried into Structured Streaming."""
-    from more_pattern_extraction_spark.operators import distinct as DK
-    from more_pattern_extraction_spark.streaming.rollup_stream import (
-        streaming_kmv_entries_1m,
-    )
-
-    src = str(tmp_path / "kmv_stream_src")
-    transcripts.select("conv_id", "ts").write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema("conv_id string, ts timestamp").parquet(src)
-    q = (
-        streaming_kmv_entries_1m(stream)
-        .writeStream.outputMode("complete")
-        .format("memory").queryName("kmv_stream").trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    k = 8
-    got = (
-        DK._pack_topk(spark.sql("select * from kmv_stream"), k)
-        .orderBy("bucket_start").collect()
-    )
-    exp = DK.kmv_from_raw(transcripts, "1m", k).orderBy("bucket_start").collect()
-    assert len(got) == len(exp) > 0
-    assert got == exp
+    # rerunning the compaction finishes the crashed delete, then folds the
+    # generation and epoch 2 into the next one
+    assert compact_stream_tier(spark, out) == {"compacted": 2, "generation": -2}
+    assert _epochs(table) == ["epoch=-2"]
+    assert _raw_digest(spark, out) == _digest(transcripts)
