@@ -11,8 +11,22 @@ with queryable chunk rows:
 one row per (conversation, chunk window, feature).  Encode is a grouped
 pandas UDF over ``(conv_id, ts_bucket)`` — the same partitioning the
 rollup already produced, so at scale the shuffle is a re-use, not a new
-one.  Decode is ``mapInPandas`` (each chunk row is independent → no
-shuffle at all; Arrow batches amortize the Python hop).
+one.
+
+Decode takes one of two paths.  A probe job collects at most
+``DRIVER_DECODE_ROWS + 1`` chunk rows through Arrow, which starts no
+Python worker.  A scope of no more than ``DRIVER_DECODE_ROWS`` rows (a
+dashboard read of a few conversation-days) is decoded on the driver
+and returned as a local frame (a ``LocalTableScan``), so the caller's
+``collect()`` runs no job.  A larger one is decoded by ``mapInPandas``
+(each chunk row is independent → no shuffle at all; Arrow batches
+amortize the Python hop), after the probe.  The driver path avoids the
+fixed cost of a Python worker task: about 0.2 s of CPU per task in
+``importlib.invalidate_caches()`` alone, in PySpark's worker set-up.
+Both paths give bit-equal timestamps and values, and a decoded NaN
+reads as NULL on both: the worker's pandas output goes through Arrow's
+pandas conversion, and the driver builds its value array with
+``from_pandas=True``, which does the same.
 
 Scale notes: a 1m-tier chunk covering 1 day is ≤1440 points — thousands of
 chunks per executor core, each encoded in ~100 µs.  Hot conversations are
@@ -22,7 +36,9 @@ for raw-turn UDFs lives in plans/partitioning.py.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -68,8 +84,6 @@ def encode_chunks(
     feats = list(features)
 
     def _encode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
         from more_pattern_extraction_spark.functions.encode import (
             encode_dod_many,
             encode_gorilla_many,
@@ -138,35 +152,75 @@ def encode_chunks(
     return keyed.mapInPandas(enc_iter, CHUNK_SCHEMA)
 
 
+#: chunk rows up to which ``decode_chunks`` decodes on the driver; more
+#: rows go through the ``mapInPandas`` plan.  Measured crossover
+#: (scripts/DECODE_CROSSOVER_r08.json, local[4], full-day 1,440-point
+#: rows, medians of 5 rounds): process-tree CPU, driver vs worker, 1.89
+#: vs 2.84 s at 64 rows and 7.65 vs 7.30 s at 256 (crossing near 200);
+#: wall 0.42 vs 0.68 s at 16 rows and 1.45 vs 1.23 s at 64 (crossing
+#: near 40).  64 favours CPU; rows of fewer points move both crossings up.
+DRIVER_DECODE_ROWS = 64
+
+_DECODE_COLS = ("conv_id", "feature", "n", "ts_dod", "values_gorilla")
+
+
+def _decode_rows(rows) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """``(conv_id, feature, bucket_start ns, value)`` arrays of the points
+    of ``rows``, an iterable of ``_DECODE_COLS`` tuples, one per chunk."""
+    convs, feats, ns = [], [], []
+    ts_parts = [np.empty(0, dtype=np.int64)]
+    val_parts = [np.empty(0, dtype=np.float64)]
+    for conv, feat, n, ts_dod, values_gorilla in rows:
+        ts_parts.append(decode_dod(bytes(ts_dod), n))
+        val_parts.append(decode_gorilla(bytes(values_gorilla), n))
+        convs.append(conv)
+        feats.append(feat)
+        ns.append(n)
+    return (
+        np.repeat(np.array(convs, dtype=object), ns),
+        np.repeat(np.array(feats, dtype=object), ns),
+        np.concatenate(ts_parts),
+        np.concatenate(val_parts),
+    )
+
+
 def decode_chunks(chunks: DataFrame) -> DataFrame:
     """Inverse of encode_chunks → (conv_id, feature, bucket_start, value).
 
-    mapInPandas: chunk rows decode independently, preserving whatever
-    partitioning the chunk table has (no shuffle)."""
+    One probe job collects at most ``DRIVER_DECODE_ROWS + 1`` chunk rows
+    through Arrow (no Python worker).  If the input has no more than
+    ``DRIVER_DECODE_ROWS`` rows they are decoded on the driver and
+    returned as a local frame, whose ``collect()`` runs no job.  Otherwise
+    the result is a ``mapInPandas`` over ``chunks``: chunk rows decode
+    independently, preserving whatever partitioning the chunk table has
+    (no shuffle).  Both paths give bit-equal timestamps and values, and a
+    decoded NaN reads as NULL (pandas → Arrow semantics).
+
+    The probe runs when this is called, and the ``mapInPandas`` path
+    computes ``chunks`` a second time: an input that is costly to compute
+    (an ``encode_chunks`` plan) is best stored or cached first."""
+    probe = chunks.select(*_DECODE_COLS).limit(DRIVER_DECODE_ROWS + 1).toArrow()
+    if probe.num_rows <= DRIVER_DECODE_ROWS:
+        conv, feat, ts, value = _decode_rows(
+            zip(*(probe.column(c).to_pylist() for c in _DECODE_COLS)))
+        table = pa.table({
+            "conv_id": pa.array(conv, pa.string()),
+            "feature": pa.array(feat, pa.string()),
+            "bucket_start": pa.array(ts.view("datetime64[ns]")),
+            "value": pa.array(value, from_pandas=True),
+        })
+        return chunks.sparkSession.createDataFrame(table, DECODE_SCHEMA)
 
     def dec(batches):
-        import numpy as np
-
         for pdf in batches:
-            # bulk-build one frame per Arrow batch (a per-chunk-row
-            # DataFrame + concat costs ~5 ms/row — 50x slower)
-            ts_parts, val_parts, convs, feats_ = [], [], [], []
-            for r in pdf.itertuples(index=False):
-                ts_parts.append(decode_dod(bytes(r.ts_dod), r.n))
-                val_parts.append(decode_gorilla(bytes(r.values_gorilla), r.n))
-                convs.append(r.conv_id)
-                feats_.append(r.feature)
-            if ts_parts:
-                ns = [len(t) for t in ts_parts]
-                yield pd.DataFrame(
-                    {
-                        "conv_id": np.repeat(np.array(convs, dtype=object), ns),
-                        "feature": np.repeat(np.array(feats_, dtype=object), ns),
-                        "bucket_start": pd.to_datetime(
-                            np.concatenate(ts_parts), unit="ns"
-                        ),
-                        "value": np.concatenate(val_parts),
-                    }
-                )
+            if len(pdf):
+                conv, feat, ts, value = _decode_rows(
+                    pdf[list(_DECODE_COLS)].itertuples(index=False, name=None))
+                yield pd.DataFrame({
+                    "conv_id": conv,
+                    "feature": feat,
+                    "bucket_start": pd.to_datetime(ts, unit="ns"),
+                    "value": value,
+                })
 
     return chunks.mapInPandas(dec, DECODE_SCHEMA)

@@ -174,9 +174,10 @@ _ENTRIES_SQL = "array_sort(map_entries(latency_sketch))"
 
 def _rep_sql(b: str) -> str:
     """SQL of a bin's representative value: the geometric midpoint of its
-    edges (bin 0 → LO).  Monotone in bin id."""
+    edges (bin 0 → LO; bin −1, the fold's "not chosen" of an empty map,
+    → NULL).  Monotone in bin id."""
     lo = _dbl(LO)
-    return (f"CASE WHEN {b} <= 0 THEN {lo} "
+    return (f"CASE WHEN {b} < 0 THEN NULL WHEN {b} = 0 THEN {lo} "
             f"ELSE {lo} * pow(2.0D, (CAST({b} AS DOUBLE) - 0.5D) / {_dbl(BPO)}) END")
 
 
@@ -188,6 +189,7 @@ def sketch_quantile(sk: DataFrame, q: float = 0.95, out_col: str = "latency_p95_
     ceil(q·n))`` (both engines evaluate ``ceil`` on the same IEEE
     product, so the oracle agrees bit-for-bit; ``q`` enters as a double
     literal, never a DECIMAL), and reports its representative value.
+    An empty map (count 0) has no such bin and reports NULL.
     Error bound: module docstring.
     Adds ``latency_cnt_sketch`` (total count) and ``out_col``.
     """

@@ -172,3 +172,106 @@ def test_chunk_roundtrip_across_batches_and_buckets(spark):
         ).all()
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
+@pytest.fixture(scope="module")
+def stored_chunks(spark, transcripts, tmp_path_factory):
+    """The fixture's ``chunks_1m`` as a tier run stores it."""
+    from more_pattern_extraction_spark.plans.pipeline import run_pipeline
+    from more_pattern_extraction_spark.sources import catalog as CAT
+
+    out = str(tmp_path_factory.mktemp("decode_parity") / "out")
+    run_pipeline(spark, transcripts, out, input_snapshot="d_on", n_buckets=8)
+    return CAT.read_table(spark, out, "chunks_1m")
+
+
+def _decoded(dec):
+    """A decoded frame as pandas, in one order, with its NULL count."""
+    pdf = dec.toPandas().sort_values(["conv_id", "feature", "bucket_start"])
+    return pdf.reset_index(drop=True), dec.filter("value IS NULL").count()
+
+
+def _assert_paths_equal(chunks, monkeypatch, worker_cap=0):
+    """``decode_chunks`` on the driver equals its ``mapInPandas`` path,
+    which a ``DRIVER_DECODE_ROWS`` of ``worker_cap`` forces: the schema,
+    the keys, the timestamps as ``datetime64[ns]`` and the values as
+    uint64 bit patterns, with NULL where a decoded value is NaN.  Returns
+    the driver path's frame and NULL count."""
+    from more_pattern_extraction_spark.operators import chunks as C
+
+    driver = C.decode_chunks(chunks)
+    assert "MapInPandas" not in driver._jdf.queryExecution().executedPlan().toString()
+    with monkeypatch.context() as m:
+        m.setattr(C, "DRIVER_DECODE_ROWS", worker_cap)
+        worker = C.decode_chunks(chunks)
+    assert "MapInPandas" in worker._jdf.queryExecution().executedPlan().toString()
+    want, want_nulls = _decoded(worker)
+    got, got_nulls = _decoded(driver)
+    assert driver.schema == worker.schema
+    assert len(got) == len(want)
+    assert got_nulls == want_nulls
+    for c in ("conv_id", "feature"):
+        assert (got[c].to_numpy() == want[c].to_numpy()).all(), c
+    assert (
+        got["bucket_start"].to_numpy().astype("datetime64[ns]")
+        == want["bucket_start"].to_numpy().astype("datetime64[ns]")
+    ).all()
+    gv = got["value"].to_numpy(dtype="float64", na_value=np.nan)
+    wv = want["value"].to_numpy(dtype="float64", na_value=np.nan)
+    assert (gv.view(np.uint64) == wv.view(np.uint64)).all()
+    return got, got_nulls
+
+
+def test_driver_decode_equals_worker_on_stored_chunks(spark, stored_chunks, monkeypatch):
+    """One conversation-day, one day across every bucket, the whole table
+    and seeded random unit sets of the stored ``chunks_1m``."""
+    from pyspark.sql import functions as F
+
+    units = sorted({(r.conv_bucket, r.ts_day) for r in
+                    stored_chunks.select("conv_bucket", "ts_day").collect()})
+    r = stored_chunks.orderBy("conv_id", "ts_day").first()
+    scopes = {
+        "conv_day": (F.col("conv_bucket") == r.conv_bucket) & (F.col("ts_day") == r.ts_day)
+        & (F.col("conv_id") == r.conv_id),
+        "day": F.col("ts_day") == r.ts_day,
+        "table": F.lit(True),
+    }
+    for seed in range(3):
+        rng = np.random.default_rng(seed)
+        pick = rng.choice(len(units), size=min(len(units), 2 + seed * 3), replace=False)
+        scope = F.lit(False)
+        for i in pick:
+            b, d = units[i]
+            scope = scope | ((F.col("conv_bucket") == b) & (F.col("ts_day") == d))
+        scopes[f"units_seed{seed}"] = scope
+    for name, scope in scopes.items():
+        chunks = stored_chunks.filter(scope)
+        got, _ = _assert_paths_equal(chunks, monkeypatch)
+        assert len(got) == chunks.agg(F.sum("n")).first()[0], name
+
+
+def test_driver_decode_reads_null_values_as_null(spark, monkeypatch):
+    """A rollup with NULL feature values: the encoder stores them as NaN
+    and both decode paths read them back as NULL at the same buckets."""
+    from pyspark.sql import functions as F
+
+    from more_pattern_extraction_spark.operators import chunks as C
+
+    idx = pd.date_range("2024-01-01", periods=3 * 1440, freq="1min")
+    r1m = spark.createDataFrame(
+        pd.DataFrame({"conv_id": "c", "bucket_start": idx,
+                      "latency_avg": np.arange(len(idx), dtype="float64") / 7})
+    ).withColumn("latency_avg", F.when(F.minute("bucket_start") % 5 != 0, F.col("latency_avg")))
+    enc = spark.createDataFrame(
+        C.encode_chunks(r1m, ["latency_avg"], "1m").toPandas(), C.CHUNK_SCHEMA)
+    got, nulls = _assert_paths_equal(enc, monkeypatch)
+    assert nulls == len(idx) // 5
+    assert (got["value"].isna().to_numpy() == (got["bucket_start"].dt.minute % 5 == 0)).all()
+
+
+def test_driver_decode_of_no_chunks_is_an_empty_frame(spark, stored_chunks, monkeypatch):
+    """No chunk rows are within any cap of 0 or more, so only a negative
+    cap drives them through the worker."""
+    got, _ = _assert_paths_equal(stored_chunks.filter("conv_id = 'no such conversation'"),
+                                 monkeypatch, worker_cap=-1)
+    assert len(got) == 0

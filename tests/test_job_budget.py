@@ -36,6 +36,10 @@ REPAIR_PATTERN_JOBS = 8
 # measured: the four dashboard read shapes of perfbench's tier_read, one
 # conversation-day each (the KMV count reads one day of every bucket)
 READ_JOBS = {"range_1m": 2, "sketch_p95_1h": 2, "chunk_decode": 1, "distinct_1d": 3}
+# measured: 2 jobs for the chunk read past the driver-decode cap (the
+# probe's collect, then the mapInPandas decode); below the cap the probe
+# is the only job, and the decoded frame is a local table
+FALLBACK_DECODE_JOBS = 2
 # measured: py4j commands the driver sends to build (not run) the sketch
 # p95 and the KMV count over a stored tier frame: 38 and 88, against 704
 # and 969 when the folds and the hash mapping were Column lambdas
@@ -154,7 +158,8 @@ def py4j_commands(monkeypatch):
     return run
 
 
-def test_dashboard_read_budgets(spark, spark_jobs, py4j_commands, transcripts, tmp_path):
+def test_dashboard_read_budgets(spark, spark_jobs, py4j_commands, transcripts, tmp_path,
+                               monkeypatch):
     out = str(tmp_path / "out")
     run_pipeline(spark, transcripts, out, input_snapshot="r_on", n_buckets=8)
     r = (CAT.read_table(spark, out, "rollup_1h")
@@ -185,6 +190,15 @@ def test_dashboard_read_budgets(spark, spark_jobs, py4j_commands, transcripts, t
         rows, jobs[name] = spark_jobs(f"budget_read_{name}", lambda: build().collect())
         assert rows, name
     assert jobs == READ_JOBS, jobs
+
+    plan = CH.decode_chunks(one_day("chunks_1m"))._jdf.queryExecution().executedPlan().toString()
+    assert plan.startswith("LocalTableScan") and "Python" not in plan and "Pandas" not in plan, plan
+    with monkeypatch.context() as m:
+        m.setattr(CH, "DRIVER_DECODE_ROWS", 0)
+        rows, fallback = spark_jobs("budget_read_chunk_decode_fallback",
+                                    lambda: CH.decode_chunks(one_day("chunks_1m")).collect())
+    assert rows
+    assert fallback == FALLBACK_DECODE_JOBS, fallback
 
     hours = one_day("rollup_1h").select("conv_id", "bucket_start", "latency_sketch")
     kmv = CAT.read_table(spark, out, "distinct_1m")

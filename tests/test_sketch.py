@@ -96,7 +96,7 @@ def _quantile_model(m, q):
     """(count, representative value) of the discrete q-quantile of a
     sketch map, in Python: the first bin whose cumulative count reaches
     ``max(1, ceil(q·n))``, where ``q·n`` is an IEEE double product.  No
-    bin reaches it in an empty map, which reports ``LO``."""
+    bin reaches it in an empty map, which has no quantile (NULL)."""
     if m is None:
         return None, None
     n = sum(m.values())
@@ -106,7 +106,9 @@ def _quantile_model(m, q):
         if cum >= k:
             b = key
             break
-    return n, SK.LO if b <= 0 else SK.LO * 2.0 ** ((b - 0.5) / SK.BPO)
+    if b < 0:
+        return n, None
+    return n, SK.LO if b == 0 else SK.LO * 2.0 ** ((b - 0.5) / SK.BPO)
 
 
 @pytest.mark.parametrize("q", [0.95, 0.5, 0.07, 0.14])
