@@ -13,8 +13,8 @@ pandas UDF over ``(conv_id, ts_bucket)`` — the same partitioning the
 rollup already produced, so at scale the shuffle is a re-use, not a new
 one.
 
-Decode takes one of two paths.  A probe job collects at most
-``DRIVER_DECODE_ROWS + 1`` chunk rows through Arrow, which starts no
+Decode takes one of two paths (``operators/local``).  A probe job
+collects at most ``DRIVER_DECODE_ROWS + 1`` chunk rows, which starts no
 Python worker.  A scope of no more than ``DRIVER_DECODE_ROWS`` rows (a
 dashboard read of a few conversation-days) is decoded on the driver
 and returned as a local frame (a ``LocalTableScan``), so the caller's
@@ -46,6 +46,7 @@ from more_pattern_extraction_spark.functions.encode import (
     decode_dod,
     decode_gorilla,
 )
+from more_pattern_extraction_spark.operators import local
 
 CHUNK_SCHEMA = (
     "conv_id string, ts_bucket timestamp, tier string, feature string, "
@@ -184,32 +185,12 @@ def _decode_rows(rows) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     )
 
 
-def decode_chunks(chunks: DataFrame) -> DataFrame:
-    """Inverse of encode_chunks → (conv_id, feature, bucket_start, value).
-
-    One probe job collects at most ``DRIVER_DECODE_ROWS + 1`` chunk rows
-    through Arrow (no Python worker).  If the input has no more than
-    ``DRIVER_DECODE_ROWS`` rows they are decoded on the driver and
-    returned as a local frame, whose ``collect()`` runs no job.  Otherwise
-    the result is a ``mapInPandas`` over ``chunks``: chunk rows decode
-    independently, preserving whatever partitioning the chunk table has
-    (no shuffle).  Both paths give bit-equal timestamps and values, and a
-    decoded NaN reads as NULL (pandas → Arrow semantics).
-
-    The probe runs when this is called, and the ``mapInPandas`` path
-    computes ``chunks`` a second time: an input that is costly to compute
-    (an ``encode_chunks`` plan) is best stored or cached first."""
-    probe = chunks.select(*_DECODE_COLS).limit(DRIVER_DECODE_ROWS + 1).toArrow()
-    if probe.num_rows <= DRIVER_DECODE_ROWS:
-        conv, feat, ts, value = _decode_rows(
-            zip(*(probe.column(c).to_pylist() for c in _DECODE_COLS)))
-        table = pa.table({
-            "conv_id": pa.array(conv, pa.string()),
-            "feature": pa.array(feat, pa.string()),
-            "bucket_start": pa.array(ts.view("datetime64[ns]")),
-            "value": pa.array(value, from_pandas=True),
-        })
-        return chunks.sparkSession.createDataFrame(table, DECODE_SCHEMA)
+def _decode_plan(chunks: DataFrame) -> DataFrame:
+    """``decode_chunks``' ``mapInPandas`` plan, with no probe: the form
+    for a caller whose input is an unwritten plan (``plans/entry``'s
+    ``encode_chunks`` round trip), which the probe would compute twice.
+    Chunk rows decode independently, preserving whatever partitioning
+    the chunk table has (no shuffle)."""
 
     def dec(batches):
         for pdf in batches:
@@ -224,3 +205,31 @@ def decode_chunks(chunks: DataFrame) -> DataFrame:
                 })
 
     return chunks.mapInPandas(dec, DECODE_SCHEMA)
+
+
+def decode_chunks(chunks: DataFrame) -> DataFrame:
+    """Inverse of encode_chunks → (conv_id, feature, bucket_start, value).
+
+    One probe job (``local.probe``) collects at most
+    ``DRIVER_DECODE_ROWS + 1`` chunk rows (no Python worker).  If the
+    input has no more than ``DRIVER_DECODE_ROWS`` rows they are decoded
+    on the driver and returned as a local frame, whose ``collect()`` runs
+    no job.  Otherwise the result is ``_decode_plan(chunks)``.  Both
+    paths give bit-equal timestamps and values, and a decoded NaN reads
+    as NULL (pandas → Arrow semantics).
+
+    The probe runs when this is called, and the ``mapInPandas`` path
+    computes ``chunks`` a second time: an input that is costly to compute
+    (an ``encode_chunks`` plan) is best stored first, or handed to
+    ``_decode_plan``."""
+    rows = local.probe(chunks.select(*_DECODE_COLS), DRIVER_DECODE_ROWS)
+    if rows is None:
+        return _decode_plan(chunks)
+    conv, feat, ts, value = _decode_rows(rows)
+    table = pa.table({
+        "conv_id": pa.array(conv, pa.string()),
+        "feature": pa.array(feat, pa.string()),
+        "bucket_start": pa.array(ts.view("datetime64[ns]")),
+        "value": pa.array(value, from_pandas=True),
+    })
+    return chunks.sparkSession.createDataFrame(table, DECODE_SCHEMA)

@@ -59,9 +59,24 @@ Measured in py4j commands sent to build, memory commands not counted:
 ``kmv_estimate`` 817 as a Column tree, 8 now (the 8-digit Horner tree
 over ``ascii`` this mapping replaced took 733 on its own); and on the
 ``transcripts`` test fixture ``kmv_estimate(kmv_cascade(...))`` (1m → 1d)
-over a stored ``distinct_1m`` 969, 88 now, 80 of them the cascade
-(``tests/test_job_budget.py``).  ``u_expr`` and ``estimate_expr`` also
+over a stored ``distinct_1m`` 969, 44 with the cascade's plan, 36 of them
+the cascade (its bucket expression as SQL text: 88 and 80 as a Column;
+``tests/test_job_budget.py``).  ``u_expr`` and ``estimate_expr`` also
 take a Column, for which they build a Column tree (``u_expr``: 50).
+
+``kmv_cascade`` takes one of two paths (``operators/local``).  A probe
+job collects at most ``local.DRIVER_MERGE_ENTRIES + 1`` exploded
+``(coarse bucket, hash)`` entries, the plan's own first projection, so
+Spark computes the coarse bucket on both paths.  Within the cap (a
+dashboard day of one-minute partials holds a few hundred) each bucket's
+distinct hashes are sorted on the driver and the first k kept in a local
+table, so the caller's ``kmv_estimate(...).collect()`` runs no further
+job: one job per read, against three for the plan, and 36 py4j commands
+with the probe.  A larger input gets the plan, ``_cascade_plan``, after
+the probe; the cap is a measured crossover
+(``scripts/MERGE_CROSSOVER_r09.json``).  ``plans/entry._kmv_frame``
+calls ``_cascade_plan`` directly: its input is a plan not written out
+yet, which the probe would compute twice.
 
 Reference analogue: none (the reference is single-node and counts
 distincts in RAM, e.g. pandas ``nunique`` in
@@ -71,10 +86,13 @@ the same statistic at 10^12 turns, mirroring sketch.py's contract.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from more_pattern_extraction_spark.operators.rollup import bucket_expr, tier_seconds
+from more_pattern_extraction_spark.operators import local
+from more_pattern_extraction_spark.operators.rollup import bucket_expr, bucket_sql, tier_seconds
 
 #: default sketch size; relative stderr ~ 1/sqrt(k-2) ~ 4 % at 512
 K_DEFAULT = 512
@@ -151,7 +169,7 @@ def kmv_from_raw(
     """
     pairs = turns.select(
         *part_cols,
-        bucket_expr(F.col(ts_col), tier).alias("bucket_start"),
+        bucket_expr(ts_col, tier).alias("bucket_start"),
         conv_hash(conv_col).alias("h"),
     ).distinct()
     return _pack_topk(pairs, k, part_cols)
@@ -174,18 +192,10 @@ def kmv_from_rollup(
     return _pack_topk(pairs, k, part_cols)
 
 
-def kmv_cascade(
-    kmv: DataFrame, to_tier: str, k: int = K_DEFAULT,
-    from_tier: str | None = None,
-) -> DataFrame:
-    """Merge finer-tier sketches into a coarser tier — EXACTLY equal to
-    building the sketch from raw at the coarse tier (module docstring;
-    merge-identity pytest).  Shuffle: ≤ (children × k) 32-char strings
-    per coarse bucket, independent of raw cardinality.
-
-    Same width invariant as rollup.cascade: ``to_tier`` must be a
+def _check_widths(to_tier: str, from_tier: str | None) -> None:
+    """Same width invariant as rollup.cascade: ``to_tier`` must be a
     multiple of the finer width or finer buckets would straddle coarse
-    ones; pass ``from_tier`` when known and it is validated here."""
+    ones."""
     if from_tier is not None:
         w_to, w_from = tier_seconds(to_tier), tier_seconds(from_tier)
         if w_to % w_from:
@@ -193,11 +203,55 @@ def kmv_cascade(
                 f"kmv_cascade {from_tier}->{to_tier}: {w_to}s is not a "
                 f"multiple of {w_from}s"
             )
-    exploded = kmv.select(
-        bucket_expr(F.col("bucket_start"), to_tier).alias("bucket_start"),
-        F.explode("conv_kmv").alias("h"),
-    ).distinct()
-    return _pack_topk(exploded, k)
+
+
+def _entries(kmv: DataFrame, to_tier: str) -> DataFrame:
+    """``(bucket_start, h)``: every child hash under its coarse bucket
+    (SQL text: 7 py4j commands to build, against 51 as Columns)."""
+    return kmv.selectExpr(f"{bucket_sql('bucket_start', to_tier)} AS bucket_start",
+                          "explode(conv_kmv) AS h")
+
+
+def _cascade_plan(
+    kmv: DataFrame, to_tier: str, k: int = K_DEFAULT, from_tier: str | None = None,
+) -> DataFrame:
+    """``kmv_cascade``'s Spark plan, with no probe (module docstring).
+    Shuffle: ≤ (children × k) 32-char strings per coarse bucket,
+    independent of raw cardinality."""
+    _check_widths(to_tier, from_tier)
+    return _pack_topk(_entries(kmv, to_tier).distinct(), k)
+
+
+#: the driver path's local frame: per coarse bucket its k smallest
+#: hashes, as a JSON array
+_LOCAL_SQL = (
+    "timestamp_micros(col1) AS bucket_start, "
+    "from_json(col2, 'ARRAY<STRING>') AS conv_kmv"
+)
+
+
+def kmv_cascade(
+    kmv: DataFrame, to_tier: str, k: int = K_DEFAULT,
+    from_tier: str | None = None,
+) -> DataFrame:
+    """Merge finer-tier sketches into a coarser tier — EXACTLY equal to
+    building the sketch from raw at the coarse tier (module docstring;
+    merge-identity pytest).  Pass ``from_tier`` when known and the width
+    invariant (``_check_widths``) is validated here, before any job.
+
+    Eager: the probe runs when this is called (module docstring: two
+    paths)."""
+    _check_widths(to_tier, from_tier)
+    rows = local.probe(_entries(kmv, to_tier).selectExpr("unix_micros(bucket_start)", "h"),
+                       local.DRIVER_MERGE_ENTRIES)
+    if rows is None:
+        return _cascade_plan(kmv, to_tier, k)
+    hashes: dict[int | None, set[str]] = {}
+    for bucket, h in rows:
+        hashes.setdefault(bucket, set()).add(h)
+    values = [f"({local.sql_lit(bucket)}, {local.sql_lit(json.dumps(sorted(hs)[:k]))})"
+              for bucket, hs in hashes.items()]
+    return local.values_frame(kmv.sparkSession, _LOCAL_SQL, values, 2)
 
 
 def kmv_sliding(

@@ -28,7 +28,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from more_pattern_extraction_spark.plans import partitioning as P
@@ -48,21 +48,27 @@ def tier_seconds(tier: str) -> int:
     return int(n) * _UNIT_SECONDS[unit]
 
 
-def bucket_expr(c, tier: str):
-    """Bucket-start expression for any tier width (time_bucket semantics).
+def bucket_sql(c: str, tier: str) -> str:
+    """Bucket-start SQL over the column ``c`` for any tier width
+    (time_bucket semantics).
 
     Named tiers (``1m``/``1h``/``1d``) keep ``date_trunc`` — calendar-aligned
     and partition-prunable.  Arbitrary widths (``5m``, ``15m``, ``6h``) floor
     the epoch: ``timestamp_seconds(floor(epoch(ts)/w)*w)`` — still a pure
     column expression (whole-stage codegen, groupable, prunable via min/max
-    stats), epoch-aligned like TimescaleDB's sub-day ``time_bucket``.
+    stats), epoch-aligned like TimescaleDB's sub-day ``time_bucket``.  The
+    intermediate ``CAST(... AS TIMESTAMP)`` takes TIMESTAMP_NTZ sources too.
     """
     if tier in TIERS:
-        return F.date_trunc(TIERS[tier], c)
+        return f"date_trunc('{TIERS[tier]}', {c})"
     w = tier_seconds(tier)
-    c = F.col(c) if isinstance(c, str) else c
-    sec = c.cast("timestamp").cast("double")
-    return F.timestamp_seconds(F.floor(sec / F.lit(w)).cast("long") * F.lit(w))
+    return f"timestamp_seconds(floor(CAST(CAST({c} AS TIMESTAMP) AS DOUBLE) / {w}) * {w})"
+
+
+def bucket_expr(c: str, tier: str) -> Column:
+    """``bucket_sql`` as one SQL expression (a Column tree costs py4j
+    commands per node)."""
+    return F.expr(bucket_sql(c, tier))
 
 FEATURES = ["latency"]  # numeric per-turn features rolled up
 
@@ -146,7 +152,7 @@ def rollup_from_raw(turns: DataFrame, tier: str = "1m") -> DataFrame:
     """Finest-tier rollup straight from per-turn rows (any tier width)."""
     return (
         turns.groupBy(
-            "conv_id", bucket_expr(F.col("ts"), tier).alias("bucket_start")
+            "conv_id", bucket_expr("ts", tier).alias("bucket_start")
         )
         .agg(
             F.count(F.lit(1)).alias("turn_cnt"),
@@ -184,7 +190,7 @@ def cascade(finer: DataFrame, to_tier: str, from_tier: str | None = None) -> Dat
     return (
         finer.groupBy(
             "conv_id",
-            bucket_expr(F.col("bucket_start"), to_tier).alias("bucket_start"),
+            bucket_expr("bucket_start", to_tier).alias("bucket_start"),
         )
         .agg(
             F.sum("turn_cnt").alias("turn_cnt"),

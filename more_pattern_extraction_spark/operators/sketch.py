@@ -43,9 +43,24 @@ commands per node, and at dashboard sizes building and planning a query
 costs more CPU than running it.  Measured on the ``transcripts`` test
 fixture, py4j commands sent to build ``sketch_quantile(sketch_cascade(
 ...))`` (1h → 1d) over a stored ``rollup_1h``: 704 as Column lambdas,
-38 now (``tests/test_job_budget.py``).  Literals are written as doubles
-(``0.95D``): a bare ``0.95`` is a DECIMAL in Spark SQL and would change
-the ``ceil(q·n)`` the oracle matches.
+38 with the cascade's plan (``tests/test_job_budget.py``).  Literals are
+written as doubles (``0.95D``): a bare ``0.95`` is a DECIMAL in Spark SQL
+and would change the ``ceil(q·n)`` the oracle matches.
+
+``sketch_cascade`` takes one of two paths (``operators/local``).  A probe
+job collects at most ``local.DRIVER_MERGE_ENTRIES + 1`` exploded entries
+``(conv_id, coarse bucket, bin, count)``, the plan's own first
+projection, so Spark computes the coarse bucket on both paths.  Within
+the cap (a dashboard p95 merges ≤ 24 hourly maps) the bins are summed on
+the driver into a local table, so the caller's
+``sketch_quantile(...).collect()`` runs no further job: one job per
+read, against two for the plan, and 30–32 py4j commands with the probe.
+A larger input gets the plan, ``_cascade_plan``, after the probe; the
+cap is a measured crossover (``scripts/MERGE_CROSSOVER_r09.json``).  The
+tier DAG (``plans/stages``) and ``plans/entry.rollup_p95_cascade`` call
+``_cascade_plan`` directly: their inputs are plans not written out yet,
+which the probe would compute twice.  ``sketch_quantile`` over the local
+table still costs about 38 ms; it stays one SQL fold, with no numpy twin.
 
 Reference analogue: quantile thresholding A11
 (``/root/reference/modules/underperformance_estimator.py:41``,
@@ -72,7 +87,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from more_pattern_extraction_spark.operators.rollup import TIERS
+from more_pattern_extraction_spark.operators import local
+from more_pattern_extraction_spark.operators.rollup import TIERS, bucket_sql
 
 LO = 1e-3      # underflow edge, seconds
 BPO = 16       # bins per octave → ratio r = 2**(1/16)
@@ -133,10 +149,8 @@ _MERGE_SQL = (
 )
 
 
-def sketch_cascade(sk: DataFrame, to_tier: str) -> DataFrame:
-    """Merge finer-tier sketches into a coarser tier — EXACTLY equal to
-    building the sketch from raw at the coarse tier (per-value binning;
-    merge-identity pytest).
+def _cascade_plan(sk: DataFrame, to_tier: str) -> DataFrame:
+    """``sketch_cascade``'s Spark plan, with no probe (module docstring).
 
     ONE shuffle: group the child maps per coarse bucket (collect_list is
     partial-aggregated, so the wire carries the same ≤ 512-entry maps the
@@ -149,7 +163,6 @@ def sketch_cascade(sk: DataFrame, to_tier: str) -> DataFrame:
     bit-identical to the old form's.
 
     Each column is one SQL expression (module docstring: py4j cost)."""
-    unit = TIERS[to_tier]
     # NULL/empty child sketches (a tier row whose bucket had no non-null
     # latencies gets a NULL map from attach_sketch_p95's left join) must
     # not produce a coarse row — the old explode form dropped them
@@ -157,10 +170,50 @@ def sketch_cascade(sk: DataFrame, to_tier: str) -> DataFrame:
     # needs the explicit filter (size(NULL) is -1, so > 0 covers both)
     return (
         sk.filter("size(latency_sketch) > 0")
-        .groupBy("conv_id", F.expr(f"date_trunc('{unit}', bucket_start) AS bucket_start"))
+        .groupBy("conv_id", F.expr(f"{bucket_sql('bucket_start', to_tier)} AS bucket_start"))
         .agg(F.expr("collect_list(latency_sketch) AS _maps"))
         .selectExpr("conv_id", "bucket_start", f"{_MERGE_SQL} AS latency_sketch")
     )
+
+
+#: the driver path's local frame: per (conv_id, coarse bucket) the bins
+#: and their summed counts, each list a comma-joined string
+_LOCAL_SQL = (
+    "CAST(col1 AS STRING) AS conv_id, timestamp_micros(col2) AS bucket_start, "
+    "map_from_arrays(CAST(split(col3, ',') AS ARRAY<INT>), "
+    "CAST(split(col4, ',') AS ARRAY<BIGINT>)) AS latency_sketch"
+)
+
+
+def sketch_cascade(sk: DataFrame, to_tier: str) -> DataFrame:
+    """Merge finer-tier sketches into a coarser tier — EXACTLY equal to
+    building the sketch from raw at the coarse tier (per-value binning;
+    merge-identity pytest).
+
+    Eager: the probe runs when this is called (module docstring: two
+    paths).  Within the cap the per-bin sums, entries sorted by bin, come
+    back as a local frame; ``explode`` drops NULL and empty maps as the
+    plan's filter does.  The driver path keys on a string ``conv_id``, as
+    every tier table stores it; other types take the plan, unprobed."""
+    if dict(sk.dtypes)["conv_id"] != "string":
+        return _cascade_plan(sk, to_tier)
+    rows = local.probe(
+        sk.selectExpr("conv_id", f"unix_micros({bucket_sql('bucket_start', to_tier)})",
+                      "explode(latency_sketch)"),
+        local.DRIVER_MERGE_ENTRIES,
+    )
+    if rows is None:
+        return _cascade_plan(sk, to_tier)
+    sums: dict[tuple, dict[int, int]] = {}
+    for conv, bucket, b, cnt in rows:
+        acc = sums.setdefault((conv, bucket), {})
+        acc[b] = acc.get(b, 0) + (cnt or 0)  # the plan's fold reads NULL as 0
+    values = []
+    for (conv, bucket), acc in sums.items():
+        bins = sorted(acc)
+        values.append(f"({local.sql_lit(conv)}, {local.sql_lit(bucket)}, "
+                      f"'{','.join(map(str, bins))}', '{','.join(str(acc[b]) for b in bins)}')")
+    return local.values_frame(sk.sparkSession, _LOCAL_SQL, values, 4)
 
 
 def _dbl(x: float) -> str:

@@ -266,7 +266,9 @@ def rollup_p95_cascade(spark, sf_dir):
     ev = _events(spark, sf_dir).select(
         F.col("user_id").alias("conv_id"), "ts", F.col("value").alias("latency")
     )
-    sk1h = SK.sketch_cascade(SK.sketch_from_raw(ev, "1m"), "1h")
+    # the plan builder, not sketch_cascade: its probe would compute the
+    # unwritten 1m sketch twice
+    sk1h = SK._cascade_plan(SK.sketch_from_raw(ev, "1m"), "1h")
     out = SK.sketch_quantile(sk1h, 0.95)
     return out.select(
         F.col("conv_id").cast("bigint").alias("conv_key"),
@@ -279,12 +281,13 @@ def rollup_p95_cascade(spark, sf_dir):
 def _kmv_frame(spark, sf_dir, tiers: list[str], k: int):
     """1m KMV sketches built from the engine's 1m tier rows
     (``kmv_from_rollup``, the builder of the ``distinct_1m`` stage),
-    cascaded up ``tiers``."""
+    cascaded up ``tiers`` by the plan builder (``kmv_cascade``'s probe
+    would compute each unwritten hop twice)."""
     from more_pattern_extraction_spark.operators import distinct as DK
 
     kmv = DK.kmv_from_rollup(_tier_rows(spark, sf_dir, "1m"), k)
     for frm, to in zip(tiers, tiers[1:]):
-        kmv = DK.kmv_cascade(kmv, to, k, from_tier=frm)
+        kmv = DK._cascade_plan(kmv, to, k, from_tier=frm)
     return kmv
 
 
@@ -1780,7 +1783,9 @@ def chunk_roundtrip(spark, sf_dir):
         F.round("latency_avg", 6).alias("latency_avg"),
     )
     enc = C.encode_chunks(r1m, ["latency_avg"], "1m")
-    dec = C.decode_chunks(enc)
+    # the mapInPandas builder, not decode_chunks: its probe would run the
+    # unwritten encode (~922 chunk rows at sf0.01, past the cap) twice
+    dec = C._decode_plan(enc)
     return dec.select(
         F.col("conv_id").cast("bigint").alias("conv_key"),
         "bucket_start",

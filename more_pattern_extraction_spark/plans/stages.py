@@ -109,9 +109,11 @@ def _kmv_1m(r1m: DataFrame) -> DataFrame:
 
 def _cascade(tier: str, from_tier: str) -> Callable[..., DataFrame]:
     def build(base: DataFrame) -> DataFrame:
+        # the sketch's plan builder: sketch_cascade would probe ``base``,
+        # an unwritten plan, and compute it twice
         return SK.attach_sketch_p95(
             R.cascade(base, tier, from_tier=from_tier),
-            SK.sketch_cascade(base.select("conv_id", "bucket_start", "latency_sketch"), tier),
+            SK._cascade_plan(base.select("conv_id", "bucket_start", "latency_sketch"), tier),
             keep_sketch=True,
         )
 

@@ -87,7 +87,7 @@ class CpuMeter(threading.Thread):
         self._direct: set[int] = set()
         self._graveyard = 0
         self._clk = os.sysconf("SC_CLK_TCK")
-        self._stop = threading.Event()
+        self._halt = threading.Event()  # not _stop: that is Thread._stop, which a fork calls
 
     def _sample(self) -> float:
         me = os.getpid()
@@ -132,7 +132,7 @@ class CpuMeter(threading.Thread):
         return total / self._clk + ch.ru_utime + ch.ru_stime
 
     def run(self) -> None:
-        while not self._stop.wait(self._interval):
+        while not self._halt.wait(self._interval):
             self._sample()
 
     def read(self) -> float:
@@ -140,7 +140,7 @@ class CpuMeter(threading.Thread):
         return self._sample()
 
     def stop(self) -> None:
-        self._stop.set()
+        self._halt.set()
 
 
 def read_cpu_ticks(cpus: set[int]) -> tuple[float, float]:

@@ -1,3 +1,5 @@
+import time
+
 import pytest
 
 from more_pattern_extraction_spark.session import get_spark
@@ -34,3 +36,14 @@ def spark_jobs(spark):
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture()
+def los_angeles_tz(monkeypatch):
+    """The Python process's local time zone set 8 hours west of UTC (the
+    Spark session's stays UTC)."""
+    monkeypatch.setenv("TZ", "America/Los_Angeles")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from more_pattern_extraction_spark.operators import chunks as CH
 from more_pattern_extraction_spark.operators import distinct as DK
+from more_pattern_extraction_spark.operators import local as LOCAL
 from more_pattern_extraction_spark.operators import sketch as SK
 from more_pattern_extraction_spark.plans.pipeline import run_pattern_stage, run_pipeline
 from more_pattern_extraction_spark.plans.repair import repair_late_turns
@@ -34,15 +35,22 @@ PARTIAL_RESUME_JOBS = 34
 PATTERN_STAGE_JOBS = 8
 REPAIR_PATTERN_JOBS = 8
 # measured: the four dashboard read shapes of perfbench's tier_read, one
-# conversation-day each (the KMV count reads one day of every bucket)
-READ_JOBS = {"range_1m": 2, "sketch_p95_1h": 2, "chunk_decode": 1, "distinct_1d": 3}
+# conversation-day each (the KMV count reads one day of every bucket);
+# the p95, chunk and KMV reads run only their probe, and their results
+# are local tables
+READ_JOBS = {"range_1m": 2, "sketch_p95_1h": 1, "chunk_decode": 1, "distinct_1d": 1}
 # measured: 2 jobs for the chunk read past the driver-decode cap (the
 # probe's collect, then the mapInPandas decode); below the cap the probe
 # is the only job, and the decoded frame is a local table
 FALLBACK_DECODE_JOBS = 2
-# measured: py4j commands the driver sends to build (not run) the sketch
-# p95 and the KMV count over a stored tier frame: 38 and 88, against 704
-# and 969 when the folds and the hash mapping were Column lambdas
+# measured: the p95 and KMV reads past the driver-merge cap (the probe,
+# then the cascade's plan)
+FALLBACK_MERGE_JOBS = {"sketch_p95_1h": 3, "distinct_1d": 4}
+# measured: py4j commands the driver sends to build the sketch p95 and
+# the KMV count over a stored tier frame, now including the probe job and
+# the local table: 30-32 and 36; the cascades' plans alone take 38 and
+# 44 (88 when the KMV bucket was a Column), against 704 and 969 when the
+# folds and the hash mapping were Column lambdas
 SKETCH_READ_COMMANDS = 45
 KMV_READ_COMMANDS = 100
 # measured: 39 jobs for one stream epoch (the fixture's turns as one
@@ -199,6 +207,19 @@ def test_dashboard_read_budgets(spark, spark_jobs, py4j_commands, transcripts, t
                                     lambda: CH.decode_chunks(one_day("chunks_1m")).collect())
     assert rows
     assert fallback == FALLBACK_DECODE_JOBS, fallback
+
+    merges = ("sketch_p95_1h", "distinct_1d")
+    for name in merges:
+        plan = reads[name]()._jdf.queryExecution().executedPlan().toString()
+        assert plan.startswith("LocalTableScan") and "Exchange" not in plan, plan
+    fallback = {}
+    with monkeypatch.context() as m:
+        m.setattr(LOCAL, "DRIVER_MERGE_ENTRIES", 0)
+        for name in merges:
+            rows, fallback[name] = spark_jobs(f"budget_read_{name}_fallback",
+                                              lambda: reads[name]().collect())
+            assert rows, name
+    assert fallback == FALLBACK_MERGE_JOBS, fallback
 
     hours = one_day("rollup_1h").select("conv_id", "bucket_start", "latency_sketch")
     kmv = CAT.read_table(spark, out, "distinct_1m")

@@ -440,15 +440,6 @@ def test_resume_and_repair_over_spark_written_ledger(spark, transcripts, out, tm
                 == spark.read.parquet(str(written / t)).schema), t
 
 
-@pytest.fixture()
-def los_angeles_tz(monkeypatch):
-    monkeypatch.setenv("TZ", "America/Los_Angeles")
-    time.tzset()
-    yield
-    monkeypatch.undo()
-    time.tzset()
-
-
 def _midnight_utc(d):
     return calendar.timegm(d.timetuple())
 

@@ -206,7 +206,9 @@ def test_sketch_chain_no_raw_value_shuffle_no_python(spark, events, monkeypatch)
     )
     monkeypatch.setattr(P, "HOT_KEY_ROWS", 1)  # every input takes the segmented lag
     feats = R.turn_features(t)
-    sk = SK.sketch_quantile(SK.sketch_cascade(SK.sketch_from_raw(feats, "1m"), "1h"))
+    # the cascade's plan, as the tier DAG runs it: sketch_cascade itself
+    # merges an input this small on the driver
+    sk = SK.sketch_quantile(SK._cascade_plan(SK.sketch_from_raw(feats, "1m"), "1h"))
     p = plan_str(sk, mode="simple")
     # one raw-turn exchange (the segmented-lag window), everything else
     # pre-reduced: partial bin counts before their exchange
@@ -216,7 +218,7 @@ def test_sketch_chain_no_raw_value_shuffle_no_python(spark, events, monkeypatch)
     assert "EvalPython" not in p
     # the single-window form retains the original one-exchange shape
     monkeypatch.setattr(P, "HOT_KEY_ROWS", 10**12)
-    sk0 = SK.sketch_quantile(SK.sketch_cascade(
+    sk0 = SK.sketch_quantile(SK._cascade_plan(
         SK.sketch_from_raw(R.turn_features(t), "1m"), "1h"))
     assert plan_str(sk0, mode="simple").count("Exchange hashpartitioning") == 1
 

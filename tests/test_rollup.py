@@ -85,7 +85,7 @@ def test_arbitrary_width_tier(spark, transcripts):
 
     # "60s" through the epoch path == date_trunc('minute') everywhere
     mism = transcripts.select(
-        (R.bucket_expr(F.col("ts"), "60s") == F.date_trunc("minute", "ts")).alias("e")
+        (R.bucket_expr("ts", "60s") == F.date_trunc("minute", "ts")).alias("e")
     ).filter("not e").count()
     assert mism == 0
 
